@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.Runner.noop
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line. A warmup pass at sf0.001 (when present) runs each
@@ -7,27 +8,39 @@ import org.apache.spark.sql.SparkSession
   * numbers — the measurements then reflect steady-state executor work, the
   * quantity that actually scales with data volume.
   *
-  * Queries are materialized through the `noop` sink, not `count()`:
-  * count() lets Catalyst prune every unreferenced projection, so map-only
-  * queries would measure a row count instead of their expression work. The
-  * noop sink forces full column materialization with zero write cost.
+  * Queries are materialized through the `noop` sink (`Runner.noop`), and
+  * the memo lifecycle (warm-up release, shared fills, release after the
+  * last consumer) is the [[Runner]]'s.
   */
 object Bench {
 
-  private def run(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  /** Spark-free single-thread md5-chain throughput (M ops/s, ~3s): isolates
+    * raw core + memory-path speed from scheduler/stage-dispatch effects.
+    * This is the probe regime HOST_PROBE_r17.json calibrated (JVM-side
+    * quiet gate ~8.9 M/s on the current host generation per
+    * CALIB_PROBE_r16.json; 2.0 M/s on the r14 generation). A
+    * memory-bandwidth co-tenant (the r17 attempt-3 class) depresses this
+    * figure while CPU-bound Spark calibration ticks and guest loadavg still
+    * read idle.
+    */
+  private def md5SingleMps(): Double =
+    try {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      var h = Array[Byte]('x')
+      var n = 0L
+      val t0 = System.nanoTime()
+      while (System.nanoTime() - t0 < 3e9.toLong) {
+        var i = 0
+        while (i < 10000) { h = md.digest(h); i += 1 }
+        n += 10000
+      }
+      n / ((System.nanoTime() - t0) / 1e9) / 1e6
+    } catch { case _: Throwable => -1.0 }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.core.Graft.localCpus
+    val spark = graft.core.Graft.session(s"local[$cpus]", "graft-bench")
     // ERROR, not WARN: the child's stderr is passed through unprefixed (see
     // build.sbt outputStrategy) and the driver captures a merged tail — WARN
     // chatter would push the JSON line out of its window.
@@ -42,21 +55,21 @@ object Bench {
     val load1Start = load1Now()
 
     // Denominator-side host probe, leading read (r17 verdict #1): a
-    // Spark-free single-thread md5-chain throughput figure — the exact
-    // CalibProbe.md5SingleMps regime HOST_PROBE_r17.json calibrated. The
+    // Spark-free single-thread md5-chain throughput figure — the
+    // md5SingleMps regime HOST_PROBE_r17.json calibrated. The
     // r17 attempt-3 incident proved a memory-bandwidth co-tenant can
     // inflate every query line uniformly ~1.23x while all five CPU-bound
     // calibration ticks AND guest loadavg read idle; this probe is the
     // only in-artifact signal for that class (it reads the memory path the
     // ticks' 32-way Spark work hides). Runs BEFORE any Spark job — session
-    // built, zero work dispatched, matching CalibProbe's probe point — and
+    // built, zero work dispatched, the calibrated probe point — and
     // outside every timed line, so `total`, the per-query map, t_start
     // offsets, and the committed TICK_BASELINE positions are unperturbed.
     // ~3s. Compare against host_md5_quiet_mps (below): both lead and trail
     // near the gate = quiet host; a uniform shortfall (e.g. ~7.2 vs 8.9 in
     // HOST_PROBE_r17's calib reading) = bandwidth co-tenancy even when
     // every tick is in-band.
-    val hostMd5Lead = CalibProbe.md5SingleMps()
+    val hostMd5Lead = md5SingleMps()
     // Quiet-gate reference for the md5 probe on THIS host generation:
     // 8.93 M/s from CALIB_PROBE_r16.json (true idle). Host-class constant,
     // same contract as the calibration idle pins — override on any other
@@ -84,8 +97,8 @@ object Bench {
     // sorted: Map iteration order is hash-based, which made per-query time
     // attribution nondeterministic across rounds for queries that share
     // cached upstream state (whichever q_dag_* ran first paid the cache)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(kv => policySkip(kv._1))
+    val ordered = SparkEntry.registered.sortBy(_.name)
+      .filterNot(q => policySkip(q.name))
 
     // Fingerprint of the timed surface (r15 verdict #3): positional tick
     // comparison across runs — and the committed TICK_BASELINE.json — is
@@ -103,21 +116,14 @@ object Bench {
     // says so).
     val surfaceSha = {
       val md = java.security.MessageDigest.getInstance("SHA-256")
-      md.update(ordered.map(_._1).mkString("\n").getBytes("UTF-8"))
+      md.update(ordered.map(_.name).mkString("\n").getBytes("UTF-8"))
       md.digest().take(8).map("%02x".format(_)).mkString
     }
 
+    val runner = new Runner(spark, sfDir, ordered,
+      line => System.err.println(s"[bench] $line"))
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      ordered.foreach { case (_, fn) =>
-        try run(fn(spark, warmDir)) catch { case _: Throwable => () }
-      }
-      // free the warmup dir's memoized persists (shared DAG cache, simhash
-      // pair/group frames): their cached partitions would otherwise sit in
-      // executor storage through the whole timed run
-      try queries.DagQueries.releaseMemos(spark, warmDir) catch { case _: Throwable => () }
-      try queries.CorpusQueries.releaseMemos(spark, warmDir) catch { case _: Throwable => () }
-    }
+    if (new java.io.File(warmDir).isDirectory) runner.warmUp(warmDir)
 
     // A failing query must be visible, never a fake-fast timing: its time is
     // emitted as a NEGATIVE sentinel and its error lands in BENCH_DETAIL's
@@ -151,23 +157,23 @@ object Bench {
     // U+0000–U+001F escaped — a \b or \f in an exception message must not
     // invalidate BENCH_DETAIL.json exactly when a query fails)
     def sanitize(e: Throwable): String =
-      Option(e.getMessage).getOrElse(e.getClass.getName)
-        .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
-
-    // the one-time shared-DAG cache fill is timed as its own line instead
-    // of landing on whichever q_dag_* query runs first alphabetically —
-    // per-query numbers then measure the queries, not cache attribution.
-    // Same ok/negative-sentinel discipline as the per-query loop: a
-    // warmShared crash must not read as a fast success.
-    val dagWarm = {
-      markStart("q_dag_warm")
+      Runner.message(e).replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
+    // one timed line: a failure records its error and a negative time
+    def timed(name: String)(work: => Unit): (String, Double) = {
+      markStart(name)
       val t0 = System.nanoTime()
-      val ok = try { queries.DagQueries.warmShared(spark, sfDir); true } catch {
-        case e: Throwable => errors("q_dag_warm") = sanitize(e); false
+      val ok = try { work; true } catch {
+        case e: Throwable => errors(name) = sanitize(e); false
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      "q_dag_warm" -> (if (ok) dt else -dt)
+      name -> (if (ok) dt else -dt)
     }
+
+    // each one-time shared fill (vault cache, then dedup groups) is timed
+    // as its own line instead of landing on whichever consumer runs first
+    // alphabetically — per-query numbers then measure the queries, not
+    // cache attribution. A fill crash must not read as a fast success.
+    val fills = runner.fill((name, work) => timed(name)(work()))
 
     // Fixed-work calibration: a deterministic CPU-bound pass over constant
     // in-memory data — no I/O, no testdata dependency, identical work every
@@ -185,14 +191,8 @@ object Bench {
         .agg(sum(xxhash64(col("h")).cast("decimal(38,0)")).as("s"))
     }
     val calibration = {
-      try run(calibCpuFrame) catch { case _: Throwable => () }
-      markStart("q_calibration")
-      val t0 = System.nanoTime()
-      val ok = try { run(calibCpuFrame); true } catch {
-        case e: Throwable => errors("q_calibration") = sanitize(e); false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      "q_calibration" -> (if (ok) dt else -dt)
+      try noop(calibCpuFrame) catch { case _: Throwable => () }
+      timed("q_calibration")(noop(calibCpuFrame))
     }
     // Idle-host reference for q_calibration on THIS host class, recorded
     // from the r10 final-HEAD idle bench (BENCH_IDLE_r10.json). The emitted
@@ -219,21 +219,18 @@ object Bench {
     val ioDir = sys.env.getOrElse("SPARK_GRAFT_CALIB_IO_DIR", "/tmp/graft_calib_io")
     val calibrationIo = {
       import org.apache.spark.sql.functions._
-      val ok0 = try {
+      val setupError = try {
         if (!new java.io.File(ioDir, "_SUCCESS").isFile)
           spark.range(0L, 8000000L, 1L, 32)
             .select(col("id"), xxhash64(col("id")).as("h"),
               md5(col("id").cast("string")).as("s"))
             .write.option("compression", "none").mode("overwrite").parquet(ioDir)
-        true
-      } catch { case e: Throwable => errors("q_calibration_io") = sanitize(e); false }
-      markStart("q_calibration_io")
-      val t0 = System.nanoTime()
-      val ok = ok0 && (try { run(spark.read.parquet(ioDir)); true } catch {
-        case e: Throwable => errors("q_calibration_io") = sanitize(e); false
-      })
-      val dt = (System.nanoTime() - t0) / 1e9
-      "q_calibration_io" -> (if (ok) dt else -dt)
+        None
+      } catch { case e: Throwable => Some(e) }
+      timed("q_calibration_io") {
+        setupError.foreach(e => throw e)
+        noop(spark.read.parquet(ioDir))
+      }
     }
     // Idle-host reference for q_calibration_io, same contract as the CPU
     // constant: 0.382s recorded from this host class's r12 idle bench
@@ -245,51 +242,23 @@ object Bench {
     val calibrationIoIdleRefSec = sys.env.get("SPARK_GRAFT_CALIB_IO_IDLE_SEC")
       .map(_.toDouble).getOrElse(0.382)
 
-    // same attribution split for the shared dedup-group fill (simhash
-    // pairs -> iterative CC): q_canonical_selection and q_dedup_groups
-    // both read the memoized frame, and the alphabetically-first consumer
-    // was paying the whole iterative fill on its line
-    val groupsWarm = {
-      markStart("q_groups_warm")
-      val t0 = System.nanoTime()
-      val ok = try { queries.CorpusQueries.warmGroups(spark, sfDir); true } catch {
-        case e: Throwable => errors("q_groups_warm") = sanitize(e); false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      "q_groups_warm" -> (if (ok) dt else -dt)
-    }
-
-    // Memo lifecycle mirrors Verify: each memoized family (shared vault
-    // cache, simhash/groups frames) is released right AFTER its last
-    // consumer's timed line — outside the timer, so no query's number
-    // changes (the warm lines still carry the fills; no later consumer
-    // exists to refill). At factor 100 the accumulated caches are what
-    // OOM'd the default heap in Verify (BUILDER_NOTES incident 2); the
-    // bench holds the same frames and runs the same surface.
-    def usesDagMemo(n: String) = n.startsWith("q_dag_")
-    val corpusMemoUsers = Set("q_canonical_selection", "q_dedup_groups", "q_simhash_pairs")
-    val results = calibration +: calibrationIo +: dagWarm +: groupsWarm +: ordered.zipWithIndex.map { case ((name, fn), i) =>
+    // Each memoized family is released right AFTER its last consumer's
+    // timed line (the runner's release, outside the timer), so no query's
+    // number changes: the fill lines still carry the fills.
+    var i = 0
+    val lines = runner.map { q =>
       // mid-run calibration tick: fixed CPU work every TICK_EVERY queries —
       // a tick's sec vs the idle pin timestamps host contention in-run
       if (i > 0 && i % tickEvery == 0) {
         val tickOff = offsNow()
         val tk0 = System.nanoTime()
-        try run(calibCpuFrame) catch { case _: Throwable => () }
+        try noop(calibCpuFrame) catch { case _: Throwable => () }
         ticks += ((i, tickOff, (System.nanoTime() - tk0) / 1e9))
       }
-      markStart(name)
-      val t0 = System.nanoTime()
-      val ok = try { run(fn(spark, sfDir)); true } catch {
-        case e: Throwable => errors(name) = sanitize(e); false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val rest = ordered.drop(i + 1)
-      if (usesDagMemo(name) && !rest.exists(kv => usesDagMemo(kv._1)))
-        try queries.DagQueries.releaseMemos(spark, sfDir) catch { case _: Throwable => () }
-      if (corpusMemoUsers(name) && !rest.exists(kv => corpusMemoUsers(kv._1)))
-        try queries.CorpusQueries.releaseMemos(spark, sfDir) catch { case _: Throwable => () }
-      name -> (if (ok) dt else -dt)
+      i += 1
+      timed(q.name)(noop(q.fn(spark, sfDir)))
     }
+    val results = calibration +: calibrationIo +: (fills ++ lines)
     // Trailing calibration pair (r13 verdict "what's wrong" #1): the leading
     // pair runs FIRST in the sequence, so a contamination burst arriving
     // MID-run is invisible to the leading ratios — BENCH_r13 read clean
@@ -301,17 +270,8 @@ object Bench {
     // are NOT part of `total` or the per-query map — they are contamination
     // instrumentation, recorded only as the *_end ratio fields in
     // BENCH_DETAIL beside the leading ones.
-    def trailingCalib(name: String)(work: => Unit): Double = {
-      markStart(name)
-      val t0 = System.nanoTime()
-      val ok = try { work; true } catch {
-        case e: Throwable => errors(name) = sanitize(e); false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (ok) dt else -dt
-    }
-    val calibrationEndSec = trailingCalib("q_calibration_end") { run(calibCpuFrame) }
-    val calibrationIoEndSec = trailingCalib("q_calibration_io_end") { run(spark.read.parquet(ioDir)) }
+    val calibrationEndSec = timed("q_calibration_end")(noop(calibCpuFrame))._2
+    val calibrationIoEndSec = timed("q_calibration_io_end")(noop(spark.read.parquet(ioDir)))._2
     // Denominator-side host probe, trailing read: same measurement as the
     // lead (see its comment), taken after the last timed line so the pair
     // brackets the run like the calibration pairs do. Session alive but
@@ -319,7 +279,7 @@ object Bench {
     // background GC can shave this reading slightly at a genuinely quiet
     // host — adjudicate lead/trail vs the quiet gate together with the
     // body-median corroboration, not trail alone.
-    val hostMd5Trail = CalibProbe.md5SingleMps()
+    val hostMd5Trail = md5SingleMps()
     // The driver records a 2000-char stdout tail, so the JSON line must fit
     // by construction: if the full per-query map would overflow, the
     // smallest timings fold into one "q_other" aggregate until it fits
@@ -397,7 +357,7 @@ object Bench {
         "memory-bandwidth co-tenant that inflates every line uniformly while " +
         "CPU-bound ticks read idle — host_md5_mps_lead/_trail are the " +
         "denominator-side probe for that class (Spark-free single-thread md5, " +
-        "CalibProbe.md5SingleMps regime): both near host_md5_quiet_mps = quiet " +
+        "Bench.md5SingleMps regime): both near host_md5_quiet_mps = quiet " +
         "host; a uniform shortfall with in-band ticks = bandwidth co-tenancy, " +
         "corroborate with body medians vs the prior idle twin."
       // Self-adjudicating load gate (r15 verdict #2): an idle twin recorded
@@ -435,7 +395,9 @@ object Bench {
           if (calibrationIoEndSec > 0 && calibrationIoIdleRefSec > 0)
             f(calibrationIoEndSec / calibrationIoIdleRefSec) else "-1"
         },"gate_factor":$gateFactor,"policy_skips":$skipJson,"tick_every":$tickEvery,"calib_ticks":$ticksJson,"how_to_read":"$howToRead","t_start":$tStartJson,"errors":$errJson,"queries":$detail}""" + "\n")
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] BENCH_DETAIL write failed: ${Runner.message(e)}")
+    }
     spark.stop()
     println(fits.getOrElse(line(Seq.empty, total)))
   }

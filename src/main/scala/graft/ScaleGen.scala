@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Graft
 import graft.queries.Q
 
 /** Scale-out corpus builder for the sf1 correctness gate: replicate the
@@ -33,15 +34,7 @@ object ScaleGen {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir = args.lift(2).getOrElse("/tmp/graft_sf1r")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[${Graft.localCpus}]", "graft-scalegen")
     spark.sparkContext.setLogLevel("ERROR")
 
     new java.io.File(outDir).mkdirs()

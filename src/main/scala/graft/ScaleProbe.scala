@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Graft
 import graft.functions.TextFns
 import graft.operators.{ConnectedComponents, Curation, Dedup, SetSimJoin, Similarity, TextDedup}
 import graft.queries.Q
@@ -28,18 +29,12 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outPath = args.lift(2).getOrElse("/root/repo/SCALE_PROBE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Graft.localCpus
     // host-idleness evidence: load1 at START is the contamination signal;
     // load1 at END is self-inflicted by the probe's own 32-thread saturation
     // and must not be read as a loaded host
     val load1Start = readLoad1()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", "graft-scaleprobe")
     spark.sparkContext.setLogLevel("ERROR")
 
     val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
@@ -64,7 +59,7 @@ object ScaleProbe {
       .withColumn("__k", explode(sequence(lit(0), lit(factor - 1))))
       .select((col("doc_id") * factor + col("__k")).as("doc_id"),
         col("lang"), col("text"))
-      .repartition(cpus.toInt * 4)
+      .repartition(cpus * 4)
       .persist()
     stage("corpus_docs")(docs)
 
@@ -176,7 +171,7 @@ object ScaleProbe {
     val emb = Q.t(spark, sfDir, "embeddings")
       .withColumn("__k", explode(sequence(lit(0), lit(factor - 1))))
       .select((col("vec_id") * factor + col("__k")).as("vec_id"), col("embedding"))
-      .repartition(cpus.toInt * 4)
+      .repartition(cpus * 4)
       .persist()
     stage("embeddings")(emb)
     val k = 64
@@ -214,9 +209,9 @@ object ScaleProbe {
     val vDocs = Q.t(spark, sfDir, "documents")
       .withColumn("__k", explode(sequence(lit(0), lit(vFactor - 1))))
       .select((col("doc_id") * vFactor + col("__k")).as("doc_id"))
-      .repartition(cpus.toInt * 4)
+      .repartition(cpus * 4)
     val vMedia = Multimodal.y4mDupFixture(vDocs, "doc_id").persist()
-    stage(s"video_neardup_pairs_f$vFactor")(Multimodal.videoNearDupPairs(
+    stage(s"video_neardup_pairs_f$vFactor")(Multimodal.contourNearDupPairs(
       Multimodal.videoFingerprint(vMedia, bandFrames = 2, qStep = 4L),
       Multimodal.videoLevels(vMedia, qStep = 4L),
       minBands = 2, maxLevelDiff = 1L))
@@ -225,7 +220,7 @@ object ScaleProbe {
     // the banded join and the connected components by distinct-content
     // count, and the output is one row per doc in the near-dup graph
     // (LINEAR in corpus size) where pairs would be C(family,2)-quadratic.
-    stage("video_neardup_group_rows")(Multimodal.videoNearDupGroups(
+    stage("video_neardup_group_rows")(Multimodal.contourNearDupGroups(
       Multimodal.videoFingerprint(vids, bandFrames = 2, qStep = 4L),
       Multimodal.videoLevels(vids, qStep = 4L),
       minBands = 2, maxLevelDiff = 1L))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.queries.{AnalyticsQueries, BreadthQueries, CoreQueries, CorpusQueries, DagQueries, Q, ServiceQueries, StatsQueries, StreamingTwinQueries}
+import graft.queries.{AnalyticsQueries, BreadthQueries, CoreQueries, CorpusQueries, DagQueries, Q, ServiceQueries, Shared, StatsQueries, StreamingTwinQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -13,6 +13,11 @@ object SparkEntry {
     CoreQueries.all ++ CorpusQueries.all ++ ServiceQueries.all ++
       AnalyticsQueries.all ++ DagQueries.all ++ BreadthQueries.all ++
       StatsQueries.all ++ StreamingTwinQueries.all
+
+  /** The memoized families registered queries read (`Q.shares`), in fill
+    * order: the heavier vault cache first.
+    */
+  def shared: Seq[Shared] = Seq(DagQueries.vault, CorpusQueries.groups)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

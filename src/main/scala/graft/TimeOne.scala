@@ -1,38 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.Runner.noop
+import graft.core.Graft
+import graft.queries.Q
 
 /** Per-query timing harness for optimization work:
-  * `runMain graft.TimeOne <name>[,<name>...] [reps]` times the named
-  * registered queries in isolation with EXACTLY Bench's methodology (same
-  * session config, sf0.001 warmup pass, noop sink) so a single query can be
-  * measured before/after a change without paying the full 172-line surface.
-  * Not part of the driver contract — measurement tooling only (guide §1.1:
-  * isolate the expensive query, then optimize that one thing).
+  * `runMain graft.TimeOne <name>[,<name>...] [reps] [--jobs]` times the
+  * named registered queries in isolation with EXACTLY Bench's methodology
+  * (same session, the [[Runner]]'s sf0.001 warm-up pass and shared fills,
+  * noop sink) so a single query can be measured before/after a change
+  * without paying the full 172-line surface. Not part of the driver
+  * contract — measurement tooling only (guide §1.1: isolate the expensive
+  * query, then optimize that one thing).
   *
-  * Memoized-family queries (q_dag_*, the groups family) are preceded by the
-  * same warm fills Bench runs when `--warm-shared` is passed, so their lines
-  * measure the query, not the shared cache fill; pass `q_dag_warm` /
-  * `q_groups_warm` as names to time the fills themselves.
+  * A memoized family the named queries read is filled first, on its own
+  * `(fill)` line, so their lines measure the query, not the shared fill;
+  * pass a fill line's name (`q_dag_warm`, `q_groups_warm`) to time the fill
+  * itself — each rep then releases and refills it.
   */
 object TimeOne {
-  private def run(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val reps = args.drop(1).find(_.forall(_.isDigit)).map(_.toInt).getOrElse(3)
-    val warmShared = args.contains("--warm-shared")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[${Graft.localCpus}]", "graft-timeone")
     spark.sparkContext.setLogLevel("ERROR")
 
     // per-rep structural metrics (jobs/stages/tasks + shuffle and scan
@@ -82,39 +74,28 @@ object TimeOne {
         "input_bytes" -> inBytes.get)
     }
 
+    // a fill line's name times that family's fill: a pseudo-query that
+    // consumes the family, so the runner warms and releases it like any other
+    val fillLines = SparkEntry.shared.map(f => f.line ->
+      Q(f.line, (s, d) => { f.fill(s, d); s.emptyDataFrame }, None, shares = Some(f))).toMap
+    val registry = SparkEntry.registered.map(q => q.name -> q).toMap ++ fillLines
+    val runner = new Runner(spark, sfDir, names.map(registry),
+      line => System.err.println(s"[timeone] $line"))
     val warmDir = "/root/testdata/sf0.001"
-    def timeFill(label: String, fill: () => Unit): Unit = {
+    if (new java.io.File(warmDir).isDirectory) runner.warmUp(warmDir)
+    runner.fill { (name, work) =>
       val t0 = System.nanoTime()
-      fill()
-      println(f"[timeone] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
+      work()
+      println(f"[timeone] ${"(fill) " + name}%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
     }
-    names.filterNot(_.startsWith("--")).foreach { name =>
-      val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-        name match {
-          case "q_dag_warm" => (s, d) => { queries.DagQueries.warmShared(s, d); s.emptyDataFrame }
-          case "q_groups_warm" => (s, d) => { queries.CorpusQueries.warmGroups(s, d); s.emptyDataFrame }
-          case n => SparkEntry.queries(n)
-        }
-      // warmup at sf0.001 (JIT/codegen), then release warm-dir memos
-      if (new java.io.File(warmDir).isDirectory) {
-        try run(fn(spark, warmDir)) catch { case _: Throwable => () }
-        try queries.DagQueries.releaseMemos(spark, warmDir) catch { case _: Throwable => () }
-        try queries.CorpusQueries.releaseMemos(spark, warmDir) catch { case _: Throwable => () }
-      }
-      if (warmShared && name.startsWith("q_dag_") && name != "q_dag_warm")
-        timeFill("(fill) q_dag_warm", () => queries.DagQueries.warmShared(spark, sfDir))
-      if (warmShared && Set("q_canonical_selection", "q_dedup_groups", "q_simhash_pairs")(name))
-        timeFill("(fill) q_groups_warm", () => queries.CorpusQueries.warmGroups(spark, sfDir))
+    runner.map { q =>
+      val name = q.name
       val secs = (1 to reps).map { i =>
-        // the warm fills are one-shot per (session, dir): re-time them per
-        // rep by releasing between reps
-        if (name == "q_dag_warm" || name == "q_groups_warm") {
-          queries.DagQueries.releaseMemos(spark, sfDir)
-          queries.CorpusQueries.releaseMemos(spark, sfDir)
-        }
+        // a fill is one-shot per (session, dir): re-time it per rep
+        fillLines.get(name).foreach(_.shares.foreach(runner.release(_)))
         val before = metricsSnapshot()
         val t0 = System.nanoTime()
-        run(fn(spark, sfDir))
+        noop(q.fn(spark, sfDir))
         val dt = (System.nanoTime() - t0) / 1e9
         if (i == reps) {
           val after = metricsSnapshot()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -29,19 +28,7 @@ object Verify {
       case Some(names) => names.contains(name)
       case None        => !policySkip(name)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session(s"local[${graft.core.Graft.localCpus}]", "graft-verify")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -123,22 +110,19 @@ object Verify {
         }
     }
     // Sorted, not Map hash order: deterministic run order (matches
-    // check_timed's print order) and — the point — each memo family's
-    // consumers run contiguously-enough that the family can be freed right
-    // after its LAST consumer. At factor 100 the accumulated memoized
-    // persists (the shared vault cache + the simhash fingerprint/pair/group
-    // frames) OOM'd the default 8g heap 93 queries in (BUILDER_NOTES
-    // incident 2, rescued with SPARK_DRIVER_MEM=64g); the memos refill on
-    // demand, so releasing after the final consumer costs nothing and the
-    // rest of the gate runs with a clean store. Since the serialized
-    // checkpoint change (Checkpoints.Ser) the single-query f100 repro of
-    // that incident passes value-exact ON the default heap (319.5s, r14),
-    // so SPARK_DRIVER_MEM on large-factor gates is insurance for the
+    // check_timed's print order), and the runner frees each memo family
+    // right after its last consumer. Since the serialized checkpoint change
+    // (Checkpoints.Ser) the single-query f100 repro of the heap incident
+    // passes value-exact ON the default heap (319.5s, r14), so
+    // SPARK_DRIVER_MEM on large-factor gates is insurance for the
     // full-surface run, no longer a requirement for any one query.
-    val ordered = SparkEntry.queries.filter(kv => keep(kv._1)).toSeq.sortBy(_._1)
-    def usesDagMemo(n: String) = n.startsWith("q_dag_")
-    val corpusMemoUsers = Set("q_canonical_selection", "q_dedup_groups", "q_simhash_pairs")
-    ordered.zipWithIndex.foreach { case ((name, fn), i) =>
+    def log(line: String): Unit = System.err.println(s"[verify] $line")
+    val runner = new Runner(spark, sfDir,
+      SparkEntry.registered.filter(q => keep(q.name)).sortBy(_.name), log)
+    runner.fill { (name, work) =>
+      try work() catch { case e: Throwable => log(s"$name failed: ${e.getMessage}") }
+    }
+    runner.map { q =>
       val t0 = System.nanoTime()
       try {
         // repartition(1), NOT coalesce(1): coalesce collapses everything
@@ -150,24 +134,10 @@ object Verify {
         // their full parallelism and only the filtered RESULT funnels into
         // the one-file write. Row order through the 1-reducer shuffle is not
         // deterministic, which is fine: the DuckDB compare sorts rows.
-        fn(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(
-          f"[verify] $name ok (${(System.nanoTime() - t0) / 1e9}%.1fs)")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      val rest = ordered.drop(i + 1)
-      if (usesDagMemo(name) && !rest.exists(kv => usesDagMemo(kv._1))) {
-        System.err.println("[verify] releasing DAG vault memo (last consumer done)")
-        try queries.DagQueries.releaseMemos(spark, sfDir)
-        catch { case e: Throwable => System.err.println(s"[verify] release failed: ${e.getMessage}") }
-      }
-      if (corpusMemoUsers(name) && !rest.exists(kv => corpusMemoUsers(kv._1))) {
-        System.err.println("[verify] releasing corpus simhash/groups memos (last consumer done)")
-        try queries.CorpusQueries.releaseMemos(spark, sfDir)
-        catch { case e: Throwable => System.err.println(s"[verify] release failed: ${e.getMessage}") }
-      }
+        q.fn(spark, sfDir).repartition(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
+        log(f"${q.name} ok (${(System.nanoTime() - t0) / 1e9}%.1fs)")
+      } catch { case e: Throwable => log(s"${q.name} failed: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -7,20 +7,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Design notes (100 TB posture):
   *   - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
   *     and dynamic broadcast conversion replace hand-tuned partition counts.
-  *   - `spark.sql.shuffle.partitions` is a *starting* value (32 locally; on a
-  *     real cluster set ~2-3x total cores and let AQE coalesce down).
+  *   - `spark.sql.shuffle.partitions` is a *starting* value sized from the
+  *     session's own `defaultParallelism` (the slot count locally, total
+  *     executor cores on a cluster); AQE coalesces down from there.
   *   - Session timezone pinned to UTC: the reference stores naive wall-clock
   *     timestamps (reference `scripts/kafka/kafka_consumer.py:210-245`), so all
   *     timestamp arithmetic must be timezone-stable for oracle parity.
   */
 object Graft {
 
+  /** The engine's one session: every main (Bench, Verify, TimeOne, PlanDump,
+    * ScaleGen, ScaleProbe) and the benchmark harness build through here, so
+    * their configs cannot drift apart. Idempotent: a second call returns the
+    * running session with the same settings applied.
+    */
   def session(master: String = "local[*]", app: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(master)
       .appName(app)
-      .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // Post-shuffle partition counts derive from SHUFFLE BYTES (the AQE
@@ -33,17 +37,21 @@ object Graft {
       // exceeds slots x advisory bytes and the setting is a no-op; on
       // small inputs it keeps fixed costs independent of cluster width
       // (guide §2.2 "fewer, larger reduce partitions").
-      // Override: SPARK_GRAFT_PARALLELISM_FIRST=true restores the floor.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.sparkContext.defaultParallelism.toString)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Slot count of the local mains: `SPARK_GRAFT_CPUS`, else every core. */
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** Load one of the driver-provided testdata tables (TESTDATA.md).
     * Explicit parquet scan; Catalyst handles column pruning + filter pushdown.

@@ -74,8 +74,7 @@ object ConnectedComponents {
     * @throws IllegalStateException if the fixpoint is not reached within
     *         `maxRounds` rounds (component diameter > maxRounds).
     */
-  def minLabel(edges: DataFrame, aCol: String, bCol: String, maxRounds: Int = 50,
-      jumpsPerRound: Int = 2): DataFrame = {
+  def minLabel(edges: DataFrame, aCol: String, bCol: String, maxRounds: Int = 50): DataFrame = {
     // materialize the (possibly expensive) pair-producing pipeline ONCE,
     // BEFORE mirroring: a union of two selects over the raw `edges` plan
     // executes the upstream near-dup join once per branch (the O(block²)
@@ -129,20 +128,19 @@ object ConnectedComponents {
       val stepped = labels.unionByName(viaNeighbor)
         .groupBy(col("v"))
         .agg(min(col("label")).as("label"))
-      // pointer jumps per round: each jump composes the label with itself
-      // (v reaches label(v) reaches label(label(v))), costing one more
-      // |V|-row join inside the same materialization. Measured on the real
-      // workloads (CC_ROUNDS.json, CcRoundsProbe on the sf0.1 simhash
-      // graph with its 1128-vertex random-id chain component): rounds stay
-      // at 8 ≈ log2(chain) for EVERY jumpsPerRound in {1,2,4,8} — the
-      // neighbor-step + first jump already achieves per-round doubling,
-      // and further jumps do not compound on random id layouts — while
-      // per-round plan cost grows with j (5.0s at j=2 vs 7.1s at j=4 vs
-      // 45.9s at j=8 for the full convergence). Dense near-dup clique
-      // graphs (the factor-100 probe) converge in 2 rounds at any j. So
-      // the default is the measured cost floor j=2, keeping one extra
-      // jump over j=1 for layouts where halving does compound
-      labels = (1 to jumpsPerRound).foldLeft(stepped)((d, _) => jump(d))
+      // two pointer jumps per round: each jump composes the label with
+      // itself (v reaches label(v) reaches label(label(v))), costing one
+      // more |V|-row join inside the same materialization. Measured on the
+      // sf0.1 simhash graph with its 1128-vertex random-id chain component
+      // (CC_ROUNDS.json): rounds stay at 8 ≈ log2(chain) for EVERY jump
+      // count in {1,2,4,8} — the neighbor-step + first jump already
+      // achieves per-round doubling, and further jumps do not compound on
+      // random id layouts — while per-round plan cost grows with the count
+      // (5.0s at 2 vs 7.1s at 4 vs 45.9s at 8 for the full convergence).
+      // Dense near-dup clique graphs (the factor-100 probe) converge in 2
+      // rounds at any count. Two is the measured cost floor, keeping one
+      // extra jump over one for layouts where halving does compound
+      labels = jump(jump(stepped))
         .localCheckpoint(true, Checkpoints.Ser)
       prevPinned.foreach(_.unpersist(blocking = false))
       prevPinned = pinnedRdds(labels)

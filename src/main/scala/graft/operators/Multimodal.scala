@@ -375,7 +375,7 @@ object Multimodal {
   }
 
   /** Build-side strategy for the banded near-dup self-joins
-    * ([[imageNearDupPairs]], [[audioNearDupPairs]]).
+    * ([[imageNearDupPairs]], [[contourNearDupPairs]]).
     *
     * [[NearDupBuild.Broadcast]] replicates the banded frame to every task —
     * right while the corpus (or its cluster/LSH block) fits one executor,
@@ -1212,7 +1212,7 @@ object Multimodal {
 
   /** Per-frame quantized mean-square energy levels — the exact values
     * [[audioFingerprint]] bands, emitted at frame grain for the verify
-    * stage of [[audioNearDupPairs]]. Same map-only walk.
+    * stage of [[contourNearDupPairs]]. Same map-only walk.
     */
   def audioLevels(
       media: DataFrame,
@@ -1310,13 +1310,18 @@ object Multimodal {
       .filter(col("n_bands") >= minBands)
   }
 
-  /** Audio near-dup pairs: banded CANDIDATES (pairs sharing at least
-    * `minBands` exact (band_idx, band_sig) cells) verified exactly against
-    * the frame-level contour — same frame count and every frame's level
-    * within `maxLevelDiff`. The candidate/verify split is the MinHash-LSH
-    * contract transplanted to audio: coarse bands give recall, the verify
-    * join kills the coincidental band collisions, and verification cost is
-    * bounded by CANDIDATE mass, never all-pairs.
+  /** Banded-contour near-dup pairs, the audio and video detector: any
+    * modality that reduces a document to an ordered integer-level contour
+    * (doc_id, frame_idx, level) plus banded signatures
+    * (doc_id, band_idx, band_sig) — [[audioFingerprint]]/[[audioLevels]],
+    * [[videoFingerprint]]/[[videoLevels]] — gets the same join. Banded
+    * CANDIDATES (pairs sharing at least `minBands` exact (band_idx,
+    * band_sig) cells) are verified exactly against the frame-level contour
+    * — same frame count and every frame's level within `maxLevelDiff`. The
+    * candidate/verify split is the MinHash-LSH contract transplanted to
+    * audio and video: coarse bands give recall, the verify join kills the
+    * coincidental band collisions, and verification cost is bounded by
+    * CANDIDATE mass, never all-pairs.
     *
     * Same self-join scale shape as [[imageNearDupPairs]], with the same
     * [[NearDupBuild]] build-side parameter: broadcast the fingerprint
@@ -1325,35 +1330,6 @@ object Multimodal {
     * (band_idx, band_sig).
     *
     * @return (a_id, b_id, n_bands, n_frames, max_level_diff)
-    */
-  def audioNearDupPairs(
-      fps: DataFrame,
-      levels: DataFrame,
-      minBands: Int,
-      maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame =
-    contourNearDupPairs(fps, levels, minBands, maxLevelDiff, build)
-
-  /** Video near-dup pairs over [[videoFingerprint]] bands and
-    * [[videoLevels]] contours — the audio candidate/verify ladder
-    * transplanted to per-frame luma signatures (two re-encodes of the same
-    * clip share most banded luma cells; the exact contour verify kills
-    * coincidental collisions). Same row contracts, same [[NearDupBuild]]
-    * scale posture.
-    */
-  def videoNearDupPairs(
-      fps: DataFrame,
-      levels: DataFrame,
-      minBands: Int,
-      maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame =
-    contourNearDupPairs(fps, levels, minBands, maxLevelDiff, build)
-
-  /** The shared banded-contour near-dup engine behind
-    * [[audioNearDupPairs]] and [[videoNearDupPairs]]: any modality that
-    * reduces a document to an ordered integer-level contour
-    * (doc_id, frame_idx, level) plus banded signatures
-    * (doc_id, band_idx, band_sig) gets the same candidate/verify join.
     */
   def contourNearDupPairs(
       fps: DataFrame,
@@ -1507,28 +1483,6 @@ object Multimodal {
     lv.unpersist()
     out
   }
-
-  /** [[contourNearDupGroups]] under its audio name — see
-    * [[audioNearDupPairs]] for the inputs' contracts.
-    */
-  def audioNearDupGroups(
-      fps: DataFrame,
-      levels: DataFrame,
-      minBands: Int,
-      maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame =
-    contourNearDupGroups(fps, levels, minBands, maxLevelDiff, build)
-
-  /** [[contourNearDupGroups]] under its video name — see
-    * [[videoNearDupPairs]] for the inputs' contracts.
-    */
-  def videoNearDupGroups(
-      fps: DataFrame,
-      levels: DataFrame,
-      minBands: Int,
-      maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame =
-    contourNearDupGroups(fps, levels, minBands, maxLevelDiff, build)
 
   /** Schema of a decoded-video feature row (see `decodeY4mFeatures`). */
   val videoFeatureSchema: StructType = StructType(Seq(
@@ -1717,7 +1671,7 @@ object Multimodal {
   }
 
   /** Per-frame quantized mean-luma levels of a Y4M stream — the video
-    * contour for [[videoNearDupPairs]]'s verify stage, mirroring
+    * contour for [[contourNearDupPairs]]'s verify stage, mirroring
     * [[audioLevels]]. All-integer arithmetic: a frame's level is the
     * exact Long division chain `(lumaSum / ySize) / qStep`, so the levels
     * replay bit-for-bit in any engine. Map-only.

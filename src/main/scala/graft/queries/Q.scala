@@ -19,13 +19,28 @@ import graft.core.Graft
   * replayed at unbounded factors — its linear GROUPS twin carries the dedup
   * contract and is gated instead). `None` (the default) = gate at every
   * factor.
+  *
+  * `shares` names the memoized family the query reads, if any; the
+  * [[graft.Runner]] fills that family before the run's first query and
+  * releases it right after its last consumer.
   */
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String],
     maxGateFactor: Option[Int] = None,
-    gatePolicyReason: Option[String] = None)
+    gatePolicyReason: Option[String] = None,
+    shares: Option[Shared] = None)
+
+/** A memoized family several registered queries read: one materialization
+  * per (session, dir), built by `fill` and freed by `release`. `line` names
+  * the fill's own timed line, so the one-time fill is not charged to
+  * whichever consumer happens to run first.
+  */
+final class Shared(
+    val line: String,
+    val fill: (SparkSession, String) => Unit,
+    val release: (SparkSession, String) => Unit)
 
 object Q {
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileContext, LocalFileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Atomic current-version pointer for versioned parquet publishes: readers
@@ -9,22 +10,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Pointer {
 
-  /** Atomically (re)point `markerPath` at `target`. */
+  /** Atomically (re)point `markerPath` at `target`: a concurrent `read`
+    * sees either the old target or the new one, never no marker.
+    */
   def write(spark: SparkSession, markerPath: String, target: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(markerPath)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(marker.toString + ".tmp")
-    val os = fs.create(tmp, true)
-    os.write(target.getBytes("UTF-8"))
-    os.close()
-    // atomic replace (plain FileSystem.rename refuses existing targets)
-    org.apache.hadoop.fs.FileContext.getFileContext(marker.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, marker, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val marker = new Path(markerPath)
+    val tmp = new Path(marker.getParent,
+      s".${marker.getName}.${java.util.UUID.randomUUID()}.tmp")
+    marker.getFileSystem(conf) match {
+      case local: LocalFileSystem =>
+        // The checksummed local FS renames with OVERWRITE by deleting the old
+        // marker and its .crc first, so a reader in that window finds no
+        // marker, or a checksum that no longer matches. Write the marker
+        // without a checksum file and rename(2) it over the old one, which
+        // POSIX makes atomic. A .crc left by an earlier writer goes first:
+        // it would no longer match the new contents.
+        val tmpFile = local.pathToFile(tmp).toPath
+        java.nio.file.Files.createDirectories(tmpFile.getParent)
+        java.nio.file.Files.write(tmpFile, target.getBytes("UTF-8"))
+        java.nio.file.Files.deleteIfExists(local.pathToFile(local.getChecksumFile(marker)).toPath)
+        java.nio.file.Files.move(tmpFile, local.pathToFile(marker).toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      case fs =>
+        val os = fs.create(tmp, true)
+        try os.write(target.getBytes("UTF-8")) finally os.close()
+        // plain FileSystem.rename refuses existing targets
+        FileContext.getFileContext(marker.toUri, conf)
+          .rename(tmp, marker, Options.Rename.OVERWRITE)
+    }
   }
 
   /** The path `markerPath` currently points at, if the marker exists. */
   def read(spark: SparkSession, markerPath: String): Option[String] = {
-    val marker = new org.apache.hadoop.fs.Path(markerPath)
+    val marker = new Path(markerPath)
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) None
     else {

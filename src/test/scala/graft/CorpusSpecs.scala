@@ -768,7 +768,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(got === expect)
     // verified pairs == brute force: >=2 shared bands AND identical frame
     // grid AND every level within +-1
-    val pairs = Multimodal.audioNearDupPairs(fps, levels, minBands = 2, maxLevelDiff = 1L)
+    val pairs = Multimodal.contourNearDupPairs(fps, levels, minBands = 2, maxLevelDiff = 1L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4)))
       .toSet
     val brute = (for {
@@ -797,7 +797,7 @@ class MultimodalSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"audioFingerprint must be map-only:\n$plan")
     intercept[IllegalArgumentException](
-      Multimodal.audioNearDupPairs(fps, levels, 0, 1L))
+      Multimodal.contourNearDupPairs(fps, levels, 0, 1L))
   }
 
   test("videoFingerprint: bands match a plain-Scala replay; verified pairs equal brute force") {
@@ -831,7 +831,7 @@ class MultimodalSpec extends AnyFunSuite {
       ids.flatMap(id => replayLevels(id).zipWithIndex.map { case (lv, f) => (id, f) -> lv }).toMap)
     // verified pairs == brute force: >=2 shared bands AND identical frame
     // grid AND every level within +-1
-    val pairs = Multimodal.videoNearDupPairs(fps, levels, minBands = 2, maxLevelDiff = 1L)
+    val pairs = Multimodal.contourNearDupPairs(fps, levels, minBands = 2, maxLevelDiff = 1L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4)))
       .toSet
     val brute = (for {
@@ -880,8 +880,8 @@ class MultimodalSpec extends AnyFunSuite {
     val wav = Multimodal.wavDupFixture(ids.toDF("doc_id"), "doc_id")
     val afps = Multimodal.audioFingerprint(wav, 8, 4, 32768L, 2)
     val alv = Multimodal.audioLevels(wav, 8, 4, 32768L)
-    val gotAudio = groupsOf(Multimodal.audioNearDupGroups(afps, alv, 2, 1L))
-    val wantAudio = docGrain(Multimodal.audioNearDupPairs(afps, alv, 2, 1L))
+    val gotAudio = groupsOf(Multimodal.contourNearDupGroups(afps, alv, 2, 1L))
+    val wantAudio = docGrain(Multimodal.contourNearDupPairs(afps, alv, 2, 1L))
     assert(gotAudio === wantAudio)
     assert(gotAudio.nonEmpty, "planted audio dups must form groups")
 
@@ -889,8 +889,8 @@ class MultimodalSpec extends AnyFunSuite {
     val y4m = Multimodal.y4mDupFixture(ids.toDF("doc_id"), "doc_id")
     val vfps = Multimodal.videoFingerprint(y4m, 2, 4L)
     val vlv = Multimodal.videoLevels(y4m, 4L)
-    val gotVideo = groupsOf(Multimodal.videoNearDupGroups(vfps, vlv, 2, 1L))
-    val wantVideo = docGrain(Multimodal.videoNearDupPairs(vfps, vlv, 2, 1L))
+    val gotVideo = groupsOf(Multimodal.contourNearDupGroups(vfps, vlv, 2, 1L))
+    val wantVideo = docGrain(Multimodal.contourNearDupPairs(vfps, vlv, 2, 1L))
     assert(gotVideo === wantVideo)
     assert(gotVideo.nonEmpty, "planted video dups must form groups")
 

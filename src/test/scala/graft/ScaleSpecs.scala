@@ -165,7 +165,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val media = Multimodal.wavDupFixture(ids.toDF("doc_id"), "doc_id")
     val fps = Multimodal.audioFingerprint(media, 8, 4, 32768L, 2)
     val levels = Multimodal.audioLevels(media, 8, 4, 32768L)
-    def pairs(b: NearDupBuild) = Multimodal.audioNearDupPairs(fps, levels, 2, 1L, b)
+    def pairs(b: NearDupBuild) = Multimodal.contourNearDupPairs(fps, levels, 2, 1L, b)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4))).toSet
     val bc = pairs(NearDupBuild.Broadcast)
