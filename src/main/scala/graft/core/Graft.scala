@@ -41,6 +41,9 @@ object Graft {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // some testdata generations store events.ts as TIMESTAMP(NANOS),
+      // which Spark reads only as a long; `Q.t` converts it
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions",

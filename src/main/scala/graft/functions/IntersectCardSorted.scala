@@ -18,14 +18,14 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * ~the cost of reading the arrays and dominating the whole query.
   *
   * Inputs must be sorted ascending and duplicate-free (the contract of
-  * `TextFns.hashedShingles`); behavior on unsorted input is undefined.
+  * `TextFns.ngramHashSet`); behavior on unsorted input is undefined.
   * Null if either side is null (default BinaryExpression null semantics).
   */
 case class IntersectCardSorted(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  // inputs are always array<bigint> (constructed only via the typed Column
-  // wrapper below over hashedShingles output)
+  // inputs are always array<bigint> (sorted distinct hash sets such as
+  // `TextFns.ngramHashSet` output)
   override def dataType: DataType = IntegerType
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {

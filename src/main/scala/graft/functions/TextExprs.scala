@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen form of the word-n-gram shingle set.
@@ -366,7 +366,7 @@ case class HashedTermFreqs(child: Expression, dims: Int) extends UnaryExpression
 
 object HashedTermFreqs {
 
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
+  import org.apache.spark.sql.types.{StructField, StructType}
 
   val schema: ArrayType = ArrayType(
     StructType(Seq(
@@ -404,5 +404,219 @@ object HashedTermFreqs {
       j += 1
     }
     new GenericArrayData(out)
+  }
+}
+
+/** Fused MinHash signature of a shingle array: element i is the minimum
+  * over shingles s of h_i(s), for i in [0, numHashes), computed in ONE
+  * compiled pass per row — map-only work, where an explode → per-hash
+  * min aggregation shuffles partial minima per document.
+  *
+  * Two hash families (`hexMd5` selects), bit-identical to the relational
+  * forms `TextExprsSpec` keeps as ground truth:
+  *   - Xx64: h_i(s) = xxhash64(i, s) with Spark's seed 42, i.e.
+  *     `XXH64.hashInt(i, 42)` then `hashUnsafeBytes` over the UTF-8 bytes
+  *     (a null shingle contributes the bare `hashInt(i, 42)`, as
+  *     `xxhash64` skips nulls);
+  *   - HexMd5: Broder's construction — ONE base hash per shingle (its first
+  *     7 md5 hex digits as a 28-bit int), permuted by numHashes linear-
+  *     congruential functions h_i(b) = (A_i*b + B_i) mod (2^31-1), exact
+  *     long arithmetic so a SQL oracle replays it. A null shingle has no
+  *     base and is skipped; an array of only nulls gives null elements.
+  * Null or empty input → null signature (no shingles, nothing to band).
+  */
+case class MinHashSignature(child: Expression, numHashes: Int, hexMd5: Boolean)
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+
+  // no shingles → null, also for a non-null input
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(in: Any): Any =
+    MinHashSignature.compute(in.asInstanceOf[ArrayData], numHashes, hexMd5)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.MinHashSignature.compute($c, $numHashes, $hexMd5);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashSignature {
+
+  // HexMd5: h_i(b) = (A_i*b + B_i) mod M; A_i*b < 2^59, so exact in a long
+  private val M = 2147483647L
+  private def lcgA(i: Int): Long = (1103515245L * (i + 1)) % M
+  private def lcgB(i: Int): Long = 12345L * (i + 1)
+
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
+    java.security.MessageDigest.getInstance("MD5"))
+
+  def compute(arr: ArrayData, numHashes: Int, hexMd5: Boolean): ArrayData = {
+    val m = arr.numElements()
+    if (m == 0) return null
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    if (hexMd5) {
+      val md = md5.get()
+      val as = Array.tabulate(numHashes)(lcgA)
+      val bs = Array.tabulate(numHashes)(lcgB)
+      var seen = false
+      var s = 0
+      while (s < m) {
+        if (!arr.isNullAt(s)) {
+          seen = true
+          md.reset()
+          val d = md.digest(arr.getUTF8String(s).getBytes)
+          // first 7 hex digits = the top 28 bits of the digest
+          val base = ((d(0) & 0xFFL) << 20) | ((d(1) & 0xFFL) << 12) |
+            ((d(2) & 0xFFL) << 4) | ((d(3) & 0xFFL) >>> 4)
+          var i = 0
+          while (i < numHashes) {
+            val h = (as(i) * base + bs(i)) % M
+            if (h < mins(i)) mins(i) = h
+            i += 1
+          }
+        }
+        s += 1
+      }
+      if (!seen) return new GenericArrayData(new Array[Any](numHashes))
+    } else {
+      val seeds = Array.tabulate(numHashes)(i => XXH64.hashInt(i, 42L))
+      var s = 0
+      while (s < m) {
+        val sh = if (arr.isNullAt(s)) null else arr.getUTF8String(s)
+        var i = 0
+        while (i < numHashes) {
+          val h = if (sh == null) seeds(i)
+            else XXH64.hashUnsafeBytes(sh.getBaseObject, sh.getBaseOffset, sh.numBytes, seeds(i))
+          if (h < mins(i)) mins(i) = h
+          i += 1
+        }
+        s += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+}
+
+/** Sorted distinct 64-bit hashes of a token array's word n-grams, in ONE
+  * compiled pass per row: gram p hashes tokens p..p+n-1 as
+  * `xxhash64(t_p, .., t_{p+n-1})` (seed 42, chained `hashUnsafeBytes`), a
+  * gram with a null token is skipped, and the hashes are sorted ascending
+  * (signed) and deduplicated — the carrier exact-Jaccard verification
+  * intersects with `IntersectCardSorted`. Tokens contain no separator
+  * characters (whitespace tokenization), so tuple identity is
+  * joined-string identity. Per-row, so the set build never shuffles
+  * tokens (a posexplode → lead window → collect_set plan does). Fewer
+  * than n tokens → empty array; null input → null.
+  */
+case class NgramHashSet(child: Expression, n: Int) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override protected def nullSafeEval(in: Any): Any =
+    NgramHashSet.compute(in.asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.NgramHashSet.compute($c, $n);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object NgramHashSet {
+
+  def compute(arr: ArrayData, n: Int): ArrayData = {
+    val m = arr.numElements()
+    val g = math.max(m - n + 1, 0)
+    val hs = new Array[Long](g)
+    var k = 0
+    var p = 0
+    while (p < g) {
+      var h = 42L
+      var j = 0
+      while (j < n && !arr.isNullAt(p + j)) {
+        val t = arr.getUTF8String(p + j)
+        h = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes, h)
+        j += 1
+      }
+      if (j == n) { hs(k) = h; k += 1 }
+      p += 1
+    }
+    java.util.Arrays.sort(hs, 0, k)
+    var d = 0
+    var i = 0
+    while (i < k) {
+      if (d == 0 || hs(i) != hs(d - 1)) { hs(d) = hs(i); d += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(hs, d))
+  }
+}
+
+/** Per-document token statistics in ONE compiled pass: `top_cnt`, the
+  * occurrence count of the most frequent token, and `char_sum`, the total
+  * characters (Unicode chars) of the tokens — per-row, where
+  * explode(tokens) → groupBy(doc, token) → groupBy(doc) → join shuffles
+  * twice at token grain. Null tokens count as one distinct value towards `top_cnt` and
+  * add no characters (`char_sum` is null when no token is non-null), as
+  * the grouped form does. Null or empty input → null stats, which keeps the
+  * grouped form's left-join nulls and never divides by a zero word count.
+  */
+case class TokenStats(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = TokenStats.schema
+
+  // no tokens → null, also for a non-null input
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(in: Any): Any =
+    TokenStats.compute(in.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.TokenStats.compute($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object TokenStats {
+
+  import org.apache.spark.sql.types.{StructField, StructType}
+
+  val schema: StructType = StructType(Seq(
+    StructField("top_cnt", LongType, nullable = false),
+    StructField("char_sum", LongType, nullable = true)))
+
+  def compute(arr: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
+    val m = arr.numElements()
+    if (m == 0) return null
+    val counts = new java.util.HashMap[UTF8String, Array[Long]](m * 2)
+    var nulls = 0L
+    var top = 0L
+    var chars = 0L
+    var i = 0
+    while (i < m) {
+      if (arr.isNullAt(i)) {
+        nulls += 1
+        if (nulls > top) top = nulls
+      } else {
+        val t = arr.getUTF8String(i)
+        chars += t.numChars()
+        var c = counts.get(t)
+        if (c == null) { c = new Array[Long](1); counts.put(t, c) }
+        c(0) += 1
+        if (c(0) > top) top = c(0)
+      }
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](top, if (nulls == m) null else chars))
   }
 }

@@ -91,6 +91,22 @@ object TextFns {
     org.apache.spark.sql.graft.Bridge.column(
       RepetitionStats(org.apache.spark.sql.graft.Bridge.expression(tokensCol)))
 
+  /** Sorted distinct xxhash64 word-n-gram hashes of a token array (codegen
+    * `NgramHashSet`): the exact-Jaccard carrier `IntersectCardSorted`
+    * walks. Fewer than `n` tokens → empty array; null → null.
+    */
+  def ngramHashSet(tokensCol: Column, n: Int): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      NgramHashSet(org.apache.spark.sql.graft.Bridge.expression(tokensCol), n))
+
+  /** Per-doc token statistics (codegen `TokenStats`): struct of `top_cnt`
+    * (count of the most frequent token) and `char_sum` (token characters).
+    * Null or empty token array → null.
+    */
+  def tokenStats(tokensCol: Column): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      TokenStats(org.apache.spark.sql.graft.Bridge.expression(tokensCol)))
+
   /** Unicode NFC canonical composition (codegen `NfcNormalize` expression).
     * Normalize BEFORE fingerprinting/dedup: composed and decomposed forms
     * of the same visible text must hash identically.

@@ -23,11 +23,10 @@ object Curation {
     * mean word length, most-common-word mass, and duplicate-bigram mass,
     * plus the combined keep/drop verdict.
     *
-    * Shape at scale: one explode + two-level aggregation. The (doc, token)
-    * count gets map-side partial aggregation, and the per-doc rollup reuses
-    * the same hash partitioning (Exchange reuse — one shuffle of token
-    * counts, never raw tokens twice). The bigram signals are per-row
-    * expressions (codegen `WordShingles`), no extra pass.
+    * Shape at scale: map-only, one pass over the corpus. The token
+    * statistics (top token count, character sum) are the fused per-row
+    * `TokenStats` kernel and the bigram signals the per-row `WordShingles`
+    * expression; nothing explodes to token grain and nothing shuffles.
     */
   def gopherSignals(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = TextFns.tokens(col(textCol))
@@ -37,22 +36,14 @@ object Curation {
       // total bigrams (with duplicates) is determined by the token count;
       // wordShingles is the DISTINCT set — both sides of the dup fraction
       greatest(size(toks).cast("long") - 1L, lit(0L)).as("n_bigrams"),
-      size(TextFns.wordShingles(toks, 2)).cast("long").as("n_bigrams_distinct"))
-    val tokenCounts = docs
-      .select(col(idCol), explode(toks).as("__tk"))
-      .groupBy(col(idCol), col("__tk"))
-      .agg(count(lit(1)).as("__cnt"))
-    val perDoc = tokenCounts
-      .groupBy(col(idCol))
-      .agg(
-        max(col("__cnt")).as("__top_cnt"),
-        sum(col("__cnt") * length(col("__tk"))).as("__char_sum"))
-    val joined = base.join(perDoc, Seq(idCol), "left")
-    val meanLen = col("__char_sum").cast("double") / col("n_words").cast("double")
-    val topFrac = col("__top_cnt").cast("double") / col("n_words").cast("double")
+      size(TextFns.wordShingles(toks, 2)).cast("long").as("n_bigrams_distinct"),
+      TextFns.tokenStats(toks).as("__st"))
+    // null stats (no tokens) keep both fractions null, never a 0/0
+    val meanLen = col("__st.char_sum").cast("double") / col("n_words").cast("double")
+    val topFrac = col("__st.top_cnt").cast("double") / col("n_words").cast("double")
     val dupBigram = when(col("n_bigrams") > 0,
       lit(1.0) - (col("n_bigrams_distinct").cast("double") / col("n_bigrams").cast("double")))
-    joined.select(
+    base.select(
       col(idCol), col("n_words"),
       meanLen.as("mean_word_len"),
       topFrac.as("top_word_frac"),

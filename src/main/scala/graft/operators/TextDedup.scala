@@ -2,16 +2,18 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
-import graft.functions.{IntersectCardSorted, TextFns}
+import graft.functions.{IntersectCardSorted, MinHashSignature, TextFns}
 
 /** Near-duplicate detection for document corpora: MinHash + LSH banding,
   * SimHash fingerprints, and exact n-gram Jaccard verification.
   *
   * Design for 100 TB:
-  *   - signatures/fingerprints are pure expression pipelines per row (no
-  *     shuffle, fully codegen'd higher-order functions over the shingle
-  *     array);
+  *   - signatures, band hashes and the hashed n-gram sets verification
+  *     intersects are per-row codegen kernels (`MinHashSignature`,
+  *     `NgramHashSet`): the corpus front end is map-only, nothing shuffles
+  *     before the bucket join;
   *   - candidate generation is ONE shuffle on (band_index, band_hash) —
   *     classic LSH banding, so only same-bucket docs ever meet; the
   *     all-pairs O(n²) never materializes;
@@ -22,9 +24,11 @@ import graft.functions.{IntersectCardSorted, TextFns}
   *     pairs (two hash joins on doc id).
   *
   * Two hash families:
-  *   - `HexMd5` — md5 hex strings, lexicographic min; deliberately chosen so
-  *     the DuckDB oracle can reproduce signatures bit-for-bit;
-  *   - `Xx64` — xxhash64 longs; ~10x cheaper, the scale path (no SQL oracle,
+  *   - `HexMd5` — one md5-derived 28-bit base per shingle permuted by exact
+  *     linear-congruential hashes, band hashes as md5 hex strings;
+  *     deliberately chosen so the DuckDB oracle can reproduce signatures and
+  *     bands bit-for-bit;
+  *   - `Xx64` — xxhash64 longs; cheaper, the scale path (no SQL oracle,
   *     property-tested instead).
   */
 object TextDedup {
@@ -33,31 +37,24 @@ object TextDedup {
   case object HexMd5 extends HashFamily
   case object Xx64 extends HashFamily
 
-  /** MinHash signature of a distinct-shingle array: element i is
-    * min over shingles s of h(i || "|" || s).
+  /** MinHash signature of a shingle array: element i is min over shingles
+    * s of h_i(s), in the family's hash (see [[graft.functions.MinHashSignature]]
+    * for both definitions). Null when there are no shingles. This is the
+    * one MinHash definition: `bandedSignatures` bands exactly this array.
     */
-  def minhashSignature(shingles: Column, numHashes: Int, family: HashFamily = Xx64): Column = {
-    val sig = family match {
-      case HexMd5 =>
-        transform(sequence(lit(0), lit(numHashes - 1)),
-          i => array_min(transform(shingles, s => md5(concat(i.cast("string"), lit("|"), s)))))
-      case Xx64 =>
-        transform(sequence(lit(0), lit(numHashes - 1)),
-          i => array_min(transform(shingles, s => xxhash64(i, s))))
-    }
-    when(size(shingles) > 0, sig).otherwise(lit(null))
-  }
+  def minhashSignature(shingles: Column, numHashes: Int, family: HashFamily = Xx64): Column =
+    Bridge.column(MinHashSignature(Bridge.expression(shingles), numHashes, family == HexMd5))
 
   /** Per-doc banded signature rows: (id, band, band_hash). `numHashes` must
     * be bands * rowsPerBand. Exploded representation feeds the bucket join.
     *
-    * Computed as explode(shingles) -> numHashes plain hash columns ->
-    * groupBy(id).agg(min...) rather than a nested higher-order-function
-    * fold: HOF lambdas evaluate interpreted (outside whole-stage codegen),
-    * which made the signature stage dominate the whole pipeline; the
-    * explode+agg shape keeps every hash inside codegen and gets map-side
-    * partial min aggregation — at 100 TB the shuffle carries only
-    * numHashes partial minima per doc per map partition.
+    * Map-only: the fused `minhashSignature` kernel computes the whole
+    * signature per row, band b hashes its slice of positions
+    * [b*rowsPerBand, (b+1)*rowsPerBand) as plain codegen expressions, and
+    * one explode emits the band rows, so nothing shuffles before the
+    * bucket join. A doc with no shingles emits no band rows. Band hash:
+    * Xx64 `xxhash64(b, m...)`; HexMd5 `md5("b|m|...")` over the decimal
+    * minima, SQL-replayable.
     */
   def bandedSignatures(
       docs: DataFrame,
@@ -66,41 +63,20 @@ object TextDedup {
       bands: Int,
       rowsPerBand: Int,
       family: HashFamily = Xx64): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // HexMd5: the classic Broder construction — ONE base hash per shingle
-    // (first 7 md5 hex digits as a 28-bit int, SQL-reproducible), permuted
-    // by numHashes linear-congruential functions h_i(b) = (A_i*b + B_i)
-    // mod (2^31-1). Exact long arithmetic (A_i*b < 2^59), so an oracle
-    // replays it bit-for-bit; 12x fewer md5 calls than hashing per (i, s).
-    val M = 2147483647L
-    val hashOf: Int => Column = family match {
-      case HexMd5 => i => {
-        val a = (1103515245L * (i + 1)) % M
-        val b = 12345L * (i + 1)
-        pmod(lit(a) * col("__base") + lit(b), lit(M))
-      }
-      case Xx64 => i => xxhash64(lit(i), col("__sh"))
-    }
-    val exploded = docs.select(col(idCol), explode(shingles).as("__sh"))
-    val based = family match {
-      case HexMd5 => exploded.withColumn("__base",
-        conv(substring(md5(col("__sh")), 1, 7), 16, 10).cast("long"))
-      case Xx64 => exploded
-    }
-    val sig = based
-      .groupBy(col(idCol))
-      .agg(min(hashOf(0)).as("__m0"), (1 until numHashes).map(i => min(hashOf(i)).as(s"__m$i")): _*)
-    // band b's hash covers signature positions [b*rowsPerBand, (b+1)*rowsPerBand)
+    val sig = col("__sig")
     val bandHash = (b: Int) => {
-      val members = (0 until rowsPerBand).map(r => col(s"__m${b * rowsPerBand + r}"))
+      val members = (0 until rowsPerBand).map(r => sig.getItem(b * rowsPerBand + r))
       family match {
         case HexMd5 => md5(concat_ws("|", lit(b.toString) +: members: _*))
         case Xx64   => xxhash64(lit(b) +: members: _*)
       }
     }
-    sig
-      .select(col(idCol), explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"), bandHash(b).as("band_hash"))): _*)).as("__b"))
+    // two selects: the signature is computed once per row and every band
+    // hash reads it (nothing inlines a projection into a generator)
+    docs
+      .select(col(idCol), minhashSignature(shingles, bands * rowsPerBand, family).as("__sig"))
+      .select(col(idCol), explode(when(sig.isNotNull, array((0 until bands).map(b =>
+        struct(lit(b).as("band"), bandHash(b).as("band_hash"))): _*))).as("__b"))
       .select(col(idCol), col("__b.band").as("band"), col("__b.band_hash").as("band_hash"))
   }
 
@@ -143,23 +119,16 @@ object TextDedup {
       .distinct()
   }
 
-  /** Sorted distinct 64-bit hashes of a shingle set — the cheap carrier for
-    * exact-Jaccard verification: 8-byte elements instead of strings, and
-    * sorted so intersection is a merge walk (`IntersectCardSorted`).
-    * Jaccard counts are exact up to 64-bit hash collisions (negligible at
-    * any realistic shingle cardinality).
-    */
-  def hashedShingles(shingles: Column): Column =
-    sort_array(array_distinct(transform(shingles, s => xxhash64(s))))
-
   /** Hashed word-n-gram sets computed WITHOUT building shingle strings:
-    * posexplode the tokens, window-lead the next n-1 tokens, hash the token
-    * tuple directly. Tokens contain no separator characters (whitespace
+    * one per-row column ([[graft.functions.NgramHashSet]] — each gram's
+    * token tuple hashed directly, sorted, deduplicated), so the set build
+    * is map-only. Tokens contain no separator characters (whitespace
     * tokenization), so tuple identity == joined-string identity — the set
     * cardinalities match the string-shingle formulation exactly (modulo
-    * 64-bit collisions). Every step is codegen (the per-row shingle
-    * transform this replaces is an interpreted higher-order function), and
-    * the window + groupBy share the doc-id clustering (one exchange).
+    * 64-bit collisions). 8-byte sorted elements make intersection a merge
+    * walk (`IntersectCardSorted`). Output: keys, `__set`, `__n` = |set|;
+    * docs with an empty set (fewer than n tokens) are dropped. Keys must
+    * be unique per row (every caller passes unique doc ids).
     */
   private[graft] def hashedNgramSets(
       docs: DataFrame,
@@ -168,16 +137,12 @@ object TextDedup {
       tokensCol: Column,
       n: Int): DataFrame = {
     val keys = blockCols.map(col) :+ col(idCol)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("__pos"))
-    val leads = (1 until n).map(k => lead(col("__tk"), k).over(w).as(s"__tk$k"))
-    val gramCols = col("__tk") +: (1 until n).map(k => col(s"__tk$k"))
+    // empty sets are dropped by exploding a one-element array, not by a
+    // Filter: a Filter on `__set` is pushed below the projection and would
+    // build every set (and tokenize every doc) twice
     docs
-      .select(keys :+ posexplode(tokensCol).as(Seq("__pos", "__tk")): _*)
-      .select(keys ++ Seq(col("__pos"), col("__tk")) ++ leads: _*)
-      .filter(gramCols.map(_.isNotNull).reduce(_ && _))
-      .groupBy(keys: _*)
-      .agg(sort_array(collect_set(xxhash64(gramCols: _*))).as("__set"))
+      .select(keys :+ TextFns.ngramHashSet(tokensCol, n).as("__s"): _*)
+      .select(keys :+ explode(when(size(col("__s")) > 0, array(col("__s")))).as("__set"): _*)
       .withColumn("__n", size(col("__set")))
   }
 
@@ -201,12 +166,11 @@ object TextDedup {
       threshold: Double): DataFrame = {
     val sets = hashedNgramSets(docs, idCol, Seq(), tokensCol, shingleWords)
     // The candidate pair list is broadcast against the set table twice, so
-    // the set build runs twice. Measured alternative (SHUFFLE_HASH on the
-    // set side for Exchange reuse) was NET SLOWER: shuffling + hash-mapping
-    // the array-heavy set rows twice costs more than one recompute, while
-    // the pair list is bounded by the LSH bucket cap and broadcasts for
-    // free. At persistent-pipeline scale, materialize `sets` once (it is
-    // the signature table) and both joins become cheap probes.
+    // the docs are scanned and the per-row set kernel runs twice — two
+    // map-only passes and no shuffle of the array-heavy set rows (the pair
+    // list is bounded by the LSH bucket cap and broadcasts for free). At
+    // persistent-pipeline scale, materialize `sets` once (it is the
+    // signature table) and both joins become cheap probes.
     pairs
       .join(sets.select(col(idCol).as("a_id"), col("__set").as("__sa")), Seq("a_id"))
       .join(sets.select(col(idCol).as("b_id"), col("__set").as("__sb")), Seq("b_id"))

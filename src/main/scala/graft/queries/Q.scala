@@ -64,9 +64,9 @@ object Q {
 
   private def tUncached(s: SparkSession, dir: String, name: String): DataFrame = {
     // Historically events.ts was TIMESTAMP(NANOS) parquet, which Spark only
-    // reads as long; current generations store TIMESTAMP_MICROS (NTZ).
-    // Adapt to whichever type actually arrives rather than assuming one.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // reads as long (`Graft.session` sets nanosAsLong); current generations
+    // store TIMESTAMP_MICROS (NTZ). Adapt to whichever type actually arrives
+    // rather than assuming one.
     val df = Graft.table(s, dir, name)
     val ntz = df.schema.fields.foldLeft(df) { (d, f) =>
       f.dataType match {
@@ -106,8 +106,20 @@ object Q {
         var total = 0L
         while (it.hasNext) total += it.next().getLen
         total
-      } catch { case _: Throwable => Long.MaxValue }
+      } catch {
+        // unknown size: no spread, but say why instead of hiding it
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[q] size of $dir/$name.parquet unknown, not spreading its scan: $e")
+          Long.MaxValue
+      }
     })
+
+  /** The session's scan split size, `spark.sql.files.maxPartitionBytes`,
+    * parsed as Spark parses it ("64m", "128MB", "134217728b", plain bytes).
+    */
+  private[graft] def maxSplitBytes(s: SparkSession): Long =
+    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      s.conf.get("spark.sql.files.maxPartitionBytes"))
 
   /** OPT-IN scan spread for CPU-heavy map fronts (guide §2.5 "input skew —
     * one huge unsplittable file ... repartition immediately after the
@@ -139,10 +151,7 @@ object Q {
   def tSpread(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(s, dir, name)
     val target = s.sparkContext.defaultParallelism
-    val maxSplit =
-      try s.conf.get("spark.sql.files.maxPartitionBytes").stripSuffix("b").toLong
-      catch { case _: Throwable => 128L * 1024 * 1024 }
-    if (target > 1 && tableBytes(s, dir, name) < maxSplit) df.repartition(target)
+    if (target > 1 && tableBytes(s, dir, name) < maxSplitBytes(s)) df.repartition(target)
     else df
   }
 

@@ -105,4 +105,19 @@ class LoaderSpec extends AnyFunSuite {
     val shown = a.map(_.getAs[java.time.LocalDateTime]("ts").toString)
     assert(shown == Seq("2024-01-05T10:30:00.123456", "2024-01-06T23:59:59.000001"))
   }
+
+  test("Q.maxSplitBytes parses the scan split size as Spark does (64m is 64 MiB)") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    try {
+      assert(Q.maxSplitBytes(spark) === 128L * 1024 * 1024) // the default
+      spark.conf.set(key, "64m")
+      assert(Q.maxSplitBytes(spark) === 64L * 1024 * 1024)
+      spark.conf.set(key, "1048576")
+      assert(Q.maxSplitBytes(spark) === 1024L * 1024)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }

@@ -13,6 +13,9 @@ object TestSpark {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
       .config("spark.ui.enabled", "false")
+      // as `graft.core.Graft.session` sets it: `Q.t` reads TIMESTAMP(NANOS)
+      // parquet columns as longs
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
