@@ -120,8 +120,8 @@ object Bench {
       md.digest().take(8).map("%02x".format(_)).mkString
     }
 
-    val runner = new Runner(spark, sfDir, ordered,
-      line => System.err.println(s"[bench] $line"))
+    def log(line: String): Unit = System.err.println(s"[bench] $line")
+    val runner = new Runner(spark, sfDir, ordered, log)
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) runner.warmUp(warmDir)
 
@@ -191,7 +191,8 @@ object Bench {
         .agg(sum(xxhash64(col("h")).cast("decimal(38,0)")).as("s"))
     }
     val calibration = {
-      try noop(calibCpuFrame) catch { case _: Throwable => () }
+      try noop(calibCpuFrame)
+      catch { case e: Throwable => log(s"calibration warm-up failed: ${Runner.message(e)}") }
       timed("q_calibration")(noop(calibCpuFrame))
     }
     // Idle-host reference for q_calibration on THIS host class, recorded
@@ -252,8 +253,11 @@ object Bench {
       if (i > 0 && i % tickEvery == 0) {
         val tickOff = offsNow()
         val tk0 = System.nanoTime()
-        try noop(calibCpuFrame) catch { case _: Throwable => () }
-        ticks += ((i, tickOff, (System.nanoTime() - tk0) / 1e9))
+        // a failed tick is no timing: a fast failure would read as an idle host
+        try {
+          noop(calibCpuFrame)
+          ticks += ((i, tickOff, (System.nanoTime() - tk0) / 1e9))
+        } catch { case e: Throwable => log(s"calibration tick at line $i failed: ${Runner.message(e)}") }
       }
       i += 1
       timed(q.name)(noop(q.fn(spark, sfDir)))
@@ -396,7 +400,7 @@ object Bench {
             f(calibrationIoEndSec / calibrationIoIdleRefSec) else "-1"
         },"gate_factor":$gateFactor,"policy_skips":$skipJson,"tick_every":$tickEvery,"calib_ticks":$ticksJson,"how_to_read":"$howToRead","t_start":$tStartJson,"errors":$errJson,"queries":$detail}""" + "\n")
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_DETAIL write failed: ${Runner.message(e)}")
+      log(s"BENCH_DETAIL write failed: ${Runner.message(e)}")
     }
     spark.stop()
     println(fits.getOrElse(line(Seq.empty, total)))

@@ -112,7 +112,7 @@ object Verify {
     // Sorted, not Map hash order: deterministic run order (matches
     // check_timed's print order), and the runner frees each memo family
     // right after its last consumer. Since the serialized checkpoint change
-    // (Checkpoints.Ser) the single-query f100 repro of the heap incident
+    // (Materialize.Ser) the single-query f100 repro of the heap incident
     // passes value-exact ON the default heap (319.5s, r14), so
     // SPARK_DRIVER_MEM on large-factor gates is insurance for the
     // full-surface run, no longer a requirement for any one query.

@@ -36,10 +36,17 @@ object TablePersist {
     * real cluster set ≈ executor count so a single-date daily batch
     * saturates the writers with ~contracted file sizes (guide §6: aim for
     * 128 MB-1 GB output files — pick filesPerDate ≈ dailyBytes / 512 MB).
+    *
+    * @throws IllegalArgumentException if the setting is not a positive
+    *         integer: 0 would reach `pmod` and fail deep inside the write
+    *         job, so a bad value is rejected here, by name.
     */
-  private def filesPerDate(df: DataFrame): Int =
-    try df.sparkSession.conf.get("spark.graft.filesPerDate", "4").toInt
-    catch { case _: Throwable => 4 }
+  private[graft] def filesPerDate(df: DataFrame): Int = {
+    val key = "spark.graft.filesPerDate"
+    val raw = df.sparkSession.conf.get(key, "4")
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$key must be a positive integer, got '$raw'"))
+  }
 
   /** Append `df` partitioned by the date of `tsCol`.
     *

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Connected components over a near-duplicate pair graph — the step that
   * turns dedup PAIRS into dedup GROUPS (a corpus keeps one canonical doc
   * per component, not per pair; transitive duplicates A~B~C must collapse
@@ -47,25 +49,13 @@ object ConnectedComponents {
     */
   @volatile var lastRounds: Int = -1
 
-  /** The persisted RDDs a frame's physical plan is rooted on (public-API
-    * dependency walk from `queryExecution.toRdd`): for a checkpointed
-    * frame, exactly its checkpoint RDD. Used to free checkpoint storage —
-    * `Dataset.unpersist` only releases CacheManager caches, never the
-    * RDD blocks a `localCheckpoint` pinned.
-    */
-  private def pinnedRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-    Checkpoints.pinnedRdds(df)
-
   /** Release the checkpoint blocks backing a frame returned by
     * [[minLabel]]/[[dedupGroups]]. The frame is NOT recomputable afterwards
     * (checkpointing truncated its lineage) — callers must be completely
-    * done with it. This is the teardown half of the result's storage
-    * contract: the loop's INTERMEDIATE checkpoints are freed eagerly as
-    * rounds advance, but the final label frame's checkpoint IS the result
-    * data and has to outlive the call.
+    * done with it. Kept as a named delegate of `Materialize.release` because
+    * the benchmark harness (`perfbench`) compiles against this signature.
     */
-  def releaseResult(df: DataFrame): Unit =
-    pinnedRdds(df).foreach(_.unpersist(blocking = true))
+  def releaseResult(df: DataFrame): Unit = Materialize.release(df)
 
   /** Component labels at the min-label fixpoint over the undirected edge
     * list `(aCol, bCol)`. Output: (v, label) — one row per distinct
@@ -80,8 +70,7 @@ object ConnectedComponents {
     // executes the upstream near-dup join once per branch (the O(block²)
     // predicate loop twice), and every propagation round would recompute
     // it again — the checkpointed pair list is scanned instead
-    val e = edges.select(col(aCol).as("x"), col(bCol).as("y"))
-      .localCheckpoint(true, Checkpoints.Ser)
+    val e = Materialize.pin(edges.select(col(aCol).as("x"), col(bCol).as("y")))
     // the mirrored edge list is joined on `y` EVERY round; a union carries
     // no partitioning, so each round re-shuffled the |E| frame (the big
     // side) just to reach the same layout. Checkpointing it hash-partitioned
@@ -89,13 +78,11 @@ object ConnectedComponents {
     // edge side (guide §2.4) — at corpus scale that is rounds-1 fewer full
     // edge shuffles. `e`'s own checkpoint blocks are released as soon as the
     // partitioned copy exists, so peak pinned storage stays one edge list.
-    val und = e.unionByName(e.select(col("y").as("x"), col("x").as("y")))
-      .repartition(col("y"))
-      .localCheckpoint(true, Checkpoints.Ser)
-    pinnedRdds(e).foreach(_.unpersist(blocking = false))
-    var labels = und.select(col("x").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint(true, Checkpoints.Ser)
+    val und = Materialize.pin(e.unionByName(e.select(col("y").as("x"), col("x").as("y")))
+      .repartition(col("y")))
+    Materialize.release(e, blocking = false)
+    var labels = Materialize.pin(und.select(col("x").as("v")).distinct()
+      .withColumn("label", col("v")))
     // decimal(38,0) so the convergence invariant (sum strictly decreases on
     // any label change) cannot be confused by a bigint overflow wraparound
     def labelSum(df: DataFrame): java.math.BigDecimal =
@@ -115,12 +102,13 @@ object ConnectedComponents {
     var prevSum: java.math.BigDecimal = null
     var converged = false
     var round = 0
-    // the previous round's checkpoint blocks: freed as soon as the next
-    // round's checkpoint has materialized (localCheckpoint is eager), so at
-    // any moment at most TWO |V|-row label frames are pinned instead of one
-    // per round — on a 100 TB corpus the label frame is billions of rows,
-    // and an un-freed checkpoint per round is a real storage leak
-    var prevPinned: Seq[org.apache.spark.rdd.RDD[_]] = pinnedRdds(labels)
+    // the previous round's label frame is freed as soon as the next
+    // round's has materialized (pins are eager), so at any moment at most
+    // TWO |V|-row label frames are pinned instead of one per round — on a
+    // 100 TB corpus the label frame is billions of rows, and an un-freed
+    // checkpoint per round is a real storage leak. The releases do not
+    // block: the loop never reads a released frame again, and a blocking
+    // release would add its latency to every round.
     while (!converged && round < maxRounds) {
       val viaNeighbor = und
         .join(labels, col("y") === col("v"))
@@ -140,10 +128,9 @@ object ConnectedComponents {
       // Dense near-dup clique graphs (the factor-100 probe) converge in 2
       // rounds at any count. Two is the measured cost floor, keeping one
       // extra jump over one for layouts where halving does compound
-      labels = jump(jump(stepped))
-        .localCheckpoint(true, Checkpoints.Ser)
-      prevPinned.foreach(_.unpersist(blocking = false))
-      prevPinned = pinnedRdds(labels)
+      val prev = labels
+      labels = Materialize.pin(jump(jump(stepped)))
+      Materialize.release(prev, blocking = false)
       val nextSum = labelSum(labels)
       converged = round > 0 && nextSum == prevSum
       prevSum = nextSum
@@ -151,13 +138,13 @@ object ConnectedComponents {
     }
     // the mirrored edge list is only read inside the loop; its checkpoint
     // (|E| rows — the big one) is dead weight once the labels converged
-    pinnedRdds(und).foreach(_.unpersist(blocking = false))
+    Materialize.release(und, blocking = false)
     lastRounds = round
     if (!converged) {
       // error path: no frame handle escapes, so the final round's label
       // checkpoint would stay pinned forever in a long-lived session —
       // release it before surfacing the failure
-      prevPinned.foreach(_.unpersist(blocking = false))
+      Materialize.release(labels, blocking = false)
       throw new IllegalStateException(
         s"min-label propagation did not converge within $maxRounds rounds " +
           "(component diameter exceeds maxRounds); raise maxRounds or use a " +

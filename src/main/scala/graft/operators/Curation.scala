@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.TextFns
 
 /** Corpus-curation operators a training-data pipeline runs between raw
@@ -334,7 +335,7 @@ object Curation {
     * pair counts weighted by word frequency, a 1-row argmax folded back by
     * broadcast, and a map-only merge. The loop is fully declarative — the
     * argmax is never collected; it joins back as a broadcast frame, and
-    * the vocab frame localCheckpoints per round to stop lineage growth.
+    * the vocab frame is pinned per round to stop lineage growth.
     * One Spark job cadence per merge round is inherent to BPE's sequential
     * dependency; the word-grain frame IS the scale mitigation (rounds cost
     * |vocab|, independent of corpus size), and real-vocab training (30k
@@ -437,15 +438,14 @@ object Curation {
       docs: DataFrame,
       textCol: String,
       rounds: Int): (DataFrame, Seq[DataFrame]) = {
-    val words = docs
+    val words = Materialize.pin(docs
       .select(explode(TextFns.tokens(col(textCol))).as("__w"))
       .groupBy(col("__w"))
       .agg(count(lit(1)).as("__n"))
       .select(
         // ' a b a b ' — every symbol space-delimited on both sides
         concat(lit(" "), regexp_replace(col("__w"), "(.)", "$1 ")).as("__sym"),
-        col("__n"))
-      .localCheckpoint(true, Checkpoints.Ser)
+        col("__n")))
 
     def pairCounts(vocab: DataFrame): DataFrame = {
       val s = filter(split(trim(col("__sym")), " "), x => x =!= lit(""))
@@ -492,11 +492,12 @@ object Curation {
             concat(substr(acc0, lit(1), length(acc0) - length(col("l"))),
               col("l"), col("r")))
             .otherwise(concat(acc0, lit(" "), t)))
-        val merged = vocab
+        // every round's vocab stays pinned: the lazy per-round merge rows
+        // read the vocab they were argmaxed over
+        val merged = Materialize.pin(vocab
           .crossJoin(broadcast(best))
           .select(concat(lit(" "), foldMerged, lit(" ")).as("__sym"),
-            col("__n"))
-          .localCheckpoint(true, Checkpoints.Ser)
+            col("__n")))
         val row = best
           .filter(col("pair_count") >= 0)
           .select(
@@ -682,8 +683,8 @@ object Curation {
       k: Int,
       w: Int,
       minShared: Int,
-      maxDocFreq: Int): DataFrame = {
-    val fps = winnowFingerprints(docs, idCol, textCol, k, w).persist()
+      maxDocFreq: Int): DataFrame = Materialize.scoped { scope =>
+    val fps = scope.cache(winnowFingerprints(docs, idCol, textCol, k, w))
     val rare = fps
       .groupBy(col("fingerprint"))
       .agg(count(lit(1)).as("__df"))
@@ -692,17 +693,13 @@ object Curation {
     val indexed = fps.join(rare, Seq("fingerprint"), "left_semi")
     val a = indexed.select(col("fingerprint"), col(idCol).as("a_id"))
     val b = indexed.select(col("fingerprint"), col(idCol).as("b_id"))
-    val matches = a.join(b, Seq("fingerprint"))
+    // the scope pins the (small, post-aggregation) match frame, then frees
+    // the fingerprint cache instead of leaking it for the session
+    a.join(b, Seq("fingerprint"))
       .filter(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-      // eager: materialize the (small, post-aggregation) match frame so the
-      // fingerprint cache can be released here instead of leaking for the
-      // session lifetime (repeated calls were accumulating storage blocks)
-      .localCheckpoint(true, Checkpoints.Ser)
-    fps.unpersist()
-    matches
   }
 
   /** Bigram language-model quality score: the corpus itself is the model

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Materialize
+
 /** Multimodal (image/audio/video) column plumbing.
   *
   * Media payloads are opaque `binary` columns with typed metadata travelling
@@ -421,10 +423,10 @@ object Multimodal {
           shiftright(col("dhash_hi"), 16).bitwiseAND(lit(0xffffL))))
           .as(Seq("band_idx", "band_val")))
 
-  /** The banded image self-join itself, pre-checkpoint — factored out so
-    * plan specs can assert the physical join strategy of each
-    * [[NearDupBuild]] mode (the public wrapper's `localCheckpoint` hides
-    * the plan behind an RDD scan).
+  /** The banded image self-join itself, unpinned — factored out so plan
+    * specs can assert the physical join strategy of each [[NearDupBuild]]
+    * mode (the public wrapper's pinned result hides the plan behind an RDD
+    * scan).
     */
   private[graft] def imageNearDupJoin(
       e: DataFrame, maxHamming: Int, build: NearDupBuild): DataFrame = {
@@ -458,21 +460,17 @@ object Multimodal {
   def imageNearDupPairs(
       hashes: DataFrame,
       maxHamming: Int,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
+      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = Materialize.scoped { scope =>
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4x16-bit banding is exact only for maxHamming <= 3, got $maxHamming")
     val banded = imageBands(hashes)
-    val e = (build match {
+    val e = scope.cache(build match {
       case NearDupBuild.Shuffle(cap) => capCells(banded, Seq("band_idx", "band_val"), cap)
       case NearDupBuild.Broadcast => banded
-    }).persist()
-    val out = imageNearDupJoin(e, maxHamming, build)
-      // eager: the post-distinct pair frame is small; materializing it here
-      // lets the banded cache release instead of leaking for the session
-      // (same discipline as winnowMatches)
-      .localCheckpoint(true, Checkpoints.Ser)
-    e.unpersist()
-    out
+    })
+    // the scope pins the small post-distinct pair frame, then frees the
+    // banded cache instead of leaking it for the session
+    imageNearDupJoin(e, maxHamming, build)
   }
 
   /** Schema of a decoded-BMP feature row (see `decodeBmpFeatures`). */
@@ -1336,28 +1334,22 @@ object Multimodal {
       levels: DataFrame,
       minBands: Int,
       maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
+      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = Materialize.scoped { scope =>
     require(minBands > 0 && maxLevelDiff >= 0,
       s"need positive thresholds: $minBands / $maxLevelDiff")
-    // persist only plans not already cached by the caller:
-    // contourNearDupGroups passes its own persisted ffps here (Broadcast
-    // build), and re-persisting it logged "Asked to cache already cached
-    // data" on every groups call AND unpersisting it below killed the
-    // caller's cache before its later reuse (r18 verdict #2's warning
-    // class) — own what you persist, release only that
-    val ePre = build match {
+    // contourNearDupGroups passes its own cached ffps here (Broadcast
+    // build): the scope caches only frames not cached already, so the
+    // caller's cache survives this call
+    val e = scope.cache(build match {
       case NearDupBuild.Shuffle(cap) => capCells(fps, Seq("band_idx", "band_sig"), cap)
       case NearDupBuild.Broadcast => fps
-    }
-    val eOwned = ePre.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val e = if (eOwned) ePre.persist() else ePre
-    val lvOwned = levels.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val lv = if (lvOwned) levels.persist() else levels
+    })
+    val lv = scope.cache(levels)
     val cand = audioNearDupCandidates(e, minBands, build)
     val nf = lv.groupBy(col("doc_id")).agg(count(lit(1)).as("__nf"))
     val la = lv.select(col("doc_id").as("a_id"), col("frame_idx"), col("level").as("__la"))
     val lb = lv.select(col("doc_id").as("b_id"), col("frame_idx"), col("level").as("__lb"))
-    val out = cand
+    cand
       .join(la, Seq("a_id"))
       .join(lb, Seq("b_id", "frame_idx"))
       .groupBy(col("a_id"), col("b_id"), col("n_bands"))
@@ -1371,12 +1363,6 @@ object Multimodal {
         col("max_level_diff") <= maxLevelDiff)
       .select(col("a_id"), col("b_id"), col("n_bands"), col("n_frames"),
         col("max_level_diff"))
-      // eager: release the banded + level caches instead of leaking them
-      // for the session (same discipline as imageNearDupPairs)
-      .localCheckpoint(true, Checkpoints.Ser)
-    if (eOwned) e.unpersist()
-    if (lvOwned) lv.unpersist()
-    out
   }
 
   /** Image near-dup GROUPS over [[dHashFeatures]] output — the scale-safe
@@ -1401,29 +1387,24 @@ object Multimodal {
   def imageNearDupGroups(
       hashes: DataFrame,
       maxHamming: Int,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
-    val hs = hashes.filter(col("dhash_hi").isNotNull)
-      .select(col("doc_id"), col("dhash_hi"), col("dhash_lo")).persist()
+      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = Materialize.scoped { scope =>
+    val hs = scope.cache(hashes.filter(col("dhash_hi").isNotNull)
+      .select(col("doc_id"), col("dhash_hi"), col("dhash_lo")))
     val fam = hs.groupBy(col("dhash_hi"), col("dhash_lo"))
       .agg(min(col("doc_id")).as("__gid"), count(lit(1)).as("__m"))
     val memb = hs.join(fam, Seq("dhash_hi", "dhash_lo"))
       .select(col("doc_id"), col("__gid"), col("__m"))
     val famHashes = fam.select(col("__gid").as("doc_id"), col("dhash_hi"), col("dhash_lo"))
-    val fpairs = imageNearDupPairs(famHashes, maxHamming, build)
-    val labels = ConnectedComponents.minLabel(fpairs, "a_id", "b_id")
-    val out = memb
+    val fpairs = scope.own(imageNearDupPairs(famHashes, maxHamming, build))
+    val labels = scope.own(ConnectedComponents.minLabel(fpairs, "a_id", "b_id"))
+    // the groups frame is linear in corpus size; the scope pins it, then
+    // frees the hash cache, the family pairs and the CC labels
+    memb
       .join(labels.select(col("v").as("__gid"), col("label")), Seq("__gid"), "left")
       .filter(col("label").isNotNull || col("__m") >= 2)
       .select(col("doc_id").as("member_id"),
         coalesce(col("label"), col("__gid")).as("group_id"),
         (col("doc_id") === coalesce(col("label"), col("__gid"))).as("is_canonical"))
-      // eager: the groups frame is linear in corpus size; materializing it
-      // here lets the hash cache and the CC label checkpoints release
-      // instead of leaking for the session (imageNearDupPairs discipline)
-      .localCheckpoint(true, Checkpoints.Ser)
-    ConnectedComponents.releaseResult(labels)
-    hs.unpersist()
-    out
   }
 
   /** Banded-contour near-dup GROUPS — the audio/video sibling of
@@ -1447,10 +1428,10 @@ object Multimodal {
       levels: DataFrame,
       minBands: Int,
       maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
+      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = Materialize.scoped { scope =>
     require(minBands > 0 && maxLevelDiff >= 0,
       s"need positive thresholds: $minBands / $maxLevelDiff")
-    val lv = levels.persist()
+    val lv = scope.cache(levels)
     // family key: the full ordered contour, serialized to one string so the
     // group-by/join key is a flat binary comparison (collect_list order is
     // nondeterministic — sort by frame_idx before joining)
@@ -1464,12 +1445,12 @@ object Multimodal {
     val memb = famOf.join(fam, Seq("__ck"))
       .select(col("doc_id"), col("__gid"), col("__m"))
     val gids = fam.select(col("__gid").as("doc_id"))
-    val ffps = fps.join(gids, Seq("doc_id"), "left_semi").persist()
+    val ffps = scope.cache(fps.join(gids, Seq("doc_id"), "left_semi"))
     val flv = lv.join(gids, Seq("doc_id"), "left_semi")
-    val fpairs = contourNearDupPairs(ffps, flv, minBands, maxLevelDiff, build)
+    val fpairs = scope.own(contourNearDupPairs(ffps, flv, minBands, maxLevelDiff, build))
     val nb = ffps.groupBy(col("doc_id")).agg(count(lit(1)).as("__nb"))
-    val labels = ConnectedComponents.minLabel(fpairs, "a_id", "b_id")
-    val out = memb
+    val labels = scope.own(ConnectedComponents.minLabel(fpairs, "a_id", "b_id"))
+    memb
       .join(labels.select(col("v").as("__gid"), col("label")), Seq("__gid"), "left")
       .join(nb.select(col("doc_id").as("__gid"), col("__nb")), Seq("__gid"), "left")
       .filter(col("label").isNotNull ||
@@ -1477,11 +1458,6 @@ object Multimodal {
       .select(col("doc_id").as("member_id"),
         coalesce(col("label"), col("__gid")).as("group_id"),
         (col("doc_id") === coalesce(col("label"), col("__gid"))).as("is_canonical"))
-      .localCheckpoint(true, Checkpoints.Ser)
-    ConnectedComponents.releaseResult(labels)
-    ffps.unpersist()
-    lv.unpersist()
-    out
   }
 
   /** Schema of a decoded-video feature row (see `decodeY4mFeatures`). */

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Fixed-iteration PageRank over an edge list — the link-graph authority
   * signal corpus pipelines use to weight sources (the CommonCrawl-style
   * "domain rank" that feeds crawl prioritization and quality weighting;
@@ -26,9 +28,9 @@ import org.apache.spark.sql.functions._
   * (bipartite activity graphs, doc-link graphs after dedup); for web-scale
   * hub nodes swap the fold for plain `sum` (giving up bit-replay, keeping
   * the plan) or pre-aggregate hot keys with the SkewJoin salting pattern.
-  * The rank frame is `localCheckpoint`ed per iteration like the k-means
-  * loop in [[Similarity]] — the unrolled lineage would otherwise double
-  * per iteration.
+  * Only the final rank frame is pinned; the distinct edge list, the node
+  * set and the degree-joined edges are cached for the call and released
+  * once the result is stored.
   */
 object PageRank {
 
@@ -47,50 +49,40 @@ object PageRank {
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      damping: Double = 0.85): DataFrame = {
-    val e = edges
+      damping: Double = 0.85): DataFrame = Materialize.scoped { scope =>
+    val e = scope.cache(edges
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .distinct()
-      .persist()
-    val nodes = e.select(col("__src").as("node"))
+      .distinct())
+    val nodes = scope.cache(e.select(col("__src").as("node"))
       .union(e.select(col("__dst").as("node")))
-      .distinct()
-      .persist()
+      .distinct())
     val nNodes = nodes.agg(count(lit(1)).as("__n"))
     val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__outdeg"))
-    val withDeg = e.join(outdeg, Seq("__src")).persist()
+    val withDeg = scope.cache(e.join(outdeg, Seq("__src")))
 
     val init = nodes
       .crossJoin(broadcast(nNodes))
       .select(col("node"),
         (lit(1.0) / col("__n").cast("double")).as("rank"))
 
-    val finalRanks = (1 to iterations).foldLeft(init) { (ranks, it) =>
+    // only the final frame is pinned (by the scope, which then releases the
+    // cached inputs): intermediate iterations stay lazy — at bounded
+    // iteration counts the unrolled lineage is fine, and an eager pin per
+    // iteration would cost a full extra materialization job + a pinned
+    // |V|-row block set each (for loops with many iterations, add a
+    // periodic pin — lineage doubles per round)
+    (1 to iterations).foldLeft(init) { (ranks, _) =>
       val sums = withDeg
         .join(ranks, withDeg("__src") === ranks("node"))
         .select(col("__dst"),
           (col("rank") / col("__outdeg").cast("double")).as("__contrib"))
         .groupBy(col("__dst"))
         .agg(orderedSum(col("__contrib")).as("__s"))
-      val next = nodes
+      nodes
         .join(sums, nodes("node") === sums("__dst"), "left")
         .select(col("node"),
           (lit(1.0 - damping) + (lit(damping) * coalesce(col("__s"), lit(0.0))))
             .as("rank"))
-      // checkpoint ONLY the final frame: that materialization is the
-      // result's storage contract (the cached inputs release safely below).
-      // Intermediate iterations stay lazy — at bounded iteration counts the
-      // unrolled lineage is fine, and each dropped eager checkpoint was a
-      // full extra materialization job + a pinned |V|-row block set per
-      // iteration (for loops with many iterations, re-introduce a periodic
-      // checkpoint — lineage doubles per round).
-      if (it == iterations) next.localCheckpoint(true, Checkpoints.Ser) else next
     }
-    // the final localCheckpoint is eager, so every iteration has already
-    // read the cached frames — release them rather than leak session-long
-    e.unpersist()
-    nodes.unpersist()
-    withDeg.unpersist()
-    finalRanks
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.IntersectCardSorted
 
 /** Exact set-similarity self-join (token-set Jaccard ≥ θ) with AllPairs /
@@ -62,7 +63,7 @@ object SetSimJoin {
       idCol: String,
       textCol: String,
       thetaPct: Int,
-      broadcastRowLimit: Long = 1000000L): DataFrame = {
+      broadcastRowLimit: Long = 1000000L): DataFrame = Materialize.scoped { scope =>
     require(thetaPct > 0 && thetaPct <= 100, s"thetaPct must be in (0,100]: $thetaPct")
 
     val toks = tokenSets(docs, idCol, textCol)
@@ -74,12 +75,11 @@ object SetSimJoin {
     val dict = exploded.groupBy("tok").agg(count(lit(1)).as("df"))
       .withColumn("r", row_number().over(Window.orderBy(col("df"), col("tok"))).cast("long"))
 
-    val sigs = exploded.join(dict, "tok")
+    val sigs = scope.cache(exploded.join(dict, "tok")
       .groupBy("id").agg(sort_array(collect_list(col("r"))).as("sig"))
-      .withColumn("n", size(col("sig")))
-      .persist()
+      .withColumn("n", size(col("sig"))))
 
-    // Broadcast gate: count() materializes the persisted frame exactly once
+    // Broadcast gate: count() materializes the cached frame exactly once
     // (the joins below reuse the cache). Small corpora keep the zero-shuffle
     // broadcast plan; large ones degrade to shuffled joins rather than
     // blowing the executor broadcast limit the scaladoc warns about.
@@ -97,6 +97,7 @@ object SetSimJoin {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
 
+    // the scope pins the verified pairs, then frees the signature cache
     cands
       .join(bcast(sigs.select(col("id").as("id_a"), col("sig").as("sig_a"), col("n").as("n_a"))), "id_a")
       .join(bcast(sigs.select(col("id").as("id_b"), col("sig").as("sig_b"), col("n").as("n_b"))), "id_b")

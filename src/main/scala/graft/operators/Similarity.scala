@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.VectorFns._
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
@@ -151,7 +152,7 @@ object Similarity {
       .select(row_number().over(Window.partitionBy(lit(0)).orderBy(col("__id")))
         .cast("long").as("centroid_id"),
         col(vecCol))
-    for (_ <- 0 until iters) {
+    for (i <- 0 until iters) {
       val assigned = ivfAssign(embeddings, centroids, idCol, vecCol, "centroid_id")
       val means = assigned
         .select(col("cluster_id"), posexplode(toDouble(col(vecCol))).as(Seq("__dim", "__x")))
@@ -161,14 +162,17 @@ object Similarity {
         .agg(transform(
           array_sort(collect_list(struct(col("__dim"), col("__m")))),
           s => s.getField("__m")).as("__new"))
-      centroids = centroids
+      // truncate the lineage each iteration: the frame is k tiny rows,
+      // but without this the plan compounds per iteration and dominates
+      // at iters >> 3 (planning cost, not data cost). The previous
+      // iteration's pin is dead once this one has materialized; the
+      // initial frame is lazy and stores nothing.
+      val prev = centroids
+      centroids = Materialize.pin(centroids
         .join(means, col("centroid_id") === col("cluster_id"), "left")
         .select(col("centroid_id"),
-          coalesce(col("__new"), col(vecCol)).as(vecCol))
-        // truncate the lineage each iteration: the frame is k tiny rows,
-        // but without this the plan compounds per iteration and dominates
-        // at iters >> 3 (planning cost, not data cost)
-        .localCheckpoint(true, Checkpoints.Ser)
+          coalesce(col("__new"), col(vecCol)).as(vecCol)))
+      if (i > 0) Materialize.release(prev, blocking = false)
     }
     centroids
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
+import graft.core.Materialize
 import graft.functions.{IntersectCardSorted, MinHashSignature, TextFns}
 
 /** Near-duplicate detection for document corpora: MinHash + LSH banding,
@@ -216,7 +217,7 @@ object TextDedup {
       rowsPerBand: Int = 3,
       threshold: Double = 0.7,
       family: HashFamily = Xx64,
-      bucketCap: Int = 1000): DataFrame = {
+      bucketCap: Int = 1000): DataFrame = Materialize.scoped { scope =>
     def bandedOf(df: DataFrame): DataFrame = {
       val toks = TextFns.tokens(col(textCol))
       bandedSignatures(df, idCol, TextFns.wordShingles(toks, shingleWords),
@@ -235,8 +236,8 @@ object TextDedup {
     def famOf(df: DataFrame): DataFrame = df
       .groupBy(col(textCol))
       .agg(min(col(idCol)).as("__gid"), count(lit(1)).as("__m"))
-    val famL = famOf(left).persist()
-    val famR = famOf(right).persist()
+    val famL = scope.cache(famOf(left))
+    val famR = scope.cache(famOf(right))
     def repsOf(fam: DataFrame): DataFrame =
       fam.select(col("__gid").as(idCol), col(textCol))
     // the cap must drop a bucket when its DOC population (sum of member
@@ -285,7 +286,9 @@ object TextDedup {
     val keyR = famR.select(col("__gid").as("__gb"), md5(col(textCol)).as("__tkb"))
     val memL = left.select(md5(col(textCol)).as("__tka"), col(idCol).as("a_id"))
     val memR = right.select(md5(col(textCol)).as("__tkb"), col(idCol).as("b_id"))
-    val out = famPairs
+    // the scope pins the pairs, then frees the family caches instead of
+    // leaking them for the session (blockedJaccardPairs discipline)
+    famPairs
       .join(keyL, Seq("__ga"))
       .join(keyR, Seq("__gb"))
       .join(memL, Seq("__tka"))
@@ -295,12 +298,6 @@ object TextDedup {
       // contamination — the self-join form's a < b discipline, adapted
       .filter(col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("b_id"), col("jaccard"))
-      // eager: release the family caches at return instead of leaking them
-      // for the session (blockedJaccardPairs discipline)
-      .localCheckpoint(true, Checkpoints.Ser)
-    famL.unpersist()
-    famR.unpersist()
-    out
   }
 
   /** End-to-end MinHash-LSH near-dup pairs on a text column. */
@@ -404,16 +401,16 @@ object TextDedup {
       blockCol: String,
       tokensCol: Column,
       shingleWords: Int,
-      threshold: Double): DataFrame = {
+      threshold: Double): DataFrame = Materialize.scoped { scope =>
     val sets = hashedNgramSets(docs, idCol, Seq(blockCol), tokensCol, shingleWords)
     // family id = min doc id among identical (block, set) rows; doc ids are
     // unique, so __gid uniquely names the family across blocks. Partition
     // sizes are family sizes (the replication factor), never a whole block.
     val wfam = org.apache.spark.sql.expressions.Window
       .partitionBy(col(blockCol), col("__set"))
-    // persist: the family frame feeds the representative loop AND both
-    // expansion joins off one cached materialization of the set build
-    val mem = sets.withColumn("__gid", min(col(idCol)).over(wfam)).persist()
+    // cached: the family frame feeds the representative loop AND both
+    // expansion joins off one materialization of the set build
+    val mem = scope.cache(sets.withColumn("__gid", min(col(idCol)).over(wfam)))
     val memLite = mem.select(col("__gid"), col(idCol).as("__did"), col("__n"))
     // one representative row per family carries the set into the loop
     val reps = mem.filter(col(idCol) === col("__gid"))
@@ -457,12 +454,10 @@ object TextDedup {
       .select(least(col("__ida"), col("__idb")).as("a_id"),
         greatest(col("__ida"), col("__idb")).as("b_id"), col("jaccard"))
 
-    // eager: materializing the pair frame here lets the family cache
-    // release instead of occupying executor storage for the session (it
-    // otherwise outlives the call — e.g. through a whole timed bench run
-    // after warmup). Same discipline as imageNearDupPairs/winnowMatches.
-    val out = same.unionByName(cross).localCheckpoint(true, Checkpoints.Ser)
-    mem.unpersist()
-    out
+    // the scope pins the pair frame, then frees the family cache instead of
+    // occupying executor storage for the session (it would otherwise
+    // outlive the call — e.g. through a whole timed bench run after
+    // warmup). Same discipline as imageNearDupPairs/winnowMatches.
+    same.unionByName(cross)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Materialize
 import graft.vault.Models
 import Q.{dec2, t}
 
@@ -42,30 +43,23 @@ object DagQueries {
   private def tier3(c: org.apache.spark.sql.Column) =
     when(c === 0, "CONSERVATIVE").when(c === 1, "MODERATE").otherwise("AGGRESSIVE")
 
-  // raw-mapping pins (transactions, cryptoDaily) tracked per (session, dir)
-  // so releaseMemos frees them along with the vault cache. Pinned via EAGER
-  // localCheckpoint, not persist(): every one of the ten shared vault frames
-  // and the seven mart queries re-carries the full raw-mapping subtree
-  // (crossJoin + generator-expression chains) in its logical plan when the
-  // pin is a CacheManager cache, and each of their actions re-pays Catalyst
-  // analysis plus per-cache-entry canonicalization over that tree — driver
-  // stack samples during q_dag_warm's ~5 s of zero-job gaps sat in
-  // RuleExecutor/CacheManager (guide §7.3 "QueryExecution/CacheManager:
-  // query planning ... materialise intermediates"). The checkpoint truncates
-  // the plan to a LogicalRDD, so downstream plans are joins over two tiny
-  // leaves; rows are bit-identical (same deterministic computation, stored).
-  private val rawPinned = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), List[DataFrame]]
-  private def pin(s: SparkSession, dir: String)(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true, graft.operators.Checkpoints.Ser)
-    rawPinned.updateWith((s, dir))(old => Some(cp :: old.getOrElse(Nil)))
-    cp
-  }
-
   /** Map the driver testdata into the reference's raw shapes (exact,
-    * DuckDB-replayable derivations only).
+    * DuckDB-replayable derivations only), with the raw-mapping frames it
+    * pinned (transactions, cryptoDaily); the caller releases those.
+    *
+    * Pinned via EAGER checkpoint, not a cache mark: every one of the ten
+    * shared vault frames and the seven mart queries re-carries the full
+    * raw-mapping subtree (crossJoin + generator-expression chains) in its
+    * logical plan when the pin is a CacheManager cache, and each of their
+    * actions re-pays Catalyst analysis plus per-cache-entry
+    * canonicalization over that tree — driver stack samples during
+    * q_dag_warm's ~5 s of zero-job gaps sat in RuleExecutor/CacheManager
+    * (guide §7.3 "QueryExecution/CacheManager: query planning ...
+    * materialise intermediates"). The checkpoint truncates the plan to a
+    * LogicalRDD, so downstream plans are joins over two tiny leaves; rows
+    * are bit-identical (same deterministic computation, stored).
     */
-  def referenceRaw(s: SparkSession, dir: String): Models.Raw = {
+  private def referenceRaw(s: SparkSession, dir: String): (Models.Raw, Seq[DataFrame]) = {
     val cust = t(s, dir, "customer")
     val supp = t(s, dir, "supplier")
     val ord = t(s, dir, "orders")
@@ -146,10 +140,10 @@ object DagQueries {
     val sym5 = pmod(col("o_orderkey"), lit(5))
     // pinned: six vault models (hubs, links, sats) each window/dedup
     // this frame — materialize the mapping once instead of re-reading orders
-    // pin() returns a NEW checkpointed frame (unlike persist(), which
-    // mutates the plan's cache mark in place) — downstream MUST read the
-    // returned frame or the truncation does nothing
-    val transactions = pin(s, dir)(ord.crossJoin(nSupp).select(
+    // pin returns a NEW checkpointed frame (unlike a cache mark, which
+    // applies to the plan in place) — downstream MUST read the returned
+    // frame or the truncation does nothing
+    val transactions = Materialize.pin(ord.crossJoin(nSupp).select(
       concat(lit("TXN-"), lpad(col("o_orderkey").cast("string"), 10, "0")).as("transaction_id"),
       when(sym5 === 0,
         concat(lit("COMP-"),
@@ -205,7 +199,7 @@ object DagQueries {
     // engine regardless of aggregation order. The daily aggregate is shared
     // (pinned): the three feeds differ only by their factor, so lineitem
     // is scanned and aggregated ONCE, not once per feed.
-    val cryptoDaily = pin(s, dir)(li.groupBy(
+    val cryptoDaily = Materialize.pin(li.groupBy(
       when(pmod(col("l_partkey"), lit(2)) === 0, "BTC-USD").otherwise("ETH-USD").as("symbol"),
       to_date(col("l_shipdate")).as("__d"))
       .agg(
@@ -242,7 +236,7 @@ object DagQueries {
         col("__lo").cast(DecimalType(20, 8)).as("week_52_low"),
         loadTs.as("load_timestamp"))
 
-    Models.Raw(
+    (Models.Raw(
       transactionPersonal = transactions.filter(col("customer_type") === "PERSONAL"),
       transactionCorporate = transactions.filter(col("customer_type") === "CORPORATE"),
       customers = personalCustomers.unionByName(upgradedCustomers)
@@ -253,47 +247,30 @@ object DagQueries {
         "binance" -> cryptoFeed("binance", "1.00"),
         "coingecko" -> cryptoFeed("coingecko", "1.01"),
         "yfinance" -> cryptoFeed("yfinance", "0.99")),
-      stockPrices = stockPrices)
+      stockPrices = stockPrices), Seq(transactions, cryptoDaily))
   }
 
-  // One Models instance per (session, scale dir), with the shared hubs/sats
-  // cache-marked: the seven q_dag_* queries run in the same process (Verify,
-  // Bench), and without this each re-derived the whole raw mapping + vault
-  // chain from parquet — the DAG run a real pipeline does ONCE.
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Models]
-  private def models(s: SparkSession, dir: String): Models =
-    memo.getOrElseUpdate((s, dir), Models(referenceRaw(s, dir)).persistShared())
-
-  /** Fill the memoized shared vault cache for (session, dir) — the runner
-    * calls this once, timed as `q_dag_warm`, so the mart queries' numbers
-    * reflect their own work rather than the first-query cache fill.
+  /** One corpus's vault DAG with its shared models cached, and the raw
+    * pins it reads.
     */
-  def warmShared(s: SparkSession, dir: String): Unit = {
-    // Wave 0 is now implicit: the pinned raw-mapping frames (transactions,
-    // cryptoDaily) are EAGERLY checkpointed inside models() construction,
-    // so they are fully materialized before any wave-1 fill can observe
-    // them — the r18 first-computation race (concurrent consumers each
-    // computing the full raw mapping, CacheManager logging duplicate
-    // "already cached" fills — r18 verdict #2) cannot occur by construction.
-    models(s, dir).materializeShared()
-    ()
-  }
+  final case class Vault(models: Models, pins: Seq[DataFrame])
 
-  /** Drop the memoized Models instance for (session, dir) and unpersist its
-    * shared vault cache — the release half of the memo contract (the runner
-    * frees the warmup dir's cache before the timed run; a long-lived
-    * QueryService frees a corpus it is done with).
+  /** The shared vault cache as a memoized family; every DAG query reads it.
+    * One Models instance per (session, scale dir): the q_dag_* queries run
+    * in the same process (Verify, Bench), and without the memo each
+    * re-derived the whole raw mapping + vault chain from parquet — the DAG
+    * run a real pipeline does ONCE. The fill (`q_dag_warm`) materializes
+    * the shared cache, so the mart queries' numbers reflect their own work
+    * rather than the first-query cache fill. The raw pins are eager, so
+    * they are fully materialized before any shared fill can observe them —
+    * concurrent fills cannot each compute the raw mapping.
     */
-  def releaseMemos(s: SparkSession, dir: String): Unit = {
-    memo.remove((s, dir)).foreach(_.unpersistShared())
-    // checkpointed pins: free the RDD blocks, not CacheManager entries
-    rawPinned.remove((s, dir))
-      .foreach(_.foreach(graft.operators.Checkpoints.release(_)))
-  }
+  val vault: Shared.Memo[Vault] = Shared.memo("q_dag_warm") { (s, dir) =>
+    val (raw, pins) = referenceRaw(s, dir)
+    Vault(Models(raw).persistShared(), pins)
+  }(fill = _.models.materializeShared(), frames = v => v.models.sharedFrames ++ v.pins)
 
-  /** The shared vault cache as a memoized family; every DAG query reads it. */
-  val vault: Shared = new Shared("q_dag_warm", warmShared, releaseMemos)
+  private def models(s: SparkSession, dir: String): Models = vault(s, dir).models
 
   // ------------------------------------------------------------------ SQL
 

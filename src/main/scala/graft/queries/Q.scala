@@ -37,10 +37,40 @@ final case class Q(
   * the fill's own timed line, so the one-time fill is not charged to
   * whichever consumer happens to run first.
   */
-final class Shared(
+class Shared(
     val line: String,
     val fill: (SparkSession, String) => Unit,
     val release: (SparkSession, String) => Unit)
+
+object Shared {
+
+  /** A family whose value is built at most once per (session, dir) and
+    * kept until released; consumers read it with `apply`.
+    */
+  final class Memo[A] private[Shared] (
+      line: String,
+      get: (SparkSession, String) => A,
+      fill: (SparkSession, String) => Unit,
+      release: (SparkSession, String) => Unit)
+      extends Shared(line, fill, release) {
+    def apply(s: SparkSession, dir: String): A = get(s, dir)
+  }
+
+  /** The one owner of a family's `(session, dir)` memo: `build` makes the
+    * value on first use, `fill` materializes it for the fill line, and
+    * `release` drops the entry and frees every frame `frames` lists through
+    * `Materialize.release`. The memo holds its sessions strongly, so a
+    * long-lived session must release each dir it is done with.
+    */
+  def memo[A](line: String)(build: (SparkSession, String) => A)(
+      fill: A => Unit, frames: A => Seq[DataFrame]): Memo[A] = {
+    val memo = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), A]
+    def get(s: SparkSession, dir: String): A = memo.getOrElseUpdate((s, dir), build(s, dir))
+    new Memo[A](line, get, (s, dir) => fill(get(s, dir)),
+      (s, dir) => memo.remove((s, dir)).foreach(a =>
+        frames(a).foreach(graft.core.Materialize.release(_))))
+  }
+}
 
 object Q {
 

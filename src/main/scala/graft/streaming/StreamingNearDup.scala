@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.Materialize
 import graft.functions.{IntersectCardSorted, TextFns}
 import graft.operators.TextDedup
 
@@ -12,7 +13,7 @@ import graft.operators.TextDedup
   * crawl increment against the data lake" shape every continuously-fed
   * training pipeline needs. The corpus is NEVER recomputed per batch: its
   * banded MinHash signatures and hashed shingle sets are built once
-  * (`buildIndex`, persisted), and a batch only computes signatures for its
+  * (`buildIndex`, pinned), and a batch only computes signatures for its
   * own rows, probes the bucket index, and exact-verifies the candidates.
   *
   * Scale shape: per batch the work is O(batch) signature computation + one
@@ -36,9 +37,11 @@ object StreamingNearDup {
       threshold: Double,
       family: TextDedup.HashFamily = TextDedup.Xx64)
 
-  /** Build (and materialize) the corpus index once. `family` follows
-    * `TextDedup`: Xx64 is the cheap scale path; HexMd5 makes the banding
-    * SQL-replayable (the oracle gate runs `q_stream_neardup_batch` on it).
+  /** Build (and materialize) the corpus index once: both frames are
+    * pinned, and the caller frees them with `Materialize.release` when the
+    * detector is done. `family` follows `TextDedup`: Xx64 is the cheap
+    * scale path; HexMd5 makes the banding SQL-replayable (the oracle gate
+    * runs `q_stream_neardup_batch` on it).
     */
   def buildIndex(
       corpus: DataFrame,
@@ -51,15 +54,13 @@ object StreamingNearDup {
       family: TextDedup.HashFamily = TextDedup.Xx64): Index = {
     val toks = TextFns.tokens(col(textCol))
     val sh = TextFns.wordShingles(toks, shingleWords)
-    val banded = TextDedup
+    // pay the corpus pass once, up front
+    val banded = Materialize.pin(TextDedup
       .bandedSignatures(corpus, idCol, sh, bands, rowsPerBand, family)
-      .withColumnRenamed(idCol, "corpus_id")
-      .persist()
-    val sets = TextDedup
+      .withColumnRenamed(idCol, "corpus_id"))
+    val sets = Materialize.pin(TextDedup
       .hashedNgramSets(corpus, idCol, Seq(), toks, shingleWords)
-      .select(col(idCol).as("corpus_id"), col("__set").as("__cs"))
-      .persist()
-    banded.count(); sets.count() // pay the corpus pass once, up front
+      .select(col(idCol).as("corpus_id"), col("__set").as("__cs")))
     Index(banded, sets, shingleWords, bands, rowsPerBand, threshold, family)
   }
 

@@ -3,6 +3,7 @@ package graft.vault
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.Hashing
 import graft.operators.{Dedup, EventWindows, Scd2}
 
@@ -77,7 +78,8 @@ object Models {
 /** One DAG instantiation over a Raw input: every model is a lazy val, so
   * shared upstream models (hubs, price sats, facts) are constructed once
   * per run however many downstream marts reference them — and a caller can
-  * `.persist()` any lazy val before materializing several dependents.
+  * cache any lazy val (`Materialize.cache`) before materializing several
+  * dependents.
   */
 final class Models(val raw: Models.Raw) {
   import Models.Raw
@@ -527,11 +529,15 @@ final class Models(val raw: Models.Raw) {
     * entity counts, not the fact volume.
     */
   def persistShared(): this.type = {
-    Seq(hubCustomer, hubCompany, hubTransaction, hubAsset, ephemeralNews,
-      satNewsContent, ephemeralSatTransactionFull, satAssetPriceCrypto,
-      satAssetPriceStock, fctTransactions).foreach(_.persist())
+    sharedFrames.foreach(Materialize.cache)
     this
   }
+
+  /** The shared upstream models [[persistShared]] caches. */
+  def sharedFrames: Seq[DataFrame] =
+    Seq(hubCustomer, hubCompany, hubTransaction, hubAsset, ephemeralNews,
+      satNewsContent, ephemeralSatTransactionFull, satAssetPriceCrypto,
+      satAssetPriceStock, fctTransactions)
 
   /** Force the shared cache to fill NOW (one count per frame — cheap, the
     * frames are key-grain). Bench times this as its own `q_dag_warm` line
@@ -571,8 +577,8 @@ final class Models(val raw: Models.Raw) {
     * ran all 8 wave-1 fills at once and the concurrent stages contended
     * for one JVM's execution memory (q_dag_warm 2.4x slower in the
     * driver's environment). Callers must fill shared cached upstreams
-    * BEFORE calling this (DagQueries.warmShared wave 0), or concurrent
-    * first-computations of the same cached plan duplicate work.
+    * BEFORE calling this (DagQueries.vault pins its raw inputs), or
+    * concurrent first-computations of the same cached plan duplicate work.
     */
   private def fillConcurrently(frames: Seq[DataFrame]): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -592,9 +598,7 @@ final class Models(val raw: Models.Raw) {
     * actually returned before their next measurement.
     */
   def unpersistShared(): this.type = {
-    Seq(hubCustomer, hubCompany, hubTransaction, hubAsset, ephemeralNews,
-      satNewsContent, ephemeralSatTransactionFull, satAssetPriceCrypto,
-      satAssetPriceStock, fctTransactions).foreach(_.unpersist(blocking = true))
+    sharedFrames.foreach(Materialize.release(_))
     this
   }
 }
