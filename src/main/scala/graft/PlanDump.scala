@@ -17,9 +17,9 @@ import graft.core.Graft
   * executes its whole pipeline while the DataFrame is CONSTRUCTED, so the
   * dumped plan is a bare `Scan ExistingRDD` stub on both sides of any A/B —
   * it cannot carry plan-shape claims for exactly those operators. For
-  * checkpointed queries, cite `graft.TimeOne`'s jobs/stages/tasks/
-  * shuffle-bytes listener counters (or dump the inner pre-checkpoint
-  * sub-plans) instead.
+  * checkpointed queries, cite the line's `counters` in BENCH_DETAIL.json
+  * (the [[Runner.Line]] record: jobs/stages/tasks, shuffle and spill MB) or
+  * dump the inner pre-checkpoint sub-plans instead.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -22,8 +22,7 @@ import graft.queries.Q
 object ScaleProbe {
 
   private def readLoad1(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    Bench.procFirst("/proc/loadavg", line => System.err.println(s"[probe] $line"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -42,4 +42,15 @@ object SparkEntry {
   def scalePolicy: Map[String, (Int, String)] =
     registered.flatMap(q =>
       q.maxGateFactor.map(f => q.name -> (f, q.gatePolicyReason.getOrElse("")))).toMap
+
+  /** Replication factor of the corpus a main runs on
+    * (`SPARK_GRAFT_GATE_FACTOR`, default 1 = the unreplicated testdata).
+    */
+  def gateFactor: Int = graft.core.Graft.envPositiveInt("SPARK_GRAFT_GATE_FACTOR", 1)
+
+  /** The queries the scale policy skips at replication `factor`: name ->
+    * the highest factor it is value-gated at. Empty at factor 1.
+    */
+  def policySkips(factor: Int): Map[String, Int] =
+    scalePolicy.collect { case (name, (max, _)) if max < factor => name -> max }
 }

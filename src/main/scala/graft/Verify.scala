@@ -15,10 +15,8 @@ object Verify {
     // OUTPUT is the thing being policy-skipped), and the policy is dumped
     // beside oracle_sql.json for check_timed.py to record. The dump only
     // happens for factor > 1 so the driver's own outDir layout is unchanged.
-    val gateFactor = sys.env.get("SPARK_GRAFT_GATE_FACTOR").map(_.toInt).getOrElse(1)
-    val policy = SparkEntry.scalePolicy
-    def policySkip(name: String): Boolean =
-      policy.get(name).exists(_._1 < gateFactor)
+    val gateFactor = SparkEntry.gateFactor
+    val skips = SparkEntry.policySkips(gateFactor)
     // an explicitly-named query is never policy-skipped: `--only` is a
     // builder deliberately running THAT query at THIS factor (local
     // iteration / adjudicated one-offs) — the registry cap governs only
@@ -26,7 +24,7 @@ object Verify {
     // a silently-dropped row
     def keep(name: String) = only match {
       case Some(names) => names.contains(name)
-      case None        => !policySkip(name)
+      case None        => !skips.contains(name)
     }
     val spark = graft.core.Graft.session(s"local[${graft.core.Graft.localCpus}]", "graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -93,9 +91,8 @@ object Verify {
           .mkString("{", ",", "}")
         Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
         if (gateFactor > 1) {
-          SparkEntry.scalePolicy.foreach { case (name, (f, _)) =>
-            if (f < gateFactor)
-              System.err.println(s"[verify] $name policy-skip at factor $gateFactor (max $f)")
+          skips.foreach { case (name, f) =>
+            System.err.println(s"[verify] $name policy-skip at factor $gateFactor (max $f)")
           }
           val pj = SparkEntry.scalePolicy.toSeq.sortBy(_._1).map { case (k, (f, r)) =>
             s"${q(k)}: {${q("max_gate_factor")}: $f, ${q("reason")}: ${q(r)}}"
@@ -119,25 +116,23 @@ object Verify {
     def log(line: String): Unit = System.err.println(s"[verify] $line")
     val runner = new Runner(spark, sfDir,
       SparkEntry.registered.filter(q => keep(q.name)).sortBy(_.name), log)
-    runner.fill { (name, work) =>
-      try work() catch { case e: Throwable => log(s"$name failed: ${e.getMessage}") }
-    }
+    runner.fill().foreach(l => l.error.foreach(e => log(s"${l.name} failed: ${e.getMessage}")))
+    // repartition(1), NOT coalesce(1): coalesce collapses everything since
+    // the last shuffle into the single write task — a fused broadcast-join
+    // query (e.g. the salted IVF verify at factor 100) then runs its whole
+    // quadratic candidate scan on ONE core (measured >27 min single-task at
+    // factor 100 before being killed). repartition inserts a shuffle
+    // boundary, so upstream stages keep their full parallelism and only the
+    // filtered RESULT funnels into the one-file write. Row order through the
+    // 1-reducer shuffle is not deterministic, which is fine: the DuckDB
+    // compare sorts rows.
     runner.map { q =>
-      val t0 = System.nanoTime()
-      try {
-        // repartition(1), NOT coalesce(1): coalesce collapses everything
-        // since the last shuffle into the single write task — a fused
-        // broadcast-join query (e.g. the salted IVF verify at factor 100)
-        // then runs its whole quadratic candidate scan on ONE core (measured
-        // >27 min single-task at factor 100 before being killed).
-        // repartition inserts a shuffle boundary, so upstream stages keep
-        // their full parallelism and only the filtered RESULT funnels into
-        // the one-file write. Row order through the 1-reducer shuffle is not
-        // deterministic, which is fine: the DuckDB compare sorts rows.
-        q.fn(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/${q.name}")
-        log(f"${q.name} ok (${(System.nanoTime() - t0) / 1e9}%.1fs)")
-      } catch { case e: Throwable => log(s"${q.name} failed: ${e.getMessage}") }
+      q.fn(spark, sfDir).repartition(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
+    } { l =>
+      l.error match {
+        case None    => log(f"${l.name} ok (${l.sec}%.1fs)")
+        case Some(e) => log(s"${l.name} failed: ${e.getMessage}")
+      }
     }
     spark.stop()
   }

@@ -53,8 +53,22 @@ object Graft {
   }
 
   /** Slot count of the local mains: `SPARK_GRAFT_CPUS`, else every core. */
-  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors())
+  def localCpus: Int =
+    envPositiveInt("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors())
+
+  /** `raw`, the value of setting `key`, as an integer of at least 1.
+    *
+    * @throws IllegalArgumentException naming `key` when `raw` is not an
+    *         integer or is below 1 (a slot count, factor or file count of 0
+    *         would otherwise fail far from its cause, or silently act as 1)
+    */
+  def positiveInt(key: String, raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$key must be a positive integer, got '$raw'"))
+
+  /** Environment variable `key` through [[positiveInt]], else `default`. */
+  def envPositiveInt(key: String, default: => Int): Int =
+    sys.env.get(key).map(positiveInt(key, _)).getOrElse(default)
 
   /** Load one of the driver-provided testdata tables (TESTDATA.md).
     * Explicit parquet scan; Catalyst handles column pruning + filter pushdown.

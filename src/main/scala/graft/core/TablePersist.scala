@@ -43,9 +43,7 @@ object TablePersist {
     */
   private[graft] def filesPerDate(df: DataFrame): Int = {
     val key = "spark.graft.filesPerDate"
-    val raw = df.sparkSession.conf.get(key, "4")
-    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"$key must be a positive integer, got '$raw'"))
+    Graft.positiveInt(key, df.sparkSession.conf.get(key, "4"))
   }
 
   /** Append `df` partitioned by the date of `tsCol`.
