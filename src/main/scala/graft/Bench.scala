@@ -80,9 +80,8 @@ object Bench {
     // co-tenancy.
     val hostMd5Lead = md5SingleMps()
     // Quiet-gate reference for the md5 probe on THIS host generation:
-    // 8.93 M/s from CALIB_PROBE_r16.json (true idle). Host-class constant,
-    // same contract as the calibration idle pins — override on any other
-    // host class or the comparison misreads.
+    // 8.93 M/s from CALIB_PROBE_r16.json (true idle). Host-class constant:
+    // override on any other host class or the comparison misreads.
     val hostMd5QuietMps = sys.env.get("SPARK_GRAFT_MD5_QUIET_MPS")
       .map(_.toDouble).getOrElse(8.93)
 
@@ -101,8 +100,13 @@ object Bench {
       .filterNot(q => skips.contains(q.name))
 
     val runner = new Runner(spark, sfDir, ordered, log)
+    // the warm-up's wall time goes to BENCH_DETAIL (`warmup_sec`, -1 when
+    // there is no warm dir): it is not a timed line, but it can take longer
+    // than the timed pass it prepares
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) runner.warmUp(warmDir)
+    val warm0 = System.nanoTime()
+    val warmupSec = if (!new java.io.File(warmDir).isDirectory) -1.0
+      else { runner.warmUp(warmDir); (System.nanoTime() - warm0) / 1e9 }
 
     // each one-time shared fill (vault cache, then dedup groups) is timed
     // as its own line instead of landing on whichever consumer runs first
@@ -113,11 +117,12 @@ object Bench {
     // Fixed-work calibration: a deterministic CPU-bound pass over constant
     // in-memory data — no I/O, no testdata dependency, identical work every
     // round. Its time measures HOST speed only, so a round-over-round bench
-    // comparison can divide raw per-query deltas by the q_calibration ratio
-    // to cancel uniform machine drift (three rounds running, the first read
-    // of BENCH_rN vs rN-1 was dominated by 10-15% uniform host drift that
-    // had to be reconstructed from medians of untouched queries). Warmed
-    // once like every other line so JIT is excluded.
+    // comparison can divide raw per-query deltas by the ratio of the two
+    // runs' q_calibration seconds to cancel uniform machine drift (three
+    // rounds running, the first read of BENCH_rN vs rN-1 was dominated by
+    // 10-15% uniform host drift that had to be reconstructed from medians
+    // of untouched queries). Warmed once like every other line so JIT is
+    // excluded.
     def calibCpuFrame = {
       import org.apache.spark.sql.functions._
       spark.range(0L, 4000000L, 1L, 64)
@@ -130,16 +135,6 @@ object Bench {
       catch { case e: Throwable => log(s"calibration warm-up failed: ${Runner.message(e)}") }
       runner.line("q_calibration")(noop(calibCpuFrame))
     }
-    // Idle-host reference for q_calibration on THIS host class, recorded
-    // from the r10 final-HEAD idle bench (BENCH_IDLE_r10.json). The emitted
-    // calibration_ratio_vs_idle = this run's q_calibration / this constant
-    // reads contamination directly: ~1.0 = idle-equivalent host, >> 1 =
-    // divide raw per-query deltas by the ratio before comparing rounds.
-    // Host-class constant — override with SPARK_GRAFT_CALIB_IDLE_SEC on any
-    // other host class, or the ratio misreads (ADVICE r11).
-    val calibrationIdleRefSec = sys.env.get("SPARK_GRAFT_CALIB_IDLE_SEC")
-      .map(_.toDouble).getOrElse(0.599)
-
     // I/O-bound calibration twin (verdict r11 task #2): the CPU line above
     // cannot see disk/page-cache drift — r11's idle-to-idle wall rose ~10%
     // uniformly across untouched parquet-scan-heavy queries while
@@ -168,16 +163,6 @@ object Bench {
         noop(spark.read.parquet(ioDir))
       }
     }
-    // Idle-host reference for q_calibration_io, same contract as the CPU
-    // constant: 0.382s recorded from this host class's r12 idle bench
-    // (BENCH_IDLE_r12.json, load1_start 0.86, calibration 0.937, the
-    // calibration file page-cache-resident — the steady state it has on an
-    // idle host). Override with SPARK_GRAFT_CALIB_IO_IDLE_SEC on any other
-    // host class; a ratio >> 1 means the I/O path (page cache / disk) is
-    // under pressure even if the CPU line reads ~1.0.
-    val calibrationIoIdleRefSec = sys.env.get("SPARK_GRAFT_CALIB_IO_IDLE_SEC")
-      .map(_.toDouble).getOrElse(0.382)
-
     // Each memoized family is released right AFTER its last consumer's
     // line (the runner's release, outside the line), so no query's number
     // changes: the fill lines still carry the fills.
@@ -251,15 +236,7 @@ object Bench {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_DETAIL", "/root/repo/BENCH_DETAIL.json")),
-        s"""{"total_sec":${f(total)},"sf":"$sfName","cpus":$cpus,"load1_start":${f2(load1Start)},"load1":${f2(load1)},"uptime_sec":${f(uptimeSec)},"host_md5_mps_lead":${f(hostMd5Lead)},"host_md5_mps_trail":${f(hostMd5Trail)},"host_md5_quiet_mps":${f(hostMd5QuietMps)},"calibration_ratio_vs_idle":${
-          // denominators guarded: an env override of 0 must emit -1, not
-          // Infinity (invalid JSON)
-          if (calibration.error.isEmpty && calibrationIdleRefSec > 0)
-            f(calibration.sec / calibrationIdleRefSec) else "-1"
-        },"calibration_io_ratio_vs_idle":${
-          if (calibrationIo.error.isEmpty && calibrationIoIdleRefSec > 0)
-            f(calibrationIo.sec / calibrationIoIdleRefSec) else "-1"
-        },"gate_factor":$gateFactor,"policy_skips":$skipJson,"how_to_read":"$howToRead","t_start":$tStartJson,"counters":$countersJson,"errors":$errJson,"queries":$detail}""" + "\n")
+        s"""{"total_sec":${f(total)},"sf":"$sfName","cpus":$cpus,"load1_start":${f2(load1Start)},"load1":${f2(load1)},"uptime_sec":${f(uptimeSec)},"host_md5_mps_lead":${f(hostMd5Lead)},"host_md5_mps_trail":${f(hostMd5Trail)},"host_md5_quiet_mps":${f(hostMd5QuietMps)},"warmup_sec":${f(warmupSec)},"gate_factor":$gateFactor,"policy_skips":$skipJson,"how_to_read":"$howToRead","t_start":$tStartJson,"counters":$countersJson,"errors":$errJson,"queries":$detail}""" + "\n")
     } catch { case e: Throwable =>
       log(s"BENCH_DETAIL write failed: ${Runner.message(e)}")
     }

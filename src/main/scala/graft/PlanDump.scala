@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Graft
+import graft.core.{Graft, Materialize}
 
 /** Plan-evidence dumper for the optimization rounds:
   * `runMain graft.PlanDump <name>[,<name>...] <outDir> <tag> [sfDir]`
@@ -12,14 +12,16 @@ import graft.core.Graft
   * so join strategies/partition counts match what the bench actually runs.
   * Measurement tooling only — not part of the driver contract.
   *
-  * KNOWN LIMITATION (r18 ADVICE): a query whose build ends in an EAGER
-  * localCheckpoint (PageRank / CC-backed queries, the staged pipelines)
-  * executes its whole pipeline while the DataFrame is CONSTRUCTED, so the
-  * dumped plan is a bare `Scan ExistingRDD` stub on both sides of any A/B —
-  * it cannot carry plan-shape claims for exactly those operators. For
-  * checkpointed queries, cite the line's `counters` in BENCH_DETAIL.json
-  * (the [[Runner.Line]] record: jobs/stages/tasks, shuffle and spill MB) or
-  * dump the inner pre-checkpoint sub-plans instead.
+  * Each query runs inside one `Materialize` scope, as a runner line does.
+  *
+  * KNOWN LIMITATION: operators build lazily, but an EAGER local checkpoint
+  * still cuts the plan, and what is behind it dumps as a `Scan ExistingRDD`
+  * stub: the converged output of an iterative loop (connected components,
+  * BPE merges, k-means/PQ codebooks: each round is pinned to stop lineage
+  * growth), the vault's raw pins (the q_dag_* queries that read
+  * transactions or crypto prices) and the streaming near-dup index. For
+  * these, cite the line's `counters` in BENCH_DETAIL.json (the
+  * [[Runner.Line]] record) or dump the inner sub-plans instead.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -31,7 +33,7 @@ object PlanDump {
     val spark = Graft.session(s"local[${Graft.localCpus}]", "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
+    names.foreach(name => Materialize.scoped {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -43,7 +45,7 @@ object PlanDump {
         formatted + "\n\n== Final adaptive plan ==\n" +
           df.queryExecution.executedPlan.toString + "\n")
       println(s"[plandump] wrote $outDir/${name}_$tag.txt")
-    }
+    })
     spark.stop()
   }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
 
+import graft.core.Materialize
 import graft.queries.{Q, Shared}
 
 /** The one memo-aware runner behind Bench, Verify and TimeOne: it owns the
@@ -25,6 +26,11 @@ import graft.queries.{Q, Shared}
   *     memos OOM'd the default heap (BUILDER_NOTES incident 2); they refill
   *     on demand, so releasing after the final consumer costs nothing.
   *   - `line` runs one unit of work and returns its [[Runner.Line]] record.
+  *
+  * Each line, and each warm-up query, runs inside one `Materialize` scope:
+  * whatever the query's build and action cache or pin is released when the
+  * line ends, so storage is back to its pre-line state after every line.
+  * Only a memo family outlives its line, in its own scope.
   *
   * A failed release or warm-up query is reported through `log`, never
   * dropped: a silently kept cache holds executor storage for the rest of
@@ -52,7 +58,7 @@ final class Runner(
 
   def warmUp(warmDir: String): Unit = {
     queries.distinct.foreach { q =>
-      try Runner.noop(q.fn(spark, warmDir))
+      try Materialize.scoped(Runner.noop(q.fn(spark, warmDir)))
       catch { case e: Throwable => log(s"warm-up ${q.name} failed: ${Runner.message(e)}") }
     }
     families.foreach(release(_, warmDir))
@@ -73,10 +79,11 @@ final class Runner(
 
   /** Run `work` as one line: its wall time, its error if it throws, and the
     * Spark work it caused, counted by a listener registered for the line
-    * alone and read after the listener bus has drained. Lines must not run
-    * concurrently: every job started while the listener is registered is
-    * charged to this line. Tasks of jobs started before the line (a failed
-    * line's siblings still running) are not.
+    * alone and read after the listener bus has drained. `work` runs inside
+    * a `Materialize` scope, which frees what it stored before the line
+    * ends. Lines must not run concurrently: every job started while the
+    * listener is registered is charged to this line. Tasks of jobs started
+    * before the line (a failed line's siblings still running) are not.
     */
   def line(name: String)(work: => Unit): Runner.Line = {
     val sc = spark.sparkContext
@@ -87,7 +94,7 @@ final class Runner(
       val t0 = System.nanoTime()
       val start = (t0 - origin.getOrElse { origin = Some(t0); t0 }) / 1e9
       val wall0 = System.currentTimeMillis()
-      val error = try { work; None } catch { case e: Throwable => Some(e) }
+      val error = try { Materialize.scoped(work); None } catch { case e: Throwable => Some(e) }
       val sec = (System.nanoTime() - t0) / 1e9
       val wall1 = System.currentTimeMillis()
       Bridge.drainListeners(sc)

@@ -38,12 +38,15 @@ object ScaleProbe {
 
     val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
     // a stage that dies (OOM on a deliberately brutal output) records
-    // rows=-1 instead of losing the whole probe's measurements
+    // rows=-1 instead of losing the whole probe's measurements. Each stage
+    // is one runner line, so what its operators store is freed after it.
+    val runner = new Runner(spark, sfDir, Nil)
     def stage(name: String)(df: => DataFrame): Long = {
-      val t0 = System.nanoTime()
-      val n = try df.count() catch { case e: Throwable =>
-        System.err.println(s"[probe] $name failed: ${e.getClass.getSimpleName}"); -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
+      var n = -1L
+      val line = runner.line(name) { n = df.count() }
+      line.error.foreach(e =>
+        System.err.println(s"[probe] $name failed: ${e.getClass.getSimpleName}"))
+      val sec = line.sec
       stages += ((name, n, sec))
       System.err.println(f"[probe] $name rows=$n ${sec}%.1fs")
       n

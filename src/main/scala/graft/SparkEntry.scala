@@ -40,8 +40,7 @@ object SparkEntry {
     * carrying skip lists in invocation notes.
     */
   def scalePolicy: Map[String, (Int, String)] =
-    registered.flatMap(q =>
-      q.maxGateFactor.map(f => q.name -> (f, q.gatePolicyReason.getOrElse("")))).toMap
+    registered.flatMap(q => q.gate.map(g => q.name -> (g.maxFactor, g.reason))).toMap
 
   /** Replication factor of the corpus a main runs on
     * (`SPARK_GRAFT_GATE_FACTOR`, default 1 = the unreplicated testdata).

@@ -50,10 +50,11 @@ object ConnectedComponents {
   @volatile var lastRounds: Int = -1
 
   /** Release the checkpoint blocks backing a frame returned by
-    * [[minLabel]]/[[dedupGroups]]. The frame is NOT recomputable afterwards
-    * (checkpointing truncated its lineage) — callers must be completely
-    * done with it. Kept as a named delegate of `Materialize.release` because
-    * the benchmark harness (`perfbench`) compiles against this signature.
+    * [[minLabel]]/[[dedupGroups]] to a caller with no scope open, which owns
+    * it. The frame is NOT recomputable afterwards (checkpointing truncated
+    * its lineage) — callers must be completely done with it. Kept as a
+    * named delegate of `Materialize.release` because the benchmark harness
+    * (`perfbench`) compiles against this signature.
     */
   def releaseResult(df: DataFrame): Unit = Materialize.release(df)
 

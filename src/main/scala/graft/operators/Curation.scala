@@ -683,8 +683,8 @@ object Curation {
       k: Int,
       w: Int,
       minShared: Int,
-      maxDocFreq: Int): DataFrame = Materialize.scoped { scope =>
-    val fps = scope.cache(winnowFingerprints(docs, idCol, textCol, k, w))
+      maxDocFreq: Int): DataFrame = {
+    val fps = Materialize.cache(winnowFingerprints(docs, idCol, textCol, k, w))
     val rare = fps
       .groupBy(col("fingerprint"))
       .agg(count(lit(1)).as("__df"))
@@ -693,8 +693,6 @@ object Curation {
     val indexed = fps.join(rare, Seq("fingerprint"), "left_semi")
     val a = indexed.select(col("fingerprint"), col(idCol).as("a_id"))
     val b = indexed.select(col("fingerprint"), col(idCol).as("b_id"))
-    // the scope pins the (small, post-aggregation) match frame, then frees
-    // the fingerprint cache instead of leaking it for the session
     a.join(b, Seq("fingerprint"))
       .filter(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"))

@@ -460,16 +460,14 @@ object Multimodal {
   def imageNearDupPairs(
       hashes: DataFrame,
       maxHamming: Int,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = Materialize.scoped { scope =>
+      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4x16-bit banding is exact only for maxHamming <= 3, got $maxHamming")
     val banded = imageBands(hashes)
-    val e = scope.cache(build match {
+    val e = Materialize.cache(build match {
       case NearDupBuild.Shuffle(cap) => capCells(banded, Seq("band_idx", "band_val"), cap)
       case NearDupBuild.Broadcast => banded
     })
-    // the scope pins the small post-distinct pair frame, then frees the
-    // banded cache instead of leaking it for the session
     imageNearDupJoin(e, maxHamming, build)
   }
 
@@ -1334,17 +1332,16 @@ object Multimodal {
       levels: DataFrame,
       minBands: Int,
       maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = Materialize.scoped { scope =>
+      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
     require(minBands > 0 && maxLevelDiff >= 0,
       s"need positive thresholds: $minBands / $maxLevelDiff")
     // contourNearDupGroups passes its own cached ffps here (Broadcast
-    // build): the scope caches only frames not cached already, so the
-    // caller's cache survives this call
-    val e = scope.cache(build match {
+    // build): `cache` returns an already cached frame as it is
+    val e = Materialize.cache(build match {
       case NearDupBuild.Shuffle(cap) => capCells(fps, Seq("band_idx", "band_sig"), cap)
       case NearDupBuild.Broadcast => fps
     })
-    val lv = scope.cache(levels)
+    val lv = Materialize.cache(levels)
     val cand = audioNearDupCandidates(e, minBands, build)
     val nf = lv.groupBy(col("doc_id")).agg(count(lit(1)).as("__nf"))
     val la = lv.select(col("doc_id").as("a_id"), col("frame_idx"), col("level").as("__la"))
@@ -1387,18 +1384,16 @@ object Multimodal {
   def imageNearDupGroups(
       hashes: DataFrame,
       maxHamming: Int,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = Materialize.scoped { scope =>
-    val hs = scope.cache(hashes.filter(col("dhash_hi").isNotNull)
+      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
+    val hs = Materialize.cache(hashes.filter(col("dhash_hi").isNotNull)
       .select(col("doc_id"), col("dhash_hi"), col("dhash_lo")))
     val fam = hs.groupBy(col("dhash_hi"), col("dhash_lo"))
       .agg(min(col("doc_id")).as("__gid"), count(lit(1)).as("__m"))
     val memb = hs.join(fam, Seq("dhash_hi", "dhash_lo"))
       .select(col("doc_id"), col("__gid"), col("__m"))
     val famHashes = fam.select(col("__gid").as("doc_id"), col("dhash_hi"), col("dhash_lo"))
-    val fpairs = scope.own(imageNearDupPairs(famHashes, maxHamming, build))
-    val labels = scope.own(ConnectedComponents.minLabel(fpairs, "a_id", "b_id"))
-    // the groups frame is linear in corpus size; the scope pins it, then
-    // frees the hash cache, the family pairs and the CC labels
+    val fpairs = imageNearDupPairs(famHashes, maxHamming, build)
+    val labels = ConnectedComponents.minLabel(fpairs, "a_id", "b_id")
     memb
       .join(labels.select(col("v").as("__gid"), col("label")), Seq("__gid"), "left")
       .filter(col("label").isNotNull || col("__m") >= 2)
@@ -1428,10 +1423,10 @@ object Multimodal {
       levels: DataFrame,
       minBands: Int,
       maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = Materialize.scoped { scope =>
+      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
     require(minBands > 0 && maxLevelDiff >= 0,
       s"need positive thresholds: $minBands / $maxLevelDiff")
-    val lv = scope.cache(levels)
+    val lv = Materialize.cache(levels)
     // family key: the full ordered contour, serialized to one string so the
     // group-by/join key is a flat binary comparison (collect_list order is
     // nondeterministic — sort by frame_idx before joining)
@@ -1445,11 +1440,11 @@ object Multimodal {
     val memb = famOf.join(fam, Seq("__ck"))
       .select(col("doc_id"), col("__gid"), col("__m"))
     val gids = fam.select(col("__gid").as("doc_id"))
-    val ffps = scope.cache(fps.join(gids, Seq("doc_id"), "left_semi"))
+    val ffps = Materialize.cache(fps.join(gids, Seq("doc_id"), "left_semi"))
     val flv = lv.join(gids, Seq("doc_id"), "left_semi")
-    val fpairs = scope.own(contourNearDupPairs(ffps, flv, minBands, maxLevelDiff, build))
+    val fpairs = contourNearDupPairs(ffps, flv, minBands, maxLevelDiff, build)
     val nb = ffps.groupBy(col("doc_id")).agg(count(lit(1)).as("__nb"))
-    val labels = scope.own(ConnectedComponents.minLabel(fpairs, "a_id", "b_id"))
+    val labels = ConnectedComponents.minLabel(fpairs, "a_id", "b_id")
     memb
       .join(labels.select(col("v").as("__gid"), col("label")), Seq("__gid"), "left")
       .join(nb.select(col("doc_id").as("__gid"), col("__nb")), Seq("__gid"), "left")

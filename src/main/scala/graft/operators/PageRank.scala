@@ -28,9 +28,9 @@ import graft.core.Materialize
   * (bipartite activity graphs, doc-link graphs after dedup); for web-scale
   * hub nodes swap the fold for plain `sum` (giving up bit-replay, keeping
   * the plan) or pre-aggregate hot keys with the SkewJoin salting pattern.
-  * Only the final rank frame is pinned; the distinct edge list, the node
-  * set and the degree-joined edges are cached for the call and released
-  * once the result is stored.
+  * Nothing is pinned: the distinct edge list, the node set and the
+  * degree-joined edges are cached, owned by the caller's scope (the line
+  * that runs the query), and the rank frame stays lazy.
   */
 object PageRank {
 
@@ -49,28 +49,27 @@ object PageRank {
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      damping: Double = 0.85): DataFrame = Materialize.scoped { scope =>
-    val e = scope.cache(edges
+      damping: Double = 0.85): DataFrame = {
+    val e = Materialize.cache(edges
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .distinct())
-    val nodes = scope.cache(e.select(col("__src").as("node"))
+    val nodes = Materialize.cache(e.select(col("__src").as("node"))
       .union(e.select(col("__dst").as("node")))
       .distinct())
     val nNodes = nodes.agg(count(lit(1)).as("__n"))
     val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__outdeg"))
-    val withDeg = scope.cache(e.join(outdeg, Seq("__src")))
+    val withDeg = Materialize.cache(e.join(outdeg, Seq("__src")))
 
     val init = nodes
       .crossJoin(broadcast(nNodes))
       .select(col("node"),
         (lit(1.0) / col("__n").cast("double")).as("rank"))
 
-    // only the final frame is pinned (by the scope, which then releases the
-    // cached inputs): intermediate iterations stay lazy — at bounded
-    // iteration counts the unrolled lineage is fine, and an eager pin per
-    // iteration would cost a full extra materialization job + a pinned
-    // |V|-row block set each (for loops with many iterations, add a
-    // periodic pin — lineage doubles per round)
+    // every iteration stays lazy: at bounded iteration counts the unrolled
+    // lineage is fine, and an eager pin per iteration would cost a full
+    // extra materialization job + a pinned |V|-row block set each (for
+    // loops with many iterations, add a periodic pin — lineage doubles per
+    // round)
     (1 to iterations).foldLeft(init) { (ranks, _) =>
       val sums = withDeg
         .join(ranks, withDeg("__src") === ranks("node"))

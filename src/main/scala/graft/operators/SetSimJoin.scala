@@ -31,12 +31,12 @@ import graft.functions.IntersectCardSorted
   *   - candidate generation touches prefix tokens only (a θ=0.9 set of 25
   *     tokens exposes 3, not 25) and the verify step is the codegen'd
   *     merge-walk `IntersectCardSorted` — allocation-free per pair;
-  *   - the signature frame is persisted and — while it fits — used as the
-  *     broadcast build side of both the candidate join and the verify
-  *     joins. The broadcast is GATED on a row-count threshold
-  *     (`broadcastRowLimit`): beyond it the plan degrades to shuffled
-  *     joins instead of failing on the executor broadcast limit. The
-  *     shuffled fallback is safe here, unlike the ngram/simhash block
+  *   - the signature frame is persisted and read by both the candidate
+  *     join and the verify joins. They carry no broadcast hint: AQE
+  *     broadcasts the signature side from its measured size while it
+  *     fits, and keeps shuffled joins beyond that instead of failing on
+  *     the executor broadcast limit — so building the frame runs no job.
+  *     The shuffled form is safe here, unlike the ngram/simhash block
   *     keys (BUILDER_NOTES): candidate generation joins on *prefix*
   *     tokens, which the rarest-first total order makes low-df by
   *     construction, and the verify joins shuffle on uniformly
@@ -62,8 +62,7 @@ object SetSimJoin {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      thetaPct: Int,
-      broadcastRowLimit: Long = 1000000L): DataFrame = Materialize.scoped { scope =>
+      thetaPct: Int): DataFrame = {
     require(thetaPct > 0 && thetaPct <= 100, s"thetaPct must be in (0,100]: $thetaPct")
 
     val toks = tokenSets(docs, idCol, textCol)
@@ -75,16 +74,9 @@ object SetSimJoin {
     val dict = exploded.groupBy("tok").agg(count(lit(1)).as("df"))
       .withColumn("r", row_number().over(Window.orderBy(col("df"), col("tok"))).cast("long"))
 
-    val sigs = scope.cache(exploded.join(dict, "tok")
+    val sigs = Materialize.cache(exploded.join(dict, "tok")
       .groupBy("id").agg(sort_array(collect_list(col("r"))).as("sig"))
       .withColumn("n", size(col("sig"))))
-
-    // Broadcast gate: count() materializes the cached frame exactly once
-    // (the joins below reuse the cache). Small corpora keep the zero-shuffle
-    // broadcast plan; large ones degrade to shuffled joins rather than
-    // blowing the executor broadcast limit the scaladoc warns about.
-    val bcast: DataFrame => DataFrame =
-      if (sigs.count() <= broadcastRowLimit) broadcast else identity
 
     // prefix length |x| - ceil(theta*|x|) + 1, in exact integer arithmetic
     val ceilTheta = floor((lit(thetaPct) * col("n") + lit(99)) / lit(100)).cast("int")
@@ -92,15 +84,14 @@ object SetSimJoin {
       explode(slice(col("sig"), lit(1), col("n") - ceilTheta + 1)).as("r"))
 
     val cands = prefixes.as("a")
-      .join(bcast(prefixes.as("b")),
+      .join(prefixes.as("b"),
         col("a.r") === col("b.r") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
 
-    // the scope pins the verified pairs, then frees the signature cache
     cands
-      .join(bcast(sigs.select(col("id").as("id_a"), col("sig").as("sig_a"), col("n").as("n_a"))), "id_a")
-      .join(bcast(sigs.select(col("id").as("id_b"), col("sig").as("sig_b"), col("n").as("n_b"))), "id_b")
+      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a"), col("n").as("n_a")), "id_a")
+      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b"), col("n").as("n_b")), "id_b")
       .withColumn("inter", IntersectCardSorted(col("sig_a"), col("sig_b")))
       .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
       .filter(col("inter") * lit(100) >= lit(thetaPct) * col("uni"))

@@ -473,6 +473,8 @@ object Similarity {
     // which a few jobs in flight suffice — an unbounded pool runs m
     // concurrent job chains against one JVM's execution memory (r18 ADVICE)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, m))
+    // the pool threads store the centroid pins for the caller's scope
+    val owner = Materialize.current
     try {
       import scala.concurrent.{Await, ExecutionContext, Future}
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -480,7 +482,7 @@ object Similarity {
         Future {
           val sliced = embeddings.select(col(idCol),
             slice(toDouble(col(vecCol)), s * sub + 1, sub).as(vecCol))
-          kmeansFit(sliced, idCol, vecCol, k, iters)
+          owner(kmeansFit(sliced, idCol, vecCol, k, iters))
             .withColumn("subspace", lit(s))
         }
       }

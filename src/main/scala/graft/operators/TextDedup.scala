@@ -217,7 +217,7 @@ object TextDedup {
       rowsPerBand: Int = 3,
       threshold: Double = 0.7,
       family: HashFamily = Xx64,
-      bucketCap: Int = 1000): DataFrame = Materialize.scoped { scope =>
+      bucketCap: Int = 1000): DataFrame = {
     def bandedOf(df: DataFrame): DataFrame = {
       val toks = TextFns.tokens(col(textCol))
       bandedSignatures(df, idCol, TextFns.wordShingles(toks, shingleWords),
@@ -236,8 +236,8 @@ object TextDedup {
     def famOf(df: DataFrame): DataFrame = df
       .groupBy(col(textCol))
       .agg(min(col(idCol)).as("__gid"), count(lit(1)).as("__m"))
-    val famL = scope.cache(famOf(left))
-    val famR = scope.cache(famOf(right))
+    val famL = Materialize.cache(famOf(left))
+    val famR = Materialize.cache(famOf(right))
     def repsOf(fam: DataFrame): DataFrame =
       fam.select(col("__gid").as(idCol), col(textCol))
     // the cap must drop a bucket when its DOC population (sum of member
@@ -286,8 +286,6 @@ object TextDedup {
     val keyR = famR.select(col("__gid").as("__gb"), md5(col(textCol)).as("__tkb"))
     val memL = left.select(md5(col(textCol)).as("__tka"), col(idCol).as("a_id"))
     val memR = right.select(md5(col(textCol)).as("__tkb"), col(idCol).as("b_id"))
-    // the scope pins the pairs, then frees the family caches instead of
-    // leaking them for the session (blockedJaccardPairs discipline)
     famPairs
       .join(keyL, Seq("__ga"))
       .join(keyR, Seq("__gb"))
@@ -401,7 +399,7 @@ object TextDedup {
       blockCol: String,
       tokensCol: Column,
       shingleWords: Int,
-      threshold: Double): DataFrame = Materialize.scoped { scope =>
+      threshold: Double): DataFrame = {
     val sets = hashedNgramSets(docs, idCol, Seq(blockCol), tokensCol, shingleWords)
     // family id = min doc id among identical (block, set) rows; doc ids are
     // unique, so __gid uniquely names the family across blocks. Partition
@@ -410,7 +408,7 @@ object TextDedup {
       .partitionBy(col(blockCol), col("__set"))
     // cached: the family frame feeds the representative loop AND both
     // expansion joins off one materialization of the set build
-    val mem = scope.cache(sets.withColumn("__gid", min(col(idCol)).over(wfam)))
+    val mem = Materialize.cache(sets.withColumn("__gid", min(col(idCol)).over(wfam)))
     val memLite = mem.select(col("__gid"), col(idCol).as("__did"), col("__n"))
     // one representative row per family carries the set into the loop
     val reps = mem.filter(col(idCol) === col("__gid"))
@@ -454,10 +452,6 @@ object TextDedup {
       .select(least(col("__ida"), col("__idb")).as("a_id"),
         greatest(col("__ida"), col("__idb")).as("b_id"), col("jaccard"))
 
-    // the scope pins the pair frame, then frees the family cache instead of
-    // occupying executor storage for the session (it would otherwise
-    // outlive the call — e.g. through a whole timed bench run after
-    // warmup). Same discipline as imageNearDupPairs/winnowMatches.
     same.unionByName(cross)
   }
 }

@@ -45,31 +45,27 @@ object CorpusQueries {
           TextDedup.hammingDistance(col("__ha"), col("__hb")) <= 2)
         .withColumn("hamming", TextDedup.hammingDistance(col("__ha"), col("__hb")))
     }
-    @volatile private var grouped = false
+    // the memo entry's scope, open while this value is built: the groups
+    // are built later, inside whichever line first reads them, and must
+    // outlive that line
+    private val owner = Materialize.current
 
     /** The converged dedup groups over the pair graph, built on first use
       * (so q_simhash_pairs alone never runs CC): the iterative loop — the
       * expensive part, O(log diameter) synchronous rounds — runs once per
       * memo entry, exactly as a real pipeline materializes its group table
-      * once. The frame reads the CC loop's pinned labels.
+      * once. The frame reads the CC loop's pinned labels, which the memo
+      * entry owns.
       */
-    lazy val groups: org.apache.spark.sql.DataFrame = {
-      val g = ConnectedComponents.dedupGroups(
-        pairs.select(col("a_id"), col("b_id")), "a_id", "b_id")
-      grouped = true
-      g
-    }
-
-    /** Every frame this entry stores, for release. */
-    def frames: Seq[org.apache.spark.sql.DataFrame] =
-      (if (grouped) Seq(groups) else Nil) ++ Seq(pairs, fingerprints)
+    lazy val groups: org.apache.spark.sql.DataFrame = owner(
+      ConnectedComponents.dedupGroups(pairs.select(col("a_id"), col("b_id")), "a_id", "b_id"))
   }
 
   /** The simhash pair and dedup-group frames as one memoized family; its
     * fill line builds the groups.
     */
   val groups: Shared.Memo[Simhash] =
-    Shared.memo("q_groups_warm")(new Simhash(_, _))(fill = _.groups.count(), frames = _.frames)
+    Shared.memo("q_groups_warm")(new Simhash(_, _))(fill = _.groups.count())
 
   /** Deterministic messy-URL fixture over the documents table: scheme and
     * host case shifts, userinfo, default (:80/:443) and nonstandard
@@ -1629,11 +1625,10 @@ object CorpusQueries {
         SELECT xa.doc_id AS a_id, xb.doc_id AS b_id, CAST(0 AS INT) AS hamming
         FROM fam JOIN mem xa ON xa.gid = fam.gid JOIN mem xb ON xb.gid = fam.gid
         WHERE fam.m >= 2 AND xa.doc_id < xb.doc_id"""),
-      maxGateFactor = Some(20),
-      gatePolicyReason = Some("pair OUTPUT is C(factor,2)-quadratic per " +
+      gate = Some(Gate(20, "pair OUTPUT is C(factor,2)-quadratic per " +
         "copy-family on replicated corpora (5.3M rows at factor 10, 14.2M " +
         "at factor 20 — value-gated through 20); q_image_phash_groups is " +
-        "the linear scale contract and is value-gated at factor 50")),
+        "the linear scale contract and is value-gated at factor 50"))),
 
     // Windowed audio energy contour (frame 8 / hop 4 over the same PCM16
     // fixture): the VAD/silence-trim front-end. Overlapping hops and a
@@ -1707,11 +1702,10 @@ object CorpusQueries {
         JOIN nfr na ON na.doc_id = ver.a_id
         JOIN nfr nb ON nb.doc_id = ver.b_id
         WHERE na.nf = nb.nf AND ver.n_frames = na.nf AND ver.max_level_diff <= 1"""),
-      maxGateFactor = Some(20),
-      gatePolicyReason = Some("pair OUTPUT is C(factor,2)-quadratic per " +
+      gate = Some(Gate(20, "pair OUTPUT is C(factor,2)-quadratic per " +
         "copy-family on replicated corpora (4.7M rows at factor 10 — " +
         "value-gated through 20); q_audio_neardup_groups is the linear " +
-        "scale contract and is value-gated at factor 50")),
+        "scale contract and is value-gated at factor 50"))),
 
     // Banded per-frame luma fingerprint over a Y4M fixture with PLANTED
     // near-duplicate clips (id and id+250 differ by a global luma shift):
@@ -1757,11 +1751,10 @@ object CorpusQueries {
         JOIN nfr na ON na.doc_id = ver.a_id
         JOIN nfr nb ON nb.doc_id = ver.b_id
         WHERE na.nf = nb.nf AND ver.n_frames = na.nf AND ver.max_level_diff <= 1"""),
-      maxGateFactor = Some(20),
-      gatePolicyReason = Some("pair OUTPUT is C(factor,2)-quadratic per " +
+      gate = Some(Gate(20, "pair OUTPUT is C(factor,2)-quadratic per " +
         "copy-family on replicated corpora (3.5M rows at factor 10 — " +
         "value-gated through 20); q_video_neardup_groups is the linear " +
-        "scale contract and is value-gated at factor 50")),
+        "scale contract and is value-gated at factor 50"))),
 
     // Image near-dup GROUPS — the scale-safe contract on duplicate-saturated
     // corpora, where the pair output above is C(f,2)-quadratic per
@@ -2422,7 +2415,7 @@ object CorpusQueries {
     // per family (113s at f50, 656s timeout at f100); this form is
     // base-bounded everywhere past the one GROUP BY text.
     Q("q_training_pipeline",
-      (s, dir) => Materialize.scoped { scope =>
+      (s, dir) => {
         val docs = Q.tSpread(s, dir, "documents")
         val ntok = size(TextFns.tokens(col("text"))).cast("long")
         // the gate-id frame is TINY (ids only) but its producer is the
@@ -2432,8 +2425,8 @@ object CorpusQueries {
         // summary branch of the final action — and exchange reuse never
         // spans executions, so without the persist the whole gate ran
         // twice (§1.2 "don't compute things you throw away"; §8: decide
-        // with small rows). Released once the scope pins the summary.
-        val s1ids = scope.cache(Curation.gopherSignals(docs, "doc_id", "text")
+        // with small rows). Released when the line ends.
+        val s1ids = Materialize.cache(Curation.gopherSignals(docs, "doc_id", "text")
           .filter(col("keep")).select("doc_id"))
         // per-doc token count computed ONCE at the gate and carried as a
         // column through the cached s2: each of the five stage() summary
@@ -2445,21 +2438,24 @@ object CorpusQueries {
         val keep2 = s1.select(col("doc_id"), fp.as("__fp"))
           .groupBy(col("__fp")).agg(min(col("doc_id")).as("doc_id"))
           .select("doc_id")
-        val s2 = scope.cache(s1.join(keep2, Seq("doc_id")))
+        val s2 = Materialize.cache(s1.join(keep2, Seq("doc_id")))
         val pairs = TextDedup.minhashDupPairs(s2, "doc_id", "text",
           shingleWords = 2, bands = 4, rowsPerBand = 3, threshold = 0.5,
           family = TextDedup.HexMd5)
-        val dupDrop = scope.own(ConnectedComponents
-          .dedupGroups(pairs.select(col("a_id"), col("b_id")), "a_id", "b_id"))
+        val dupDrop = ConnectedComponents
+          .dedupGroups(pairs.select(col("a_id"), col("b_id")), "a_id", "b_id")
           .filter(!col("is_canonical"))
           .select(col("member_id").as("doc_id"))
         val s3 = s2.join(dupDrop, Seq("doc_id"), "left_anti")
         val train = s3.filter(col("doc_id") < 400)
-        val flagged = scope.own(TextDedup.crossCorpusDupPairs(
+        // cached: the s4 and s5 summary branches both read the flagged ids,
+        // and unstored the cross-corpus join ran once per branch (153 jobs
+        // instead of 110 at sf0.1)
+        val flagged = Materialize.cache(TextDedup.crossCorpusDupPairs(
           train, docs.filter(col("doc_id") >= 400), "doc_id", "text",
           shingleWords = 2, bands = 4, rowsPerBand = 3, threshold = 0.5,
-          family = TextDedup.HexMd5))
-          .select(col("a_id").as("doc_id")).distinct()
+          family = TextDedup.HexMd5)
+          .select(col("a_id").as("doc_id")).distinct())
         val s4 = train.join(flagged, Seq("doc_id"), "left_anti")
         val s5 = Curation.mixSchedule(
             s4.select(col("doc_id"), col("lang")), "doc_id", "lang",
@@ -2476,9 +2472,6 @@ object CorpusQueries {
             .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
               coalesce(col("__d"), lit(0L)).as("n_docs"),
               coalesce(col("__t"), lit(0L)).as("n_tokens"))
-        // the scope pins the 5 summary rows, then frees the caches, the CC
-        // labels and the cross-corpus pairs instead of leaking storage
-        // blocks for the session lifetime (the winnowMatches lesson)
         stage(s1, 1, "quality_gate")
           .unionByName(stage(s2, 2, "exact_dedup"))
           .unionByName(stage(s3, 3, "fuzzy_dedup"))
@@ -2601,7 +2594,7 @@ object CorpusQueries {
         FROM k5 JOIN tok ON k5.doc_id = tok.gid""")),
 
     Q("q_web_pipeline",
-      (s, dir) => Materialize.scoped { scope =>
+      (s, dir) => {
         val docs = Q.tSpread(s, dir, "documents")
         val id = col("doc_id")
         val toks = TextFns.tokens(col("text"))
@@ -2628,8 +2621,8 @@ object CorpusQueries {
           lit("</body></html>"))
         val pages = docs.select(id, html.as("html"), urlExpr(id).as("url"))
 
-        // the two hottest intermediates are STAGED (cache → pin the 5-row
-        // summary → release): the five stage-summary branches are a
+        // the two hottest intermediates are STAGED (cached for the line,
+        // released when it ends): the five stage-summary branches are a
         // union, and map-side work is not deduplicated across union
         // branches the way exchange output is — without the caches the
         // html fixture build + htmlExtract regex chain ran once per branch
@@ -2637,10 +2630,10 @@ object CorpusQueries {
         // things you throw away"). Same cache-then-release discipline as
         // q_training_pipeline's s2; a real pipeline materializes stage
         // outputs between stages for the same reason.
-        val ext = scope.cache(Curation.htmlExtract(pages, "doc_id", "html")
+        val ext = Materialize.cache(Curation.htmlExtract(pages, "doc_id", "html")
           .select(col("doc_id"), col("clean_text").as("t1")))
         val c4 = Curation.c4Filter(ext, "doc_id", "t1", blocklist = Seq("badword"))
-        val c4kept = scope.cache(c4.filter(col("keep"))
+        val c4kept = Materialize.cache(c4.filter(col("keep"))
           .select(col("doc_id"), col("clean_text").as("t2")))
         val winners = Curation.urlDedup(
             c4kept.join(pages.select(id, col("url")), "doc_id"), "doc_id", "url")
@@ -2660,9 +2653,6 @@ object CorpusQueries {
               coalesce(col("__d"), lit(0L)).as("n_docs"),
               coalesce(col("__t"), lit(0L)).as("n_tokens"))
 
-        // the scope pins the 5 summary rows NOW, then frees the stage
-        // caches instead of leaking storage for the session lifetime (the
-        // q_training_pipeline discipline)
         stage(ext, "t1", 1, "html_extract")
           .unionByName(stage(c4kept, "t2", 2, "c4_filter"))
           .unionByName(stage(s3, "t2", 3, "url_dedup"))
@@ -2977,12 +2967,11 @@ object CorpusQueries {
                  CAST(fk.inter AS INT) AS inter, CAST(fk.uni AS INT) AS uni
           FROM fk JOIN memb x ON x.gid = fk.ga JOIN memb y ON y.gid = fk.gb)
         SELECT * FROM same UNION ALL SELECT * FROM crossed"""),
-      maxGateFactor = Some(10),
-      gatePolicyReason = Some("pair OUTPUT is C(factor,2)-quadratic per " +
+      gate = Some(Gate(10, "pair OUTPUT is C(factor,2)-quadratic per " +
         "copy-family clique (96.7M rows measured at factor 10; no candidate " +
         "filter can reduce output cardinality); the linear dedup-GROUPS " +
         "contract (minhash->CC, q_dedup_groups) carries scale — standing " +
-        "adjudication since r7")),
+        "adjudication since r7"))),
 
     // Winnowing document fingerprints (Schleimer/Wilkerson/Aiken SIGMOD'03,
     // the MOSS scheme): positional 3-gram md5-prefix hashes, window-of-4

@@ -44,8 +44,9 @@ object DagQueries {
     when(c === 0, "CONSERVATIVE").when(c === 1, "MODERATE").otherwise("AGGRESSIVE")
 
   /** Map the driver testdata into the reference's raw shapes (exact,
-    * DuckDB-replayable derivations only), with the raw-mapping frames it
-    * pinned (transactions, cryptoDaily); the caller releases those.
+    * DuckDB-replayable derivations only). The raw-mapping frames it pins
+    * (transactions, cryptoDaily) belong to the scope open at the call: the
+    * vault memo entry's.
     *
     * Pinned via EAGER checkpoint, not a cache mark: every one of the ten
     * shared vault frames and the seven mart queries re-carries the full
@@ -59,7 +60,7 @@ object DagQueries {
     * LogicalRDD, so downstream plans are joins over two tiny leaves; rows
     * are bit-identical (same deterministic computation, stored).
     */
-  private def referenceRaw(s: SparkSession, dir: String): (Models.Raw, Seq[DataFrame]) = {
+  private def referenceRaw(s: SparkSession, dir: String): Models.Raw = {
     val cust = t(s, dir, "customer")
     val supp = t(s, dir, "supplier")
     val ord = t(s, dir, "orders")
@@ -236,7 +237,7 @@ object DagQueries {
         col("__lo").cast(DecimalType(20, 8)).as("week_52_low"),
         loadTs.as("load_timestamp"))
 
-    (Models.Raw(
+    Models.Raw(
       transactionPersonal = transactions.filter(col("customer_type") === "PERSONAL"),
       transactionCorporate = transactions.filter(col("customer_type") === "CORPORATE"),
       customers = personalCustomers.unionByName(upgradedCustomers)
@@ -247,13 +248,8 @@ object DagQueries {
         "binance" -> cryptoFeed("binance", "1.00"),
         "coingecko" -> cryptoFeed("coingecko", "1.01"),
         "yfinance" -> cryptoFeed("yfinance", "0.99")),
-      stockPrices = stockPrices), Seq(transactions, cryptoDaily))
+      stockPrices = stockPrices)
   }
-
-  /** One corpus's vault DAG with its shared models cached, and the raw
-    * pins it reads.
-    */
-  final case class Vault(models: Models, pins: Seq[DataFrame])
 
   /** The shared vault cache as a memoized family; every DAG query reads it.
     * One Models instance per (session, scale dir): the q_dag_* queries run
@@ -263,14 +259,11 @@ object DagQueries {
     * the shared cache, so the mart queries' numbers reflect their own work
     * rather than the first-query cache fill. The raw pins are eager, so
     * they are fully materialized before any shared fill can observe them —
-    * concurrent fills cannot each compute the raw mapping.
+    * concurrent fills cannot each compute the raw mapping. The memo entry
+    * owns the pins and the shared cache, and frees both on release.
     */
-  val vault: Shared.Memo[Vault] = Shared.memo("q_dag_warm") { (s, dir) =>
-    val (raw, pins) = referenceRaw(s, dir)
-    Vault(Models(raw).persistShared(), pins)
-  }(fill = _.models.materializeShared(), frames = v => v.models.sharedFrames ++ v.pins)
-
-  private def models(s: SparkSession, dir: String): Models = vault(s, dir).models
+  val vault: Shared.Memo[Models] = Shared.memo("q_dag_warm")(
+    (s, dir) => Models(referenceRaw(s, dir)).persistShared())(fill = _.materializeShared())
 
   // ------------------------------------------------------------------ SQL
 
@@ -363,7 +356,7 @@ object DagQueries {
 
     /** fct_transactions.sql:10-43 — 5-way star, value-exact vs DuckDB. */
     Q("q_dag_fct_transactions",
-      (s, dir) => models(s, dir).fctTransactions.select(
+      (s, dir) => vault(s, dir).fctTransactions.select(
         col("transaction_hk"), col("transaction_id"), col("customer_id"),
         col("customer_hk"), col("asset_hk"), col("transaction_type"),
         col("quantity").cast("double").as("quantity"),
@@ -399,7 +392,7 @@ object DagQueries {
       * — an oracle without the joins would hash-mismatch.
       */
     Q("q_dag_link_company_tx",
-      (s, dir) => models(s, dir).linkCompanyTransaction,
+      (s, dir) => vault(s, dir).linkCompanyTransaction,
       Some(s"""$RawSqlMatTx
         SELECT md5(concat_ws('-', md5(t.customer_id), md5(t.transaction_id))) AS company_transaction_hk,
                md5(t.customer_id) AS company_hk,
@@ -419,7 +412,7 @@ object DagQueries {
       * news arrives duplicated (second scrape 1h later) and must collapse.
       */
     Q("q_dag_news_content",
-      (s, dir) => models(s, dir).satNewsContent
+      (s, dir) => vault(s, dir).satNewsContent
         .withColumn("news_category", Models.categorizeNews(col("title"))),
       Some(s"""
         WITH raw_news AS (
@@ -453,7 +446,7 @@ object DagQueries {
       * news-asset relationship with the content attributes attached.
       */
     Q("q_dag_fct_news_events",
-      (s, dir) => models(s, dir).fctNewsEvents,
+      (s, dir) => vault(s, dir).fctNewsEvents,
       Some(s"""
         WITH raw_news AS (
           SELECT CASE WHEN p_partkey % 2 = 0 THEN 'BTC-USD' ELSE 'ETH-USD' END AS ticker,
@@ -482,7 +475,7 @@ object DagQueries {
       * semantic_asset_performance.sql:10-22.
       */
     Q("q_dag_asset_performance",
-      (s, dir) => models(s, dir).semanticAssetPerformance.select(
+      (s, dir) => vault(s, dir).semanticAssetPerformance.select(
         col("asset_symbol"), col("asset_type"), col("asset_class"),
         col("price_date").cast("timestamp_ntz").as("price_date"), col("price_source"),
         col("price").cast("double").as("price"),
@@ -523,7 +516,7 @@ object DagQueries {
       * KPIs with the SCD2-current profile attributes.
       */
     Q("q_dag_customer_overview",
-      (s, dir) => models(s, dir).semanticCustomerOverview.select(
+      (s, dir) => vault(s, dir).semanticCustomerOverview.select(
         col("customer_hk"), col("customer_id"),
         col("total_transactions"),
         col("total_amount").cast("double").as("total_amount"),
@@ -552,7 +545,7 @@ object DagQueries {
       * (W2 + U4 + J5), latest-day ties broken by record_source desc.
       */
     Q("q_dag_dim_asset",
-      (s, dir) => models(s, dir).dimAsset
+      (s, dir) => vault(s, dir).dimAsset
         .select(col("asset_hk"), col("asset_symbol"), col("asset_type"),
           col("latest_price").cast("double").as("latest_price")),
       Some(s"""$RawSql,
@@ -601,7 +594,7 @@ object DagQueries {
       * sat_company_details, grain company_hk.
       */
     Q("q_dag_dim_company",
-      (s, dir) => models(s, dir).dimCompany,
+      (s, dir) => vault(s, dir).dimCompany,
       Some("""
         SELECT md5(company_id) AS company_hk, company_id, company_name,
                company_type, country, year_founded
@@ -621,7 +614,7 @@ object DagQueries {
       * sat's normalized symbol/type.
       */
     Q("q_dag_semantic_transactions",
-      (s, dir) => models(s, dir).semanticTransactions.select(
+      (s, dir) => vault(s, dir).semanticTransactions.select(
         col("transaction_hk"), col("transaction_id"), col("customer_id"),
         col("customer_hk"), col("asset_hk"),
         col("asset_symbol"), col("asset_type"),
@@ -657,7 +650,7 @@ object DagQueries {
       * value directly.
       */
     Q("q_dag_price_comparison",
-      (s, dir) => models(s, dir).fctAssetPriceComparison.select(
+      (s, dir) => vault(s, dir).fctAssetPriceComparison.select(
         col("asset_hk"),
         col("price_date").cast("timestamp_ntz").as("price_date"),
         col("price_binance").cast("double").as("price_binance"),
@@ -702,7 +695,7 @@ object DagQueries {
       * operation order on both sides.
       */
     Q("q_dag_news_impact",
-      (s, dir) => models(s, dir).fctAssetNewsImpact.select(
+      (s, dir) => vault(s, dir).fctAssetNewsImpact.select(
         col("news_hk"), col("asset_hk"),
         col("news_date").cast("timestamp_ntz").as("news_date"),
         col("v_t0").cast("double").as("price_t0"),
@@ -769,7 +762,7 @@ object DagQueries {
       * priority pick, so the choice is hash-verified reproducible.
       */
     Q("q_dag_sat_crypto_primary",
-      (s, dir) => models(s, dir).satAssetPriceCryptoPrimary.select(
+      (s, dir) => vault(s, dir).satAssetPriceCryptoPrimary.select(
         col("asset_hk"), col("symbol"), col("record_source"), col("observed_at"),
         col("price").cast("double").as("price"),
         col("volume").cast("double").as("volume")),
@@ -810,7 +803,7 @@ object DagQueries {
       * in a later load), lead + 9999-12-31 sentinel, value-exact.
       */
     Q("q_dag_customer_history",
-      (s, dir) => models(s, dir).dimCustomerHistory,
+      (s, dir) => vault(s, dir).dimCustomerHistory,
       Some(s"""$RawSql
         SELECT md5(customer_id) AS customer_hk, customer_id, email_addr,
                customer_tier, risk_tolerance,

@@ -4,17 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Graft
+import graft.core.{Graft, Materialize}
 
 /** One registered engine query: the Spark implementation plus (when
   * SQL-expressible) an equivalent ANSI SQL oracle the driver runs in DuckDB
   * over the same parquet tables.
   *
-  * `maxGateFactor` is the query's SCALE-GATE POLICY, carried in code so the
+  * `gate` is the query's SCALE-GATE POLICY, carried in code so the
   * replicated-corpus gates read it from the registry instead of from tooling
-  * invocation notes: `Some(f)` means the query is value-gated up to
-  * replication factor f and policy-skipped above it, with `gatePolicyReason`
-  * saying why (the standing adjudications: a pair query whose OUTPUT is
+  * invocation notes: `Some(Gate(f, reason))` means the query is value-gated
+  * up to replication factor f and policy-skipped above it, for `reason`
+  * (the standing adjudications: a pair query whose OUTPUT is
   * C(factor,2)-quadratic per copy-family on replicated corpora cannot be
   * replayed at unbounded factors — its linear GROUPS twin carries the dedup
   * contract and is gated instead). `None` (the default) = gate at every
@@ -28,9 +28,13 @@ final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    maxGateFactor: Option[Int] = None,
-    gatePolicyReason: Option[String] = None,
+    gate: Option[Gate] = None,
     shares: Option[Shared] = None)
+
+/** A scale-gate policy: value-gated up to replication `maxFactor`, skipped
+  * above it, for `reason`.
+  */
+final case class Gate(maxFactor: Int, reason: String)
 
 /** A memoized family several registered queries read: one materialization
   * per (session, dir), built by `fill` and freed by `release`. `line` names
@@ -57,18 +61,23 @@ object Shared {
   }
 
   /** The one owner of a family's `(session, dir)` memo: `build` makes the
-    * value on first use, `fill` materializes it for the fill line, and
-    * `release` drops the entry and frees every frame `frames` lists through
-    * `Materialize.release`. The memo holds its sessions strongly, so a
-    * long-lived session must release each dir it is done with.
+    * value on first use and `fill` materializes it for the fill line, both
+    * inside the entry's own scope (`Materialize.owner`), which `release`
+    * closes. What the value stores, including members it builds later
+    * inside whichever line first reads them, belongs to that scope and not
+    * to the line. The memo holds its sessions strongly, so a long-lived
+    * session must release each dir it is done with.
     */
-  def memo[A](line: String)(build: (SparkSession, String) => A)(
-      fill: A => Unit, frames: A => Seq[DataFrame]): Memo[A] = {
-    val memo = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), A]
-    def get(s: SparkSession, dir: String): A = memo.getOrElseUpdate((s, dir), build(s, dir))
-    new Memo[A](line, get, (s, dir) => fill(get(s, dir)),
-      (s, dir) => memo.remove((s, dir)).foreach(a =>
-        frames(a).foreach(graft.core.Materialize.release(_))))
+  def memo[A](line: String)(build: (SparkSession, String) => A)(fill: A => Unit): Memo[A] = {
+    val memo = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Materialize.Owner, A)]
+    def entry(s: SparkSession, dir: String) = memo.getOrElseUpdate((s, dir), {
+      val owner = Materialize.owner()
+      try owner -> owner(build(s, dir))
+      catch { case e: Throwable => owner.close(blocking = true); throw e }
+    })
+    new Memo[A](line, entry(_, _)._2,
+      (s, dir) => { val (owner, a) = entry(s, dir); owner(fill(a)) },
+      (s, dir) => memo.remove((s, dir)).foreach(_._1.close(blocking = true)))
   }
 }
 

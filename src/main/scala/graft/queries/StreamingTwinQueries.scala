@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Materialize
 import graft.operators.{Scd2, TextDedup}
 import graft.streaming.{StreamingDedup, StreamingNearDup, StreamingScd2}
 import Q.t
@@ -97,7 +96,7 @@ object StreamingTwinQueries {
     // streams don't replay 100 identical copies of every document — the
     // quadratic term is an artifact of the gate corpus's construction.
     Q("q_stream_neardup_batch",
-      (s, dir) => Materialize.scoped { scope =>
+      (s, dir) => {
         val docs = t(s, dir, "documents")
         val pb = pmod(
           conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint"),
@@ -106,10 +105,7 @@ object StreamingTwinQueries {
           docs.filter(pb < 80), "doc_id", "text",
           shingleWords = 2, bands = 4, rowsPerBand = 3, threshold = 0.5,
           family = TextDedup.HexMd5)
-        // one batch, so the index dies with the query: the scope pins the
-        // matches, then frees both index frames
-        scope.own(index.banded)
-        scope.own(index.sets)
+        // one batch, so the index dies with the line that runs the query
         StreamingNearDup.matchBatch(docs.filter(pb >= 90), "doc_id", "text", index)
       },
       // Family-grain replay (the r9 oracle-scale lesson): the minhash chain,

@@ -38,10 +38,9 @@ object StreamingNearDup {
       family: TextDedup.HashFamily = TextDedup.Xx64)
 
   /** Build (and materialize) the corpus index once: both frames are
-    * pinned, and the caller frees them with `Materialize.release` when the
-    * detector is done. `family` follows `TextDedup`: Xx64 is the cheap
-    * scale path; HexMd5 makes the banding SQL-replayable (the oracle gate
-    * runs `q_stream_neardup_batch` on it).
+    * pinned and belong to the scope open at the call. `family` follows
+    * `TextDedup`: Xx64 is the cheap scale path; HexMd5 makes the banding
+    * SQL-replayable (the oracle gate runs `q_stream_neardup_batch` on it).
     */
   def buildIndex(
       corpus: DataFrame,

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{CorpusQueries, DagQueries}
+import graft.queries.{CorpusQueries, DagQueries, Q}
 
 /** The release half of the memoization contract: the `groups`/`vault`
   * fills store frames per (session, dir) so one process computes each
@@ -53,8 +53,8 @@ class MemoReleaseSpec extends AnyFunSuite {
     * the contract is asserted separately via assertEagerlyReleased, which
     * reads the id census immediately, no GC loop.
     */
-  private def assertSettlesTo(baseline: Int, msg: String, deadlineSec: Int = 30): Unit = {
-    val deadline = System.nanoTime() + deadlineSec.toLong * 1000 * 1000 * 1000
+  private def assertSettlesTo(baseline: Int, msg: String): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (cachedRdds > baseline && System.nanoTime() < deadline) {
       System.gc(); Thread.sleep(200)
     }
@@ -137,46 +137,71 @@ class MemoReleaseSpec extends AnyFunSuite {
     }
   }
 
-  test("media-GROUPS soak: per-call caches release eagerly, checkpoint results are collectable") {
-    // One census over every query that opens a `Materialize` scope
-    // (the media near-dup GROUPS operators, the set-similarity join, the
-    // streaming index probe, both staged pipelines, PageRank): each caches
-    // intermediates or adopts nested results inside the call and hands back
-    // ONE pinned result. Two release disciplines must hold across repeated
-    // cycles: (a) everything else a call stored — caches, the nested CC
-    // labels, a nested operator's pinned pairs, the streaming index — is
-    // freed before the call returns; a leak there ratchets the census by
-    // several frames per cycle; (b) the returned checkpoint frames hold no
-    // hidden engine-side reference, so once the caller drops them the
-    // ContextCleaner returns storage to baseline.
-    val names = Seq("q_image_phash_groups", "q_audio_neardup_groups",
-      "q_video_neardup_groups", "q_setsim_pairs", "q_stream_neardup_batch",
-      "q_training_pipeline", "q_web_pipeline", "q_pagerank")
-    val qs = SparkEntry.queries
-    val baseline = settledFloor()
-    for (cycle <- 1 to 3) {
-      names.foreach { q =>
-        val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        qs(q)(spark, dir).write.format("noop").mode("overwrite").save()
-        // eager-release check per query, by id: what the call left stored
-        // is its one result checkpoint — never a cache, never a second frame
-        val kept = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
-        assert(kept.size <= 1 && kept.values.forall(_.isCheckpointed),
-          s"cycle $cycle $q: left ${kept.size} frames stored " +
-            s"(checkpoints: ${kept.values.count(_.isCheckpointed)}) — " +
-            "an intermediate leaked past return")
-      }
-      // immediately after the cycle, only the not-yet-collected RESULT
-      // checkpoints may remain pinned
-      assert(cachedRdds <= baseline + names.size,
-        s"cycle $cycle: ${cachedRdds - baseline} frames pinned after " +
-          s"${names.size} scoped calls — a per-call cache leaked past return")
-      // checkpoint collection is ContextCleaner-paced, not eager — allow the
-      // soak a longer settle than the default eager-release suites use
-      assertSettlesTo(baseline,
-        s"cycle $cycle: dropped results must be collectable back " +
-          s"to baseline ($baseline) — a hidden reference pins the checkpoint",
-        deadlineSec = 60)
+  /** The queries whose line left checkpoints stored while operators owned
+    * their storage (a census of every registered query at sf0.001 through
+    * `Runner.line`): pinned operator results, nested CC labels, the
+    * streaming index, BPE vocabularies and k-means/PQ codebooks.
+    */
+  private val leaving = Seq(
+    "q_audio_neardup_groups", "q_audio_neardup_pairs", "q_bpe_encode", "q_bpe_merges",
+    "q_bpe_token_ids", "q_cross_neardup", "q_domain_rank", "q_image_phash_groups",
+    "q_image_phash_pairs", "q_ivf_trained", "q_ngram_dup_pairs", "q_pagerank",
+    "q_pq_codes", "q_semdedup", "q_setsim_pairs", "q_stream_neardup_batch",
+    "q_training_pipeline", "q_video_neardup_groups", "q_video_neardup_pairs",
+    "q_web_pipeline", "q_winnow_matches")
+
+  private def line(runner: Runner, q: Q): Unit =
+    runner.line(q.name)(Runner.noop(q.fn(spark, dir))).error
+      .foreach(e => fail(s"${q.name} failed", e))
+
+  test("every line leaves the persistent-RDD id set as it found it") {
+    val qs = SparkEntry.registered.filter(q => leaving.contains(q.name)).sortBy(_.name)
+    assert(qs.map(_.name) === leaving.sorted)
+    val runner = new Runner(spark, dir, qs)
+    // what a family stores is the memo's, filled before the first line;
+    // earlier suites' dropped frames are collected before the census
+    runner.fill().foreach(l => assert(l.error.isEmpty, s"${l.name} failed"))
+    settledFloor()
+    try qs.foreach { q =>
+      val before = cachedIds
+      line(runner, q)
+      val after = cachedIds
+      assert(after === before, s"${q.name}: left ${(after -- before).toSeq.sorted} stored, " +
+        s"freed ${(before -- after).toSeq.sorted}")
+    } finally runner.families.foreach(runner.release(_))
+  }
+
+  test("groups first built inside a consumer line outlive it") {
+    CorpusQueries.groups.release(spark, dir)
+    val q = SparkEntry.registered.find(_.name == "q_dedup_groups").get
+    val runner = new Runner(spark, dir, Seq(q))
+    val before = cachedIds
+    line(runner, q)
+    val kept = cachedIds -- before
+    assert(kept.nonEmpty, "building the groups must store the memo's frames")
+    // a second read runs on the stored labels: freed by the first line's
+    // scope, it would fail on missing checkpoint blocks
+    line(runner, q)
+    assert(cachedIds -- before === kept, "a second read must store nothing new")
+    CorpusQueries.groups.release(spark, dir)
+    assertEagerlyReleased(kept, "release must free the groups built inside a consumer line")
+  }
+
+  test("pair and rank queries build lazily, with their whole plan") {
+    val names = Seq("q_image_phash_pairs", "q_audio_neardup_pairs", "q_video_neardup_pairs",
+      "q_setsim_pairs", "q_winnow_matches", "q_pagerank", "q_domain_rank",
+      "q_ngram_dup_pairs", "q_cross_neardup")
+    val qs = SparkEntry.registered.filter(q => names.contains(q.name))
+    assert(qs.size === names.size)
+    val runner = new Runner(spark, dir, qs)
+    qs.foreach { q =>
+      var df: org.apache.spark.sql.DataFrame = null
+      val built = runner.line(q.name) { df = q.fn(spark, dir) }
+      assert(built.error.isEmpty && built.jobs.isEmpty,
+        s"${q.name} ran ${built.jobs.size} jobs while built")
+      val stubs = df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.nodeName }
+      assert(stubs.isEmpty, s"${q.name}'s plan reads a stored RDD: $stubs")
     }
   }
 

@@ -55,10 +55,17 @@ class SetSimJoinSpec extends AnyFunSuite {
   test("shuffled fallback (broadcast gate exceeded) is output-identical to the broadcast plan") {
     val corpus = queries.Q.t(TestSpark.spark, "/root/testdata/sf0.001", "documents")
       .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
-    // broadcastRowLimit = 0 forces the large-corpus shuffled-join path
-    val got = SetSimJoin.jaccardJoin(corpus.toDF("doc_id", "text"), "doc_id", "text", 80,
-        broadcastRowLimit = 0L)
-      .as[(Long, Long, Int, Int)].collect().toSet
+    // broadcast thresholds of -1 force the large-corpus shuffled-join path
+    val conf = TestSpark.spark.conf
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    val got =
+      try {
+        keys.foreach(conf.set(_, "-1"))
+        SetSimJoin.jaccardJoin(corpus.toDF("doc_id", "text"), "doc_id", "text", 80)
+          .as[(Long, Long, Int, Int)].collect().toSet
+      } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
     assert(got == bruteForce(corpus, 80))
     assert(got.nonEmpty)
   }
