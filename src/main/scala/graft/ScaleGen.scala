@@ -23,16 +23,25 @@ import graft.queries.Q
   * Each table lands as a SINGLE parquet file named `<table>.parquet`
   * (written to a staging dir, then the part file is moved flat) so both
   * `spark.read.parquet` and DuckDB's `FROM 'dir/t.parquet'` read it with
-  * the same path expression the driver's gate uses. Row groups keep the
-  * file splittable for Spark's scan parallelism.
+  * the same path expression the correctness gate uses. Spark splits a
+  * parquet scan only at row-group boundaries, and the default 128 MB row
+  * group holds a whole factor-10 lineitem (one group of 6M rows, one scan
+  * task), so every table is written with row groups of at most
+  * [[RowGroupBytes]].
   *
-  * Usage: `runMain graft.ScaleGen [sfDir] [factor] [outDir]`
+  * Usage: `runMain graft.ScaleGen [sfDir] [factor] [outDir]`; the factor
+  * must be a positive integer.
   */
 object ScaleGen {
 
+  /** The parquet row-group bound (`parquet.block.size`): factor-10
+    * lineitem comes out as 9 row groups, so its scan runs as several tasks.
+    */
+  private val RowGroupBytes: Int = 8 * 1024 * 1024
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val factor = args.lift(1).map(_.toInt).getOrElse(10)
+    val factor = args.lift(1).map(Graft.positiveInt("factor", _)).getOrElse(10)
     val outDir = args.lift(2).getOrElse("/tmp/graft_sf1r")
     val spark = Graft.session(s"local[${Graft.localCpus}]", "graft-scalegen")
     spark.sparkContext.setLogLevel("ERROR")
@@ -64,7 +73,8 @@ object ScaleGen {
           }.select(base.columns.map(col).toIndexedSeq: _*)
         }
       val staging = s"$outDir/__stage_$table"
-      out.coalesce(1).write.mode("overwrite").parquet(staging)
+      out.coalesce(1).write.mode("overwrite")
+        .option("parquet.block.size", RowGroupBytes.toLong).parquet(staging)
       val part = new java.io.File(staging).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
         .getOrElse(sys.error(s"no part file written for $table"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Graft {
 
   /** The engine's one session: every main (Bench, Verify, TimeOne, PlanDump,
-    * ScaleGen, ScaleProbe) and the benchmark harness build through here, so
+    * ScaleGen) and the benchmark harness build through here, so
     * their configs cannot drift apart. Idempotent: a second call returns the
     * running session with the same settings applied.
     */

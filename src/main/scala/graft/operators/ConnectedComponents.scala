@@ -43,12 +43,6 @@ import graft.core.Materialize
   */
 object ConnectedComponents {
 
-  /** Rounds the last `minLabel` call took to converge — probe telemetry
-    * only (ScaleProbe records it as evidence that the round count stays
-    * log-bounded as the corpus scales); not part of the operator contract.
-    */
-  @volatile var lastRounds: Int = -1
-
   /** Release the checkpoint blocks backing a frame returned by
     * [[minLabel]]/[[dedupGroups]] to a caller with no scope open, which owns
     * it. The frame is NOT recomputable afterwards (checkpointing truncated
@@ -140,7 +134,6 @@ object ConnectedComponents {
     // the mirrored edge list is only read inside the loop; its checkpoint
     // (|E| rows — the big one) is dead weight once the labels converged
     Materialize.release(und, blocking = false)
-    lastRounds = round
     if (!converged) {
       // error path: no frame handle escapes, so the final round's label
       // checkpoint would stay pinned forever in a long-lived session —

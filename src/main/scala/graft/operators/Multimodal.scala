@@ -376,43 +376,11 @@ object Multimodal {
     }(enc)
   }
 
-  /** Build-side strategy for the banded near-dup self-joins
-    * ([[imageNearDupPairs]], [[contourNearDupPairs]]).
-    *
-    * [[NearDupBuild.Broadcast]] replicates the banded frame to every task —
-    * right while the corpus (or its cluster/LSH block) fits one executor,
-    * and immune to hot signature keys (silence, flat images) because no
-    * task owns a key. [[NearDupBuild.Shuffle]] is the cluster-scale path:
-    * a HINT-FREE shuffle on the (band_idx, band value) cell — AQE sizes,
-    * coalesces, and skew-splits the exchange — with the MinHash-style
-    * per-cell cap (`TextDedup.candidatePairs` discipline) dropping
-    * pathological cells so no single popular signature funnels quadratic
-    * work into one task. Capped cells trade recall for boundedness exactly
-    * as LSH bucket caps do; members of a dropped cell can still pair
-    * through their other bands.
-    */
-  sealed trait NearDupBuild
-  object NearDupBuild {
-    case object Broadcast extends NearDupBuild
-    final case class Shuffle(bucketCap: Int = 10000) extends NearDupBuild
-  }
-
-  /** Drop rows of banded cells whose population exceeds `cap` (shuffle-mode
-    * guard; one extra shuffle for the window count, reused by the join that
-    * follows because both hash-partition on the same cell key prefix).
-    */
-  private def capCells(banded: DataFrame, cellCols: Seq[String], cap: Int): DataFrame =
-    banded
-      .withColumn("__cell_n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(cellCols.map(col): _*)))
-      .filter(col("__cell_n") <= cap)
-      .drop("__cell_n")
-
   /** The 4x16-bit band explode of a [[dHashFeatures]] frame: one row per
     * (doc, band) with the full hash carried alongside for the verify
     * predicate.
     */
-  private[graft] def imageBands(hashes: DataFrame): DataFrame =
+  private def imageBands(hashes: DataFrame): DataFrame =
     hashes
       .filter(col("dhash_hi").isNotNull)
       .select(col("doc_id"), col("dhash_hi"), col("dhash_lo"),
@@ -423,52 +391,31 @@ object Multimodal {
           shiftright(col("dhash_hi"), 16).bitwiseAND(lit(0xffffL))))
           .as(Seq("band_idx", "band_val")))
 
-  /** The banded image self-join itself, unpinned — factored out so plan
-    * specs can assert the physical join strategy of each [[NearDupBuild]]
-    * mode (the public wrapper's pinned result hides the plan behind an RDD
-    * scan).
-    */
-  private[graft] def imageNearDupJoin(
-      e: DataFrame, maxHamming: Int, build: NearDupBuild): DataFrame = {
-    val a = e.select(col("band_idx"), col("band_val"),
-      col("doc_id").as("a_id"), col("dhash_hi").as("__ahi"), col("dhash_lo").as("__alo"))
-    val bs = e.select(col("band_idx").as("__bi"), col("band_val").as("__bv"),
-      col("doc_id").as("b_id"), col("dhash_hi").as("__bhi"), col("dhash_lo").as("__blo"))
-    val probe = build match {
-      case NearDupBuild.Broadcast => broadcast(bs)
-      case _: NearDupBuild.Shuffle => bs
-    }
-    val ham = (bit_count(col("__ahi").bitwiseXOR(col("__bhi"))) +
-      bit_count(col("__alo").bitwiseXOR(col("__blo")))).cast("int")
-    a.join(probe,
-        col("band_idx") === col("__bi") && col("band_val") === col("__bv") &&
-        col("a_id") < col("b_id") && ham <= maxHamming)
-      .select(col("a_id"), col("b_id"), ham.as("hamming"))
-      .distinct()
-  }
-
   /** Image near-dup candidate pairs over [[dHashFeatures]] output by
     * banded dHash join: 4 bands of 16 bits; pairs sharing an exact band
     * are verified with full 64-bit hamming distance. By pigeonhole the
     * banding is EXACT (equals brute force) for `maxHamming <= 3` — four
     * disjoint bands cannot all differ when at most 3 bits do — which is
     * why the threshold is capped; raise the band count before the
-    * threshold. Same self-join shape as the simhash block join; the
-    * build-side strategy is a [[NearDupBuild]] parameter (broadcast while
-    * the hash frame fits, hint-free capped shuffle at cluster scale).
+    * threshold. Same self-join shape as the simhash block join. The probe
+    * side is broadcast: no task owns a band value, so a hot signature (a
+    * flat image) cannot funnel quadratic work into one task.
     */
-  def imageNearDupPairs(
-      hashes: DataFrame,
-      maxHamming: Int,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
+  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4x16-bit banding is exact only for maxHamming <= 3, got $maxHamming")
-    val banded = imageBands(hashes)
-    val e = Materialize.cache(build match {
-      case NearDupBuild.Shuffle(cap) => capCells(banded, Seq("band_idx", "band_val"), cap)
-      case NearDupBuild.Broadcast => banded
-    })
-    imageNearDupJoin(e, maxHamming, build)
+    val e = Materialize.cache(imageBands(hashes))
+    val a = e.select(col("band_idx"), col("band_val"),
+      col("doc_id").as("a_id"), col("dhash_hi").as("__ahi"), col("dhash_lo").as("__alo"))
+    val b = e.select(col("band_idx").as("__bi"), col("band_val").as("__bv"),
+      col("doc_id").as("b_id"), col("dhash_hi").as("__bhi"), col("dhash_lo").as("__blo"))
+    val ham = (bit_count(col("__ahi").bitwiseXOR(col("__bhi"))) +
+      bit_count(col("__alo").bitwiseXOR(col("__blo")))).cast("int")
+    a.join(broadcast(b),
+        col("band_idx") === col("__bi") && col("band_val") === col("__bv") &&
+        col("a_id") < col("b_id") && ham <= maxHamming)
+      .select(col("a_id"), col("b_id"), ham.as("hamming"))
+      .distinct()
   }
 
   /** Schema of a decoded-BMP feature row (see `decodeBmpFeatures`). */
@@ -1286,26 +1233,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** The banded audio candidate join, pre-checkpoint (see
-    * [[imageNearDupJoin]] for why this is factored out).
-    */
-  private[graft] def audioNearDupCandidates(
-      e: DataFrame, minBands: Int, build: NearDupBuild): DataFrame = {
-    val a = e.select(col("band_idx"), col("band_sig"), col("doc_id").as("a_id"))
-    val b = e.select(col("band_idx").as("__bi"), col("band_sig").as("__bs"),
-      col("doc_id").as("b_id"))
-    val probe = build match {
-      case NearDupBuild.Broadcast => broadcast(b)
-      case _: NearDupBuild.Shuffle => b
-    }
-    a.join(probe,
-        col("band_idx") === col("__bi") && col("band_sig") === col("__bs") &&
-        col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).cast("int").as("n_bands"))
-      .filter(col("n_bands") >= minBands)
-  }
-
   /** Banded-contour near-dup pairs, the audio and video detector: any
     * modality that reduces a document to an ordered integer-level contour
     * (doc_id, frame_idx, level) plus banded signatures
@@ -1319,11 +1246,9 @@ object Multimodal {
     * coincidental band collisions, and verification cost is bounded by
     * CANDIDATE mass, never all-pairs.
     *
-    * Same self-join scale shape as [[imageNearDupPairs]], with the same
-    * [[NearDupBuild]] build-side parameter: broadcast the fingerprint
-    * frame while it fits (immune to hot signature keys — silence is the
-    * classic offender), else a hint-free capped shuffle on
-    * (band_idx, band_sig).
+    * Same self-join scale shape as [[imageNearDupPairs]], with the
+    * fingerprint frame broadcast to the probe (immune to hot signature
+    * keys — silence is the classic offender).
     *
     * @return (a_id, b_id, n_bands, n_frames, max_level_diff)
     */
@@ -1331,18 +1256,22 @@ object Multimodal {
       fps: DataFrame,
       levels: DataFrame,
       minBands: Int,
-      maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
+      maxLevelDiff: Long): DataFrame = {
     require(minBands > 0 && maxLevelDiff >= 0,
       s"need positive thresholds: $minBands / $maxLevelDiff")
-    // contourNearDupGroups passes its own cached ffps here (Broadcast
-    // build): `cache` returns an already cached frame as it is
-    val e = Materialize.cache(build match {
-      case NearDupBuild.Shuffle(cap) => capCells(fps, Seq("band_idx", "band_sig"), cap)
-      case NearDupBuild.Broadcast => fps
-    })
+    // contourNearDupGroups passes its own cached ffps here: `cache`
+    // returns an already cached frame as it is
+    val e = Materialize.cache(fps)
     val lv = Materialize.cache(levels)
-    val cand = audioNearDupCandidates(e, minBands, build)
+    val b = e.select(col("band_idx").as("__bi"), col("band_sig").as("__bs"),
+      col("doc_id").as("b_id"))
+    val cand = e.select(col("band_idx"), col("band_sig"), col("doc_id").as("a_id"))
+      .join(broadcast(b),
+        col("band_idx") === col("__bi") && col("band_sig") === col("__bs") &&
+        col("a_id") < col("b_id"))
+      .groupBy(col("a_id"), col("b_id"))
+      .agg(count(lit(1)).cast("int").as("n_bands"))
+      .filter(col("n_bands") >= minBands)
     val nf = lv.groupBy(col("doc_id")).agg(count(lit(1)).as("__nf"))
     val la = lv.select(col("doc_id").as("a_id"), col("frame_idx"), col("level").as("__la"))
     val lb = lv.select(col("doc_id").as("b_id"), col("frame_idx"), col("level").as("__lb"))
@@ -1383,8 +1312,7 @@ object Multimodal {
     */
   def imageNearDupGroups(
       hashes: DataFrame,
-      maxHamming: Int,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
+      maxHamming: Int): DataFrame = {
     val hs = Materialize.cache(hashes.filter(col("dhash_hi").isNotNull)
       .select(col("doc_id"), col("dhash_hi"), col("dhash_lo")))
     val fam = hs.groupBy(col("dhash_hi"), col("dhash_lo"))
@@ -1392,7 +1320,7 @@ object Multimodal {
     val memb = hs.join(fam, Seq("dhash_hi", "dhash_lo"))
       .select(col("doc_id"), col("__gid"), col("__m"))
     val famHashes = fam.select(col("__gid").as("doc_id"), col("dhash_hi"), col("dhash_lo"))
-    val fpairs = imageNearDupPairs(famHashes, maxHamming, build)
+    val fpairs = imageNearDupPairs(famHashes, maxHamming)
     val labels = ConnectedComponents.minLabel(fpairs, "a_id", "b_id")
     memb
       .join(labels.select(col("v").as("__gid"), col("label")), Seq("__gid"), "left")
@@ -1422,8 +1350,7 @@ object Multimodal {
       fps: DataFrame,
       levels: DataFrame,
       minBands: Int,
-      maxLevelDiff: Long,
-      build: NearDupBuild = NearDupBuild.Broadcast): DataFrame = {
+      maxLevelDiff: Long): DataFrame = {
     require(minBands > 0 && maxLevelDiff >= 0,
       s"need positive thresholds: $minBands / $maxLevelDiff")
     val lv = Materialize.cache(levels)
@@ -1442,7 +1369,7 @@ object Multimodal {
     val gids = fam.select(col("__gid").as("doc_id"))
     val ffps = Materialize.cache(fps.join(gids, Seq("doc_id"), "left_semi"))
     val flv = lv.join(gids, Seq("doc_id"), "left_semi")
-    val fpairs = contourNearDupPairs(ffps, flv, minBands, maxLevelDiff, build)
+    val fpairs = contourNearDupPairs(ffps, flv, minBands, maxLevelDiff)
     val nb = ffps.groupBy(col("doc_id")).agg(count(lit(1)).as("__nb"))
     val labels = ConnectedComponents.minLabel(fpairs, "a_id", "b_id")
     memb

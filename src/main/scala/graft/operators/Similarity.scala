@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Materialize
+import graft.core.{DriverPool, Materialize}
 import graft.functions.VectorFns._
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
@@ -469,35 +469,15 @@ object Similarity {
       dims: Int, m: Int, k: Int, iters: Int): DataFrame = {
     require(m > 0 && dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
     val sub = dims / m
-    // capped at 4, not m: the §2.6 win is back-filling stage tails, for
-    // which a few jobs in flight suffice — an unbounded pool runs m
-    // concurrent job chains against one JVM's execution memory (r18 ADVICE)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, m))
-    // the pool threads store the centroid pins for the caller's scope
-    val owner = Materialize.current
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val trained = (0 until m).map { s =>
-        Future {
-          val sliced = embeddings.select(col(idCol),
-            slice(toDouble(col(vecCol)), s * sub + 1, sub).as(vecCol))
-          owner(kmeansFit(sliced, idCol, vecCol, k, iters))
-            .withColumn("subspace", lit(s))
-        }
-      }
-      try
-        Await.result(Future.sequence(trained), scala.concurrent.duration.Duration.Inf)
-          .reduce(_ unionByName _)
-          .select(col("subspace"), col("centroid_id"), col(vecCol))
-      catch {
-        case e: Throwable =>
-          // one subspace failed: interrupt the in-flight siblings instead
-          // of letting their Spark job chains run on detached (r18 ADVICE)
-          pool.shutdownNow()
-          throw e
-      }
-    } finally pool.shutdown()
+    // one k-means per subspace on the driver pool (§2.6: back-fill stage
+    // tails); a failing subspace stops its siblings
+    DriverPool.all(embeddings.sparkSession)((0 until m).map { s => () =>
+      val sliced = embeddings.select(col(idCol),
+        slice(toDouble(col(vecCol)), s * sub + 1, sub).as(vecCol))
+      kmeansFit(sliced, idCol, vecCol, k, iters).withColumn("subspace", lit(s))
+    })
+      .reduce(_ unionByName _)
+      .select(col("subspace"), col("centroid_id"), col(vecCol))
   }
 
   /** Encode every vector as its m-entry PQ code (nearest sub-centroid per

@@ -226,9 +226,12 @@ object AnalyticsQueries {
     // Date-partitioned watermark scan: the incremental read path over a
     // partition-pruned table (PartitionFilters asserted in
     // TablePersistSpec); the oracle replays the same strict > predicate.
+    // One table per scale, rewritten from scratch by every build (the
+    // write appends).
     Q("q_partitioned_watermark",
       (s, dir) => {
-        val path = java.nio.file.Files.createTempDirectory("graft_pw").toString + "/t"
+        val path = s"/tmp/graft_pw_${new java.io.File(dir).getName}"
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
         graft.core.TablePersist.appendPartitioned(
           t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts")),
           path, "ts")

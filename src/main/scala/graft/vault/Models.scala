@@ -3,7 +3,7 @@ package graft.vault
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Materialize
+import graft.core.{DriverPool, Materialize}
 import graft.functions.Hashing
 import graft.operators.{Dedup, EventWindows, Scd2}
 
@@ -569,28 +569,14 @@ final class Models(val raw: Models.Raw) {
     this
   }
 
-  /** Run one count-job per frame concurrently and wait for all; the first
-    * failure rethrows (same visibility as the sequential fill had).
-    *
-    * Pool capped at 4, not one thread per frame: the guide's §2.6 point is
-    * to BACK-FILL stage tails, for which 2-3 jobs in flight suffice — r18
-    * ran all 8 wave-1 fills at once and the concurrent stages contended
-    * for one JVM's execution memory (q_dag_warm 2.4x slower in the
-    * driver's environment). Callers must fill shared cached upstreams
+  /** Run one count-job per frame on the driver pool and wait for all; the
+    * first failure stops the other fills and rethrows (same visibility as
+    * the sequential fill had). Callers must fill shared cached upstreams
     * BEFORE calling this (DagQueries.vault pins its raw inputs), or
     * concurrent first-computations of the same cached plan duplicate work.
     */
-  private def fillConcurrently(frames: Seq[DataFrame]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, math.max(1, frames.size)))
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val fills = frames.map(f => Future { f.count(); () })
-      Await.result(Future.sequence(fills), scala.concurrent.duration.Duration.Inf)
-      ()
-    } finally pool.shutdown()
-  }
+  private def fillConcurrently(frames: Seq[DataFrame]): Unit =
+    DriverPool.all(frames.head.sparkSession)(frames.map(f => () => f.count()))
 
   /** Release the shared cache marked by [[persistShared]] — the teardown
     * half of the memoization contract, for long-lived sessions that are

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -8,13 +9,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Materialize
+import graft.core.{DriverPool, Materialize}
 
 /** The storage owner's contract: a scope frees what it stored when its
   * work throws, leaves a caller's cache alone, and `release` frees both
-  * kinds of storage. The last case keeps every other stored frame in
-  * `src/main` behind `Materialize`, and every scope in the runner, the memo
-  * and PlanDump.
+  * kinds of storage. A driver-pool task stores for its caller's scope, and
+  * a failing one stops its siblings. The last case keeps every other
+  * stored frame in `src/main` behind `Materialize`, and every scope in the
+  * runner, the memo and PlanDump.
   */
 class MaterializeSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -62,15 +64,55 @@ class MaterializeSpec extends AnyFunSuite {
     assert((persistentIds & stored).isEmpty, "release left the checkpoint blocks stored")
   }
 
+  test("a pin stored by a pool task is freed when the caller's scope closes") {
+    val before = persistentIds
+    val stored = Materialize.scoped {
+      DriverPool.all(spark)((1 to 3).map(i => () =>
+        Materialize.pin(spark.range(0, 100 * i).toDF("v")).count()))
+      persistentIds -- before
+    }
+    assert(stored.size === 3, s"each pool task must store one RDD, stored $stored")
+    assert((persistentIds & stored).isEmpty, "the pool tasks' pins outlived the caller's scope")
+  }
+
+  test("a failing pool task interrupts its blocked siblings before the pool returns") {
+    val sc = spark.sparkContext
+    val blocked = new CountDownLatch(1)
+    @volatile var interrupted = false
+    val t0 = System.nanoTime()
+    val boom = intercept[IllegalStateException] {
+      DriverPool.all(spark)(Seq(
+        // a driver thread waiting on something else
+        () => try { blocked.countDown(); new CountDownLatch(1).await(60, TimeUnit.SECONDS); () }
+          catch { case _: InterruptedException => interrupted = true },
+        // a driver thread waiting on a Spark job whose tasks run for a minute
+        () => try spark.range(0, 2, 1, 2).foreach(_ => Thread.sleep(60000))
+          catch { case _: Throwable => () },
+        () => {
+          blocked.await()
+          while (sc.statusTracker.getActiveStageIds().isEmpty) Thread.sleep(50)
+          throw new IllegalStateException("fill failed")
+        }))
+    }
+    assert(boom.getMessage === "fill failed")
+    assert(interrupted, "the blocked sibling was not interrupted")
+    assert((System.nanoTime() - t0) / 1e9 < 30, "the pool waited for its siblings to finish")
+    // cancellation is asynchronous: give the scheduler a few seconds
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (sc.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty, "the sibling's Spark job still runs")
+  }
+
   test("src/main stores and frees data only through Materialize") {
     // a scope is opened by the runner (one per line), the memo (one per
     // entry) and PlanDump (one per dumped query), never by an operator
     val scopeOwners = Set("graft/Runner.scala", "graft/queries/Q.scala", "graft/PlanDump.scala")
     val root = Paths.get("src/main/scala")
     val calls = Seq("localCheckpoint(", ".persist(", ".cache()", "unpersist(")
-    // ScaleProbe is a one-shot process; JsonSource.corruptRecords' cache()
-    // is Spark's required workaround for querying the corrupt-record column
-    val exempt = Set("graft/core/Materialize.scala", "graft/ScaleProbe.scala")
+    // JsonSource.corruptRecords' cache() is Spark's required workaround for
+    // querying the corrupt-record column
+    val exempt = Set("graft/core/Materialize.scala")
     val allowed = Map("graft/sources/JsonSource.scala" -> Seq(".cache()"))
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq

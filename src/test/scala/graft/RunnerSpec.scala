@@ -148,6 +148,17 @@ class RunnerSpec extends AnyFunSuite {
     assert(SparkEntry.policySkips(Int.MaxValue).keySet === SparkEntry.scalePolicy.keySet)
   }
 
+  test("ScaleGen rejects a factor below 1 before it writes anything") {
+    val parent = Files.createTempDirectory("graft_scalegen")
+    val out = parent.resolve("out")
+    try {
+      val e = intercept[IllegalArgumentException](
+        ScaleGen.main(Array(parent.resolve("sf").toString, "0", out.toString)))
+      assert(e.getMessage.contains("factor") && e.getMessage.contains("'0'"), e.getMessage)
+      assert(!Files.exists(out), s"$out was created")
+    } finally Files.deleteIfExists(parent)
+  }
+
   test("src/main registers Spark listeners and sleeps only in the runner") {
     val root = Paths.get("src/main/scala")
     val files = Files.walk(root).iterator().asScala

@@ -121,68 +121,73 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("LeftSemi"), s"expected a semi-join on the span key:\n$plan")
   }
 
+  /** The executed plan of `df` with auto-broadcast off, so only a hint can
+    * broadcast (tiny test frames would otherwise auto-broadcast anyway).
+    */
+  private def planWithoutAutoBroadcast(df: => org.apache.spark.sql.DataFrame): String = {
+    val conf = TestSpark.spark.conf
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = conf.getOption(key)
+    conf.set(key, "-1")
+    try df.queryExecution.executedPlan.toString
+    finally prev.fold(conf.unset(key))(conf.set(key, _))
+  }
+
   test("imageNearDupPairs build side: both modes pair identically; plans differ as declared") {
     import graft.operators.Multimodal
-    import Multimodal.NearDupBuild
     val ids = ((0L until 30L) ++ (250L until 280L)).toSeq
     val media = Multimodal.dhashFixture(ids.toDF("doc_id"), "doc_id")
     val hashes = Multimodal.dHashFeatures(media)
-    def pairs(b: NearDupBuild) = Multimodal.imageNearDupPairs(hashes, 3, b)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val bc = pairs(NearDupBuild.Broadcast)
-    assert(bc.nonEmpty, "fixture must plant near-dup pairs")
-    // an uncapped shuffle must agree exactly with broadcast
-    assert(pairs(NearDupBuild.Shuffle(Int.MaxValue)) === bc)
-    // plan shapes, pre-checkpoint, with AUTO-broadcast disabled so the
-    // assertion discriminates the hint (tiny test frames would otherwise
-    // auto-broadcast in both modes): broadcast mode still builds a
-    // broadcast hash join (the hint), shuffle mode does not (hint-free —
-    // AQE owns the exchange at runtime)
-    val banded = Multimodal.imageBands(hashes)
-    TestSpark.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val bcPlan = Multimodal.imageNearDupJoin(banded, 3, NearDupBuild.Broadcast)
-        .queryExecution.executedPlan.toString
-      assert(bcPlan.contains("BroadcastHashJoin"),
-        s"broadcast mode must broadcast the probe side:\n$bcPlan")
-      val shPlan = Multimodal.imageNearDupJoin(banded, 3, NearDupBuild.Shuffle())
-        .queryExecution.executedPlan.toString
-      assert(!shPlan.contains("BroadcastHashJoin") && !shPlan.contains("BroadcastExchange"),
-        s"shuffle mode must not hard-code a broadcast:\n$shPlan")
-    } finally {
-      TestSpark.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    graft.core.Materialize.scoped {
+      // the probe side is broadcast by the operator's hint
+      val plan = planWithoutAutoBroadcast(Multimodal.imageNearDupPairs(hashes, 3))
+      assert(plan.contains("BroadcastHashJoin"), s"the band join must broadcast:\n$plan")
+      val got = Multimodal.imageNearDupPairs(hashes, 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      // all-pairs reference: every pair within hamming 3 of the 64-bit dHash
+      val hs = hashes.filter($"dhash_hi".isNotNull)
+        .select($"doc_id", $"dhash_hi", $"dhash_lo").as[(Long, Long, Long)].collect()
+      val want = (for {
+        (a, ahi, alo) <- hs; (b, bhi, blo) <- hs if a < b
+        ham = java.lang.Long.bitCount(ahi ^ bhi) + java.lang.Long.bitCount(alo ^ blo)
+        if ham <= 3
+      } yield (a, b, ham)).toSet
+      assert(want.nonEmpty, "fixture must plant near-dup pairs")
+      assert(got === want)
     }
-    // the cap is load-bearing: a pair needs both members in one cell, and
-    // cap 1 forbids any 2-member cell — so the capped shuffle must return
-    // nothing at all
-    assert(pairs(NearDupBuild.Shuffle(1)).isEmpty)
   }
 
   test("audioNearDupPairs build side: both modes pair identically; shuffle stays hint-free") {
     import graft.operators.Multimodal
-    import Multimodal.NearDupBuild
     val ids = ((0L until 30L) ++ (250L until 280L)).toSeq
     val media = Multimodal.wavDupFixture(ids.toDF("doc_id"), "doc_id")
     val fps = Multimodal.audioFingerprint(media, 8, 4, 32768L, 2)
     val levels = Multimodal.audioLevels(media, 8, 4, 32768L)
-    def pairs(b: NearDupBuild) = Multimodal.contourNearDupPairs(fps, levels, 2, 1L, b)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4))).toSet
-    val bc = pairs(NearDupBuild.Broadcast)
-    assert(bc.nonEmpty, "fixture must plant near-dup pairs")
-    assert(pairs(NearDupBuild.Shuffle(Int.MaxValue)) === bc)
-    TestSpark.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val bcPlan = Multimodal.audioNearDupCandidates(fps, 2, NearDupBuild.Broadcast)
-        .queryExecution.executedPlan.toString
-      assert(bcPlan.contains("BroadcastHashJoin"),
-        s"broadcast mode must broadcast the probe side:\n$bcPlan")
-      val shPlan = Multimodal.audioNearDupCandidates(fps, 2, NearDupBuild.Shuffle())
-        .queryExecution.executedPlan.toString
-      assert(!shPlan.contains("BroadcastHashJoin") && !shPlan.contains("BroadcastExchange"),
-        s"shuffle mode must not hard-code a broadcast:\n$shPlan")
-    } finally {
-      TestSpark.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    graft.core.Materialize.scoped {
+      val plan = planWithoutAutoBroadcast(Multimodal.contourNearDupPairs(fps, levels, 2, 1L))
+      assert(plan.contains("BroadcastHashJoin"), s"the band join must broadcast:\n$plan")
+      val got = Multimodal.contourNearDupPairs(fps, levels, 2, 1L)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4))).toSet
+      // all-pairs reference: at least 2 equal bands, the same frame grid and
+      // every frame's level within 1
+      def byDoc(df: org.apache.spark.sql.DataFrame, k: String, v: String) =
+        df.collect().groupBy(_.getAs[Long]("doc_id")).map { case (d, rs) =>
+          d -> rs.map(r => r.getAs[Number](k).longValue -> r.getAs[Any](v)).toMap }
+      val bands = byDoc(fps, "band_idx", "band_sig")
+      val contour = byDoc(levels, "frame_idx", "level")
+        .map { case (d, m) => d -> m.map { case (f, l) => f -> l.asInstanceOf[Number].longValue } }
+      val docs = bands.keySet.toSeq.sorted
+      val want = (for {
+        a <- docs; b <- docs if a < b
+        nBands = bands(a).count { case (i, sig) => bands(b).get(i).contains(sig) }
+        if nBands >= 2
+        la <- contour.get(a); lb <- contour.get(b) if la.keySet == lb.keySet
+        maxDiff = la.map { case (f, l) => math.abs(l - lb(f)) }.max
+        if maxDiff <= 1L
+      } yield (a, b, nBands, la.size, maxDiff)).toSet
+      assert(want.nonEmpty, "fixture must plant near-dup pairs")
+      assert(got === want)
     }
   }
 }
