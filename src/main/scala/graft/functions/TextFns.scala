@@ -115,15 +115,6 @@ object TextFns {
     org.apache.spark.sql.graft.Bridge.column(
       NfcNormalize(org.apache.spark.sql.graft.Bridge.expression(c)))
 
-  /** Character n-gram shingles (distinct) — for n-gram Jaccard on short
-    * strings. */
-  def charShingles(c: Column, n: Int): Column =
-    when(length(c) >= n,
-      array_distinct(transform(
-        sequence(lit(1), length(c) - lit(n - 1)),
-        i => c.substr(i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-
   /** Jaccard similarity of two (distinct-element) array columns → double. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /

@@ -38,9 +38,6 @@ object Dedup {
   def latestRows(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
     pick(df, keys, order)
 
-  /** Exact full-row dedup (reference `ephemeral_asset.sql:59-65` — A6). */
-  def distinctRows(df: DataFrame): DataFrame = df.dropDuplicates()
-
   /** Exact content dedup for a corpus: group by a content fingerprint, keep
     * the minimum id as the canonical representative. One shuffle on the
     * fingerprint; partial aggregation applies map-side, so at 100 TB the

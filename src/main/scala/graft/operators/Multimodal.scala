@@ -22,20 +22,25 @@ import graft.core.Materialize
   * integer decimator), and PNG (`decodePng` — chunk walk, multi-IDAT zlib
   * inflate via the JDK's `java.util.zip.Inflater`, all five scanline
   * filters). JPEG (and any other `javax.imageio`-supported container)
-  * decodes through `decodeImageIOFeatures` — the JDK's bundled codec, so
+  * decodes through `decodeImageIO` — the JDK's bundled codec, so
   * still no external dependency; its stats are bit-stable within a JRE and
   * the oracle fixtures use flat-gray images, which baseline JPEG's
   * DC-only quantization round-trips EXACTLY (spec-verified across all 256
-  * grays), keeping the hash gate valid even for a lossy codec.
-  * `decodeStub` remains only for genuinely codec-less payloads (video
-  * containers) as deterministic pseudo-features; the schema contract,
-  * partitioning, and batched iterator shape around it are the real
-  * production plumbing.
+  * grays), keeping the hash gate valid even for a lossy codec. Video is
+  * Y4M (`decodeY4m` — header tags, FRAME walk, planar luma sums).
+  * `decodeStub` remains only for payloads with no decoder at all (the
+  * text-as-binary rows of `asBinaryMedia`) as deterministic
+  * pseudo-features; the schema contract, partitioning, and batched
+  * iterator shape around it are the real production plumbing.
   *
-  * Scale notes: payload columns dominate I/O, so feature extraction selects
-  * only (id, content) before the mapPartitions stage (column pruning reaches
-  * the parquet scan), and the stage is map-only — no shuffle. Repartition
-  * upstream only if payload skew demands it.
+  * Every decoder runs inside one per-document stage (`perDoc`): the stage
+  * selects only (doc_id, content) before its per-partition map (column
+  * pruning reaches the parquet scan) and is map-only — no shuffle. A
+  * modality is a plain function of the payload bytes handed to that
+  * stage: an image decoder to `decodeImageFeatures`, a contour (audio
+  * `pcmFrameLevels`, video `y4mLumaLevels`) to
+  * `contourLevels`/`contourBands`. Repartition upstream only if payload
+  * skew demands it.
   */
 object Multimodal {
 
@@ -96,18 +101,37 @@ object Multimodal {
       .withColumn("frame_checksum",
         md5(concat(col("doc_id").cast("string"), lit("|"), col("frame_idx").cast("string"))))
 
-  /** Resize declaration for image-like payloads: records target geometry
-    * alongside the payload; the batched decode stage (`extractFeatures`)
-    * is where a real implementation would apply it. Plumbing contract:
-    * geometry travels as columns, not closure state, so it survives
-    * serialization and per-partition batching.
+  /** The per-document media stage over (doc_id, content) rows: `f` maps
+    * one document to its output rows, run batched per partition (map-only;
+    * where a real decoder amortizes its init once per partition) and
+    * encoded with `schema`.
     */
-  def withResizeSpec(media: DataFrame, width: Int, height: Int): DataFrame =
-    media
-      .withColumn("target_width", lit(width))
-      .withColumn("target_height", lit(height))
+  private def perDoc(media: DataFrame, schema: StructType)(
+      f: (Long, Array[Byte]) => Iterator[Row]): DataFrame =
+    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
+      rows.flatMap(r => f(r.getAs[Long](0), r.getAs[Array[Byte]](1)))
+    }(org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema))
 
-  /** Schema of a decoded-image feature row (see `decodePnmFeatures`). */
+  /** One row per document: `f` gives the columns after doc_id, or None for
+    * a payload it cannot decode, whose row then carries null features.
+    */
+  private def perDocRow(media: DataFrame, schema: StructType)(
+      f: Array[Byte] => Option[Seq[Any]]): DataFrame =
+    perDoc(media, schema) { (id, bytes) =>
+      Iterator.single(Row.fromSeq(id +: f(bytes).getOrElse(Seq.fill(schema.length - 1)(null))))
+    }
+
+  /** A fixture corpus: one (doc_id, content) row per id in `ids(idCol)`,
+    * carrying the payload `bytes(id)`.
+    */
+  private def fixture(ids: DataFrame, idCol: String)(bytes: Long => Array[Byte]): DataFrame = {
+    val spark = ids.sparkSession
+    import spark.implicits._
+    ids.select(col(idCol).cast("long")).as[Long].map(id => (id, bytes(id)))
+      .toDF("doc_id", "content")
+  }
+
+  /** Schema of a decoded-image feature row (see `decodeImageFeatures`). */
   val imageFeatureSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("width", IntegerType, nullable = true),
@@ -182,13 +206,12 @@ object Multimodal {
       (w, h, channels, sums.zip(counts).map { case (s, n) => s / n })
     }
 
-  /** REAL nearest-neighbor resize for the netpbm path — upgrades the
-    * `withResizeSpec` plumbing contract to an actual resample where the
-    * format is decodable: target pixel (x, y) reads source pixel
-    * (x·sw/tw, y·sh/th) (integer floor division, the standard
-    * nearest-neighbor map), and the resized image is summarized by its
-    * per-channel means. Per-row work is O(tw·th), independent of source
-    * size — the whole point of resizing early in a pipeline.
+  /** REAL nearest-neighbor resize for the netpbm path: target pixel
+    * (x, y) reads source pixel (x·sw/tw, y·sh/th) (integer floor
+    * division, the standard nearest-neighbor map), and the resized image
+    * is summarized by its per-channel means. Per-row work is O(tw·th),
+    * independent of source size — the whole point of resizing early in a
+    * pipeline.
     */
   private[graft] def resizePnm(
       bytes: Array[Byte], tw: Int, th: Int): Option[(Int, Int, Int, Array[Double])] =
@@ -219,36 +242,35 @@ object Multimodal {
     * so the decoded features have a closed form an oracle can replay, while
     * the bytes exercise the actual parser.
     */
-  def pnmFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
-      val w = (4 + id % 5).toInt
-      val h = (3 + id % 4).toInt
-      val header = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
-      val body = Array.tabulate(w * h * 3)(k => ((id * 7 + k) % 256).toByte)
-      (id, header ++ body)
-    }.toDF("doc_id", "content")
+  def pnmFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol)(id => ppm(id)(k => id * 7 + k))
+
+  /** A P6 payload keyed by `key` (width 4 + key%5, height 3 + key%4) whose
+    * raster byte k is `byte(k) % 256` — the writer both PPM fixtures share.
+    */
+  private def ppm(key: Long)(byte: Int => Long): Array[Byte] = {
+    val w = (4 + key % 5).toInt
+    val h = (3 + key % 4).toInt
+    val header = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
+    header ++ Array.tabulate(w * h * 3)(k => (byte(k) % 256).toByte)
   }
 
-  /** Batched per-partition image decode over (doc_id, content) rows — the
-    * same map-only, decoder-init-once-per-partition shape as
-    * `extractFeatures`, but with the real netpbm parser inside.
+  /** Batched per-partition image decode over (doc_id, content) rows with
+    * `decode` inside — [[decodePnm]], [[decodePng]] or [[decodeImageIO]]:
+    * each returns (width, height, channels, per-channel means), and
+    * green/blue stay null below 3 channels. Undecodable payloads yield
+    * null features.
     */
-  def decodePnmFeatures(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(imageFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        decodePnm(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, ch, means)) =>
-            Row(r.getAs[Long]("doc_id"), w, h, ch,
-              means(0), if (ch == 3) means(1) else null, if (ch == 3) means(2) else null)
-          case None =>
-            Row(r.getAs[Long]("doc_id"), null, null, null, null, null, null)
-        }
-      }
-    }(enc)
-  }
+  def decodeImageFeatures(
+      media: DataFrame,
+      decode: Array[Byte] => Option[(Int, Int, Int, Array[Double])]): DataFrame =
+    perDocRow(media, imageFeatureSchema)(decode(_).map { case (w, h, ch, means) =>
+      Seq[Any](w, h, ch) ++ rgbMeans(ch, means)
+    })
+
+  /** Red/green/blue mean columns; a gray raster has only the first. */
+  private def rgbMeans(ch: Int, means: Array[Double]): Seq[Any] =
+    Seq(means(0), if (ch >= 3) means(1) else null, if (ch >= 3) means(2) else null)
 
   /** Schema of a resized-image feature row (see `resizePnmFeatures`). */
   val resizeFeatureSchema: StructType = StructType(Seq(
@@ -267,18 +289,13 @@ object Multimodal {
     */
   def resizePnmFeatures(media: DataFrame, targetW: Int, targetH: Int): DataFrame = {
     require(targetW > 0 && targetH > 0, s"bad target: ${targetW}x$targetH")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(resizeFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        resizePnm(r.getAs[Array[Byte]]("content"), targetW, targetH) match {
-          case Some((sw, sh, ch, means)) =>
-            Row(r.getAs[Long]("doc_id"), sw, sh, targetW, targetH,
-              means(0), if (ch == 3) means(1) else null, if (ch == 3) means(2) else null)
-          case None =>
-            Row(r.getAs[Long]("doc_id"), null, null, targetW, targetH, null, null, null)
-        }
-      }
-    }(enc)
+    perDoc(media, resizeFeatureSchema) { (id, bytes) =>
+      Iterator.single(resizePnm(bytes, targetW, targetH) match {
+        case Some((sw, sh, ch, means)) =>
+          Row.fromSeq(Seq[Any](id, sw, sh, targetW, targetH) ++ rgbMeans(ch, means))
+        case None => Row(id, null, null, targetW, targetH, null, null, null)
+      })
+    }
   }
 
   /** Schema of a perceptual-hash row (see `dHashFeatures`). The 64-bit
@@ -342,39 +359,22 @@ object Multimodal {
     * exact duplicates. The dup-group structure an image-dedup query needs,
     * with a closed form the oracle replays.
     */
-  def dhashFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
+  def dhashFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol) { id =>
       val b = id % 250
       val pert = (id / 250) % 3
-      val w = (4 + b % 5).toInt
-      val h = (3 + b % 4).toInt
-      val header = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
       // b-dependent linear AND quadratic structure (not just a constant
       // offset): distinct content keys render distinct gradient shapes, so
       // near-dup pairs are dominated by the PLANTED +pert shifts rather
       // than every same-size image pairing with every other
-      val body = Array.tabulate(w * h * 3)(k =>
-        ((b * 7 + k.toLong * (2 + b % 16) + k.toLong * k * (b % 9) + pert) % 256).toByte)
-      (id, header ++ body)
-    }.toDF("doc_id", "content")
-  }
+      ppm(b)(k => b * 7 + k.toLong * (2 + b % 16) + k.toLong * k * (b % 9) + pert)
+    }
 
   /** Batched per-partition perceptual hashing — decode-stage shape with
     * [[dHash]] inside; undecodable payloads yield null hash words.
     */
-  def dHashFeatures(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(imageHashSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        dHash(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, hi, lo)) => Row(r.getAs[Long]("doc_id"), w, h, hi, lo)
-          case None => Row(r.getAs[Long]("doc_id"), null, null, null, null)
-        }
-      }
-    }(enc)
-  }
+  def dHashFeatures(media: DataFrame): DataFrame =
+    perDocRow(media, imageHashSchema)(dHash(_).map(_.productIterator.toSeq))
 
   /** The 4x16-bit band explode of a [[dHashFeatures]] frame: one row per
     * (doc, band) with the full hash carried alongside for the verify
@@ -487,10 +487,8 @@ object Multimodal {
     * and row inversion are real, and the decoded features have a closed
     * form the oracle replays from the logical-position formula alone.
     */
-  def bmpFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
+  def bmpFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol) { id =>
       val w = (4 + id % 5).toInt
       val h = (3 + id % 4).toInt
       val stride = ((3 * w + 3) / 4) * 4
@@ -518,26 +516,14 @@ object Multimodal {
         }
         y += 1
       }
-      (id, b)
-    }.toDF("doc_id", "content")
-  }
+      b
+    }
 
   /** Batched per-partition BMP decode — same map-only shape as
-    * `decodePnmFeatures`, with the real BMP parser inside.
+    * [[decodeImageFeatures]], with the real BMP parser inside.
     */
-  def decodeBmpFeatures(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(bmpFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        decodeBmp(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, mb, mg, mr, b00, g00, r00)) =>
-            Row(r.getAs[Long]("doc_id"), w, h, mb, mg, mr, b00, g00, r00)
-          case None =>
-            Row(r.getAs[Long]("doc_id"), null, null, null, null, null, null, null, null)
-        }
-      }
-    }(enc)
-  }
+  def decodeBmpFeatures(media: DataFrame): DataFrame =
+    perDocRow(media, bmpFeatureSchema)(decodeBmp(_).map(_.productIterator.toSeq))
 
   /** A REAL image decoder for PNG (RFC 2083) — the dominant compressed web
     * image format, decodable with zero external libraries because the JDK
@@ -657,10 +643,8 @@ object Multimodal {
     * closed-form oracle, the zlib stream is a REAL Deflater stream split
     * across two IDAT chunks, and chunk CRCs are real CRC32s.
     */
-  def pngFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
+  def pngFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol) { id =>
       val w = (4 + id % 5).toInt
       val h = (3 + id % 4).toInt
       val ch = 3
@@ -724,29 +708,8 @@ object Multimodal {
       chunk("IDAT", z.slice(0, cut))
       chunk("IDAT", z.slice(cut, z.length))
       chunk("IEND", Array.emptyByteArray)
-      (id, out.toByteArray)
-    }.toDF("doc_id", "content")
-  }
-
-  /** Batched per-partition PNG decode — same map-only shape as
-    * `decodePnmFeatures`, with the real inflate+unfilter decoder inside.
-    */
-  def decodePngFeatures(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(imageFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        decodePng(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, ch, means)) =>
-            Row(r.getAs[Long]("doc_id"), w, h, ch,
-              means(0),
-              if (ch >= 3) means(1) else null,
-              if (ch >= 3) means(2) else null)
-          case None =>
-            Row(r.getAs[Long]("doc_id"), null, null, null, null, null, null)
-        }
-      }
-    }(enc)
-  }
+      out.toByteArray
+    }
 
   /** General compressed-image decode via the JDK's bundled `javax.imageio`
     * codecs (JPEG, and as a byproduct PNG/GIF/BMP) — no external library;
@@ -811,10 +774,8 @@ object Multimodal {
     * subset a LOSSY codec reproduces exactly (all-AC-zero blocks), which
     * is what makes a hash-grade oracle possible for JPEG at all.
     */
-  def jpegFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
+  def jpegFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol) { id =>
       val w = (8 + id % 9).toInt
       val h = (6 + id % 7).toInt
       val g = (id % 256).toInt
@@ -829,9 +790,8 @@ object Multimodal {
       }
       val bos = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(img, "jpg", bos)
-      (id, bos.toByteArray)
-    }.toDF("doc_id", "content")
-  }
+      bos.toByteArray
+    }
 
   /** Deterministic GIF fixture corpus: a per-id two-gray checkerboard-ish
     * pattern (pixel p: gray 40 or 200 by parity of id*7 + 3p). GIF is
@@ -842,10 +802,8 @@ object Multimodal {
     * h >= 5 is clean across 600 fixture ids) — an encoder quirk, not a
     * decode limitation, but the fixture must avoid it to stay exact.
     */
-  def gifFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
+  def gifFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol) { id =>
       val w = (5 + id % 6).toInt
       val h = (6 + id % 5).toInt
       val img = new java.awt.image.BufferedImage(
@@ -858,29 +816,8 @@ object Multimodal {
       }
       val bos = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(img, "gif", bos)
-      (id, bos.toByteArray)
-    }.toDF("doc_id", "content")
-  }
-
-  /** Batched per-partition ImageIO decode — same map-only shape as
-    * `decodePnmFeatures`, with the JDK codec inside.
-    */
-  def decodeImageIOFeatures(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(imageFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        decodeImageIO(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, ch, means)) =>
-            Row(r.getAs[Long]("doc_id"), w, h, ch,
-              means(0),
-              if (ch >= 3) means(1) else null,
-              if (ch >= 3) means(2) else null)
-          case None =>
-            Row(r.getAs[Long]("doc_id"), null, null, null, null, null, null)
-        }
-      }
-    }(enc)
-  }
+      bos.toByteArray
+    }
 
   /** Schema of a decoded-audio feature row (see `decodeWavFeatures`). */
   val audioFeatureSchema: StructType = StructType(Seq(
@@ -994,62 +931,43 @@ object Multimodal {
   /** Batched per-partition audio decimation — the decode-stage shape with
     * the real decimator inside; undecodable payloads yield nulls.
     */
-  def decimateWavFeatures(media: DataFrame, factor: Int): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(decimateFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        decimateWav(r.getAs[Array[Byte]]("content"), factor) match {
-          case Some((rateOut, rateIn, m, mean, rms)) =>
-            Row(r.getAs[Long]("doc_id"), rateOut, rateIn, m, mean, rms)
-          case None =>
-            Row(r.getAs[Long]("doc_id"), null, null, null, null, null)
-        }
-      }
-    }(enc)
-  }
+  def decimateWavFeatures(media: DataFrame, factor: Int): DataFrame =
+    perDocRow(media, decimateFeatureSchema)(decimateWav(_, factor).map(_.productIterator.toSeq))
 
   /** Deterministic PCM16 WAV fixture: a real, well-formed mono 8 kHz
     * payload per id (n = 16 + id%17 samples, sample k =
     * ((id*13 + k*5) % 4096) - 2048) — closed-form decoded features, real
     * bytes through the actual RIFF parser.
     */
-  def wavFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
-      val n = (16 + id % 17).toInt
-      val rate = 8000
-      val dataSize = n * 2
-      val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
-        .put("WAVE".getBytes("US-ASCII"))
-      buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-        .putShort(1).putShort(1).putInt(rate).putInt(rate * 2)
-        .putShort(2).putShort(16)
-      buf.put("data".getBytes("US-ASCII")).putInt(dataSize)
-      (0 until n).foreach(k => buf.putShort((((id * 13 + k * 5) % 4096) - 2048).toShort))
-      (id, buf.array())
-    }.toDF("doc_id", "content")
+  def wavFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol)(id => pcm16Wav(id)(k => ((id * 13 + k * 5) % 4096).toInt - 2048))
+
+  /** A mono 8 kHz PCM16 WAV payload keyed by `key` (16 + key%17 samples,
+    * sample k = `sample(k)`) — the RIFF writer both WAV fixtures share.
+    */
+  private def pcm16Wav(key: Long)(sample: Int => Int): Array[Byte] = {
+    val n = (16 + key % 17).toInt
+    val rate = 8000
+    val dataSize = n * 2
+    val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
+      .put("WAVE".getBytes("US-ASCII"))
+    buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1).putShort(1).putInt(rate).putInt(rate * 2)
+      .putShort(2).putShort(16)
+    buf.put("data".getBytes("US-ASCII")).putInt(dataSize)
+    (0 until n).foreach(k => buf.putShort(sample(k).toShort))
+    buf.array()
   }
 
   /** Batched per-partition audio decode — same map-only shape as the image
     * path, real RIFF/PCM parser inside.
     */
-  def decodeWavFeatures(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(audioFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        decodeWav(r.getAs[Array[Byte]]("content")) match {
-          case Some((ch, rate, bits, n, mean, rms)) =>
-            Row(r.getAs[Long]("doc_id"), rate, ch, bits, n,
-              n.toDouble / rate, mean, rms)
-          case None =>
-            Row(r.getAs[Long]("doc_id"), null, null, null, null, null, null, null)
-        }
-      }
-    }(enc)
-  }
+  def decodeWavFeatures(media: DataFrame): DataFrame =
+    perDocRow(media, audioFeatureSchema)(decodeWav(_).map { case (ch, rate, bits, n, mean, rms) =>
+      Seq[Any](rate, ch, bits, n, n.toDouble / rate, mean, rms)
+    })
 
   /** Schema of a windowed audio-energy row (see `audioEnergy`). */
   val audioEnergySchema: StructType = StructType(Seq(
@@ -1078,38 +996,27 @@ object Multimodal {
   def audioEnergy(media: DataFrame, frameSamples: Int, hop: Int): DataFrame = {
     require(frameSamples > 0 && hop > 0,
       s"need positive frame/hop: $frameSamples / $hop")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(audioEnergySchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getAs[Long]("doc_id")
-        val bytes = r.getAs[Array[Byte]]("content")
-        parseWavPcm16(bytes) match {
-          case Some((channels, _, _, off, n)) if channels == 1 && n > 0 =>
-            Iterator.range(0, n, hop).zipWithIndex.map { case (s0, f) =>
-              val end = math.min(s0 + frameSamples, n)
-              var s1 = 0L
-              var s2 = 0L
-              var k = s0
-              while (k < end) {
-                val v = pcm16At(bytes, off, k)
-                s1 += v
-                s2 += v.toLong * v
-                k += 1
-              }
-              val m = end - s0
-              Row(id, f, s0.toLong, m, s1.toDouble / m, math.sqrt(s2.toDouble / m))
+    perDoc(media, audioEnergySchema) { (id, bytes) =>
+      parseWavPcm16(bytes) match {
+        case Some((channels, _, _, off, n)) if channels == 1 && n > 0 =>
+          Iterator.range(0, n, hop).zipWithIndex.map { case (s0, f) =>
+            val end = math.min(s0 + frameSamples, n)
+            var s1 = 0L
+            var s2 = 0L
+            var k = s0
+            while (k < end) {
+              val v = pcm16At(bytes, off, k)
+              s1 += v
+              s2 += v.toLong * v
+              k += 1
             }
-          case _ => Iterator.empty
-        }
+            val m = end - s0
+            Row(id, f, s0.toLong, m, s1.toDouble / m, math.sqrt(s2.toDouble / m))
+          }
+        case _ => Iterator.empty
       }
-    }(enc)
+    }
   }
-
-  /** Schema of a banded audio-fingerprint row (see `audioFingerprint`). */
-  val audioFingerprintSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("band_idx", IntegerType, nullable = false),
-    StructField("band_sig", StringType, nullable = false)))
 
   /** Deterministic PCM16 WAV fixture with PLANTED near-duplicates — the
     * audio sibling of [[dhashFixture]]: signal content is keyed by
@@ -1121,68 +1028,34 @@ object Multimodal {
     * duplicates. All divisions are of non-negative integers — Scala `/`
     * truncation and SQL floor division agree only there.
     */
-  def wavDupFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
+  def wavDupFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol) { id =>
       val b = id % 250
       val pert = ((id / 250) % 3).toInt
-      val n = (16 + b % 17).toInt
-      val rate = 8000
-      val dataSize = n * 2
-      val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
-        .put("WAVE".getBytes("US-ASCII"))
-      buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-        .putShort(1).putShort(1).putInt(rate).putInt(rate * 2)
-        .putShort(2).putShort(16)
-      buf.put("data".getBytes("US-ASCII")).putInt(dataSize)
-      (0 until n).foreach { k =>
+      pcm16Wav(b) { k =>
         val raw = ((b * 13 + k * 5) % 4096).toInt
         val amp = ((b * 7 + k / 4) % 5 + 1).toInt
-        buf.putShort((raw * amp / 5 - 2048 + pert).toShort)
+        raw * amp / 5 - 2048 + pert
       }
-      (id, buf.array())
-    }.toDF("doc_id", "content")
-  }
+    }
 
-  /** Schema of a quantized frame-level row (see `audioLevels`). */
-  val audioLevelSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("frame_idx", IntegerType, nullable = false),
-    StructField("level", LongType, nullable = false)))
-
-  /** Per-frame quantized mean-square energy levels — the exact values
-    * [[audioFingerprint]] bands, emitted at frame grain for the verify
-    * stage of [[contourNearDupPairs]]. Same map-only walk.
+  /** A contour: a document's payload reduced to ordered per-frame integer
+    * levels, or None when the payload yields none. The modality-specific
+    * half of [[contourLevels]]/[[contourBands]]: [[pcmFrameLevels]] for
+    * audio, [[y4mLumaLevels]] for video.
     */
-  def audioLevels(
-      media: DataFrame,
-      frameSamples: Int,
-      hop: Int,
-      qStep: Long): DataFrame = {
+  type Contour = Array[Byte] => Option[Array[Long]]
+
+  /** The audio contour: each frame's mean-square energy over mono PCM16
+    * WAV (frames start every `hop` samples; the tail frame is partial),
+    * quantized by INTEGER division (`(s2/m)/qStep`, all Long — no float
+    * anywhere, so levels replay exactly). None for non-mono / undecodable /
+    * empty payloads.
+    */
+  private[graft] def pcmFrameLevels(frameSamples: Int, hop: Int, qStep: Long): Contour = {
     require(frameSamples > 0 && hop > 0 && qStep > 0,
       s"need positive params: $frameSamples / $hop / $qStep")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(audioLevelSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getAs[Long]("doc_id")
-        pcmFrameLevels(r.getAs[Array[Byte]]("content"), frameSamples, hop, qStep)
-          .iterator.flatMap(_.iterator.zipWithIndex.map { case (lv, f) => Row(id, f, lv) })
-      }
-    }(enc)
-  }
-
-  /** The shared frame walk: quantized mean-square level per frame, or None
-    * for non-mono / undecodable / empty payloads.
-    */
-  private def pcmFrameLevels(
-      bytes: Array[Byte],
-      frameSamples: Int,
-      hop: Int,
-      qStep: Long): Option[Array[Long]] =
-    parseWavPcm16(bytes) match {
+    bytes => parseWavPcm16(bytes) match {
       case Some((channels, _, _, off, n)) if channels == 1 && n > 0 =>
         Some(Iterator.range(0, n, hop).map { s0 =>
           val end = math.min(s0 + frameSamples, n)
@@ -1197,47 +1070,59 @@ object Multimodal {
         }.toArray)
       case _ => None
     }
+  }
 
-  /** Banded acoustic fingerprint over the [[audioEnergy]] contour — the
-    * Shazam/Chromaprint-shaped front end of audio near-dup detection,
-    * arithmetic kept exactly replayable: each frame's mean-square energy is
-    * quantized by INTEGER division (`(s2/m)/qStep`, all Long — no float
-    * anywhere), and `bandFrames` consecutive levels concatenate into one
-    * band signature string. Two recordings of the same content land on
-    * identical signatures for most bands; a volume perturbation flips only
-    * the bands where a level crosses a quantization boundary — exactly the
-    * MinHash-LSH banding contract, transplanted to audio.
+  /** Schema of a quantized frame-level row (see `contourLevels`). */
+  val contourLevelSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("frame_idx", IntegerType, nullable = false),
+    StructField("level", LongType, nullable = false)))
+
+  /** Per-frame `contour` levels — the exact values [[contourBands]] bands,
+    * emitted at frame grain for the verify stage of
+    * [[contourNearDupPairs]]. Map-only; a payload without a contour yields
+    * no rows.
+    */
+  def contourLevels(media: DataFrame, contour: Contour): DataFrame =
+    perDoc(media, contourLevelSchema) { (id, bytes) =>
+      contour(bytes).iterator.flatMap(_.iterator.zipWithIndex.map {
+        case (lv, f) => Row(id, f, lv)
+      })
+    }
+
+  /** Schema of a banded contour-signature row (see `contourBands`). */
+  val contourBandSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("band_idx", IntegerType, nullable = false),
+    StructField("band_sig", StringType, nullable = false)))
+
+  /** Banded fingerprint over a `contour` — the Shazam/Chromaprint-shaped
+    * front end of audio (and video) near-dup detection: `bandFrames`
+    * consecutive levels concatenate into one band signature string. Two
+    * recordings of the same content land on identical signatures for most
+    * bands; a volume (or luma) perturbation flips only the bands where a
+    * level crosses a quantization boundary — exactly the MinHash-LSH
+    * banding contract, transplanted to media.
     *
     * Map-only like [[audioEnergy]]: a doc's frames are computed inside one
     * flatMap call, so banding happens in-row and the operator emits band
     * rows with ZERO shuffles — at 100 TB the fingerprint pass is
-    * parquet-scan-bound. Non-mono or undecodable payloads yield no rows.
+    * parquet-scan-bound. A payload without a contour yields no rows.
     */
-  def audioFingerprint(
-      media: DataFrame,
-      frameSamples: Int,
-      hop: Int,
-      qStep: Long,
-      bandFrames: Int): DataFrame = {
-    require(frameSamples > 0 && hop > 0 && qStep > 0 && bandFrames > 0,
-      s"need positive params: $frameSamples / $hop / $qStep / $bandFrames")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(audioFingerprintSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getAs[Long]("doc_id")
-        pcmFrameLevels(r.getAs[Array[Byte]]("content"), frameSamples, hop, qStep)
-          .iterator.flatMap(_.grouped(bandFrames).zipWithIndex.map {
-            case (band, bi) => Row(id, bi, band.mkString("-"))
-          })
-      }
-    }(enc)
+  def contourBands(media: DataFrame, contour: Contour, bandFrames: Int): DataFrame = {
+    require(bandFrames > 0, s"need positive bandFrames: $bandFrames")
+    perDoc(media, contourBandSchema) { (id, bytes) =>
+      contour(bytes).iterator.flatMap(_.grouped(bandFrames).zipWithIndex.map {
+        case (band, bi) => Row(id, bi, band.mkString("-"))
+      })
+    }
   }
 
   /** Banded-contour near-dup pairs, the audio and video detector: any
     * modality that reduces a document to an ordered integer-level contour
     * (doc_id, frame_idx, level) plus banded signatures
-    * (doc_id, band_idx, band_sig) — [[audioFingerprint]]/[[audioLevels]],
-    * [[videoFingerprint]]/[[videoLevels]] — gets the same join. Banded
+    * (doc_id, band_idx, band_sig) — [[contourLevels]]/[[contourBands]]
+    * over an audio or a video [[Contour]] — gets the same join. Banded
     * CANDIDATES (pairs sharing at least `minBands` exact (band_idx,
     * band_sig) cells) are verified exactly against the frame-level contour
     * — same frame count and every frame's level within `maxLevelDiff`. The
@@ -1321,18 +1206,27 @@ object Multimodal {
       .select(col("doc_id"), col("__gid"), col("__m"))
     val famHashes = fam.select(col("__gid").as("doc_id"), col("dhash_hi"), col("dhash_lo"))
     val fpairs = imageNearDupPairs(famHashes, maxHamming)
+    memberGroups(memb, fpairs)(_.filter(col("label").isNotNull || col("__m") >= 2))
+  }
+
+  /** The member expansion both GROUPS operators end in: min-label
+    * components over the family-grain pairs `fpairs`, left-joined onto the
+    * members `memb` (doc_id, __gid = family id, family columns) as `label`;
+    * `inGraph` keeps the members in the near-dup graph, and each kept doc
+    * becomes (member_id, group_id, is_canonical).
+    */
+  private def memberGroups(memb: DataFrame, fpairs: DataFrame)(
+      inGraph: DataFrame => DataFrame): DataFrame = {
     val labels = ConnectedComponents.minLabel(fpairs, "a_id", "b_id")
-    memb
-      .join(labels.select(col("v").as("__gid"), col("label")), Seq("__gid"), "left")
-      .filter(col("label").isNotNull || col("__m") >= 2)
-      .select(col("doc_id").as("member_id"),
-        coalesce(col("label"), col("__gid")).as("group_id"),
-        (col("doc_id") === coalesce(col("label"), col("__gid"))).as("is_canonical"))
+    val group = coalesce(col("label"), col("__gid"))
+    inGraph(memb.join(labels.select(col("v").as("__gid"), col("label")), Seq("__gid"), "left"))
+      .select(col("doc_id").as("member_id"), group.as("group_id"),
+        (col("doc_id") === group).as("is_canonical"))
   }
 
   /** Banded-contour near-dup GROUPS — the audio/video sibling of
-    * [[imageNearDupGroups]], over [[audioFingerprint]]/[[videoFingerprint]]
-    * bands and [[audioLevels]]/[[videoLevels]] contours. The pair relation
+    * [[imageNearDupGroups]], over [[contourBands]] bands and
+    * [[contourLevels]] contours of either modality. The pair relation
     * of [[contourNearDupPairs]] is a pure function of the two docs' level
     * contours (band signatures derive from the contour), so docs with an
     * identical contour form a lossless FAMILY: candidates, verify, and the
@@ -1371,15 +1265,10 @@ object Multimodal {
     val flv = lv.join(gids, Seq("doc_id"), "left_semi")
     val fpairs = contourNearDupPairs(ffps, flv, minBands, maxLevelDiff)
     val nb = ffps.groupBy(col("doc_id")).agg(count(lit(1)).as("__nb"))
-    val labels = ConnectedComponents.minLabel(fpairs, "a_id", "b_id")
-    memb
-      .join(labels.select(col("v").as("__gid"), col("label")), Seq("__gid"), "left")
-      .join(nb.select(col("doc_id").as("__gid"), col("__nb")), Seq("__gid"), "left")
-      .filter(col("label").isNotNull ||
-        (col("__m") >= 2 && coalesce(col("__nb"), lit(0L)) >= minBands))
-      .select(col("doc_id").as("member_id"),
-        coalesce(col("label"), col("__gid")).as("group_id"),
-        (col("doc_id") === coalesce(col("label"), col("__gid"))).as("is_canonical"))
+    memberGroups(memb, fpairs)(
+      _.join(nb.select(col("doc_id").as("__gid"), col("__nb")), Seq("__gid"), "left")
+        .filter(col("label").isNotNull ||
+          (col("__m") >= 2 && coalesce(col("__nb"), lit(0L)) >= minBands)))
   }
 
   /** Schema of a decoded-video feature row (see `decodeY4mFeatures`). */
@@ -1488,34 +1377,38 @@ object Multimodal {
     * decoder's skip arithmetic — a frame-stride bug lands mid-plane and
     * fails the FRAME-marker check rather than silently shifting sums.
     */
-  def y4mFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
-      val w = (4 + 2 * (id % 4)).toInt
-      val h = (2 + 2 * (id % 3)).toInt
-      val nf = (2 + id % 4).toInt
-      val ySize = w * h
-      val cSize = (w / 2) * (h / 2)
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 C420jpeg\n".getBytes("US-ASCII"))
-      var f = 0
-      while (f < nf) {
-        out.write("FRAME\n".getBytes("US-ASCII"))
-        var p = 0
-        while (p < ySize) {
-          out.write(((id * 3 + 7 * f + 5 * p) % 256).toInt)
-          p += 1
-        }
-        var c = 0
-        while (c < 2 * cSize) {
-          out.write(((id + 11 * f + 13 * c) % 256).toInt)
-          c += 1
-        }
-        f += 1
+  def y4mFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol)(id => y4mStream(id)((f, p) => ((id * 3 + 7 * f + 5 * p) % 256).toInt))
+
+  /** A 4:2:0 Y4M stream keyed by `key` (width 4+2*(key%4), height
+    * 2+2*(key%3), 2+key%4 frames; chroma byte c of frame f =
+    * (key + 11f + 13c) % 256) whose luma byte p of frame f is `luma(f, p)`
+    * — the writer both Y4M fixtures share.
+    */
+  private def y4mStream(key: Long)(luma: (Int, Int) => Int): Array[Byte] = {
+    val w = (4 + 2 * (key % 4)).toInt
+    val h = (2 + 2 * (key % 3)).toInt
+    val nf = (2 + key % 4).toInt
+    val ySize = w * h
+    val cSize = (w / 2) * (h / 2)
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 C420jpeg\n".getBytes("US-ASCII"))
+    var f = 0
+    while (f < nf) {
+      out.write("FRAME\n".getBytes("US-ASCII"))
+      var p = 0
+      while (p < ySize) {
+        out.write(luma(f, p))
+        p += 1
       }
-      (id, out.toByteArray)
-    }.toDF("doc_id", "content")
+      var c = 0
+      while (c < 2 * cSize) {
+        out.write(((key + 11 * f + 13 * c) % 256).toInt)
+        c += 1
+      }
+      f += 1
+    }
+    out.toByteArray
   }
 
   /** Batched per-partition Y4M decode — container-level features per
@@ -1524,25 +1417,16 @@ object Multimodal {
     * order-independent overall mean. Every mean is ONE division of an
     * exact integer sum, so the doubles replay.
     */
-  def decodeY4mFeatures(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(videoFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        decodeY4m(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, sums)) =>
-            val ySize = w.toLong * h
-            var total = 0L
-            sums.foreach(total += _)
-            Row(r.getAs[Long]("doc_id"), w, h, sums.length,
-              total.toDouble / (ySize * sums.length),
-              sums.head.toDouble / ySize,
-              sums.last.toDouble / ySize)
-          case None =>
-            Row(r.getAs[Long]("doc_id"), null, null, null, null, null, null)
-        }
-      }
-    }(enc)
-  }
+  def decodeY4mFeatures(media: DataFrame): DataFrame =
+    perDocRow(media, videoFeatureSchema)(decodeY4m(_).map { case (w, h, sums) =>
+      val ySize = w.toLong * h
+      var total = 0L
+      sums.foreach(total += _)
+      Seq[Any](w, h, sums.length,
+        total.toDouble / (ySize * sums.length),
+        sums.head.toDouble / ySize,
+        sums.last.toDouble / ySize)
+    })
 
   /** REAL frame sampling over Y4M payloads — every `stride`-th decoded
     * frame emits (doc_id, frame_idx, mean luma). The generator shape of
@@ -1553,69 +1437,27 @@ object Multimodal {
     */
   def frameSampleY4m(media: DataFrame, stride: Int): DataFrame = {
     require(stride > 0, s"need positive stride: $stride")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(frameFeatureSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getAs[Long]("doc_id")
-        decodeY4m(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, sums)) =>
-            val ySize = w.toLong * h
-            Iterator.range(0, sums.length, stride)
-              .map(f => Row(id, f, sums(f).toDouble / ySize))
-          case None => Iterator.empty
-        }
+    perDoc(media, frameFeatureSchema) { (id, bytes) =>
+      decodeY4m(bytes) match {
+        case Some((w, h, sums)) =>
+          val ySize = w.toLong * h
+          Iterator.range(0, sums.length, stride)
+            .map(f => Row(id, f, sums(f).toDouble / ySize))
+        case None => Iterator.empty
       }
-    }(enc)
+    }
   }
 
-  /** Per-frame quantized mean-luma levels of a Y4M stream — the video
-    * contour for [[contourNearDupPairs]]'s verify stage, mirroring
-    * [[audioLevels]]. All-integer arithmetic: a frame's level is the
-    * exact Long division chain `(lumaSum / ySize) / qStep`, so the levels
-    * replay bit-for-bit in any engine. Map-only.
+  /** The video contour: each Y4M frame's mean luma quantized by the exact
+    * Long division chain `(lumaSum / ySize) / qStep`, so the levels replay
+    * bit-for-bit in any engine. None for undecodable payloads.
     */
-  def videoLevels(media: DataFrame, qStep: Long): DataFrame = {
+  private[graft] def y4mLumaLevels(qStep: Long): Contour = {
     require(qStep > 0, s"need positive qStep: $qStep")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(audioLevelSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getAs[Long]("doc_id")
-        decodeY4m(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, sums)) =>
-            val ySize = w.toLong * h
-            sums.iterator.zipWithIndex.map { case (s, f) =>
-              Row(id, f, (s / ySize) / qStep)
-            }
-          case None => Iterator.empty
-        }
-      }
-    }(enc)
-  }
-
-  /** Banded per-frame luma fingerprint of a Y4M stream — the
-    * [[audioFingerprint]] contract transplanted to video: `bandFrames`
-    * consecutive quantized luma levels concatenate into one band
-    * signature, computed inside the same flatMap that decodes the stream
-    * (banding in-row, ZERO shuffles — the fingerprint pass is
-    * parquet-scan-bound at 100 TB). Undecodable payloads yield no rows.
-    */
-  def videoFingerprint(media: DataFrame, bandFrames: Int, qStep: Long): DataFrame = {
-    require(bandFrames > 0 && qStep > 0, s"need positive params: $bandFrames / $qStep")
-    val enc =
-      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(audioFingerprintSchema)
-    media.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getAs[Long]("doc_id")
-        decodeY4m(r.getAs[Array[Byte]]("content")) match {
-          case Some((w, h, sums)) =>
-            val ySize = w.toLong * h
-            sums.iterator.map(s => (s / ySize) / qStep)
-              .grouped(bandFrames).zipWithIndex
-              .map { case (band, bi) => Row(id, bi, band.mkString("-")) }
-          case None => Iterator.empty
-        }
-      }
-    }(enc)
+    bytes => decodeY4m(bytes).map { case (w, h, sums) =>
+      val ySize = w.toLong * h
+      sums.map(s => (s / ySize) / qStep)
+    }
   }
 
   /** [[y4mFixture]] with PLANTED near-duplicates: geometry and luma keyed
@@ -1625,44 +1467,18 @@ object Multimodal {
     * every frame's luma sum EXACTLY `baseSum + pert*ySize` (the property
     * the near-dup oracle replays).
     */
-  def y4mDupFixture(ids: DataFrame, idCol: String): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long].map { id =>
+  def y4mDupFixture(ids: DataFrame, idCol: String): DataFrame =
+    fixture(ids, idCol) { id =>
       val b = id % 250
       val pert = ((id / 250) % 3).toInt
-      val w = (4 + 2 * (b % 4)).toInt
-      val h = (2 + 2 * (b % 3)).toInt
-      val nf = (2 + b % 4).toInt
-      val ySize = w * h
-      val cSize = (w / 2) * (h / 2)
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(s"YUV4MPEG2 W$w H$h F25:1 Ip A1:1 C420jpeg\n".getBytes("US-ASCII"))
-      var f = 0
-      while (f < nf) {
-        out.write("FRAME\n".getBytes("US-ASCII"))
-        var p = 0
-        while (p < ySize) {
-          out.write(((b * 3 + 7 * f + 5 * p) % 253).toInt + pert)
-          p += 1
-        }
-        var c = 0
-        while (c < 2 * cSize) {
-          out.write(((b + 11 * f + 13 * c) % 256).toInt)
-          c += 1
-        }
-        f += 1
-      }
-      (id, out.toByteArray)
-    }.toDF("doc_id", "content")
-  }
+      y4mStream(b)((f, p) => ((b * 3 + 7 * f + 5 * p) % 253).toInt + pert)
+    }
 
   /** Batched per-partition feature extraction over (doc_id, media_type,
     * content) rows. The md5 checksum is computed Spark-side (codegen) before
     * the partition stage; byte-dependent features inside it.
     */
   def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     val withMeta = media.select(
       col("doc_id"), col("media_type"),
       col("content"),

@@ -14,9 +14,10 @@ import graft.functions.VectorFns._
   *   - `bruteForceTopK` — exact cosine top-k against a (broadcast) query
   *     vector; the correctness baseline. Map-only scan + TakeOrderedAndProject;
   *     at 100 TB this is one full pass, no shuffle.
-  *   - `ivfAssign`/`ivfTopK` — IVF-style inverted file: vectors are assigned
-  *     to their nearest centroid (broadcast centroid table, map-only), and a
-  *     query probes only its own cluster(s) — the scan shrinks by ~n_clusters.
+  *   - `ivfAssign`/`ivfPqTopK` — IVF-style inverted file: vectors are
+  *     assigned to their nearest centroid (broadcast centroid table,
+  *     map-only), and a query probes only its `nprobe` nearest clusters —
+  *     the scan shrinks by ~n_clusters/nprobe.
   *     Assignments can be persisted as a partition column so cluster probing
   *     becomes parquet partition pruning.
   *   - `signLsh` — random-hyperplane sign buckets (deterministic md5-derived
@@ -409,21 +410,6 @@ object Similarity {
   def inertia(embeddings: DataFrame, centroids: DataFrame, idCol: String, vecCol: String): Double =
     withNearest(embeddings, centroids, vecCol, "centroid_id")
       .agg(sum(col("__best.d"))).head().getDouble(0)
-
-  /** Top-k within the clusters selected by `clusterPred` (e.g. the query
-    * vector's own cluster, or several for multi-probe).
-    */
-  def ivfTopK(assigned: DataFrame, query: DataFrame, idCol: String, vecCol: String,
-      clusterIds: Seq[Long], k: Int): DataFrame = {
-    val q = broadcast(query.select(toDouble(col(vecCol)).as("__q")))
-    assigned
-      .filter(col("cluster_id").isin(clusterIds: _*))
-      .crossJoin(q)
-      .withColumn("cosine", cosine(toDouble(col(vecCol)), col("__q")))
-      .orderBy(col("cosine").desc, col(idCol))
-      .select(col(idCol), col("cluster_id"), col("cosine"))
-      .limit(k)
-  }
 
   /** Sign-LSH bucket id: `nBits` hyperplanes with deterministic pseudo-random
     * components derived from md5(plane || "|" || dim), mapped to [-0.5, 0.5).

@@ -170,9 +170,9 @@ object CorpusQueries {
                FROM dim m LEFT JOIN hw ON hw.doc_id = m.doc_id)"""
 
   /** DuckDB replay of [[Multimodal.wavDupFixture]] +
-    * [[Multimodal.audioFingerprint]] (frame 8 / hop 4, qStep 32768, 2-frame
-    * bands): integer mean-square levels per frame, concatenated into band
-    * signatures, ending in a `bd` CTE (doc_id, band_idx, band_sig) both
+    * [[Multimodal.contourBands]] over [[Multimodal.pcmFrameLevels]] (frame
+    * 8 / hop 4, qStep 32768, 2-frame bands): integer mean-square levels
+    * per frame, concatenated into band signatures, ending in a `bd` CTE (doc_id, band_idx, band_sig) both
     * audio-fingerprint oracles select from. All-integer arithmetic — the
     * quantized levels are exact Long divisions on both engines.
     */
@@ -191,8 +191,9 @@ object CorpusQueries {
                       string_agg(level, '-' ORDER BY frame_idx) AS band_sig
                FROM lv GROUP BY 1, 2)"""
 
-  /** DuckDB replay of [[Multimodal.y4mDupFixture]] + [[Multimodal.videoLevels]]
-    * / [[Multimodal.videoFingerprint]] (qStep 4, 2-frame bands): exact
+  /** DuckDB replay of [[Multimodal.y4mDupFixture]] +
+    * [[Multimodal.contourLevels]] / [[Multimodal.contourBands]] over
+    * [[Multimodal.y4mLumaLevels]] (qStep 4, 2-frame bands): exact
     * integer luma sums per frame (the +pert shift adds exactly pert*ysize
     * because the fixture's %253 modulus leaves wrap-free headroom), the
     * same Long division chain, ending in `lv` (doc_id, frame_idx, level)
@@ -1532,8 +1533,8 @@ object CorpusQueries {
     // header/pixel parser, and hash-verify the decoded dimensions and
     // per-channel pixel means against the closed-form oracle.
     Q("q_image_decode",
-      (s, dir) => Multimodal.decodePnmFeatures(
-        Multimodal.pnmFixture(t(s, dir, "documents"), "doc_id")),
+      (s, dir) => Multimodal.decodeImageFeatures(
+        Multimodal.pnmFixture(t(s, dir, "documents"), "doc_id"), Multimodal.decodePnm),
       Some("""
         WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents),
         px AS (SELECT doc_id, w, h, unnest(range(0, w * h)) AS p FROM d)
@@ -1662,9 +1663,9 @@ object CorpusQueries {
     // INTEGER division, 2-frame bands. Map-only — banding happens inside
     // the same flatMap that walks the samples, zero shuffles.
     Q("q_audio_fingerprint",
-      (s, dir) => Multimodal.audioFingerprint(
+      (s, dir) => Multimodal.contourBands(
         Multimodal.wavDupFixture(t(s, dir, "documents"), "doc_id"),
-        frameSamples = 8, hop = 4, qStep = 32768L, bandFrames = 2),
+        Multimodal.pcmFrameLevels(frameSamples = 8, hop = 4, qStep = 32768L), bandFrames = 2),
       Some(AudioFpSql + """
         SELECT doc_id, band_idx, band_sig FROM bd""")),
 
@@ -1677,10 +1678,10 @@ object CorpusQueries {
     Q("q_audio_neardup_pairs",
       (s, dir) => {
         val media = Multimodal.wavDupFixture(t(s, dir, "documents"), "doc_id")
+        val audio = Multimodal.pcmFrameLevels(frameSamples = 8, hop = 4, qStep = 32768L)
         Multimodal.contourNearDupPairs(
-          Multimodal.audioFingerprint(media,
-            frameSamples = 8, hop = 4, qStep = 32768L, bandFrames = 2),
-          Multimodal.audioLevels(media, frameSamples = 8, hop = 4, qStep = 32768L),
+          Multimodal.contourBands(media, audio, bandFrames = 2),
+          Multimodal.contourLevels(media, audio),
           minBands = 2, maxLevelDiff = 1L)
       },
       Some(AudioFpSql + """,
@@ -1713,9 +1714,9 @@ object CorpusQueries {
     // levels are exact Long division chains; banding happens inside the
     // decode flatMap — map-only, zero shuffles.
     Q("q_video_fingerprint",
-      (s, dir) => Multimodal.videoFingerprint(
+      (s, dir) => Multimodal.contourBands(
         Multimodal.y4mDupFixture(t(s, dir, "documents"), "doc_id"),
-        bandFrames = 2, qStep = 4L),
+        Multimodal.y4mLumaLevels(qStep = 4L), bandFrames = 2),
       Some(VideoFpSql + """
         SELECT doc_id, band_idx, band_sig FROM bd""")),
 
@@ -1727,9 +1728,10 @@ object CorpusQueries {
     Q("q_video_neardup_pairs",
       (s, dir) => {
         val media = Multimodal.y4mDupFixture(t(s, dir, "documents"), "doc_id")
+        val video = Multimodal.y4mLumaLevels(qStep = 4L)
         Multimodal.contourNearDupPairs(
-          Multimodal.videoFingerprint(media, bandFrames = 2, qStep = 4L),
-          Multimodal.videoLevels(media, qStep = 4L),
+          Multimodal.contourBands(media, video, bandFrames = 2),
+          Multimodal.contourLevels(media, video),
           minBands = 2, maxLevelDiff = 1L)
       },
       Some(VideoFpSql + """,
@@ -1800,10 +1802,10 @@ object CorpusQueries {
     Q("q_audio_neardup_groups",
       (s, dir) => {
         val media = Multimodal.wavDupFixture(t(s, dir, "documents"), "doc_id")
+        val audio = Multimodal.pcmFrameLevels(frameSamples = 8, hop = 4, qStep = 32768L)
         Multimodal.contourNearDupGroups(
-          Multimodal.audioFingerprint(media,
-            frameSamples = 8, hop = 4, qStep = 32768L, bandFrames = 2),
-          Multimodal.audioLevels(media, frameSamples = 8, hop = 4, qStep = 32768L),
+          Multimodal.contourBands(media, audio, bandFrames = 2),
+          Multimodal.contourLevels(media, audio),
           minBands = 2, maxLevelDiff = 1L)
       },
       Some(AudioFpSql + ContourGroupsSql)),
@@ -1813,9 +1815,10 @@ object CorpusQueries {
     Q("q_video_neardup_groups",
       (s, dir) => {
         val media = Multimodal.y4mDupFixture(t(s, dir, "documents"), "doc_id")
+        val video = Multimodal.y4mLumaLevels(qStep = 4L)
         Multimodal.contourNearDupGroups(
-          Multimodal.videoFingerprint(media, bandFrames = 2, qStep = 4L),
-          Multimodal.videoLevels(media, qStep = 4L),
+          Multimodal.contourBands(media, video, bandFrames = 2),
+          Multimodal.contourLevels(media, video),
           minBands = 2, maxLevelDiff = 1L)
       },
       Some(VideoFpSql + ContourGroupsSql)),
@@ -3132,8 +3135,8 @@ object CorpusQueries {
     // the closed-form raster formula. A filter/stride/inflate bug cannot
     // produce these means.
     Q("q_png_decode",
-      (s, dir) => Multimodal.decodePngFeatures(
-        Multimodal.pngFixture(t(s, dir, "documents"), "doc_id")),
+      (s, dir) => Multimodal.decodeImageFeatures(
+        Multimodal.pngFixture(t(s, dir, "documents"), "doc_id"), Multimodal.decodePng),
       Some("""
         WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents),
         px AS (SELECT doc_id, w, h, unnest(range(0, w * h)) AS p FROM d)
@@ -3149,8 +3152,8 @@ object CorpusQueries {
     // reproduces EXACTLY (DC-only blocks; all 256 grays + partial edge
     // blocks spec-verified) — so even JPEG gets a hash-grade oracle.
     Q("q_jpeg_decode",
-      (s, dir) => Multimodal.decodeImageIOFeatures(
-        Multimodal.jpegFixture(t(s, dir, "documents"), "doc_id")),
+      (s, dir) => Multimodal.decodeImageFeatures(
+        Multimodal.jpegFixture(t(s, dir, "documents"), "doc_id"), Multimodal.decodeImageIO),
       Some("""
         SELECT doc_id,
                CAST(8 + doc_id % 9 AS INT) AS width,
@@ -3166,8 +3169,8 @@ object CorpusQueries {
     // (not flat) and still replays exactly — the complement of the JPEG
     // fixture's flat-only constraint.
     Q("q_gif_decode",
-      (s, dir) => Multimodal.decodeImageIOFeatures(
-        Multimodal.gifFixture(t(s, dir, "documents"), "doc_id")),
+      (s, dir) => Multimodal.decodeImageFeatures(
+        Multimodal.gifFixture(t(s, dir, "documents"), "doc_id"), Multimodal.decodeImageIO),
       Some("""
         WITH d AS (SELECT doc_id, 5 + doc_id % 6 AS w, 6 + doc_id % 5 AS h FROM documents),
         px AS (SELECT doc_id, w, h, unnest(range(0, w * h)) AS p FROM d),

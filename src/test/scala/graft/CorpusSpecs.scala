@@ -740,9 +740,9 @@ class MultimodalSpec extends AnyFunSuite {
     import TestSpark.spark.implicits._
     val ids = ((0L until 40L) ++ (250L until 290L)).toSeq // planted near-dup pairs
     val media = Multimodal.wavDupFixture(ids.toDF("doc_id"), "doc_id")
-    val fps = Multimodal.audioFingerprint(media, frameSamples = 8, hop = 4,
-      qStep = 32768L, bandFrames = 2)
-    val levels = Multimodal.audioLevels(media, frameSamples = 8, hop = 4, qStep = 32768L)
+    val audio = Multimodal.pcmFrameLevels(frameSamples = 8, hop = 4, qStep = 32768L)
+    val fps = Multimodal.contourBands(media, audio, bandFrames = 2)
+    val levels = Multimodal.contourLevels(media, audio)
     val got = fps.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getString(2)).toMap
     def replayLevels(id: Long): Seq[Long] = {
@@ -791,11 +791,11 @@ class MultimodalSpec extends AnyFunSuite {
     assert(brute.map(p => (p._1, p._2)).subsetOf(cands))
     // junk payloads yield no rows; the fingerprint pass is map-only
     val junk = Seq((1L, "RIFFnope".getBytes)).toDF("doc_id", "content")
-    assert(Multimodal.audioFingerprint(junk, 8, 4, 32768L, 2).count() === 0L)
-    assert(Multimodal.audioLevels(junk, 8, 4, 32768L).count() === 0L)
-    val plan = Multimodal.audioFingerprint(media, 8, 4, 32768L, 2)
+    assert(Multimodal.contourBands(junk, audio, 2).count() === 0L)
+    assert(Multimodal.contourLevels(junk, audio).count() === 0L)
+    val plan = Multimodal.contourBands(media, audio, 2)
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"audioFingerprint must be map-only:\n$plan")
+    assert(!plan.contains("Exchange"), s"contourBands (audio) must be map-only:\n$plan")
     intercept[IllegalArgumentException](
       Multimodal.contourNearDupPairs(fps, levels, 0, 1L))
   }
@@ -804,8 +804,9 @@ class MultimodalSpec extends AnyFunSuite {
     import TestSpark.spark.implicits._
     val ids = ((0L until 40L) ++ (250L until 290L)).toSeq // planted twin clips
     val media = Multimodal.y4mDupFixture(ids.toDF("doc_id"), "doc_id")
-    val fps = Multimodal.videoFingerprint(media, bandFrames = 2, qStep = 4L)
-    val levels = Multimodal.videoLevels(media, qStep = 4L)
+    val video = Multimodal.y4mLumaLevels(qStep = 4L)
+    val fps = Multimodal.contourBands(media, video, bandFrames = 2)
+    val levels = Multimodal.contourLevels(media, video)
     def replayLevels(id: Long): Seq[Long] = {
       val b = id % 250
       val pert = ((id / 250) % 3).toInt
@@ -848,11 +849,11 @@ class MultimodalSpec extends AnyFunSuite {
     assert(brute.nonEmpty, "planted twin clips must actually pair")
     // junk payloads yield no rows; both passes are map-only
     val junk = Seq((1L, "notY4M".getBytes)).toDF("doc_id", "content")
-    assert(Multimodal.videoFingerprint(junk, 2, 4L).count() === 0L)
-    assert(Multimodal.videoLevels(junk, 4L).count() === 0L)
-    val plan = Multimodal.videoFingerprint(media, 2, 4L)
+    assert(Multimodal.contourBands(junk, video, 2).count() === 0L)
+    assert(Multimodal.contourLevels(junk, video).count() === 0L)
+    val plan = Multimodal.contourBands(media, video, 2)
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"videoFingerprint must be map-only:\n$plan")
+    assert(!plan.contains("Exchange"), s"contourBands (video) must be map-only:\n$plan")
   }
 
   test("media near-dup GROUPS: family collapse equals doc-grain pairs -> CC, all modalities") {
@@ -878,8 +879,9 @@ class MultimodalSpec extends AnyFunSuite {
 
     // audio
     val wav = Multimodal.wavDupFixture(ids.toDF("doc_id"), "doc_id")
-    val afps = Multimodal.audioFingerprint(wav, 8, 4, 32768L, 2)
-    val alv = Multimodal.audioLevels(wav, 8, 4, 32768L)
+    val audio = Multimodal.pcmFrameLevels(8, 4, 32768L)
+    val afps = Multimodal.contourBands(wav, audio, 2)
+    val alv = Multimodal.contourLevels(wav, audio)
     val gotAudio = groupsOf(Multimodal.contourNearDupGroups(afps, alv, 2, 1L))
     val wantAudio = docGrain(Multimodal.contourNearDupPairs(afps, alv, 2, 1L))
     assert(gotAudio === wantAudio)
@@ -887,8 +889,9 @@ class MultimodalSpec extends AnyFunSuite {
 
     // video
     val y4m = Multimodal.y4mDupFixture(ids.toDF("doc_id"), "doc_id")
-    val vfps = Multimodal.videoFingerprint(y4m, 2, 4L)
-    val vlv = Multimodal.videoLevels(y4m, 4L)
+    val video = Multimodal.y4mLumaLevels(4L)
+    val vfps = Multimodal.contourBands(y4m, video, 2)
+    val vlv = Multimodal.contourLevels(y4m, video)
     val gotVideo = groupsOf(Multimodal.contourNearDupGroups(vfps, vlv, 2, 1L))
     val wantVideo = docGrain(Multimodal.contourNearDupPairs(vfps, vlv, 2, 1L))
     assert(gotVideo === wantVideo)
@@ -989,7 +992,8 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("pnmFixture payloads round-trip through the real decoder") {
     val ids = Seq(0L, 1L, 7L, 123L).toDF("doc_id")
-    val got = Multimodal.decodePnmFeatures(Multimodal.pnmFixture(ids, "doc_id"))
+    val got = Multimodal
+      .decodeImageFeatures(Multimodal.pnmFixture(ids, "doc_id"), Multimodal.decodePnm)
       .collect().map(r => r.getLong(0) -> r).toMap
     // doc 0: w=4 h=3, pixel byte k = k%256 -> channel sums have closed form
     val r0 = got(0L)
@@ -998,5 +1002,49 @@ class MultimodalSpec extends AnyFunSuite {
     val expMeanR = (0 until n).map(p => (3 * p) % 256).sum.toDouble / n
     assert(r0.getDouble(4) === expMeanR)
     assert(got(123L).getInt(1) === (4 + 123 % 5) && got(123L).getInt(2) === (3 + 123 % 4))
+  }
+
+  test("media stages: 1->1 stages null an empty or junk payload's features, 1->many stages drop it") {
+    type Fixture = (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame
+    val bad = Seq((1L, Array.emptyByteArray), (2L, "junk bytes".getBytes)).toDF("doc_id", "content")
+    // one valid fixture row (doc 3) beside the two bad payloads
+    def feed(fixture: Fixture) = fixture(Seq(3L).toDF("doc_id"), "doc_id").union(bad)
+    val pnm = feed(Multimodal.pnmFixture)
+    val wav = feed(Multimodal.wavFixture)
+    val y4m = feed(Multimodal.y4mFixture)
+    val oneToOne = Seq(
+      "pnm" -> Multimodal.decodeImageFeatures(pnm, Multimodal.decodePnm),
+      "png" -> Multimodal.decodeImageFeatures(feed(Multimodal.pngFixture), Multimodal.decodePng),
+      "jpeg" ->
+        Multimodal.decodeImageFeatures(feed(Multimodal.jpegFixture), Multimodal.decodeImageIO),
+      "bmp" -> Multimodal.decodeBmpFeatures(feed(Multimodal.bmpFixture)),
+      "resize" -> Multimodal.resizePnmFeatures(pnm, 3, 2),
+      "dhash" -> Multimodal.dHashFeatures(pnm),
+      "wav" -> Multimodal.decodeWavFeatures(wav),
+      "decimate" -> Multimodal.decimateWavFeatures(wav, 2),
+      "y4m" -> Multimodal.decodeY4mFeatures(y4m))
+    for ((name, df) <- oneToOne) {
+      // the features are the nullable columns (resize keeps its target size)
+      val features = df.schema.fields.indices.filter(df.schema(_).nullable)
+      val rows = df.collect()
+      assert(rows.map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L), name)
+      for (r <- rows) {
+        val decoded = r.getLong(0) == 3L
+        assert(features.forall(r.isNullAt(_) != decoded), s"$name doc ${r.getLong(0)}: $r")
+      }
+    }
+    val audio = Multimodal.pcmFrameLevels(8, 4, 32768L)
+    val video = Multimodal.y4mLumaLevels(4L)
+    val oneToMany = Seq(
+      "energy" -> Multimodal.audioEnergy(wav, 8, 4),
+      "audio levels" -> Multimodal.contourLevels(wav, audio),
+      "audio bands" -> Multimodal.contourBands(wav, audio, 2),
+      "video levels" -> Multimodal.contourLevels(y4m, video),
+      "video bands" -> Multimodal.contourBands(y4m, video, 2),
+      "frame sampling" -> Multimodal.frameSampleY4m(y4m, 2))
+    for ((name, df) <- oneToMany) {
+      val docs = df.collect().map(_.getLong(0))
+      assert(docs.nonEmpty && docs.forall(_ == 3L), s"$name: ${docs.toSeq}")
+    }
   }
 }

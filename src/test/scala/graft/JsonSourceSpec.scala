@@ -13,7 +13,7 @@ class JsonSourceSpec extends AnyFunSuite {
     StructField("seg", StringType)))
 
   private def fixture(lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val dir = TestSpark.tempDir("graft_jsonl").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/part-00000.txt"), lines.mkString("\n"))
     dir

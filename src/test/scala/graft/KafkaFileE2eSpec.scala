@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -35,7 +33,7 @@ class KafkaFileE2eSpec extends AnyFunSuite {
     StructField("value", DoubleType)))
 
   test("producer drops → fileStream → idempotent ingest → refresh, with redelivery") {
-    val base = Files.createTempDirectory("graft_kafka_e2e").toString
+    val base = TestSpark.tempDir("graft_kafka_e2e").toString
     val (topicDir, targetDir, ckptDir, pubDir) =
       (s"$base/topic", s"$base/target", s"$base/ckpt", s"$base/pub")
 

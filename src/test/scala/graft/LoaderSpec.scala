@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
@@ -31,7 +29,7 @@ class LoaderSpec extends AnyFunSuite {
   private def nanosOf(micros: Long, nsRem: Long): Long = micros * 1000 + nsRem
 
   private def microsFixture(): String = {
-    val dir = Files.createTempDirectory("graft_loader_us").toString
+    val dir = TestSpark.tempDir("graft_loader_us").toString
     val s = spark
     import s.implicits._
     wall.map { case (id, w, _) => (id, w) }.toDF("event_id", "w")
@@ -43,7 +41,7 @@ class LoaderSpec extends AnyFunSuite {
   }
 
   private def nanosFixture(): String = {
-    val dir = Files.createTempDirectory("graft_loader_ns").toString
+    val dir = TestSpark.tempDir("graft_loader_ns").toString
     val schema: MessageType = Types.buildMessage()
       .required(INT64).named("event_id")
       .required(INT64)
@@ -79,7 +77,7 @@ class LoaderSpec extends AnyFunSuite {
   }
 
   test("Q.t normalizes DATE-typed columns to naive midnight timestamps") {
-    val dir = Files.createTempDirectory("graft_loader_date").toString
+    val dir = TestSpark.tempDir("graft_loader_date").toString
     val s = spark
     import s.implicits._
     Seq((1L, "1995-03-15"), (2L, "1996-12-01")).toDF("o_orderkey", "d")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
@@ -19,7 +18,7 @@ class PointerSpec extends AnyFunSuite {
 
   test("Pointer.write is atomic for a concurrent reader") {
     val spark = TestSpark.spark
-    val marker = Files.createTempDirectory("graft_pointer").resolve("_current").toString
+    val marker = TestSpark.tempDir("graft_pointer").resolve("_current").toString
     // targets of different lengths, so a torn read shows as a foreign value
     val targets = Seq("/pub/v1", "/pub/version-0002", "/pub/v3-with-a-much-longer-directory-name")
     Pointer.write(spark, marker, targets.head)

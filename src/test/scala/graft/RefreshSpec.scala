@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +9,7 @@ class RefreshSpec extends AnyFunSuite {
   import TestSpark.spark.implicits._
 
   test("ingest -> refresh -> marts reflect raw state; re-delivery changes nothing") {
-    val base = Files.createTempDirectory("graft_refresh").toString
+    val base = TestSpark.tempDir("graft_refresh").toString
     val rawPath = s"$base/raw"
 
     val refresh = new Refresh(

@@ -149,7 +149,7 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("ScaleGen rejects a factor below 1 before it writes anything") {
-    val parent = Files.createTempDirectory("graft_scalegen")
+    val parent = TestSpark.tempDir("graft_scalegen")
     val out = parent.resolve("out")
     try {
       val e = intercept[IllegalArgumentException](

@@ -161,8 +161,9 @@ class PlanShapeSpec extends AnyFunSuite {
     import graft.operators.Multimodal
     val ids = ((0L until 30L) ++ (250L until 280L)).toSeq
     val media = Multimodal.wavDupFixture(ids.toDF("doc_id"), "doc_id")
-    val fps = Multimodal.audioFingerprint(media, 8, 4, 32768L, 2)
-    val levels = Multimodal.audioLevels(media, 8, 4, 32768L)
+    val audio = Multimodal.pcmFrameLevels(8, 4, 32768L)
+    val fps = Multimodal.contourBands(media, audio, 2)
+    val levels = Multimodal.contourLevels(media, audio)
     graft.core.Materialize.scoped {
       val plan = planWithoutAutoBroadcast(Multimodal.contourNearDupPairs(fps, levels, 2, 1L))
       assert(plan.contains("BroadcastHashJoin"), s"the band join must broadcast:\n$plan")

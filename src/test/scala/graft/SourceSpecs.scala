@@ -17,7 +17,7 @@ class CsvSourceSpec extends AnyFunSuite {
     StructField("ts", TimestampType)))
 
   private def writeCsv(rows: String*): String = {
-    val dir = Files.createTempDirectory("graft_csv")
+    val dir = TestSpark.tempDir("graft_csv")
     Files.writeString(dir.resolve("part.csv"), rows.mkString("\n"))
     dir.toString
   }
@@ -54,7 +54,7 @@ class CsvSourceSpec extends AnyFunSuite {
   }
 
   test("writeOrdered round-trips with the declared column order") {
-    val dir = Files.createTempDirectory("graft_csvw").toString + "/out"
+    val dir = TestSpark.tempDir("graft_csvw").toString + "/out"
     val df = Seq((1, "a")).toDF("x", "y")
     CsvSource.writeOrdered(df, Seq("y", "x"), dir)
     val back = TestSpark.spark.read.option("header", "true").csv(dir)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -21,7 +20,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("suppresses within the horizon, expires after it, idempotent sink") {
     implicit val sqlCtx = TestSpark.spark.sqlContext
-    val dir = Files.createTempDirectory("stream_dedup").toString
+    val dir = TestSpark.tempDir("stream_dedup").toString
     val mem = MemoryStream[(Long, Timestamp, String)]
     val q = StreamingDedup.start(
       mem.toDF().toDF("k", "ts", "payload"),

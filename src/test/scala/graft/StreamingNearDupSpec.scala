@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,7 +45,7 @@ class StreamingNearDupSpec extends AnyFunSuite {
 
   test("streaming sink is idempotent under redelivery") {
     implicit val sqlCtx = TestSpark.spark.sqlContext
-    val dir = Files.createTempDirectory("near_dup").toString
+    val dir = TestSpark.tempDir("near_dup").toString
     val (srcId, srcText) = corpus.orderBy($"doc_id").as[(Long, String)].head()
     val mem = MemoryStream[(Long, String)]
     val q = StreamingNearDup.start(

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -38,7 +37,7 @@ class StreamingScd2Spec extends AnyFunSuite {
 
   test("streaming upserts track the batch recompute across micro-batches") {
     implicit val sqlCtx = TestSpark.spark.sqlContext
-    val dir = Files.createTempDirectory("scd2_stream").toString
+    val dir = TestSpark.tempDir("scd2_stream").toString
     val mem = MemoryStream[V]
     val q = StreamingScd2.start(
       mem.toDF().toDF("id", "attr", "load_ts"),
@@ -79,7 +78,7 @@ class StreamingScd2Spec extends AnyFunSuite {
   }
 
   test("re-running the same batch id rewrites an identical version (idempotent)") {
-    val dir = Files.createTempDirectory("scd2_replay").toString
+    val dir = TestSpark.tempDir("scd2_replay").toString
     val rows = Seq[V](
       (1L, "x", ts("2024-01-01 00:00:00")), (1L, "y", ts("2024-01-02 00:00:00")))
     val df = rows.toDF("id", "attr", "load_ts")

@@ -14,7 +14,7 @@ class IncrementalIngestSpec extends AnyFunSuite {
   import TestSpark.spark.implicits._
 
   test("idempotentAppend: re-delivered keys are dropped (ON CONFLICT DO NOTHING parity)") {
-    val dir = Files.createTempDirectory("graft_ingest").toString + "/t"
+    val dir = TestSpark.tempDir("graft_ingest").toString + "/t"
     val b1 = Seq(("k1", 1), ("k2", 2), ("k2", 2)).toDF("k", "v") // in-batch dup too
     IncrementalIngest.idempotentAppend(b1, dir, Seq("k"))
     val b2 = Seq(("k2", 99), ("k3", 3)).toDF("k", "v") // k2 re-delivered
@@ -27,7 +27,7 @@ class IncrementalIngestSpec extends AnyFunSuite {
   }
 
   test("idempotentAppendPartitioned: redelivery dropped AND the guard scan partition-prunes") {
-    val dir = Files.createTempDirectory("graft_ingest_part").toString + "/t"
+    val dir = TestSpark.tempDir("graft_ingest_part").toString + "/t"
     def batch(rows: (String, Int, String)*) =
       rows.toSeq.toDF("k", "v", "ts0")
         .select($"k", $"v", $"ts0".cast("timestamp").as("load_ts"))
@@ -60,7 +60,7 @@ class IncrementalIngestSpec extends AnyFunSuite {
 
   test("startIngest drives the idempotent sink through a real streaming query") {
     implicit val sqlCtx = TestSpark.spark.sqlContext
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = TestSpark.tempDir("graft_stream").toString
     val mem = MemoryStream[(String, Int)]
     val q = IncrementalIngest.startIngest(
       mem.toDF().toDF("k", "v"), s"$dir/t", s"$dir/cp", Seq("k"),

@@ -11,7 +11,7 @@ class TablePersistSpec extends AnyFunSuite {
   import TestSpark.spark.implicits._
 
   test("watermark scan over a date-partitioned table partition-prunes") {
-    val path = Files.createTempDirectory("graft_part").toString + "/t"
+    val path = TestSpark.tempDir("graft_part").toString + "/t"
     val rows = (1 to 28).map(d =>
       (f"k$d", Timestamp.valueOf(f"2024-01-$d%02d 12:00:00"), d.toLong))
       .toDF("k", "load_timestamp", "v")
@@ -39,7 +39,7 @@ class TablePersistSpec extends AnyFunSuite {
     val key = "spark.graft.filesPerDate"
     val rows = Seq(("k1", Timestamp.valueOf("2024-01-01 12:00:00"))).toDF("k", "load_timestamp")
     for (bad <- Seq("0", "-3", "four", "2.5")) {
-      val path = Files.createTempDirectory("graft_part").toString + "/t"
+      val path = TestSpark.tempDir("graft_part").toString + "/t"
       spark.conf.set(key, bad)
       try {
         val e = intercept[IllegalArgumentException](

@@ -1,17 +1,39 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (forked test JVM). */
 object TestSpark {
+  /** One root per test JVM for every directory the suite writes, deleted
+    * with its contents when the JVM exits. The hook goes through Hadoop's
+    * hook manager at priority 0 so it runs after Spark's own shutdown hook
+    * (priority 40) has stopped the session and its streaming queries.
+    */
+  private lazy val root: Path = {
+    val dir = Files.createTempDirectory("graft_test")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile), 0)
+    dir
+  }
+
+  private val made = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** A fresh directory under the suite's temp root. A counter, not a random
+    * suffix, keeps the path short: a scan node prints at most 100 chars of
+    * its location, and specs find their scans by path.
+    */
+  def tempDir(prefix: String): Path =
+    Files.createDirectory(root.resolve(prefix + made.incrementAndGet()))
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft_warehouse").toString)
       .config("spark.ui.enabled", "false")
       // as `graft.core.Graft.session` sets it: `Q.t` reads TIMESTAMP(NANOS)
       // parquet columns as longs

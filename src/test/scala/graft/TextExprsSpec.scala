@@ -381,7 +381,7 @@ class CorpusKernelsSpec extends AnyFunSuite {
     * whole-stage codegen).
     */
   private def inputs(df: DataFrame): Seq[(String, DataFrame)] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kernels").toString
+    val dir = TestSpark.tempDir("graft_kernels").toString
     df.write.mode("overwrite").parquet(dir)
     Seq("local" -> df, "parquet" -> TestSpark.spark.read.parquet(dir))
   }
