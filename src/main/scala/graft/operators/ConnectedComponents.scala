@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 import graft.core.Materialize
 
@@ -10,38 +12,56 @@ import graft.core.Materialize
   * per component, not per pair; transitive duplicates A~B~C must collapse
   * even when (A,C) was never emitted as a pair).
   *
-  * Algorithm: min-label propagation with POINTER JUMPING, run to the
-  * fixpoint. Every vertex starts labeled with its own id; each round every
-  * vertex (a) takes the minimum label among itself and its neighbors, then
-  * (b) path-halves: label(v) ← min(label(v), label(label(v))). The jump
-  * step is sound because label(v) is always the id of a vertex reachable
-  * from v, so label(label(v)) is too (transitivity); it turns the round
-  * count from O(diameter) into O(log diameter) — measured 9.3 s → ~2 s on
-  * the sf0.1 near-dup graph, whose largest component has 1128 vertices.
-  * The loop stops the first round that changes nothing; at the fixpoint
-  * the neighbor step alone is stable, which over mirrored (undirected)
-  * edges forces label equality across every edge — i.e. labels are
-  * constant per component and equal to the component minimum.
+  * Algorithm: local contraction, then propagation (the "contract locally,
+  * then propagate" shape of Kiveris et al., "Connected Components in
+  * MapReduce and Beyond", SoCC 2014).
   *
-  * Scale shape: each round is one shuffle on the vertex id (groupBy-min
-  * with map-side partial mins); the label frame is |V| rows regardless of
-  * |E|, and `localCheckpoint` truncates the growing lineage per round.
-  * The loop runs TO CONVERGENCE — labels only ever decrease, so "no label
-  * changed this round" is equivalent to "sum of labels unchanged", one
-  * cheap decimal aggregate per round rather than a change-detect join. A
-  * fixed round count (the round-3 shape) silently under-merges any chain
-  * longer than 2·rounds; convergence costs one extra round (the one that
-  * observes the fixpoint) and makes the answer the true component minimum
-  * at every diameter. Near-dup graphs are unions of small dense clusters
-  * (diameter 1-2 for banding candidates), so the loop exits after ~3
-  * rounds in practice; `maxRounds` is a runaway valve for pathological
-  * inputs (diameter > maxRounds throws rather than returning a wrong
-  * answer). For graphs where O(diameter) rounds is genuinely too many,
-  * alternating large-star/small-star (Kiveris et al.) converges in
-  * O(log d) rounds; this min-label form is the right tool for dedup
-  * clusters.
+  *  1. Contract. One `mapPartitions` pass runs a union-find over each edge
+  *     partition and emits (v, r) for every vertex the partition saw, r =
+  *     the minimum id of v's component among that partition's edges.
+  *  2. Resolve. One shuffle on v gives (v, label = min r) and counts the
+  *     vertices that more than one partition saw. When there are none,
+  *     every global component lies inside one partition, so the local
+  *     components ARE the global ones and the labels are final. Every
+  *     one-partition pair list (the usual dedup pair list) exits here
+  *     after ONE Spark job of its own: the pin of the resolved labels,
+  *     whose map stage runs the contraction over the pair pipeline and
+  *     whose result stage counts the spanning vertices. On the
+  *     `corpus_dedup` benchmark (4 cores) that took the groups stage,
+  *     counting the pair list's read and the write, from 25 jobs and
+  *     ~2.7 s to 3 jobs and ~0.6 s.
+  *  3. Propagate, only when some vertex spans partitions: min-label
+  *     propagation with POINTER JUMPING over the star edges (v, r), v ≠ r,
+  *     starting from the resolved labels. The star edges connect exactly
+  *     what the input edges connect (each input edge lies in one local
+  *     component, each local component is a star on its root), and there
+  *     are at most as many as the contraction emitted. Each round every
+  *     vertex (a) takes the minimum label among itself and its neighbors,
+  *     then (b) path-halves: label(v) ← min(label(v), label(label(v))). The
+  *     jump is sound because label(v) is always the id of a vertex in v's
+  *     component, and it makes the round count O(log diameter) instead of
+  *     O(diameter). The loop stops the first round that changes nothing; at
+  *     the fixpoint the neighbor step alone is stable, which over mirrored
+  *     edges forces equal labels across every edge, i.e. one label per
+  *     component, the component minimum.
+  *
+  * Memory: the contraction holds one primitive long → long entry per
+  * vertex of its partition (a partial aggregation's bound) and emits one
+  * row per (partition, vertex), cached for the propagation loop and freed
+  * on the exit; the resolved frame and every round's label frame are |V|
+  * rows. Rounds are one shuffle on the vertex id each, and a
+  * `localCheckpoint` per round truncates the lineage.
+  *
+  * Convergence: labels only ever decrease, so "no label changed this
+  * round" is equivalent to "sum of labels unchanged", one cheap decimal
+  * aggregate per round rather than a change-detect join. The loop runs to
+  * convergence; a fixed round count silently under-merges any chain longer
+  * than 2·rounds. `maxRounds` is a runaway valve for pathological inputs:
+  * not converging within it throws rather than returning a wrong answer.
   */
 object ConnectedComponents {
+
+  private val LongPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
   /** Release the checkpoint blocks backing a frame returned by
     * [[minLabel]]/[[dedupGroups]] to a caller with no scope open, which owns
@@ -52,36 +72,105 @@ object ConnectedComponents {
     */
   def releaseResult(df: DataFrame): Unit = Materialize.release(df)
 
-  /** Component labels at the min-label fixpoint over the undirected edge
-    * list `(aCol, bCol)`. Output: (v, label) — one row per distinct
-    * vertex; `label` = the minimum id in v's connected component.
+  /** Component labels over the undirected edge list `(aCol, bCol)`.
+    * Output: (v, label) — one row per distinct vertex; `label` = the
+    * minimum id in v's connected component. Ids are integral; the output
+    * columns have the wider of the two input columns' types.
     *
+    * @throws IllegalArgumentException if an id column is not integral, or
+    *         (from the first action) an id is null; the message names the
+    *         column.
     * @throws IllegalStateException if the fixpoint is not reached within
     *         `maxRounds` rounds (component diameter > maxRounds).
     */
   def minLabel(edges: DataFrame, aCol: String, bCol: String, maxRounds: Int = 50): DataFrame = {
-    // materialize the (possibly expensive) pair-producing pipeline ONCE,
-    // BEFORE mirroring: a union of two selects over the raw `edges` plan
-    // executes the upstream near-dup join once per branch (the O(block²)
-    // predicate loop twice), and every propagation round would recompute
-    // it again — the checkpointed pair list is scanned instead
-    val e = Materialize.pin(edges.select(col(aCol).as("x"), col(bCol).as("y")))
+    val idType = Seq(aCol, bCol).map(integralType(edges, _)).maxBy(_.defaultSize)
+    val spark = edges.sparkSession
+    // cached, not pinned: the resolve job fills it as it runs the (possibly
+    // expensive) pair-producing pipeline once, and only the propagation
+    // loop reads it again
+    val local = Materialize.cache(contract(edges, aCol, bCol))
+    // vertices seen by more than one partition, counted by the resolve job
+    // itself: a task's updates merge once, when it succeeds, and only
+    // "none" versus "some" is read
+    val spanning = spark.sparkContext.longAccumulator("connected components: spanning vertices")
+    val resolved = local.as(LongPair).rdd
+      .mapValues(r => (r, 1))
+      .reduceByKey((x, y) => (math.min(x._1, y._1), x._2 + y._2))
+      .map { case (v, (label, n)) => if (n > 1) spanning.add(1); (v, label) }
+    val start = Materialize.pin(spark.createDataset(resolved)(LongPair).toDF("v", "label"))
+    val labels =
+      if (spanning.value == 0) {
+        Materialize.release(local, blocking = false)
+        start
+      } else propagate(local, start, maxRounds)
+    labels.select(col("v").cast(idType).as("v"), col("label").cast(idType).as("label"))
+  }
+
+  /** The type of id column `c`; anything but an integral type fails here. */
+  private def integralType(edges: DataFrame, c: String): DataType =
+    edges.select(col(c)).schema.head.dataType match {
+      case t @ (ByteType | ShortType | IntegerType | LongType) => t
+      case t => throw new IllegalArgumentException(
+        s"connected components: vertex id column `$c` is ${t.simpleString}; ids must be integral")
+    }
+
+  /** Step 1: (v, r) for every vertex of every partition, r = the minimum
+    * id of v's component among the partition's own edges; a vertex seen
+    * only in self-loops gives (v, v).
+    */
+  private def contract(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    edges.select(col(aCol).cast(LongType), col(bCol).cast(LongType))
+      .mapPartitions((rows: Iterator[Row]) => localComponents(rows, aCol, bCol))(LongPair)
+      .toDF("v", "r")
+
+  private def localComponents(rows: Iterator[Row], aCol: String, bCol: String): Iterator[(Long, Long)] = {
+    // parent pointers, a root being its own parent; linking the larger root
+    // under the smaller keeps every root its component's minimum id
+    val parent = new Bridge.LongLongMap
+    def find(v: Long): Long = {
+      var x = v
+      var p = parent.getOrElseUpdate(x, x)
+      // path splitting: every vertex on the way skips to its grandparent
+      while (p != x) {
+        val g = parent.getOrElseUpdate(p, p)
+        parent(x) = g
+        x = p
+        p = g
+      }
+      x
+    }
+    def id(r: Row, i: Int, c: String): Long =
+      if (r.isNullAt(i)) throw new IllegalArgumentException(
+        s"connected components: null vertex id in column `$c`")
+      else r.getLong(i)
+    rows.foreach { r =>
+      val ra = find(id(r, 0, aCol))
+      val rb = find(id(r, 1, bCol))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keysIterator.map(v => (v, find(v)))
+  }
+
+  /** Step 3: min-label propagation with pointer jumping over the star
+    * edges of `local`, from the resolved labels `start`, to the fixpoint.
+    */
+  private def propagate(local: DataFrame, start: DataFrame, maxRounds: Int): DataFrame = {
+    val star = local.filter(col("v") =!= col("r")).select(col("v").as("x"), col("r").as("y"))
     // the mirrored edge list is joined on `y` EVERY round; a union carries
-    // no partitioning, so each round re-shuffled the |E| frame (the big
-    // side) just to reach the same layout. Checkpointing it hash-partitioned
-    // on `y` once makes every round's neighbor join exchange-free on the
-    // edge side (guide §2.4) — at corpus scale that is rounds-1 fewer full
-    // edge shuffles. `e`'s own checkpoint blocks are released as soon as the
-    // partitioned copy exists, so peak pinned storage stays one edge list.
-    val und = Materialize.pin(e.unionByName(e.select(col("y").as("x"), col("x").as("y")))
+    // no partitioning, so each round would re-shuffle it just to reach the
+    // same layout. Checkpointing it hash-partitioned on `y` once makes every
+    // round's neighbor join exchange-free on the edge side (guide §2.4).
+    // The contraction's cache is released as soon as this copy exists, so
+    // peak stored data stays one edge list.
+    val und = Materialize.pin(star.unionByName(star.select(col("y").as("x"), col("x").as("y")))
       .repartition(col("y")))
-    Materialize.release(e, blocking = false)
-    var labels = Materialize.pin(und.select(col("x").as("v")).distinct()
-      .withColumn("label", col("v")))
+    Materialize.release(local, blocking = false)
+    var labels = start
     // decimal(38,0) so the convergence invariant (sum strictly decreases on
     // any label change) cannot be confused by a bigint overflow wraparound
     def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0)
+      df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
     // pointer jump (path halving): label(v) <- min(label(v),
     // label(label(v))). The input is unique per v, so the self-join on the
     // label-as-vertex adds at most one row and needs no re-group.
@@ -91,9 +180,8 @@ object ConnectedComponents {
         .select(ls("v"),
           least(ls("label"), coalesce(col("__pl"), ls("label"))).as("label"))
     }
-    // no initial sum action: round 1 strictly decreases the sum whenever an
-    // edge exists (every (a,b), a<b drops b's label), and the empty graph
-    // just converges after one trivial round of empty jobs
+    // no initial sum action: the first round is compared with nothing, so
+    // the loop always runs at least two rounds
     var prevSum: java.math.BigDecimal = null
     var converged = false
     var round = 0
@@ -132,7 +220,7 @@ object ConnectedComponents {
       round += 1
     }
     // the mirrored edge list is only read inside the loop; its checkpoint
-    // (|E| rows — the big one) is dead weight once the labels converged
+    // (the big one) is dead weight once the labels converged
     Materialize.release(und, blocking = false)
     if (!converged) {
       // error path: no frame handle escapes, so the final round's label

@@ -249,8 +249,8 @@ object Similarity {
     *
     * Shape at scale: clustering + pair generation inherit the IVF
     * discipline (broadcast argmin, cluster-blocked verify, k grows with n
-    * so cluster_size stays bounded); group labels come from the convergent
-    * pointer-jumping [[ConnectedComponents.minLabel]]; representative
+    * so cluster_size stays bounded); group labels come from
+    * [[ConnectedComponents.minLabel]]; representative
     * selection is one aggregate + join at group grain. Every number is the
     * deterministic in-index-order fold, so an independent SQL engine
     * replays the verdict bit-for-bit.
@@ -266,7 +266,7 @@ object Similarity {
       threshold: Double,
       maxRounds: Int = 50): DataFrame = {
     // the broadcast-argmin assignment is evaluated twice (once inside the
-    // pair generator — which ConnectedComponents checkpoints eagerly — and
+    // pair generator — which ConnectedComponents runs once, eagerly — and
     // once for the labeled output frame): a deliberate recompute-over-cache
     // choice, since the assignment is a stateless map-only pass and caching
     // the vector-heavy frame would pin corpus-sized blocks in executor

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ConnectedComponents
@@ -30,8 +32,19 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     parent.keys.map(v => v -> find(v)).toMap
   }
 
-  private def groundTruth: Map[Long, Long] =
-    unionFind(edges.as[(Long, Long)].collect().toSeq)
+  private lazy val edgeList: Seq[(Long, Long)] = edges.as[(Long, Long)].collect().toSeq
+
+  private def groundTruth: Map[Long, Long] = unionFind(edgeList)
+
+  private def spark = TestSpark.spark
+
+  /** The edges with partition p holding exactly `parts(p)`, in order. */
+  private def laidOut(parts: Seq[Seq[(Long, Long)]]): DataFrame =
+    spark.sparkContext.parallelize(parts, parts.size).flatMap(identity).toDF("a", "b")
+
+  /** k partitions' worth of `es`: edge i in slice i mod k. */
+  private def slices(es: Seq[(Long, Long)], k: Int): Seq[Seq[(Long, Long)]] =
+    (0 until k).map(p => es.zipWithIndex.collect { case (e, i) if i % k == p => e })
 
   test("converges to the exact components (min id per component)") {
     val got = ConnectedComponents.minLabel(edges, "a", "b")
@@ -53,8 +66,11 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("maxRounds below the diameter throws instead of under-merging silently") {
     // long enough that even 4 jumps/round (pointer depth ~2^4 per round,
-    // compounding across rounds) cannot reach the fixpoint in 2 rounds
-    val chain = (100L until 700L).map(v => (v, v + 1)).toDF("a", "b")
+    // compounding across rounds) cannot reach the fixpoint in 2 rounds.
+    // Edge i sits in partition i mod 2, so no partition holds two adjacent
+    // edges: the local contraction merges nothing beyond single edges and
+    // the propagation loop still has the whole chain to walk
+    val chain = laidOut(slices((100L until 700L).map(v => (v, v + 1)), 2))
     val e = intercept[IllegalStateException] {
       ConnectedComponents.minLabel(chain, "a", "b", maxRounds = 2).collect()
     }
@@ -75,6 +91,49 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toMap
       assert(got === unionFind(es), s"density=$density, |E|=${es.size}")
     }
+  }
+
+  test("labels do not depend on how the edges are partitioned") {
+    for (k <- Seq(1, 3, 8)) {
+      val got = ConnectedComponents.minLabel(laidOut(slices(edgeList, k)), "a", "b")
+      assert(got.as[(Long, Long)].collect().toMap === groundTruth, s"$k partitions")
+      assert(got.schema.map(_.dataType) === Seq(LongType, LongType), s"$k partitions")
+    }
+    // every vertex spans both partitions (edge i in partition i mod 2, and
+    // each vertex's self-loop in both), so the resolve step cannot exit and
+    // the propagation loop runs; 99 appears in self-loops only
+    val loops = (edgeList.flatMap { case (a, b) => Seq(a, b) } :+ 99L).distinct.map(v => (v, v))
+    val got = ConnectedComponents.minLabel(laidOut(slices(edgeList, 2).map(loops ++ _)), "a", "b")
+      .as[(Long, Long)].collect().toMap
+    assert(got === unionFind(edgeList :+ (99L -> 99L)))
+    assert(got(99L) === 99L)
+  }
+
+  test("int ids give int labels") {
+    val ints = edges.select($"a".cast("int").as("a"), $"b".cast("int").as("b"))
+    val got = ConnectedComponents.minLabel(ints, "a", "b")
+    assert(got.schema.map(_.dataType) === Seq(IntegerType, IntegerType))
+    assert(got.as[(Int, Int)].collect().map { case (v, l) => (v.toLong, l.toLong) }.toMap === groundTruth)
+  }
+
+  test("a non-integral or null id fails with the column's name") {
+    val strings = Seq(("1", "2")).toDF("a", "b")
+    val typed = intercept[IllegalArgumentException] {
+      ConnectedComponents.minLabel(strings, "a", "b")
+    }
+    assert(typed.getMessage.contains("`a`"), typed.getMessage)
+    val nulls = Seq((1L, Some(2L)), (2L, None)).toDF("a", "b")
+    val missing = intercept[Exception](ConnectedComponents.minLabel(nulls, "a", "b"))
+    assert(missing.getMessage.contains("null vertex id in column `b`"), missing.getMessage)
+  }
+
+  test("a one-partition graph resolves in one job, every call") {
+    val runner = new Runner(spark, "dir", Nil, _ => (), Nil)
+    def jobs(g: DataFrame): Int = runner.line("cc")(ConnectedComponents.minLabel(g, "a", "b")).jobs.size
+    val one = laidOut(Seq(edgeList))
+    assert(Seq(jobs(one), jobs(one)) === Seq(1, 1))
+    // a vertex in two partitions takes the propagation loop instead
+    assert(jobs(laidOut(slices(edgeList, 2))) > 1)
   }
 
   test("dedupGroups flags exactly one canonical member per group") {
