@@ -84,7 +84,8 @@ object ConnectedComponents {
     *         `maxRounds` rounds (component diameter > maxRounds).
     */
   def minLabel(edges: DataFrame, aCol: String, bCol: String, maxRounds: Int = 50): DataFrame = {
-    val idType = Seq(aCol, bCol).map(integralType(edges, _)).maxBy(_.defaultSize)
+    val idType = Seq(aCol, bCol)
+      .map(integralType(edges, _, "connected components: vertex id")).maxBy(_.defaultSize)
     val spark = edges.sparkSession
     // cached, not pinned: the resolve job fills it as it runs the (possibly
     // expensive) pair-producing pipeline once, and only the propagation
@@ -107,12 +108,14 @@ object ConnectedComponents {
     labels.select(col("v").cast(idType).as("v"), col("label").cast(idType).as("label"))
   }
 
-  /** The type of id column `c`; anything but an integral type fails here. */
-  private def integralType(edges: DataFrame, c: String): DataType =
-    edges.select(col(c)).schema.head.dataType match {
+  /** The type of id column `c`; anything but an integral type fails here,
+    * with a message that starts with `role` and names the column.
+    */
+  private[operators] def integralType(df: DataFrame, c: String, role: String): DataType =
+    df.select(col(c)).schema.head.dataType match {
       case t @ (ByteType | ShortType | IntegerType | LongType) => t
       case t => throw new IllegalArgumentException(
-        s"connected components: vertex id column `$c` is ${t.simpleString}; ids must be integral")
+        s"$role column `$c` is ${t.simpleString}; ids must be integral")
     }
 
   /** Step 1: (v, r) for every vertex of every partition, r = the minimum

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
 import graft.core.Materialize
-import graft.functions.{IntersectCardSorted, MinHashSignature, TextFns}
+import graft.functions.{CappedIdList, IdPairs, IntersectCardSorted, MinHashSignature, TextFns}
 
 /** Near-duplicate detection for document corpora: MinHash + LSH banding,
   * SimHash fingerprints, and exact n-gram Jaccard verification.
@@ -14,13 +14,18 @@ import graft.functions.{IntersectCardSorted, MinHashSignature, TextFns}
   *   - signatures, band hashes and the hashed n-gram sets verification
   *     intersects are per-row codegen kernels (`MinHashSignature`,
   *     `NgramHashSet`): the corpus front end is map-only, nothing shuffles
-  *     before the bucket join;
-  *   - candidate generation is ONE shuffle on (band_index, band_hash) —
-  *     classic LSH banding, so only same-bucket docs ever meet; the
-  *     all-pairs O(n²) never materializes;
+  *     before the bucket aggregate;
+  *   - candidate generation is ONE keyed aggregate on (band, band_hash)
+  *     over one pass of the banded frame — classic LSH banding, so only
+  *     same-bucket docs ever meet and the all-pairs O(n²) never
+  *     materializes; each bucket's ids are collected and its pairs are
+  *     generated per row, with no self-join;
   *   - a per-bucket cap (`bucketCap`) guards against degenerate buckets
-  *     (boilerplate text) producing quadratic blowup — capped buckets are
-  *     dropped, the standard production trade-off;
+  *     (boilerplate text) producing quadratic blowup — over-cap buckets are
+  *     dropped, the standard production trade-off. The aggregate's buffer
+  *     holds at most `bucketCap` ids and keeps only a count past it, so a
+  *     degenerate bucket crosses the shuffle as at most one bounded buffer
+  *     per map partition, never as its rows;
   *   - exact-Jaccard verification joins shingle sets only for the candidate
   *     pairs (two hash joins on doc id).
   *
@@ -47,13 +52,13 @@ object TextDedup {
     Bridge.column(MinHashSignature(Bridge.expression(shingles), numHashes, family == HexMd5))
 
   /** Per-doc banded signature rows: (id, band, band_hash). `numHashes` must
-    * be bands * rowsPerBand. Exploded representation feeds the bucket join.
+    * be bands * rowsPerBand. Exploded representation feeds the bucketing.
     *
     * Map-only: the fused `minhashSignature` kernel computes the whole
     * signature per row, band b hashes its slice of positions
     * [b*rowsPerBand, (b+1)*rowsPerBand) as plain codegen expressions, and
     * one explode emits the band rows, so nothing shuffles before the
-    * bucket join. A doc with no shingles emits no band rows. Band hash:
+    * bucketing. A doc with no shingles emits no band rows. Band hash:
     * Xx64 `xxhash64(b, m...)`; HexMd5 `md5("b|m|...")` over the decimal
     * minima, SQL-replayable.
     */
@@ -81,42 +86,41 @@ object TextDedup {
       .select(col(idCol), col("__b.band").as("band"), col("__b.band_hash").as("band_hash"))
   }
 
-  /** Drop every row of a bucket whose population exceeds `bucketCap`.
+  /** LSH candidate pairs (a_id < b_id), deduplicated across bands: every
+    * pair of ids that share a bucket (band, band_hash) holding at most
+    * `bucketCap` rows.
     *
-    * Shape matters at 100 TB: a count WINDOW over (band, band_hash) shuffles
-    * EVERY row of a bucket to one task just to count it — a degenerate
-    * bucket (empty shingle, boilerplate band) can be 10⁸–10⁹ rows funneled
-    * through a single reducer, usually only to be dropped. Instead the
-    * bucket census is a keyed aggregate (map-side partial counts — each map
-    * partition contributes ONE row per bucket regardless of population) and
-    * the prune is a `left_anti` join against only the OVER-cap buckets.
-    * That over-cap frame is bounded by #rows/bucketCap and in practice tiny
-    * (degenerate buckets are rare), so AQE broadcasts it and the prune is a
-    * map-only pass over the banded frame — the mega-bucket never lands on
-    * any reducer at all. Same pattern as `Curation.winnowMatches`'s
-    * over-common-fingerprint suppression. Output is identical to the
-    * window formulation.
-    */
-  private[graft] def capBuckets(banded: DataFrame, bucketCap: Int): DataFrame = {
-    val over = banded
-      .groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > bucketCap)
-      .select(col("band"), col("band_hash"))
-    banded.join(over, Seq("band", "band_hash"), "left_anti")
-  }
-
-  /** LSH candidate pairs (a < b), deduplicated across bands. One shuffle on
-    * (band, band_hash); buckets larger than `bucketCap` are dropped
-    * map-side (see `capBuckets`).
+    * One keyed aggregate over the banded frame, so the frame (and the
+    * MinHash kernel under it) is computed once: the group-by on (band,
+    * band_hash) collects each bucket's ids with [[graft.functions.CappedIdList]],
+    * and a per-row generator ([[graft.functions.IdPairs]]) emits the pairs
+    * of every bucket still under the cap — no census, no anti-join, no
+    * self-join. Every banded row counts toward the cap, a null-id row
+    * too, but only non-null ids pair; a bucket with a null key pairs
+    * nothing (the equi-join semantics).
+    *
+    * At 100 TB: the aggregate is partial per map partition, and a
+    * partition ships ONE buffer per bucket holding at most `bucketCap` ids,
+    * or only a count once the bucket is over the cap. A degenerate bucket
+    * (empty shingle, boilerplate band) of 10⁸–10⁹ rows therefore never
+    * lands its rows on one reducer (a count WINDOW over the bucket would
+    * funnel them all through one task), and no buffer anywhere grows past
+    * the cap. The pairs of a bucket are bounded by bucketCap²/2.
+    *
+    * Ids must be integral: they travel as bigint and come back in the id
+    * column's type.
+    *
+    * @throws IllegalArgumentException if the id column is not integral;
+    *         the message names the column.
     */
   def candidatePairs(banded: DataFrame, idCol: String, bucketCap: Int = 1000): DataFrame = {
-    val capped = capBuckets(banded, bucketCap)
-    val l = capped.select(col("band"), col("band_hash"), col(idCol).as("a_id"))
-    val r = capped.select(col("band"), col("band_hash"), col(idCol).as("b_id"))
-    l.join(r, Seq("band", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"))
+    val idType = ConnectedComponents.integralType(banded, idCol, "LSH candidates: id")
+    banded
+      .filter(col("band").isNotNull && col("band_hash").isNotNull)
+      .groupBy(col("band"), col("band_hash"))
+      .agg(CappedIdList(col(idCol), bucketCap).as("__ids"))
+      .select(IdPairs(col("__ids")))
+      .select(col("a").cast(idType).as("a_id"), col("b").cast(idType).as("b_id"))
       .distinct()
   }
 
@@ -241,8 +245,8 @@ object TextDedup {
     def repsOf(fam: DataFrame): DataFrame =
       fam.select(col("__gid").as(idCol), col(textCol))
     // the cap must drop a bucket when its DOC population (sum of member
-    // counts), not its family count, exceeds bucketCap — identical output
-    // to capBuckets on the doc-grain banded frame
+    // counts), not its family count, exceeds bucketCap — the buckets
+    // `candidatePairs`' cap drops on the doc-grain banded frame
     def cappedW(fam: DataFrame): DataFrame = {
       val banded = bandedOf(repsOf(fam))
         .join(fam.select(col("__gid").as(idCol), col("__m")), Seq(idCol))
