@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Raw-table persistence: date-partitioned parquet layout so incremental
@@ -28,7 +28,7 @@ object TablePersist {
     * filesPerDate-wide. Content-hash, not rand(): a retried task must
     * reproduce the same row→partition assignment (guide §2.5, SPARK-38388).
     */
-  private[graft] def writeSalt(df: DataFrame): Column =
+  private def writeSalt(df: DataFrame): Column =
     pmod(xxhash64(struct(df.columns.map(col): _*)), lit(filesPerDate(df)))
 
   /** Files-per-date target, conf-overridable (`spark.graft.filesPerDate`):
@@ -68,10 +68,6 @@ object TablePersist {
       else withDate
     arranged.write.mode("append").partitionBy("load_date").parquet(path)
   }
-
-  /** Read a partitioned table; `load_date` predicates prune directories. */
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Incremental watermark scan over a partitioned table: adds the
     * date-level predicate derived from the watermark so pruning applies,

@@ -340,18 +340,6 @@ object Similarity {
         col("centroid_cos"), (col("__rep.i") === col(idCol)).as("is_kept"))
   }
 
-  /** Per-dimension int8 scalar quantization — the 4x storage/bandwidth
-    * reduction step before an embedding table ships to an ANN index.
-    * Emits (id, dim, q) rows: q = round((x - min_d) / (max_d - min_d) * 255)
-    * in [0, 255], with constant dimensions mapped to 0. Dequantization is
-    * min_d + q/255*(max_d - min_d); both directions are rational IEEE
-    * arithmetic, so an independent engine replays them bit-for-bit.
-    *
-    * Shape at scale: one pass computes per-dim min/max (posexplode →
-    * groupBy(dim) with map-side combine — the shuffle carries dims-many
-    * partials per map partition, not vectors), the tiny stats table
-    * broadcasts back, and quantization is map-only.
-    */
   /** Sparse sign random projection (Achlioptas 2003, "Database-friendly
     * random projections"; the Johnson-Lindenstrauss workhorse): out[j] =
     * Σ_i v[i]·s(i,j) with s(i,j) ∈ {+1,−1} drawn from md5 parity — the
@@ -390,6 +378,18 @@ object Similarity {
       .select(col(idCol), col("__j").cast("int").as("dim"), col("value"))
   }
 
+  /** Per-dimension int8 scalar quantization — the 4x storage/bandwidth
+    * reduction step before an embedding table ships to an ANN index.
+    * Emits (id, dim, q) rows: q = round((x - min_d) / (max_d - min_d) * 255)
+    * in [0, 255], with constant dimensions mapped to 0. Dequantization is
+    * min_d + q/255*(max_d - min_d); both directions are rational IEEE
+    * arithmetic, so an independent engine replays them bit-for-bit.
+    *
+    * Shape at scale: one pass computes per-dim min/max (posexplode →
+    * groupBy(dim) with map-side combine — the shuffle carries dims-many
+    * partials per map partition, not vectors), the tiny stats table
+    * broadcasts back, and quantization is map-only.
+    */
   def quantizeInt8(embeddings: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val dims = embeddings.select(col(idCol),
       posexplode(toDouble(col(vecCol))).as(Seq("__d0", "__x")))

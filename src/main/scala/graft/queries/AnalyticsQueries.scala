@@ -237,7 +237,7 @@ object AnalyticsQueries {
           path, "ts")
         val wm = java.sql.Timestamp.valueOf("2024-01-20 00:00:00")
         graft.core.TablePersist.aboveWatermarkPruned(
-          graft.core.TablePersist.readPartitioned(s, path), "ts", wm)
+          s.read.parquet(path), "ts", wm)
           .select(col("event_id"), col("user_id"), col("ts"))
       },
       Some("""

@@ -2458,7 +2458,11 @@ object CorpusQueries {
           shingleWords = 2, bands = 4, rowsPerBand = 3, threshold = 0.5,
           family = TextDedup.HexMd5)
           .select(col("a_id").as("doc_id")).distinct())
-        val s4 = train.join(flagged, Seq("doc_id"), "left_anti")
+        // explicit broadcast: `flagged` holds train ids only (doc_id < 400),
+        // and unhinted AQE sizes it from the cache's estimate, which depends
+        // on whether the cache has filled yet — the join then shuffled in
+        // some runs and not others, and the line's job count varied
+        val s4 = train.join(broadcast(flagged), Seq("doc_id"), "left_anti")
         val s5 = Curation.mixSchedule(
             s4.select(col("doc_id"), col("lang")), "doc_id", "lang",
             Map("en" -> 0.4, "zh" -> 0.1, "es" -> 0.15, "de" -> 0.15, "fr" -> 0.2))

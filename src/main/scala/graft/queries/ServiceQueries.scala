@@ -331,7 +331,8 @@ object ServiceQueries {
     // The complete reference model DAG end-to-end (§3.1): generated
     // reference-shaped raw tables -> vault -> marts -> semantic overview.
     // Rows-only (reference-shaped inputs are generated, not testdata);
-    // semantic contracts live in ModelsSpec/ReferencePipelineSpec.
+    // semantic contracts, determinism in the seed included, live in
+    // ModelsSpec.
     Q("q_reference_dag",
       (s, _) => {
         import graft.vault.Models

@@ -78,22 +78,15 @@ object IncrementalIngest {
     * `load_date = to_date(tsCol)`): ON CONFLICT DO NOTHING semantics with
     * the conflict scan partition-pruned to the batch's redelivery window.
     * This is the 100 TB shape: the reference's TimescaleDB target chunks by
-    * time the same way (`a1_5_batch_s3_to_postgres.py:383-411`).
+    * time the same way (`a1_5_batch_s3_to_postgres.py:383-411`). The
+    * pending rows go through `TablePersist.appendPartitioned`, the one
+    * writer of the date-partitioned layout (salted clustering, at most
+    * `filesPerDate` files per date).
     */
   def idempotentAppendPartitioned(batch: DataFrame, targetPath: String,
-      keys: Seq[String], tsCol: String): Unit = {
-    val pending = pendingRows(batch, targetPath, keys, tsCol)
-    pending
-      // cluster by (partition value, within-date salt) before the
-      // partitionBy write (guide §6 hash write distribution): the anti-join
-      // upstream leaves the batch N-way partitioned, and an unclustered
-      // writer opens one file per date PER TASK — every later
-      // conflict-guard scan then pays the small-files listing+open tax.
-      // The salt (r18 ADVICE) keeps a single-date batch from collapsing to
-      // one writer task while bounding files per date.
-      .repartition(col("load_date"), graft.core.TablePersist.writeSalt(pending))
-      .write.mode("append").partitionBy("load_date").parquet(targetPath)
-  }
+      keys: Seq[String], tsCol: String): Unit =
+    graft.core.TablePersist.appendPartitioned(
+      pendingRows(batch, targetPath, keys, tsCol), targetPath, tsCol)
 
   private def targetExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

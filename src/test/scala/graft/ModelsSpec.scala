@@ -146,6 +146,8 @@ class ModelsSpec extends AnyFunSuite {
     assert(fct.columns.toSeq === expected)
     // every fact row's asset link resolves
     assert(fct.filter($"asset_hk".isNull || $"data_date".isNull).count() === 0)
+    // and so does its customer (personal and corporate alike)
+    assert(fct.filter($"customer_id".isNull).count() === 0)
   }
 
   test("fct_asset_prices harmonizes crypto+stock with asset_class per branch") {
@@ -222,10 +224,65 @@ class ModelsSpec extends AnyFunSuite {
 
   test("semantic overview reconciles with the raw transaction totals") {
     val overview = models.semanticCustomerOverview
-    val expectedTotal = raw.transactionPersonal.unionByName(raw.transactionCorporate)
+    val rawTx = raw.transactionPersonal.unionByName(raw.transactionCorporate)
+    val expectedTotal = rawTx
       .agg(sum($"transaction_amount".cast("decimal(20,2)"))).as[java.math.BigDecimal].head()
     val gotTotal = overview.agg(sum($"total_amount")).as[java.math.BigDecimal].head()
     assert(gotTotal === expectedTotal)
+    val expected = rawTx.groupBy($"customer_id")
+      .agg(count(lit(1)).as("n"), sum($"transaction_amount".cast("decimal(20,2)")).as("amt"))
+    val got = overview
+      .select($"customer_id", $"total_transactions".as("n"), $"total_amount".as("amt"))
+    assert(got.except(expected).count() === 0)
+    assert(expected.except(got).count() === 0)
+    assert(got.count() === expected.count())
     assert(models.semanticAssetOverview.filter($"n_news" > 0).count() === 2)
+  }
+
+  test("q_reference_dag is deterministic in the seed: two runs, equal rows") {
+    val run = () => SparkEntry.queries("q_reference_dag")(s, "")
+      .orderBy("customer_id").collect().toSeq
+    val first = run()
+    assert(first.nonEmpty)
+    assert(run() === first)
+  }
+
+  // The generator's own output, unmodified, through the same DAG: the raw
+  // tables q_reference_dag builds, at 200 customers and 1000 transactions.
+  private lazy val genTx = stamp(Generator.transactions(s, 1000, nCustomers = 200))
+  private lazy val generated = Models(Models.Raw(
+    transactionPersonal = genTx.filter($"customer_type" === "PERSONAL"),
+    transactionCorporate = genTx.filter($"customer_type" === "CORPORATE"),
+    customers = stamp(Generator.customers(s, 200)).withColumn("company_id", lit(null).cast("string")),
+    corporates = stamp(Generator.corporates(s, 40)),
+    news = stamp(Generator.news(s, cryptoSyms, perTicker = 10)),
+    cryptoPrices = Seq("binance", "coingecko", "yfinance").map(src =>
+      src -> Generator.cryptoPrices(s, cryptoSyms, 21, src).withColumn("load_timestamp", loadTs)).toMap,
+    stockPrices = Generator.stockPrices(s, stockSyms, 21).withColumn("load_timestamp", loadTs)))
+
+  test("hubs hold one row per business key with md5 hash keys") {
+    assert(generated.hubCustomer.count() === 200)
+    assert(generated.hubTransaction.count() === 1000)
+    assert(generated.hubCustomer.filter(!$"customer_hk".rlike("^[0-9a-f]{32}$")).count() === 0)
+  }
+
+  test("fact keeps the transaction grain and resolves every customer") {
+    assert(generated.fctTransactions.count() === 1000)
+    assert(generated.fctTransactions.filter($"customer_id".isNull).count() === 0)
+  }
+
+  test("semantic overview: per-customer totals reconcile with raw transactions") {
+    val expected = genTx.groupBy("customer_id")
+      .agg(count(lit(1)).as("n"), sum($"transaction_amount".cast("decimal(20,2)")).as("amt"))
+    val got = generated.semanticCustomerOverview
+      .select($"customer_id", $"total_transactions".as("n"), $"total_amount".as("amt"))
+    assert(got.except(expected).count() === 0)
+    assert(got.count() === expected.count())
+  }
+
+  test("every data-quality check passes on generated data") {
+    val failing = graft.quality.Checks.summary(graft.quality.ReferenceTests.all(generated))
+      .filter($"n_violations" > 0).as[(String, Long)].collect()
+    assert(failing.isEmpty, s"failing checks: ${failing.mkString(", ")}")
   }
 }

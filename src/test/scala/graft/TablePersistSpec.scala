@@ -17,7 +17,7 @@ class TablePersistSpec extends AnyFunSuite {
       .toDF("k", "load_timestamp", "v")
     TablePersist.appendPartitioned(rows, path, "load_timestamp", sortCols = Seq("k"))
 
-    val table = TablePersist.readPartitioned(TestSpark.spark, path)
+    val table = TestSpark.spark.read.parquet(path)
     val wm = Timestamp.valueOf("2024-01-25 12:00:00")
     val scan = TablePersist.aboveWatermarkPruned(table, "load_timestamp", wm)
 
