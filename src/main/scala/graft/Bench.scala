@@ -17,32 +17,34 @@ object Bench {
 
   private def log(line: String): Unit = System.err.println(s"[bench] $line")
 
-  /** Spark-free single-thread md5-chain throughput (M ops/s, ~3s): isolates
-    * raw core + memory-path speed from scheduler/stage-dispatch effects.
-    * This is the probe regime HOST_PROBE_r17.json calibrated. Its level is
-    * a property of the host (readings across hosts range from 2.0 to
-    * 8.9 M/s), so a reading means something only next to another reading
-    * from the same host. A memory-bandwidth co-tenant (the r17
-    * attempt-3 class) depresses this figure while task counters and guest
-    * loadavg still read idle: stalled cycles count as task CPU time. -1
-    * when the probe fails.
+  private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+  private def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The driver records a 2000-char stdout tail; the JSON line must fit. */
+  private val MaxLine = 1900
+
+  /** The one stdout JSON line: `value` is the sum of the successful lines'
+    * seconds; `queries` maps each line to its seconds, a failed line to its
+    * seconds negated. When the full map would overflow `MaxLine`, the
+    * fastest successes fold into one `q_other` sum until it fits. Failed
+    * lines fold last: a failing query stays visible by name, never a
+    * fake-fast timing.
     */
-  private def md5SingleMps(): Double =
-    try {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      var h = Array[Byte]('x')
-      var n = 0L
-      val t0 = System.nanoTime()
-      while (System.nanoTime() - t0 < 3e9.toLong) {
-        var i = 0
-        while (i < 10000) { h = md.digest(h); i += 1 }
-        n += 10000
-      }
-      n / ((System.nanoTime() - t0) / 1e9) / 1e6
-    } catch { case e: Throwable =>
-      log(s"md5 host probe failed: ${Runner.message(e)}")
-      -1.0
+  private[graft] def stdoutLine(results: Seq[(String, Double)], sfName: String, errors: Int): String = {
+    val total = results.map(_._2).filter(_ > 0).sum
+    val errSuffix = if (errors == 0) "" else s""","errors":$errors"""
+    // failures first, then successes slowest first: a prefix is kept
+    val keepOrder = results.sortBy { case (n, v) => (v > 0, -v, n) }
+    def line(kept: Int): String = {
+      val other = keepOrder.drop(kept).map(_._2).filter(_ > 0).sum
+      val entries = keepOrder.take(kept).sortBy(_._1)
+        .map { case (k, v) => "\"" + k + "\":" + f2(v) } ++
+        (if (other > 0) Seq("\"q_other\":" + f2(other)) else Nil)
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${
+        entries.mkString("{", ",", "}")},"sf":"$sfName"$errSuffix}"""
     }
+    (results.size to 1 by -1).iterator.map(line).find(_.length <= MaxLine).getOrElse(line(0))
+  }
 
   /** The first number in a /proc file (`/proc/loadavg`: load1,
     * `/proc/uptime`: seconds up), or -1 when it cannot be read; the failure
@@ -71,16 +73,6 @@ object Bench {
     // so contamination is only visible in the start value
     val load1Start = procFirst("/proc/loadavg", log)
 
-    // Denominator-side host probe, leading read (r17 verdict #1): the
-    // r17 attempt-3 incident proved a memory-bandwidth co-tenant can
-    // inflate every query line uniformly ~1.23x while guest loadavg reads
-    // idle, and no task counter sees it. Runs BEFORE any Spark job and
-    // outside every timed line. Read it against the trailing read and
-    // against earlier runs on the same host: a lead well apart from the
-    // trail, or both below the host's earlier readings, is bandwidth
-    // co-tenancy.
-    val hostMd5Lead = md5SingleMps()
-
     // Replicated-corpus bench factor: same registry policy the Verify gate
     // reads — queries whose quadratic pair OUTPUT is policy-capped below
     // this factor are skipped, so a factor-50 bench doesn't spend its wall
@@ -108,103 +100,22 @@ object Bench {
     // as its own line instead of landing on whichever consumer runs first
     // alphabetically — per-query numbers then measure the queries, not
     // cache attribution. A fill crash must not read as a fast success.
-    val fills = runner.fill()
-
-    // Fixed-work calibration: a deterministic CPU-bound pass over constant
-    // in-memory data — no I/O, no testdata dependency, identical work every
-    // round. Its time measures HOST speed only, so a round-over-round bench
-    // comparison can divide raw per-query deltas by the ratio of the two
-    // runs' q_calibration seconds to cancel uniform machine drift (three
-    // rounds running, the first read of BENCH_rN vs rN-1 was dominated by
-    // 10-15% uniform host drift that had to be reconstructed from medians
-    // of untouched queries). Warmed once like every other line so JIT is
-    // excluded.
-    def calibCpuFrame = {
-      import org.apache.spark.sql.functions._
-      spark.range(0L, 4000000L, 1L, 64)
-        .select((1 to 8).foldLeft(col("id").cast("string"))((c, _) => md5(c)).as("h"))
-        // decimal sum: 4M xxhash64 longs overflow a BIGINT sum under ANSI
-        .agg(sum(xxhash64(col("h")).cast("decimal(38,0)")).as("s"))
-    }
-    val calibration = {
-      try noop(calibCpuFrame)
-      catch { case e: Throwable => log(s"calibration warm-up failed: ${Runner.message(e)}") }
-      runner.line("q_calibration")(noop(calibCpuFrame))
-    }
-    // I/O-bound calibration twin (verdict r11 task #2): the CPU line above
-    // cannot see disk/page-cache drift — r11's idle-to-idle wall rose ~10%
-    // uniformly across untouched parquet-scan-heavy queries while
-    // q_calibration said the CPU was flat-to-faster. This line scans a
-    // CONSTANT uncompressed parquet directory at a fixed path (created
-    // deterministically if absent, so content is identical across rounds;
-    // it persists across rounds on the same host, so its page-cache state
-    // drifts exactly the way the testdata's does). Deliberately NOT
-    // warmed: a warmup pass would push it fully cache-hot and hide the
-    // very state this line exists to measure. Plain-encoded fixed-width
-    // columns keep decode cheap relative to the byte volume, so the time
-    // tracks the I/O path, not expression work.
-    val ioDir = sys.env.getOrElse("SPARK_GRAFT_CALIB_IO_DIR", "/tmp/graft_calib_io")
-    val calibrationIo = {
-      import org.apache.spark.sql.functions._
-      val setupError = try {
-        if (!new java.io.File(ioDir, "_SUCCESS").isFile)
-          spark.range(0L, 8000000L, 1L, 32)
-            .select(col("id"), xxhash64(col("id")).as("h"),
-              md5(col("id").cast("string")).as("s"))
-            .write.option("compression", "none").mode("overwrite").parquet(ioDir)
-        None
-      } catch { case e: Throwable => Some(e) }
-      runner.line("q_calibration_io") {
-        setupError.foreach(e => throw e)
-        noop(spark.read.parquet(ioDir))
-      }
-    }
     // Each memoized family is released right AFTER its last consumer's
     // line (the runner's release, outside the line), so no query's number
     // changes: the fill lines still carry the fills.
-    val lines = runner.map(q => noop(q.fn(spark, sfDir)))(identity)
-    val records = calibration +: calibrationIo +: (fills ++ lines)
-    // Denominator-side host probe, trailing read: same measurement as the
-    // lead, taken after the last timed line so the pair brackets the run.
-    // Session alive but idle; the post-run JVM carries a populated heap, so
-    // residual background GC can shave this reading slightly at a
-    // genuinely quiet host — read lead and trail together.
-    val hostMd5Trail = md5SingleMps()
-    // A failing query must be visible, never a fake-fast timing: its time is
-    // emitted as a NEGATIVE sentinel and its error lands in BENCH_DETAIL's
-    // "errors" map, so a regression can't masquerade as a speedup.
+    val records = runner.fill() ++ runner.map(q => noop(q.fn(spark, sfDir)))(identity)
+    // a failed line's time is a NEGATIVE sentinel and its error lands in
+    // BENCH_DETAIL's "errors" map, so a regression can't masquerade as a
+    // speedup
     val results = records.map(r => r.name -> (if (r.error.isEmpty) r.sec else -r.sec))
-    // The driver records a 2000-char stdout tail, so the JSON line must fit
-    // by construction: if the full per-query map would overflow, the
-    // smallest timings fold into one "q_other" aggregate until it fits
-    // (headline queries always stay visible). Full 3-decimal per-query
-    // detail goes to BENCH_DETAIL.json for the judge. stop() BEFORE println
-    // so no shutdown log line can land after the JSON — it must be the last
-    // line on stdout.
-    def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    // total counts successful queries only; failures are reported separately
     val total = results.map(_._2).filter(_ > 0).sum
     val sfName = new java.io.File(sfDir).getName
     val errors = records.flatMap(r => r.error.map(r.name -> _))
-    val errSuffix =
-      if (errors.isEmpty) "" else s""","errors":${errors.size}"""
-    def line(kept: Seq[(String, Double)], otherSum: Double): String = {
-      val entries = kept.map { case (k, v) => "\"" + k + "\":" + f2(v) } ++
-        (if (otherSum > 0) Seq("\"q_other\":" + f2(otherSum)) else Nil)
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":${
-        entries.mkString("{", ",", "}")},"sf":"$sfName"$errSuffix}"""
-    }
-    val byTimeDesc = results.sortBy { case (n, v) => (-v, n) }
-    val fits = (0 to results.size).iterator
-      .map(n => line(byTimeDesc.take(n).sortBy(_._1),
-        byTimeDesc.drop(n).map(_._2).filter(_ > 0).sum))
-      .zipWithIndex.toSeq.reverse
-      .collectFirst { case (l, _) if l.length <= 1900 => l }
+    // full 3-decimal per-line detail goes to BENCH_DETAIL.json
     try {
       def obj(kvs: Seq[(String, String)]): String =
         kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val detail = obj(results.map { case (k, v) => k -> f(v) })
+      val detail = obj(results.map { case (k, v) => k -> f3(v) })
       // machine load: bench totals are load-sensitive (+0.5 s/query uniform
       // drift observed under background load), so the number is only
       // interpretable next to load1_start (pre-run background load; the
@@ -226,17 +137,17 @@ object Bench {
       val tStartJson = obj(records.map(r => r.name -> f2(r.start)))
       val countersJson = obj(records.map(r => r.name -> obj(r.counters)))
       val howToRead = "A line whose tasks waited for a CPU or I/O co-tenant reads a low " +
-        "task_cpu_s/task_run_s in counters at its t_start window, while a memory-bandwidth " +
-        "co-tenant slows every line with normal counters and shows as host_md5_mps_lead " +
-        "apart from host_md5_mps_trail, or both below earlier runs on the same host."
+        "task_cpu_s/task_run_s in counters at its t_start window."
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_DETAIL", "/root/repo/BENCH_DETAIL.json")),
-        s"""{"total_sec":${f(total)},"sf":"$sfName","cpus":$cpus,"load1_start":${f2(load1Start)},"load1":${f2(load1)},"uptime_sec":${f(uptimeSec)},"host_md5_mps_lead":${f(hostMd5Lead)},"host_md5_mps_trail":${f(hostMd5Trail)},"warmup_sec":${f(warmupSec)},"gate_factor":$gateFactor,"policy_skips":$skipJson,"how_to_read":"$howToRead","t_start":$tStartJson,"counters":$countersJson,"errors":$errJson,"queries":$detail}""" + "\n")
+        s"""{"total_sec":${f3(total)},"sf":"$sfName","cpus":$cpus,"load1_start":${f2(load1Start)},"load1":${f2(load1)},"uptime_sec":${f3(uptimeSec)},"warmup_sec":${f3(warmupSec)},"gate_factor":$gateFactor,"policy_skips":$skipJson,"how_to_read":"$howToRead","t_start":$tStartJson,"counters":$countersJson,"errors":$errJson,"queries":$detail}""" + "\n")
     } catch { case e: Throwable =>
       log(s"BENCH_DETAIL write failed: ${Runner.message(e)}")
     }
+    // stop() BEFORE println so no shutdown log line can land after the
+    // JSON — it must be the last line on stdout
     spark.stop()
-    println(fits.getOrElse(line(Seq.empty, total)))
+    println(stdoutLine(results, sfName, errors.size))
   }
 }

@@ -112,10 +112,10 @@ object Runner {
   /** What one line did. `start` is seconds from the run's first line;
     * `sec` its wall time; `error` what it threw. The counters cover the
     * jobs the line started: stages and tasks completed, shuffle read and
-    * write, disk spill, task CPU, run and GC time, and `gapS`, the wall
-    * time no job of the line was running (driver-side planning, listing,
-    * collection and scheduling gaps). `taskCpuS / taskRunS` drops on a line
-    * whose tasks waited for a CPU or I/O co-tenant.
+    * write and disk spill in bytes, task CPU, run and GC time, and `gapS`,
+    * the wall time no job of the line was running (driver-side planning,
+    * listing, collection and scheduling gaps). `taskCpuS / taskRunS`
+    * drops on a line whose tasks waited for a CPU or I/O co-tenant.
     */
   final case class Line(
       name: String,
@@ -125,9 +125,9 @@ object Runner {
       jobs: Seq[Job],
       stages: Long,
       tasks: Long,
-      shuffleReadMb: Double,
-      shuffleWriteMb: Double,
-      spillMb: Double,
+      shuffleReadBytes: Long,
+      shuffleWriteBytes: Long,
+      spillBytes: Long,
       taskCpuS: Double,
       taskRunS: Double,
       gcS: Double,
@@ -137,9 +137,9 @@ object Runner {
     def counters: Seq[(String, String)] = {
       def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
       Seq("jobs" -> jobs.size.toString, "stages" -> stages.toString, "tasks" -> tasks.toString,
-        "shuffle_read_mb" -> f(shuffleReadMb), "shuffle_write_mb" -> f(shuffleWriteMb),
-        "spill_mb" -> f(spillMb), "task_cpu_s" -> f(taskCpuS), "task_run_s" -> f(taskRunS),
-        "gc_s" -> f(gcS), "gap_s" -> f(gapS))
+        "shuffle_read_bytes" -> shuffleReadBytes.toString,
+        "shuffle_write_bytes" -> shuffleWriteBytes.toString, "spill_bytes" -> spillBytes.toString,
+        "task_cpu_s" -> f(taskCpuS), "task_run_s" -> f(taskRunS), "gc_s" -> f(gcS), "gap_s" -> f(gapS))
     }
   }
 
@@ -158,8 +158,6 @@ object Runner {
     Option(e.getMessage).getOrElse(e.getClass.getName)
 
   private def stderr(line: String): Unit = System.err.println(s"[runner] $line")
-
-  private val MB = 1024.0 * 1024.0
 
   /** Milliseconds of [t0, t1] that none of `spans` covers. */
   private[graft] def uncovered(t0: Long, t1: Long, spans: Seq[(Long, Long)]): Long = {
@@ -211,7 +209,7 @@ object Runner {
       val js = jobs.values.asScala.toSeq.sortBy(_.start)
         .map(j => if (j.end < 0) j.copy(end = wall1) else j)
       Line(name, start, sec, error, js, stages.sum, tasks.sum,
-        shuffleRead.sum / MB, shuffleWrite.sum / MB, spill.sum / MB,
+        shuffleRead.sum, shuffleWrite.sum, spill.sum,
         cpuNs.sum / 1e9, runMs.sum / 1e3, gcMs.sum / 1e3,
         uncovered(wall0, wall1, js.map(j => (j.start, j.end))) / 1e3)
     }

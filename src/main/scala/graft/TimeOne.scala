@@ -9,15 +9,15 @@ import graft.queries.Q
   * named registered queries in isolation with EXACTLY Bench's methodology
   * (same session, the [[Runner]]'s sf0.001 warm-up pass, shared fills and
   * per-line record, noop sink) so a single query can be measured
-  * before/after a change without paying the full 172-line surface. Not
+  * before/after a change without paying the full 170-line surface. Not
   * part of the driver contract — measurement tooling only (guide §1.1:
   * isolate the expensive query, then optimize that one thing).
   *
   * Each rep is one runner line. The last rep's counters (jobs, stages,
-  * tasks, shuffle, spill, task CPU/run/GC time, driver gap) are printed:
-  * the quantitative evidence for shuffle-removal claims — sf0.1 wall-clock
-  * alone is fixed-cost- and host-noise-dominated. `--jobs` adds the last
-  * rep's job timeline.
+  * tasks, shuffle read/write and spill bytes, task CPU/run/GC time, driver
+  * gap) are printed: the quantitative evidence for shuffle-removal claims —
+  * sf0.1 wall-clock alone is fixed-cost- and host-noise-dominated.
+  * `--jobs` adds the last rep's job timeline.
   *
   * A memoized family the named queries read is filled first, on its own
   * `(fill)` line, so their lines measure the query, not the shared fill;

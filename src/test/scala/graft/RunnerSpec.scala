@@ -6,6 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestListeners
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Graft
@@ -101,6 +102,11 @@ class RunnerSpec extends AnyFunSuite {
       Seq(("one", 1, 1L, 2L), ("three", 3, 3L, 6L)))
     assert(lines.forall(l => l.error.isEmpty && l.taskRunS >= 0 && l.gapS >= 0 && l.gapS <= l.sec + 0.002))
     assert(lines(1).start >= lines(0).start + lines(0).sec)
+    assert(lines.forall(l => l.shuffleReadBytes == 0 && l.shuffleWriteBytes == 0))
+    val grouped = runner().line("grouped") {
+      TestSpark.spark.range(0, 100, 1, 2).groupBy(col("id") % 3).count().collect()
+    }
+    assert(grouped.shuffleReadBytes > 0 && grouped.shuffleWriteBytes > 0, grouped)
   }
 
   test("a failing line keeps its error and counters; the next line does not inherit them") {
