@@ -60,6 +60,12 @@ object Bench {
     }
 
   def main(args: Array[String]): Unit = {
+    // background load BEFORE the bench's own threads contribute, Spark's
+    // start-up included: the end-of-run load1 always reads high (~cpus
+    // after a saturating run), so contamination is only visible in the
+    // start value
+    val load1Start = procFirst("/proc/loadavg", log)
+
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.Graft.localCpus
     val spark = graft.core.Graft.session(s"local[$cpus]", "graft-bench")
@@ -67,11 +73,6 @@ object Bench {
     // build.sbt outputStrategy) and the driver captures a merged tail — WARN
     // chatter would push the JSON line out of its window.
     spark.sparkContext.setLogLevel("ERROR")
-
-    // background load BEFORE the bench's own threads contribute: the
-    // end-of-run load1 always reads high (~cpus after a saturating run),
-    // so contamination is only visible in the start value
-    val load1Start = procFirst("/proc/loadavg", log)
 
     // Replicated-corpus bench factor: same registry policy the Verify gate
     // reads — queries whose quadratic pair OUTPUT is policy-capped below
@@ -137,7 +138,8 @@ object Bench {
       val tStartJson = obj(records.map(r => r.name -> f2(r.start)))
       val countersJson = obj(records.map(r => r.name -> obj(r.counters)))
       val howToRead = "A line whose tasks waited for a CPU or I/O co-tenant reads a low " +
-        "task_cpu_s/task_run_s in counters at its t_start window."
+        "task_cpu_s/task_run_s in counters at its t_start window. load1_start is read " +
+        "before Spark starts; under sbt runMain it still includes sbt's own start-up."
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_DETAIL", "/root/repo/BENCH_DETAIL.json")),

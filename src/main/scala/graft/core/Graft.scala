@@ -17,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Graft {
 
   /** The engine's one session: every main (Bench, Verify, TimeOne, PlanDump,
-    * ScaleGen) and the benchmark harness build through here, so
-    * their configs cannot drift apart. Idempotent: a second call returns the
+    * ScaleGen), the benchmark harness and the test suite build through
+    * here, so their configs cannot drift apart. Idempotent: a second call returns the
     * running session with the same settings applied.
     */
   def session(master: String = "local[*]", app: String = "graft"): SparkSession = {

@@ -7,36 +7,44 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
 /** The ids of one group as bigints, or null once the group's population
   * exceeds `cap` — the bounded-buffer aggregate behind LSH candidate
-  * generation (`TextDedup.candidatePairs`).
+  * generation (`TextDedup.candidatePairs`, `TextDedup.crossCorpusDupPairs`).
   *
-  * The buffer holds the population (every input row counts, a null id
-  * too) and a growable `long[]` of the non-null ids. The row that takes
-  * the population past `cap` drops the ids for good and the buffer keeps
-  * only the count; `merge` adds the populations and concatenates the id
-  * lists only while the total is at most `cap`. So no buffer ever holds
-  * more than `cap` ids, and a partial aggregate ships at most one such
-  * buffer per group and map partition: a degenerate group (boilerplate
-  * text in one LSH bucket) travels as counts, never as its rows. The
-  * serialized buffer is longs: the population, then the ids.
+  * Every input row adds its `weight` (a positive bigint) to the
+  * population, a null-id row too: 1 per row counts rows, a family size per
+  * representative counts the docs the family stands for. The buffer holds
+  * the population and a growable `long[]` of the non-null ids. The row
+  * that takes the population past `cap` drops the ids for good and the
+  * buffer keeps only the count; `merge` adds the populations and
+  * concatenates the id lists only while the total is at most `cap`. Each
+  * id weighs at least 1, so no buffer ever holds more than `cap` ids, and
+  * a partial aggregate ships at most one such buffer per group and map
+  * partition: a degenerate group (boilerplate text in one LSH bucket)
+  * travels as counts, never as its rows. The serialized buffer is longs:
+  * the population, then the ids.
   *
   * Output: array<bigint> of the ids, in no particular order, or null when
-  * the group was over the cap. Null input → counted, not listed.
+  * the group was over the cap. Null input → counted, not listed. A null or
+  * non-positive weight fails the task.
   */
 case class CappedIdList(
     child: Expression,
+    weight: Expression,
     cap: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[CappedIdList.Buffer]
-    with UnaryLike[Expression] {
+    with BinaryLike[Expression] {
   import CappedIdList.Buffer
+
+  override def left: Expression = child
+  override def right: Expression = weight
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
@@ -45,7 +53,10 @@ case class CappedIdList(
   override def createAggregationBuffer(): Buffer = new Buffer(0L, new Array[Long](0), 0)
 
   override def update(b: Buffer, input: InternalRow): Buffer = {
-    b.population += 1
+    val w = weight.eval(input)
+    if (w == null || w.asInstanceOf[Long] < 1)
+      throw new IllegalArgumentException(s"$prettyName: weight must be a positive bigint, got $w")
+    b.population += w.asInstanceOf[Long]
     if (b.population > cap) b.ids = null
     else {
       val id = child.eval(input)
@@ -102,8 +113,8 @@ case class CappedIdList(
   override def withNewInputAggBufferOffset(newOffset: Int): CappedIdList =
     copy(inputAggBufferOffset = newOffset)
 
-  override protected def withNewChildInternal(newChild: Expression): CappedIdList =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CappedIdList =
+    copy(child = newLeft, weight = newRight)
 }
 
 object CappedIdList {
@@ -111,9 +122,12 @@ object CappedIdList {
   /** Population, and the first `size` slots of `ids` (null once over the cap). */
   final class Buffer(var population: Long, var ids: Array[Long], var size: Int)
 
-  /** Column API: the ids per group, cast to bigint, or null over `cap` rows. */
-  def apply(ids: Column, cap: Int): Column =
-    Bridge.column(CappedIdList(Bridge.expression(ids.cast(LongType)), cap).toAggregateExpression())
+  /** Column API: the ids per group, cast to bigint, or null once the
+    * weights, cast to bigint, sum past `cap`.
+    */
+  def apply(ids: Column, weights: Column, cap: Int): Column =
+    Bridge.column(CappedIdList(Bridge.expression(ids.cast(LongType)),
+      Bridge.expression(weights.cast(LongType)), cap).toAggregateExpression())
 }
 
 /** Every unordered pair of distinct ids in an array<bigint>, one row

@@ -717,11 +717,12 @@ object Multimodal {
     * (width, height, channels, per-channel pixel means). None on
     * unreadable/unsupported bytes (`ImageIO.read` null or throw).
     *
-    * The means are computed from the decoded ARGB raster, so they are
-    * bit-stable for a given JRE; lossy-codec output can differ ACROSS
-    * codec versions, which is why the oracle fixtures are flat-gray JPEGs
-    * (DC-only blocks — quantization round-trips them exactly; verified
-    * for all 256 grays and partial edge blocks in MultimodalSpec).
+    * The means are of the decoded raster's samples (top 8 bits; palette
+    * colors for GIF), so they are bit-stable for a given JRE; lossy-codec
+    * output can differ ACROSS codec versions, which is why the oracle
+    * fixtures are flat-gray JPEGs (DC-only blocks — quantization
+    * round-trips them exactly; verified for all 256 grays and partial edge
+    * blocks in MultimodalSpec).
     */
   private[graft] def decodeImageIO(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Double])] =
     try {
@@ -747,24 +748,22 @@ object Multimodal {
       } finally iis.close()
       if (img == null) None
       else {
-        val w = img.getWidth
-        val h = img.getHeight
-        val ch = if (img.getColorModel.getNumComponents >= 3) 3 else 1
-        val sums = new Array[Long](3)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            sums(0) += (rgb >> 16) & 0xff
-            sums(1) += (rgb >> 8) & 0xff
-            sums(2) += rgb & 0xff
-            x += 1
-          }
-          y += 1
+        // means of the raster samples, not of getRGB, which converts a
+        // linear-gray raster to sRGB (sample 10 reads 56); a palette raster
+        // holds indices, so it is expanded to its RGB colors first
+        val rgb = img.getColorModel match {
+          case icm: java.awt.image.IndexColorModel => icm.convertToIntDiscrete(img.getRaster, false)
+          case _ => img
         }
-        val n = w.toLong * h
-        Some((w, h, ch, sums.map(_.toDouble / n)))
+        val (w, h, cm, raster) = (rgb.getWidth, rgb.getHeight, rgb.getColorModel, rgb.getRaster)
+        val ch = if (cm.getNumComponents >= 3) 3 else 1
+        val means = Array.tabulate(ch) { b =>
+          val shift = math.max(0, cm.getComponentSize(b) - 8)
+          var sum = 0L
+          for (y <- 0 until h; x <- 0 until w) sum += raster.getSample(x, y, b) >> shift
+          sum.toDouble / (w.toLong * h)
+        }
+        Some((w, h, ch, means))
       }
     } catch { case _: Exception => None }
 

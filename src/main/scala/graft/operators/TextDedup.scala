@@ -19,15 +19,17 @@ import graft.functions.{CappedIdList, IdPairs, IntersectCardSorted, MinHashSigna
   *     over one pass of the banded frame — classic LSH banding, so only
   *     same-bucket docs ever meet and the all-pairs O(n²) never
   *     materializes; each bucket's ids are collected and its pairs are
-  *     generated per row, with no self-join;
+  *     generated per row, with no self-join. Cross-corpus pairs run the
+  *     same aggregate per side and join the two sides at bucket grain;
   *   - a per-bucket cap (`bucketCap`) guards against degenerate buckets
   *     (boilerplate text) producing quadratic blowup — over-cap buckets are
-  *     dropped, the standard production trade-off. The aggregate's buffer
-  *     holds at most `bucketCap` ids and keeps only a count past it, so a
-  *     degenerate bucket crosses the shuffle as at most one bounded buffer
-  *     per map partition, never as its rows;
+  *     dropped, the standard production trade-off. The cap is the
+  *     aggregate's (`CappedIdList`), for self and cross pairs alike: its
+  *     buffer holds at most `bucketCap` ids and keeps only a count past it,
+  *     so a degenerate bucket crosses the shuffle as at most one bounded
+  *     buffer per map partition, never as its rows;
   *   - exact-Jaccard verification joins shingle sets only for the candidate
-  *     pairs (two hash joins on doc id).
+  *     pairs (two hash joins on doc id, one helper for every caller).
   *
   * Two hash families:
   *   - `HexMd5` — one md5-derived 28-bit base per shingle permuted by exact
@@ -118,7 +120,7 @@ object TextDedup {
     banded
       .filter(col("band").isNotNull && col("band_hash").isNotNull)
       .groupBy(col("band"), col("band_hash"))
-      .agg(CappedIdList(col(idCol), bucketCap).as("__ids"))
+      .agg(CappedIdList(col(idCol), lit(1), bucketCap).as("__ids"))
       .select(IdPairs(col("__ids")))
       .select(col("a").cast(idType).as("a_id"), col("b").cast(idType).as("b_id"))
       .distinct()
@@ -159,6 +161,24 @@ object TextDedup {
   private[graft] def jaccardFromInter(inter: Column, na: Column, nb: Column): Column =
     inter.cast("double") / nullif(na + nb - inter, lit(0)).cast("double")
 
+  /** Exact-Jaccard verify of candidate pairs: `aSets` is (key a, `__sa`)
+    * and `bSets` (key b, `__sb`), each set a sorted distinct hash array;
+    * the candidates join `aSets` on a, then `bSets` on b, and the pairs
+    * with jaccard >= threshold come out as (a, b, jaccard). Join hints ride
+    * on the frames the caller passes.
+    */
+  private[graft] def verified(cands: DataFrame, aSets: DataFrame, bSets: DataFrame,
+      threshold: Double): DataFrame = {
+    val (a, b) = (aSets.columns.head, bSets.columns.head)
+    cands
+      .join(aSets, Seq(a))
+      .join(bSets, Seq(b))
+      .withColumn("__i", IntersectCardSorted(col("__sa"), col("__sb")))
+      .withColumn("jaccard", jaccardFromInter(col("__i"), size(col("__sa")), size(col("__sb"))))
+      .filter(col("jaccard") >= threshold)
+      .select(col(a), col(b), col("jaccard"))
+  }
+
   /** Verify candidate pairs with exact Jaccard over distinct shingle sets;
     * keeps pairs with jaccard >= threshold.
     */
@@ -176,40 +196,34 @@ object TextDedup {
     // list is bounded by the LSH bucket cap and broadcasts for free). At
     // persistent-pipeline scale, materialize `sets` once (it is the
     // signature table) and both joins become cheap probes.
-    pairs
-      .join(sets.select(col(idCol).as("a_id"), col("__set").as("__sa")), Seq("a_id"))
-      .join(sets.select(col(idCol).as("b_id"), col("__set").as("__sb")), Seq("b_id"))
-      .withColumn("__i", IntersectCardSorted(col("__sa"), col("__sb")))
-      .withColumn("jaccard", jaccardFromInter(col("__i"), size(col("__sa")), size(col("__sb"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
+    verified(pairs,
+      sets.select(col(idCol).as("a_id"), col("__set").as("__sa")),
+      sets.select(col(idCol).as("b_id"), col("__set").as("__sb")),
+      threshold)
   }
 
   /** Cross-corpus near-duplicate pairs — MinHash-LSH DECONTAMINATION: find
     * training documents that fuzzily duplicate evaluation documents (the
     * near-dup complement of the exact n-gram `Curation.contamination`;
     * paraphrased or lightly-edited leakage that exact gram containment
-    * misses). Same banding/verify discipline as the self-join form, but the
-    * band-bucket join runs LEFT x RIGHT across the two corpora — candidate
-    * work is bounded by bucket caps per side and output by true cross-dup
-    * mass, never |train| x |eval|. Downstream: `left_anti` the training
+    * misses). Each side's bucket ids come from the capped aggregate of
+    * `candidatePairs`, the two sides join at bucket grain (LEFT x RIGHT),
+    * and each matched bucket's two id lists explode into its pairs, so
+    * candidate work is bounded by the bucket cap per side, never
+    * |train| x |eval|. The eval side is typically tiny (benchmark suites),
+    * so its bucket lists broadcast. Downstream: `left_anti` the training
     * corpus on `a_id` to strip the flagged docs.
     *
-    * Scale note: the eval side is typically tiny (benchmark suites) — its
-    * capped banded frame broadcasts, so the training corpus is touched by
-    * one map-side join plus the verify probes.
+    * Runs internally at FAMILY grain: every stage — shingles, signature,
+    * band hashes, exact-Jaccard verify — is a pure function of the text, so
+    * docs with identical text on a side form a lossless family. Banding,
+    * the bucket cap (weighted by family size, so it drops the buckets the
+    * doc-grain cap drops), candidates and verify run once per distinct
+    * text per side, and family pairs expand to doc pairs at the end: on a
+    * corpus replicated f times only the OUTPUT grows f²-fold.
     *
-    * Runs internally at FAMILY grain (the r9 lesson, applied engine-side):
-    * every stage — shingles, minhash signature, band hashes, exact-Jaccard
-    * verify — is a pure function of the text, so docs with identical text
-    * on a side form a lossless family. Banding, the bucket cap (counted
-    * member-WEIGHTED, sum of family sizes, so cap behavior is byte-identical
-    * to the doc-grain formulation), candidate generation, and verification
-    * all run once per distinct text per side; family pairs expand to doc
-    * pairs at the end. On a duplicate-saturated corpus (replication factor
-    * f) the doc-grain candidate set grows f²-quadratically — only the
-    * OUTPUT is inherently f²-sized here, and expansion produces it from
-    * base-bounded verify work.
+    * @throws IllegalArgumentException if either side's id column is not
+    *         integral; the message names the column.
     */
   def crossCorpusDupPairs(
       left: DataFrame,
@@ -222,70 +236,43 @@ object TextDedup {
       threshold: Double = 0.7,
       family: HashFamily = Xx64,
       bucketCap: Int = 1000): DataFrame = {
-    def bandedOf(df: DataFrame): DataFrame = {
-      val toks = TextFns.tokens(col(textCol))
-      bandedSignatures(df, idCol, TextFns.wordShingles(toks, shingleWords),
-        bands, rowsPerBand, family)
-    }
-    // per-SIDE families (the same text may appear on both sides — its two
-    // side-families then pair through banding + verify at jaccard 1.0,
-    // exactly as the doc-grain pairs did). Member ids are NOT aggregated
-    // into a per-family array (r18 shipped collect_list here; a mega-family
-    // — boilerplate text repeated across a 100 TB corpus — would
-    // concentrate every member id in ONE aggregation row and blow a single
-    // task's memory, r18 ADVICE). Membership is recovered by an id-only
-    // re-join keyed on md5(text) instead (see memL/memR below): keys and
-    // ids cross the shuffle, never the text payload and never an unbounded
-    // buffer (guide §2.3 — shuffle keys/metadata, not payloads).
+    val typeL = ConnectedComponents.integralType(left, idCol, "cross-corpus pairs: left id")
+    val typeR = ConnectedComponents.integralType(right, idCol, "cross-corpus pairs: right id")
+    val toks = TextFns.tokens(col(textCol))
+    // per-SIDE families of identical text (the same text on both sides
+    // pairs through banding + verify at jaccard 1.0, as its docs would).
+    // Members are never collected per family: a mega-family (boilerplate
+    // repeated across a 100 TB corpus) would put every member id in ONE
+    // aggregation row. They come back through an id-only re-join on
+    // md5(text) (memL/memR below): keys and ids cross the shuffle, never
+    // the text payload and never an unbounded buffer.
     def famOf(df: DataFrame): DataFrame = df
       .groupBy(col(textCol))
       .agg(min(col(idCol)).as("__gid"), count(lit(1)).as("__m"))
     val famL = Materialize.cache(famOf(left))
     val famR = Materialize.cache(famOf(right))
-    def repsOf(fam: DataFrame): DataFrame =
-      fam.select(col("__gid").as(idCol), col(textCol))
-    // the cap must drop a bucket when its DOC population (sum of member
-    // counts), not its family count, exceeds bucketCap — the buckets
-    // `candidatePairs`' cap drops on the doc-grain banded frame
-    def cappedW(fam: DataFrame): DataFrame = {
-      val banded = bandedOf(repsOf(fam))
-        .join(fam.select(col("__gid").as(idCol), col("__m")), Seq(idCol))
-      val over = banded
+    // each side's capped bucket lists; the banding id is the (gid, member
+    // count) struct, so each band row carries its family's weight
+    def bucketsOf(fam: DataFrame, ids: String): DataFrame =
+      bandedSignatures(fam.select(struct(col("__gid"), col("__m")).as("__fam"), col(textCol)),
+        "__fam", TextFns.wordShingles(toks, shingleWords), bands, rowsPerBand, family)
         .groupBy(col("band"), col("band_hash"))
-        .agg(sum(col("__m")).as("__n"))
-        .filter(col("__n") > bucketCap)
-        .select(col("band"), col("band_hash"))
-      banded.join(over, Seq("band", "band_hash"), "left_anti")
-    }
-    val cands = cappedW(famL)
-      .select(col("band"), col("band_hash"), col(idCol).as("__ga"))
-      .join(cappedW(famR)
-        .select(col("band"), col("band_hash"), col(idCol).as("__gb")),
-        Seq("band", "band_hash"))
-      .select(col("__ga"), col("__gb"))
+        .agg(CappedIdList(col("__fam.__gid"), col("__fam.__m"), bucketCap).as(ids))
+        .filter(col(ids).isNotNull)
+    val cands = bucketsOf(famL, "__la")
+      .join(bucketsOf(famR, "__lb"), Seq("band", "band_hash"))
+      .select(explode(col("__la")).as("__ga"), col("__lb"))
+      .select(col("__ga"), explode(col("__lb")).as("__gb"))
+      .select(col("__ga").cast(typeL).as("__ga"), col("__gb").cast(typeR).as("__gb"))
       .distinct()
-    val aSets = hashedNgramSets(repsOf(famL), idCol, Seq(),
-      TextFns.tokens(col(textCol)), shingleWords)
-      .select(col(idCol).as("__ga"), col("__set").as("__sa"))
-    val bSets = hashedNgramSets(repsOf(famR), idCol, Seq(),
-      TextFns.tokens(col(textCol)), shingleWords)
-      .select(col(idCol).as("__gb"), col("__set").as("__sb"))
-    val famPairs = cands
-      .join(aSets, Seq("__ga"))
-      .join(bSets, Seq("__gb"))
-      .withColumn("__i", IntersectCardSorted(col("__sa"), col("__sb")))
-      .withColumn("jaccard", jaccardFromInter(col("__i"), size(col("__sa")), size(col("__sb"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("__ga"), col("__gb"), col("jaccard"))
-    // membership expansion: map each verified family pair back to doc ids
-    // via a 128-bit text digest, NOT via the text payload (the pre-r18
-    // shape re-shuffled every document's full text bytes) and NOT via a
-    // per-family collect_list array (the r18 shape — unbounded single-row
-    // buffer on a mega-family). The digest joins are exact for all
-    // practical purposes (an md5 collision between two distinct corpus
-    // texts is ~2^-64 at billions of docs — same standing as the xxhash64
-    // shingle identity above); each doc contributes one (16-byte key, id)
-    // row, so no task ever holds a family's membership in memory at once.
+    def setsOf(fam: DataFrame, key: String, set: String): DataFrame =
+      hashedNgramSets(fam, "__gid", Seq(), toks, shingleWords)
+        .select(col("__gid").as(key), col("__set").as(set))
+    val famPairs = verified(cands, setsOf(famL, "__ga", "__sa"), setsOf(famR, "__gb", "__sb"),
+      threshold)
+    // membership expansion: family pairs map back to doc ids through a
+    // 128-bit text digest (collision odds ~2^-64 at billions of docs), one
+    // (key, id) row per doc, so no task holds a family's membership at once
     val keyL = famL.select(col("__gid").as("__ga"), md5(col(textCol)).as("__tka"))
     val keyR = famR.select(col("__gid").as("__gb"), md5(col(textCol)).as("__tkb"))
     val memL = left.select(md5(col(textCol)).as("__tka"), col(idCol).as("a_id"))
@@ -434,11 +421,12 @@ object TextDedup {
     // on the probe, so the ~O(block²) non-matching pairs are never
     // materialized as output rows — with multi-KB set arrays per row that
     // materialization, not the merge walks, dominated the runtime.
+    val jaccard = jaccardFromInter(IntersectCardSorted(col("__sa"), col("__sb")),
+      col("__na"), col("__nb"))
     val cond = col("__blk") === col("__blk2") &&
       col("__ga") < col("__gb") &&
       col("__na") >= col("__nb") * threshold && col("__nb") >= col("__na") * threshold &&
-      jaccardFromInter(IntersectCardSorted(col("__sa"), col("__sb")),
-        col("__na"), col("__nb")) >= threshold
+      jaccard >= threshold
     // broadcast build over the cached representatives, NOT a join shuffled
     // on the block key: with a handful of blocks, hash partitioning
     // degenerates to one task per block and the dominant block's
@@ -446,8 +434,7 @@ object TextDedup {
     // keeps every cache partition working. (Bounded-block operator: the
     // build side is small by contract, see the header.)
     val famPairs = l.join(broadcast(r), cond)
-      .select(col("__ga"), col("__gb"), jaccardFromInter(
-        IntersectCardSorted(col("__sa"), col("__sb")), col("__na"), col("__nb")).as("jaccard"))
+      .select(col("__ga"), col("__gb"), jaccard.as("jaccard"))
     // expand family pairs to doc pairs; family ids don't order like member
     // ids, so the canonical (a_id < b_id) orientation is re-derived
     val cross = famPairs

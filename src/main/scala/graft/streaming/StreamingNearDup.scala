@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Materialize
-import graft.functions.{IntersectCardSorted, TextFns}
+import graft.functions.TextFns
 import graft.operators.TextDedup
 
 /** Streaming near-duplicate detection: each micro-batch of incoming
@@ -27,7 +27,7 @@ import graft.operators.TextDedup
   */
 object StreamingNearDup {
 
-  /** Immutable corpus-side index: banded signatures + hashed shingle sets. */
+  /** Immutable corpus-side index: banded signatures + hashed shingle sets (`__sb`). */
   final case class Index(
       banded: DataFrame,
       sets: DataFrame,
@@ -59,7 +59,7 @@ object StreamingNearDup {
       .withColumnRenamed(idCol, "corpus_id"))
     val sets = Materialize.pin(TextDedup
       .hashedNgramSets(corpus, idCol, Seq(), toks, shingleWords)
-      .select(col(idCol).as("corpus_id"), col("__set").as("__cs")))
+      .select(col(idCol).as("corpus_id"), col("__set").as("__sb")))
     Index(banded, sets, shingleWords, bands, rowsPerBand, threshold, family)
   }
 
@@ -79,15 +79,8 @@ object StreamingNearDup {
       .distinct()
     val batchSets = TextDedup
       .hashedNgramSets(batch, idCol, Seq(), toks, index.shingleWords)
-      .select(col(idCol), col("__set").as("__bs"))
-    broadcast(cands)
-      .join(broadcast(batchSets), Seq(idCol))
-      .join(index.sets, Seq("corpus_id"))
-      .withColumn("__i", IntersectCardSorted(col("__bs"), col("__cs")))
-      .withColumn("jaccard",
-        TextDedup.jaccardFromInter(col("__i"), size(col("__bs")), size(col("__cs"))))
-      .filter(col("jaccard") >= index.threshold)
-      .select(col(idCol), col("corpus_id"), col("jaccard"))
+      .select(col(idCol), col("__set").as("__sa"))
+    TextDedup.verified(broadcast(cands), broadcast(batchSets), index.sets, index.threshold)
   }
 
   /** Attach the detector to a document stream; matches are appended

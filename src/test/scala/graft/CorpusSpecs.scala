@@ -536,6 +536,21 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
+  test("decodeImageIO: a gray PNG and a gray JPEG read their own gray level") {
+    // a linear-gray raster read through getRGB comes back sRGB-converted
+    // (sample 10 reads 56); the means must be the samples themselves
+    for (format <- Seq("png", "jpg")) {
+      val img = new java.awt.image.BufferedImage(
+        9, 7, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      for (y <- 0 until 7; x <- 0 until 9) img.getRaster.setSample(x, y, 0, 10)
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, format, bos), format)
+      val Some((w, h, ch, means)) = Multimodal.decodeImageIO(bos.toByteArray)
+      assert((w, h, ch) === ((9, 7, 1)), format)
+      assert(means(0) === 10.0, format)
+    }
+  }
+
   test("decodeImageIO: rejects junk, decodes our own PNG fixture bytes too") {
     assert(Multimodal.decodeImageIO("not an image".getBytes).isEmpty)
     assert(Multimodal.decodeImageIO(Array.emptyByteArray).isEmpty)

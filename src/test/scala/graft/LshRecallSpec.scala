@@ -1,13 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{MinHashSignature, TextFns}
+import graft.functions.{CappedIdList, MinHashSignature, TextFns}
 import graft.operators.TextDedup
 
 /** Statistical contract of the MinHash-LSH pipeline against exact
@@ -34,7 +35,7 @@ class LshRecallSpec extends AnyFunSuite {
       .toDF("doc_id", "band", "band_hash")
 
   /** k partitions' worth of `rows`: row i in slice i mod k. */
-  private def slices(rows: Seq[Banded], k: Int): Seq[Seq[Banded]] =
+  private def slices[T](rows: Seq[T], k: Int): Seq[Seq[T]] =
     (0 until k).map(p => rows.zipWithIndex.collect { case (r, i) if i % k == p => r })
 
   private def candidates(banded: DataFrame, cap: Int): Set[(Long, Long)] =
@@ -52,6 +53,37 @@ class LshRecallSpec extends AnyFunSuite {
       }.toSet
 
   private object PlanNodes extends AdaptiveSparkPlanHelper
+
+  // cross-corpus fixture: docs 1-3 on the left are one family of 3 docs,
+  // so with a cap of 2 each of its buckets holds 1 family but 3 docs
+  private val boiler = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+  private val counting = "one two three four five six seven eight nine ten"
+  private val colors = "red orange yellow green blue indigo violet black white grey"
+  private lazy val left = (Seq(1L, 2L, 3L).map(_ -> boiler) ++
+    Seq(4L -> counting, 5L -> colors)).toDF("doc_id", "text")
+  private lazy val right = Seq(11L -> boiler,
+    12L -> counting.replace("ten", "eleven"), 13L -> colors).toDF("doc_id", "text")
+
+  private def crossPairs(l: DataFrame, r: DataFrame, cap: Int): DataFrame =
+    TextDedup.crossCorpusDupPairs(l, r, "doc_id", "text", shingleWords = 2, bands = 4,
+      rowsPerBand = 3, threshold = 0.5, family = TextDedup.Xx64, bucketCap = cap)
+
+  /** Doc-grain reference for `crossPairs`: per side, a census drops the
+    * buckets of more than `cap` docs by anti-join, the sides join on the
+    * bucket, and the pairs are verified.
+    */
+  private def crossReference(l: DataFrame, r: DataFrame, cap: Int): Set[(Long, Long, Double)] = {
+    def kept(df: DataFrame, id: String) = {
+      val banded = TextDedup.bandedSignatures(df, "doc_id", sh, 4, 3, TextDedup.Xx64)
+      val over = banded.groupBy($"band", $"band_hash").count().filter($"count" > cap)
+      banded.join(over, Seq("band", "band_hash"), "left_anti")
+        .select($"band", $"band_hash", $"doc_id".as(id))
+    }
+    val pairs = kept(l, "a_id").join(kept(r, "b_id"), Seq("band", "band_hash"))
+      .select($"a_id", $"b_id").distinct()
+    TextDedup.verifiedPairs(pairs, l.union(r), "doc_id", TextFns.tokens($"text"), 2, 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+  }
 
   private lazy val lsh = TextDedup.minhashDupPairs(
     docs, "doc_id", "text", shingleWords = 2, bands = 4, rowsPerBand = 3,
@@ -177,5 +209,61 @@ class LshRecallSpec extends AnyFunSuite {
     val certain = truth.filter(_._3 >= 0.95).map(t => (t._1, t._2)).toSet
     val found = pairs.map(p => if (p._1 < p._2) (p._1, p._2) else (p._2, p._1)).toSet
     assert(certain.subsetOf(found))
+  }
+
+  test("crossCorpusDupPairs executes with no census anti-join") {
+    val pairs = crossPairs(left, right, 2)
+    pairs.collect()
+    val executed = pairs.queryExecution.executedPlan
+    assert(PlanNodes.collect(executed) { case j: BaseJoinExec if j.joinType == LeftAnti => j }.isEmpty,
+      s"anti-join in cross-corpus plan:\n$executed")
+  }
+
+  test("crossCorpusDupPairs caps a bucket by its docs, not its families") {
+    val cap = 2
+    // the fixture's point: a left bucket of at most `cap` families but more
+    // than `cap` docs
+    val census = TextDedup.bandedSignatures(left.withColumn("doc", struct($"doc_id", $"text")),
+      "doc", sh, 4, 3, TextDedup.Xx64)
+      .groupBy($"band", $"band_hash")
+      .agg(countDistinct($"doc.text").as("families"), count(lit(1)).as("docs"))
+    assert(census.filter($"families" <= cap && $"docs" > cap).count() > 0)
+    val expected = crossReference(left, right, cap)
+    assert(expected.contains((5L, 13L, 1.0)))
+    // the 3-doc family's buckets are dropped: it pairs with nothing, though
+    // doc 11 has its text
+    assert(!expected.exists(p => p._1 <= 3L), expected)
+    val got = crossPairs(left, right, cap).as[(Long, Long, Double)].collect()
+    assert(got.toSet === expected)
+    assert(got.length === expected.size)
+  }
+
+  test("crossCorpusDupPairs: a non-integral id fails with the column's name") {
+    val e = intercept[IllegalArgumentException] {
+      crossPairs(left, right.withColumn("doc_id", $"doc_id".cast("double")), 2)
+    }
+    assert(e.getMessage.contains("`doc_id`"), e.getMessage)
+  }
+
+  test("CappedIdList with weights: the same lists at 1, 3 and 8 partitions") {
+    // 7 buckets of 5 rows; an odd bucket's rows weigh 3 (15 > cap, dropped),
+    // an even bucket's weigh 1 (5, kept); every 4th id is null
+    val rows = (0 until 35).map { i =>
+      (if (i % 4 == 3) None else Some(i.toLong), i % 7, if (i % 7 % 2 == 1) 3L else 1L)
+    }
+    val cap = 8
+    val expected = rows.groupBy(_._2).map { case (b, rs) =>
+      b -> (if (rs.map(_._3).sum > cap) None else Some(rs.flatMap(_._1).sorted))
+    }
+    assert(expected.values.exists(_.isEmpty) && expected.values.exists(_.isDefined))
+    for (k <- Seq(1, 3, 8)) {
+      val got = spark.sparkContext.parallelize(slices(rows, k), k).flatMap(identity)
+        .toDF("id", "bucket", "w")
+        .groupBy($"bucket")
+        .agg(CappedIdList($"id", $"w", cap).as("ids"))
+        .as[(Int, Option[Seq[Long]])].collect()
+        .map { case (b, ids) => b -> ids.map(_.sorted) }.toMap
+      assert(got === expected, s"$k partitions")
+    }
   }
 }

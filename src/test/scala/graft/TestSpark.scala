@@ -27,18 +27,13 @@ object TestSpark {
   def tempDir(prefix: String): Path =
     Files.createDirectory(root.resolve(prefix + made.incrementAndGet()))
 
+  /** The engine's session (`Graft.session`) on 4 slots, so specs run on
+    * the config every main runs on. The warehouse dir goes in as a
+    * `spark.*` system property, which the session builder reads.
+    */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", tempDir("graft_warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      // as `graft.core.Graft.session` sets it: `Q.t` reads TIMESTAMP(NANOS)
-      // parquet columns as longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    System.setProperty("spark.sql.warehouse.dir", tempDir("graft_warehouse").toString)
+    val s = graft.core.Graft.session("local[4]", "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -10,8 +10,8 @@ deadline — DuckDB checks for interrupts inside native execution, unlike
 SIGALRM which Python only observes between DuckDB calls — with SIGALRM
 kept as a backstop for a hang in the Python layer itself. A stuck oracle
 records status=timeout and the gate moves on (old connection closed, a
-fresh one opened). Value comparison is identical to check.py (exact,
-NaN-tolerant).
+fresh one opened). Tables, normalization and value comparison are
+check.py's own (imported from it: exact, NaN-tolerant).
 
 Env: CHECK_RECYCLE_EVERY=N (default 40) reconnects DuckDB every N oracles
 (0 disables); errors additionally retry once on a fresh connection.
@@ -20,7 +20,6 @@ permits a partial (--only) Verify outdir.
 """
 import hashlib
 import json
-import math
 import os
 import signal
 import sys
@@ -30,34 +29,7 @@ import time
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if str(df[c].dtype).startswith("datetime64"):
-            df[c] = pd.to_datetime(df[c]).dt.tz_localize(None) if getattr(df[c].dt, "tz", None) else df[c]
-    df = df.sort_values(by=list(df.columns), kind="mergesort", na_position="last")
-    return df.reset_index(drop=True)
-
-
-def values_equal(a, b) -> bool:
-    if a is None and b is None:
-        return True
-    if isinstance(a, float) and isinstance(b, float):
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return a == b
-    try:
-        if pd.isna(a) and pd.isna(b):
-            return True
-        if pd.isna(a) or pd.isna(b):
-            return False
-    except (TypeError, ValueError):
-        pass
-    return a == b
+from check import TABLES, normalize, values_equal
 
 
 class Timeout(Exception):
