@@ -18,33 +18,26 @@ import org.apache.spark.sql.functions._
   */
 object TablePersist {
 
+  /** Files-per-date target of the partitioned write: 4, so a local run on
+    * tiny fixtures keeps a bench-comparable file count. On a real cluster
+    * ≈ executor count would let a single-date daily batch saturate the
+    * writers with ~contracted file sizes (guide §6: aim for 128 MB-1 GB
+    * output files — filesPerDate ≈ dailyBytes / 512 MB).
+    */
+  private val FilesPerDate = 4
+
   /** Deterministic within-date write salt: clustering a partitioned write
     * by the partition value ALONE hash-routes every row of a date into one
     * task — a typical daily batch (one dominant date) then writes through
     * a single writer, a parallelism collapse and skew hotspot at scale
-    * (r18 ADVICE). Salting by a row-content hash mod `filesPerDate` keeps
-    * the file count per date bounded (≈ filesPerDate, instead of one file
+    * (r18 ADVICE). Salting by a row-content hash mod `FilesPerDate` keeps
+    * the file count per date bounded (≈ FilesPerDate, instead of one file
     * per upstream task) while a dominant date still writes
-    * filesPerDate-wide. Content-hash, not rand(): a retried task must
+    * FilesPerDate-wide. Content-hash, not rand(): a retried task must
     * reproduce the same row→partition assignment (guide §2.5, SPARK-38388).
     */
   private def writeSalt(df: DataFrame): Column =
-    pmod(xxhash64(struct(df.columns.map(col): _*)), lit(filesPerDate(df)))
-
-  /** Files-per-date target, conf-overridable (`spark.graft.filesPerDate`):
-    * 4 locally (tiny fixtures — file count stays bench-comparable); on a
-    * real cluster set ≈ executor count so a single-date daily batch
-    * saturates the writers with ~contracted file sizes (guide §6: aim for
-    * 128 MB-1 GB output files — pick filesPerDate ≈ dailyBytes / 512 MB).
-    *
-    * @throws IllegalArgumentException if the setting is not a positive
-    *         integer: 0 would reach `pmod` and fail deep inside the write
-    *         job, so a bad value is rejected here, by name.
-    */
-  private[graft] def filesPerDate(df: DataFrame): Int = {
-    val key = "spark.graft.filesPerDate"
-    Graft.positiveInt(key, df.sparkSession.conf.get(key, "4"))
-  }
+    pmod(xxhash64(struct(df.columns.map(col): _*)), lit(FilesPerDate))
 
   /** Append `df` partitioned by the date of `tsCol`.
     *
@@ -53,7 +46,7 @@ object TablePersist {
     * one file per date value per task, so an N-way-parallel upstream
     * otherwise writes up to N small files into every date directory — paid
     * again by every later scan (listing + per-file open). One shuffle at
-    * write time keeps file count ≤ filesPerDate per date at any upstream
+    * write time keeps file count ≤ FilesPerDate per date at any upstream
     * parallelism, without funneling a dominant date through one task.
     */
   def appendPartitioned(

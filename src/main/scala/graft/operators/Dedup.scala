@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   *   - earliest-wins `row_number() over (partition by key order by ts asc)=1`
   *     (reference `models/warehouse/hubs/hub_customer.sql:16-32` — W1 in
   *     SURVEY §2.6), used by every hub/link;
-  *   - latest-wins desc variant (`models/marts/dim_company.sql:29-51` — W2).
+  *   - latest-wins: the same `firstRows` with desc orderings
+  *     (`models/marts/dim_company.sql:29-51` — W2).
   *
   * Scale notes: a single hash-partition shuffle on the keys; no sort of the
   * whole relation (window sort is per-partition). For heavily skewed keys the
@@ -21,22 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private def pick(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
+  /** First row per key by `order` (caller supplies a total order — include
+    * a unique tiebreaker for determinism). Earliest-wins with ascending
+    * orderings; latest-wins snapshot with descending ones.
+    */
+  def firstRows(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** Earliest-wins: first row per key by `order` (caller supplies a total
-    * order — include a unique tiebreaker for determinism).
-    */
-  def firstRows(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    pick(df, keys, order)
-
-  /** Latest-wins snapshot: last row per key (pass desc orderings). */
-  def latestRows(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    pick(df, keys, order)
 
   /** Exact content dedup for a corpus: group by a content fingerprint, keep
     * the minimum id as the canonical representative. One shuffle on the

@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.awt.image.{BufferedImage, IndexColorModel}
+import javax.imageio.ImageIO
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,20 +17,18 @@ import graft.core.Materialize
   * amortizes model/library init once per partition, not per row.
   *
   * Every image/audio format a web-scale corpus actually carries decodes
-  * for REAL here, with zero external libraries. Hand-rolled decoders (each
-  * oracle-verified on decoded pixel/sample statistics): netpbm P5/P6
-  * (`decodePnm` — header parse, comments, pixel walk, plus a real
-  * nearest-neighbor `resizePnm`), 24-bit BMP (`decodeBmp` — little-endian
-  * headers, padded strides, bottom-up rows), PCM16 WAV (`decodeWav` +
-  * integer decimator), and PNG (`decodePng` — chunk walk, multi-IDAT zlib
-  * inflate via the JDK's `java.util.zip.Inflater`, all five scanline
-  * filters). JPEG (and any other `javax.imageio`-supported container)
-  * decodes through `decodeImageIO` — the JDK's bundled codec, so
-  * still no external dependency; its stats are bit-stable within a JRE and
-  * the oracle fixtures use flat-gray images, which baseline JPEG's
+  * for REAL here, with zero external libraries. The formats the JDK cannot
+  * read have hand-rolled decoders (each oracle-verified on decoded
+  * pixel/sample statistics): netpbm P5/P6 (`decodePnm` — header parse,
+  * comments, pixel walk, plus a real nearest-neighbor `resizePnm`), PCM16
+  * WAV (`decodeWav` + integer decimator) and Y4M video (`decodeY4m` —
+  * header tags, FRAME walk, planar luma sums). PNG, BMP, GIF and JPEG
+  * decode through one read of the JDK's bundled `javax.imageio` codecs
+  * (`readImage`, behind `decodeImageIO` and `decodeBmpFeatures`), so still
+  * no external dependency; its stats are bit-stable within a JRE, and the
+  * JPEG oracle fixtures use flat-gray images, which baseline JPEG's
   * DC-only quantization round-trips EXACTLY (spec-verified across all 256
-  * grays), keeping the hash gate valid even for a lossy codec. Video is
-  * Y4M (`decodeY4m` — header tags, FRAME walk, planar luma sums).
+  * grays), keeping the hash gate valid even for a lossy codec.
   * `decodeStub` remains only for payloads with no decoder at all (the
   * text-as-binary rows of `asBinaryMedia`) as deterministic
   * pseudo-features; the schema contract, partitioning, and batched
@@ -53,7 +54,7 @@ object Multimodal {
   // cache is strictly better — and on a cluster it removes a local-disk
   // dependency and fd churn from every executor decode task. Object-init
   // runs once per JVM (driver and each executor) before any codec call.
-  javax.imageio.ImageIO.setUseCache(false)
+  ImageIO.setUseCache(false)
 
   /** Schema of an extracted-feature row. */
   val featureSchema: StructType = StructType(Seq(
@@ -221,7 +222,7 @@ object Multimodal {
       while (y < th) {
         // Long products: a hostile-but-header-valid tall/wide source
         // (e.g. w=1, h~10M) times a large target dim overflows Int and
-        // would index negatively — same guard class as decodeBmp/decodeWav.
+        // would index negatively — same guard class as decodeWav.
         val sy = (y.toLong * sh / th).toInt
         var x = 0
         while (x < tw) {
@@ -256,9 +257,9 @@ object Multimodal {
   }
 
   /** Batched per-partition image decode over (doc_id, content) rows with
-    * `decode` inside — [[decodePnm]], [[decodePng]] or [[decodeImageIO]]:
-    * each returns (width, height, channels, per-channel means), and
-    * green/blue stay null below 3 channels. Undecodable payloads yield
+    * `decode` inside — [[decodePnm]] or [[decodeImageIO]]: each returns
+    * (width, height, channels, per-channel means), and green/blue stay
+    * null below 3 channels. Undecodable payloads yield
     * null features.
     */
   def decodeImageFeatures(
@@ -430,57 +431,6 @@ object Multimodal {
     StructField("g00", IntegerType, nullable = true),
     StructField("r00", IntegerType, nullable = true)))
 
-  /** A REAL image decoder for uncompressed 24-bit BMP (BITMAPINFOHEADER,
-    * BI_RGB) — the Windows raster sibling of netpbm, and the format whose
-    * decode logic netpbm does NOT exercise: little-endian headers,
-    * 4-byte-padded row strides, BGR byte order, and BOTTOM-UP row storage
-    * (negative biHeight = top-down, also handled). Emits per-channel
-    * means plus the (0,0) corner pixel — the corner is deliberately
-    * position-sensitive, so a row-order or stride bug cannot hide behind
-    * order-independent means. None on malformed/truncated input; all
-    * size/offset arithmetic stays in Long (a declared u32 offset near
-    * 2^31 must reject cleanly, not wrap — the decodeWav hostile-input
-    * lesson).
-    */
-  private[graft] def decodeBmp(
-      bytes: Array[Byte]): Option[(Int, Int, Double, Double, Double, Int, Int, Int)] = {
-    def u8(i: Int): Int = bytes(i) & 0xff
-    def u16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int): Long = u16(i).toLong | (u16(i + 2).toLong << 16)
-    def i32(i: Int): Int = u32(i).toInt
-    if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-    val off = u32(10)
-    val hdrSize = u32(14)
-    val w = i32(18)
-    val rawH = i32(22)
-    val topDown = rawH < 0
-    val h = math.abs(rawH)
-    val planes = u16(26)
-    val bpp = u16(28)
-    val comp = u32(30)
-    if (hdrSize < 40 || w <= 0 || rawH == 0 || h == Int.MinValue ||
-      planes != 1 || bpp != 24 || comp != 0L) return None
-    if (w > (1 << 20) || h > (1 << 20)) return None // absurd-dimension guard
-    val stride = ((3L * w + 3) / 4) * 4
-    if (off < 54L || off + stride * h > bytes.length) return None
-    var sb = 0.0; var sg = 0.0; var sr = 0.0
-    var y = 0
-    while (y < h) {
-      val storedRow = if (topDown) y else h - 1 - y
-      val base = off + storedRow * stride
-      var x = 0
-      while (x < w) {
-        val p = (base + 3L * x).toInt
-        sb += u8(p); sg += u8(p + 1); sr += u8(p + 2)
-        x += 1
-      }
-      y += 1
-    }
-    val n = w.toDouble * h
-    val c00 = (off + (if (topDown) 0L else (h - 1).toLong * stride)).toInt
-    Some((w, h, sb / n, sg / n, sr / n, u8(c00), u8(c00 + 1), u8(c00 + 2)))
-  }
-
   /** Deterministic BMP fixture: a real, well-formed bottom-up 24-bit BMP
     * per id (width 4 + id%5, height 3 + id%4; the LOGICAL top-down pixel
     * p = y*w + x carries B/G/R = (id*11 + 5p + 0/1/2) % 256) — padding
@@ -519,122 +469,20 @@ object Multimodal {
       b
     }
 
-  /** Batched per-partition BMP decode — same map-only shape as
-    * [[decodeImageFeatures]], with the real BMP parser inside.
+  /** Batched per-partition BMP decode through [[decodeImageIO]]'s read
+    * (`readImage`), reported in BMP's byte order: blue, green and red
+    * means plus the LOGICAL top-left (0,0) pixel. The corner is
+    * deliberately position-sensitive, so a row-order or stride bug cannot
+    * hide behind order-independent means. Null features for a payload
+    * ImageIO cannot read or one with fewer than 3 color components.
     */
   def decodeBmpFeatures(media: DataFrame): DataFrame =
-    perDocRow(media, bmpFeatureSchema)(decodeBmp(_).map(_.productIterator.toSeq))
-
-  /** A REAL image decoder for PNG (RFC 2083) — the dominant compressed web
-    * image format, decodable with zero external libraries because the JDK
-    * ships zlib (`java.util.zip.Inflater`). Full pipeline: signature +
-    * chunk walk (big-endian lengths, CRC fields skipped, ancillary chunks
-    * ignored), IHDR validation (8-bit depth; color types 0/2/6 = gray,
-    * RGB, RGBA; no interlace), multi-IDAT zlib stream reassembly, inflate
-    * into the exact raster size, and per-scanline UNFILTERING of all five
-    * filter types (None/Sub/Up/Average/Paeth) reconstructing in place so
-    * prior-row lookups read reconstructed bytes. Returns per-channel
-    * means. None on anything malformed: bad magic, truncated chunk or
-    * inflate stream, absurd dimensions (the decodeBmp guard class — all
-    * size arithmetic in Long), unknown filter type, wrong raster length.
-    */
-  private[graft] def decodePng(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Double])] = {
-    val sig = Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
-    if (bytes.length < 8 + 12 + 13) return None
-    var k = 0
-    while (k < 8) { if ((bytes(k) & 0xff) != sig(k)) return None; k += 1 }
-    def u32(p: Int): Long =
-      ((bytes(p) & 0xffL) << 24) | ((bytes(p + 1) & 0xffL) << 16) |
-        ((bytes(p + 2) & 0xffL) << 8) | (bytes(p + 3) & 0xffL)
-    var pos = 8
-    var w = 0; var h = 0; var channels = 0
-    var seenIhdr = false; var ended = false
-    val idat = new java.io.ByteArrayOutputStream()
-    while (!ended) {
-      if (pos + 8 > bytes.length) return None
-      val len = u32(pos)
-      if (pos + 12L + len > bytes.length) return None // Long: hostile u32 lengths
-      val ctype = new String(bytes, pos + 4, 4, "US-ASCII")
-      val dataOff = pos + 8
-      ctype match {
-        case "IHDR" =>
-          if (seenIhdr || len != 13L) return None
-          seenIhdr = true
-          val ww = u32(dataOff); val hh = u32(dataOff + 4)
-          val bitDepth = bytes(dataOff + 8) & 0xff
-          channels = (bytes(dataOff + 9) & 0xff) match {
-            case 0 => 1; case 2 => 3; case 6 => 4; case _ => return None
-          }
-          val okTail = (bytes(dataOff + 10) & 0xff) == 0 && // compression
-            (bytes(dataOff + 11) & 0xff) == 0 &&            // filter method
-            (bytes(dataOff + 12) & 0xff) == 0               // no interlace
-          if (bitDepth != 8 || !okTail) return None
-          if (ww <= 0 || hh <= 0 || ww > (1 << 20) || hh > (1 << 20) ||
-            ww * hh * channels > (1L << 26)) return None // 64 MiB raster cap
-          w = ww.toInt; h = hh.toInt
-        case "IDAT" =>
-          if (!seenIhdr) return None
-          idat.write(bytes, dataOff, len.toInt)
-        case "IEND" => ended = true
-        case _ => // ancillary chunk: skip by declared size
-      }
-      pos = dataOff + len.toInt + 4 // step over data + CRC
-    }
-    if (!seenIhdr) return None
-    val stride = w * channels
-    val raw = new Array[Byte]((stride + 1) * h) // +1 filter byte per row
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var off = 0
-      while (off < raw.length && !inf.finished()) {
-        val n =
-          try inf.inflate(raw, off, raw.length - off)
-          catch { case _: java.util.zip.DataFormatException => return None }
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        off += n
-      }
-      if (off != raw.length) return None
-    } finally inf.end()
-    val bpp = channels // 8-bit samples: filter distance = one pixel
-    def recon(y: Int, x: Int): Int = raw(y * (stride + 1) + 1 + x) & 0xff
-    var y = 0
-    while (y < h) {
-      val ft = raw(y * (stride + 1)) & 0xff
-      if (ft > 4) return None
-      var x = 0
-      while (x < stride) {
-        val a = if (x >= bpp) recon(y, x - bpp) else 0
-        val b = if (y > 0) recon(y - 1, x) else 0
-        val c = if (x >= bpp && y > 0) recon(y - 1, x - bpp) else 0
-        val f = recon(y, x)
-        val v = ft match {
-          case 0 => f
-          case 1 => f + a
-          case 2 => f + b
-          case 3 => f + ((a + b) >> 1)
-          case 4 => // Paeth predictor
-            val p = a + b - c
-            val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-            f + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
-        }
-        raw(y * (stride + 1) + 1 + x) = (v & 0xff).toByte // in place
-        x += 1
-      }
-      y += 1
-    }
-    val sums = new Array[Double](channels)
-    var p = 0
-    while (p < w * h) {
-      var c = 0
-      while (c < channels) {
-        sums(c) += recon(p / w, (p % w) * channels + c)
-        c += 1
-      }
-      p += 1
-    }
-    Some((w, h, channels, sums.map(_ / (w.toDouble * h))))
-  }
+    perDocRow(media, bmpFeatureSchema)(
+      readImage(_).filter(_.getColorModel.getNumComponents >= 3).map { img =>
+        val bgr = Seq(2, 1, 0)
+        Seq[Any](img.getWidth, img.getHeight) ++
+          bgr.map(bandMean(img, _)) ++ bgr.map(sample8(img, 0, 0, _))
+      })
 
   /** Deterministic PNG fixture: a real, spec-complete RGB PNG per id
     * (width 4 + id%5, height 3 + id%4; logical raster byte k = (id*13 +
@@ -711,32 +559,22 @@ object Multimodal {
       out.toByteArray
     }
 
-  /** General compressed-image decode via the JDK's bundled `javax.imageio`
-    * codecs (JPEG, and as a byproduct PNG/GIF/BMP) — no external library;
-    * the JDK ships libjpeg-backed readers in `java.desktop`. Returns
-    * (width, height, channels, per-channel pixel means). None on
-    * unreadable/unsupported bytes (`ImageIO.read` null or throw).
-    *
-    * The means are of the decoded raster's samples (top 8 bits; palette
-    * colors for GIF), so they are bit-stable for a given JRE; lossy-codec
-    * output can differ ACROSS codec versions, which is why the oracle
-    * fixtures are flat-gray JPEGs (DC-only blocks — quantization
-    * round-trips them exactly; verified for all 256 grays and partial edge
-    * blocks in MultimodalSpec).
+  /** The first image in `bytes`, read by the JDK's bundled `javax.imageio`
+    * codecs (PNG, JPEG, GIF, BMP; `java.desktop`, no external library),
+    * with a palette raster's indices expanded to their RGB colors. None on
+    * bytes no reader takes or a read that fails, and on a header raster
+    * above 64 M pixels: a decompression bomb (tiny bytes, enormous declared
+    * raster) is rejected from the HEADER, before ImageIO allocates w*h
+    * pixels — the absurd-dimension guard decodeWav/decodeY4m apply to
+    * their headers. The one image read in the engine.
     */
-  private[graft] def decodeImageIO(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Double])] =
+  private def readImage(bytes: Array[Byte]): Option[BufferedImage] =
     try {
-      // read the dimensions from the HEADER before decoding: a hostile
-      // decompression-bomb payload (tiny bytes, enormous declared raster)
-      // must be rejected before ImageIO allocates w*h pixels — the same
-      // absurd-dimension guard decodeBmp/decodeWav apply to their headers
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      // everything from reader lookup on sits inside the iis-closing try:
-      // the default ImageInputStream is file-cache-backed, so an early
-      // return on junk bytes would otherwise leak a temp file + fd per row
+      val iis = ImageIO.createImageInputStream(new java.io.ByteArrayInputStream(bytes))
+      // everything from reader lookup on sits inside the iis-closing try,
+      // so an early return on junk bytes closes the stream too
       val img = try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
+        val readers = ImageIO.getImageReaders(iis)
         if (!readers.hasNext) return None
         val reader = readers.next()
         try {
@@ -746,26 +584,43 @@ object Multimodal {
           reader.read(0)
         } finally reader.dispose()
       } finally iis.close()
-      if (img == null) None
-      else {
-        // means of the raster samples, not of getRGB, which converts a
-        // linear-gray raster to sRGB (sample 10 reads 56); a palette raster
-        // holds indices, so it is expanded to its RGB colors first
-        val rgb = img.getColorModel match {
-          case icm: java.awt.image.IndexColorModel => icm.convertToIntDiscrete(img.getRaster, false)
-          case _ => img
-        }
-        val (w, h, cm, raster) = (rgb.getWidth, rgb.getHeight, rgb.getColorModel, rgb.getRaster)
-        val ch = if (cm.getNumComponents >= 3) 3 else 1
-        val means = Array.tabulate(ch) { b =>
-          val shift = math.max(0, cm.getComponentSize(b) - 8)
-          var sum = 0L
-          for (y <- 0 until h; x <- 0 until w) sum += raster.getSample(x, y, b) >> shift
-          sum.toDouble / (w.toLong * h)
-        }
-        Some((w, h, ch, means))
-      }
+      Option(img).map(i => i.getColorModel match {
+        case icm: IndexColorModel => icm.convertToIntDiscrete(i.getRaster, false)
+        case _ => i
+      })
     } catch { case _: Exception => None }
+
+  /** Band `b`'s raster sample at (x, y), as its top 8 bits when wider. The
+    * raster, not `getRGB`, which converts a linear-gray raster to sRGB
+    * (sample 10 reads 56).
+    */
+  private def sample8(img: BufferedImage, x: Int, y: Int, b: Int): Int =
+    img.getRaster.getSample(x, y, b) >> math.max(0, img.getColorModel.getComponentSize(b) - 8)
+
+  /** Mean of band `b`'s samples over the whole raster (see `sample8`). */
+  private def bandMean(img: BufferedImage, b: Int): Double = {
+    var sum = 0L
+    for (y <- 0 until img.getHeight; x <- 0 until img.getWidth) sum += sample8(img, x, y, b)
+    sum.toDouble / (img.getWidth.toLong * img.getHeight)
+  }
+
+  /** General compressed-image decode (PNG, JPEG, GIF, BMP) through
+    * `readImage`. Returns (width, height, channels, per-channel means):
+    * channels is the color model's component count (PNG gray 1, RGB 3,
+    * RGBA 4; JPEG and palette GIF 3), with one mean per component, so an
+    * RGBA mean list ends with alpha. None on anything `readImage` rejects.
+    *
+    * The means are bit-stable for a given JRE; lossy-codec output can
+    * differ ACROSS codec versions, which is why the oracle fixtures are
+    * flat-gray JPEGs (DC-only blocks — quantization round-trips them
+    * exactly; verified for all 256 grays and partial edge blocks in
+    * MultimodalSpec).
+    */
+  private[graft] def decodeImageIO(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Double])] =
+    readImage(bytes).map { img =>
+      val ch = img.getColorModel.getNumComponents
+      (img.getWidth, img.getHeight, ch, Array.tabulate(ch)(bandMean(img, _)))
+    }
 
   /** Deterministic JPEG fixture corpus: one flat-gray baseline JPEG per id
     * (gray = id % 256, dims 8+id%9 x 6+id%7 — partial edge blocks
@@ -778,8 +633,7 @@ object Multimodal {
       val w = (8 + id % 9).toInt
       val h = (6 + id % 7).toInt
       val g = (id % 256).toInt
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
       val rgb = (g << 16) | (g << 8) | g
       var y = 0
       while (y < h) {
@@ -788,7 +642,7 @@ object Multimodal {
         y += 1
       }
       val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", bos)
+      ImageIO.write(img, "jpg", bos)
       bos.toByteArray
     }
 
@@ -805,8 +659,7 @@ object Multimodal {
     fixture(ids, idCol) { id =>
       val w = (5 + id % 6).toInt
       val h = (6 + id % 5).toInt
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
       var p = 0
       while (p < w * h) {
         val g = if ((id * 7 + 3 * p) % 2 == 0) 40 else 200
@@ -814,7 +667,7 @@ object Multimodal {
         p += 1
       }
       val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "gif", bos)
+      ImageIO.write(img, "gif", bos)
       bos.toByteArray
     }
 
@@ -1296,7 +1149,7 @@ object Multimodal {
     * features). Supported colorspaces: C420* (any suffix — subsampling
     * geometry is identical), C422, C444, Cmono; default 420 per spec.
     *
-    * Hostile-input guards mirror decodeBmp/decodePng: dimension caps
+    * Hostile-input guards mirror decodeWav and `readImage`: dimension caps
     * BEFORE any allocation (the raster is never materialized at all —
     * sums stream over the payload), Long comparisons against declared
     * sizes, None on any truncated/malformed structure.

@@ -121,7 +121,7 @@ object ReferenceTests {
       // test_week52_price_range_valid.sql — 52-week high >= low on the
       // latest stock snapshot per symbol (the dim_asset week-52 source)
       "week52_price_range_valid" -> Checks.invariant(
-        graft.operators.Dedup.latestRows(stock, Seq("symbol"), Seq(col("date").desc)),
+        graft.operators.Dedup.firstRows(stock, Seq("symbol"), Seq(col("date").desc)),
         col("week_52_high").isNull || col("week_52_low").isNull ||
           col("week_52_high") >= col("week_52_low")),
 

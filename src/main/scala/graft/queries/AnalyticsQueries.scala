@@ -26,7 +26,7 @@ object AnalyticsQueries {
           .select(col("user_id"), col("event_id"), col("ts"))
         // dedup right to one row per (user, ts) so tie resolution is
         // well-defined in both engines
-        val purchases = Dedup.latestRows(
+        val purchases = Dedup.firstRows(
           events.filter(col("event_type") === "purchase")
             .select(col("user_id"), col("ts"), col("event_id"), col("value")),
           Seq("user_id", "ts"), Seq(col("event_id").desc))

@@ -91,7 +91,7 @@ object CoreQueries {
 
     // W2 — latest-wins snapshot (reference dim_company.sql:29-51)
     Q("q_latest_snapshot",
-      (s, dir) => Dedup.latestRows(
+      (s, dir) => Dedup.firstRows(
           t(s, dir, "events"), Seq("user_id"), Seq(col("ts").desc, col("event_id").desc))
         .select(
           col("user_id"),

@@ -3110,11 +3110,11 @@ object CorpusQueries {
                CAST(sum((doc_id * 7 + 3 * (sy * w + sx) + 2) % 256) AS DOUBLE) / 6 AS mean_b
         FROM s GROUP BY doc_id, w, h""")),
 
-    // Real 24-bit BMP decode (little-endian headers, 4-byte row padding,
-    // BGR order, bottom-up rows): per-channel means + the (0,0) corner
-    // pixel — the corner is position-sensitive, so stride/row-order bugs
-    // cannot hide behind order-independent means. Closed-form oracle over
-    // the logical-position pixel formula.
+    // Real 24-bit BMP decode through the JDK's ImageIO read (little-endian
+    // headers, 4-byte row padding, BGR order, bottom-up rows): per-channel
+    // means + the (0,0) corner pixel — the corner is position-sensitive, so
+    // stride/row-order bugs cannot hide behind order-independent means.
+    // Closed-form oracle over the logical-position pixel formula.
     Q("q_bmp_decode",
       (s, dir) => Multimodal.decodeBmpFeatures(
         Multimodal.bmpFixture(t(s, dir, "documents"), "doc_id")),
@@ -3130,16 +3130,15 @@ object CorpusQueries {
                CAST((doc_id * 11 + 2) % 256 AS INT) AS r00
         FROM px GROUP BY doc_id, w, h""")),
 
-    // REAL PNG decode (zero external libraries — zlib ships in the JDK):
-    // each fixture is a spec-complete RGB PNG whose scanlines cycle
-    // through ALL FIVE filter types before a real Deflater pass split
-    // across two IDAT chunks; the decoder walks chunks, inflates, and
-    // unfilters, and the decoded per-channel means hash-verify against
-    // the closed-form raster formula. A filter/stride/inflate bug cannot
-    // produce these means.
+    // REAL PNG decode through the JDK's bundled ImageIO codec (no external
+    // library): each fixture is a spec-complete RGB PNG whose scanlines
+    // cycle through ALL FIVE filter types before a real Deflater pass split
+    // across two IDAT chunks, and the decoded per-channel means
+    // hash-verify against the closed-form raster formula. A
+    // filter/stride/inflate bug cannot produce these means.
     Q("q_png_decode",
       (s, dir) => Multimodal.decodeImageFeatures(
-        Multimodal.pngFixture(t(s, dir, "documents"), "doc_id"), Multimodal.decodePng),
+        Multimodal.pngFixture(t(s, dir, "documents"), "doc_id"), Multimodal.decodeImageIO),
       Some("""
         WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents),
         px AS (SELECT doc_id, w, h, unnest(range(0, w * h)) AS p FROM d)

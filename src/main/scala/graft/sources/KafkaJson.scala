@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Kafka JSON source/sink wiring — the Structured-Streaming twin of the
+/** Kafka JSON source wiring — the Structured-Streaming twin of the
   * reference's producer/consumer pair (`scripts/kafka/kafka_producer.py:
   * 456-563`, `kafka_consumer.py:447-569`): JSON message values keyed by
   * business id, four topics, micro-batched idempotent ingestion.
@@ -105,18 +105,4 @@ object KafkaJson {
           col("value"),
           col("timestamp").as("kafka_timestamp")),
       schema)
-
-  /** Batch-write rows to a topic keyed by a business-id column
-    * (`to_json(struct(*))` — the producer's `json.dumps`,
-    * `kafka_producer.py:457-461`).
-    */
-  def writeBatch(df: DataFrame, servers: String, topic: String, keyCol: String): Unit =
-    df.select(
-      col(keyCol).cast("string").as("key"),
-      to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("value"))
-      .write
-      .format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("topic", topic)
-      .save()
 }

@@ -81,7 +81,7 @@ object IncrementalIngest {
     * time the same way (`a1_5_batch_s3_to_postgres.py:383-411`). The
     * pending rows go through `TablePersist.appendPartitioned`, the one
     * writer of the date-partitioned layout (salted clustering, at most
-    * `filesPerDate` files per date).
+    * `TablePersist.FilesPerDate` = 4 files per date).
     */
   def idempotentAppendPartitioned(batch: DataFrame, targetPath: String,
       keys: Seq[String], tsCol: String): Unit =

@@ -315,7 +315,7 @@ final class Models(val raw: Models.Raw) {
 
   /** dim_company.sql:29-51 — W2 latest-wins snapshot. */
   lazy val dimCompany: DataFrame =
-    Dedup.latestRows(raw.corporates, Seq("company_id"),
+    Dedup.firstRows(raw.corporates, Seq("company_id"),
       Seq(col("load_timestamp").desc, col("company_id")))
       .select(
         Hashing.surrogateKey(col("company_id")).as("company_hk"),
@@ -339,11 +339,11 @@ final class Models(val raw: Models.Raw) {
 
   /** dim_asset.sql:36-105 — hub + latest observed price per asset (W2+U4+J5). */
   lazy val dimAsset: DataFrame = {
-    val cryptoLatest = Dedup.latestRows(
+    val cryptoLatest = Dedup.firstRows(
       satAssetPriceCrypto, Seq("asset_hk"),
       Seq(col("observed_at").desc, col("record_source").desc))
       .select(col("asset_hk"), col("price").as("latest_price"))
-    val stockLatest = Dedup.latestRows(
+    val stockLatest = Dedup.firstRows(
       satAssetPriceStock, Seq("asset_hk"),
       Seq(col("price_date").desc))
       .select(col("asset_hk"), col("close_price").as("latest_price"))

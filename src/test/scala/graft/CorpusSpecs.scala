@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -463,7 +467,7 @@ class MultimodalSpec extends AnyFunSuite {
     // coverage) and the zlib stream split across two IDAT chunks
     val bytes = Multimodal.pngFixture(Seq(3L).toDF("doc_id"), "doc_id")
       .collect()(0).getAs[Array[Byte]]("content")
-    val Some((w, h, ch, means)) = Multimodal.decodePng(bytes)
+    val Some((w, h, ch, means)) = Multimodal.decodeImageIO(bytes)
     assert((w, h, ch) === ((7, 6, 3)))
     val n = w * h
     def mean(c: Int): Double =
@@ -478,8 +482,7 @@ class MultimodalSpec extends AnyFunSuite {
       while (!d.finished()) out.write(buf, 0, d.deflate(buf))
       d.end(); out.toByteArray
     }
-    def png(w: Int, h: Int, colorType: Int, filtered: Array[Byte],
-        bitDepth: Int = 8, interlace: Int = 0): Array[Byte] = {
+    def png(w: Int, h: Int, colorType: Int, filtered: Array[Byte]): Array[Byte] = {
       val out = new java.io.ByteArrayOutputStream()
       out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
       def chunk(t: String, data: Array[Byte]): Unit = {
@@ -490,31 +493,58 @@ class MultimodalSpec extends AnyFunSuite {
         out.write(be(c.getValue))
       }
       val ihdr = new Array[Byte](13)
-      ihdr(3) = w.toByte; ihdr(7) = h.toByte
-      ihdr(8) = bitDepth.toByte; ihdr(9) = colorType.toByte; ihdr(12) = interlace.toByte
+      ihdr(3) = w.toByte; ihdr(7) = h.toByte; ihdr(8) = 8; ihdr(9) = colorType.toByte
       chunk("IHDR", ihdr); chunk("IDAT", deflate(filtered)); chunk("IEND", Array.emptyByteArray)
       out.toByteArray
     }
     // 2x2 grayscale, unfiltered rows: pixels 10 20 / 30 40 -> mean 25
     val g = png(2, 2, 0, Array[Byte](0, 10, 20, 0, 30, 40))
-    val Some((gw, gh, gch, gm)) = Multimodal.decodePng(g)
+    val Some((gw, gh, gch, gm)) = Multimodal.decodeImageIO(g)
     assert((gw, gh, gch) === ((2, 2, 1)) && gm.toSeq === Seq(25.0))
-    // 1x1 RGBA
-    val Some((_, _, ach, am)) = Multimodal.decodePng(png(1, 1, 6, Array[Byte](0, 1, 2, 3, 4)))
+    // 1x1 RGBA: one mean per component, alpha last
+    val Some((_, _, ach, am)) = Multimodal.decodeImageIO(png(1, 1, 6, Array[Byte](0, 1, 2, 3, 4)))
     assert(ach === 4 && am.toSeq === Seq(1.0, 2.0, 3.0, 4.0))
-    // rejection: unknown filter, interlace, 16-bit, truncation, bad magic,
-    // corrupt zlib header, declared-vs-actual raster mismatch, palette type
-    assert(Multimodal.decodePng(png(2, 2, 0, Array[Byte](7, 10, 20, 0, 30, 40))).isEmpty)
-    assert(Multimodal.decodePng(png(2, 2, 0, Array[Byte](0, 10, 20, 0, 30, 40), interlace = 1)).isEmpty)
-    assert(Multimodal.decodePng(png(2, 2, 0, Array[Byte](0, 10, 20, 0, 30, 40), bitDepth = 16)).isEmpty)
-    assert(Multimodal.decodePng(g.dropRight(1)).isEmpty)
+    // a missing IEND CRC byte loses no pixel: the image still reads
+    val Some((tw, th, tch, tm)) = Multimodal.decodeImageIO(g.dropRight(1))
+    assert((tw, th, tch) === ((2, 2, 1)) && tm.toSeq === Seq(25.0))
+    // Adam7-interlaced and 16-bit PNGs (written by the JDK's PNG writer)
+    // decode to the written samples; a 16-bit sample reads its top 8 bits
+    def written(img: java.awt.image.BufferedImage, interlace: Boolean): Array[Byte] = {
+      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
+      val param = writer.getDefaultWriteParam
+      if (interlace) param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+      val bos = new java.io.ByteArrayOutputStream()
+      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+      try {
+        writer.setOutput(ios)
+        writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
+      } finally { ios.close(); writer.dispose() }
+      bos.toByteArray
+    }
+    val gray = new java.awt.image.BufferedImage(9, 7, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    for (y <- 0 until 7; x <- 0 until 9) gray.getRaster.setSample(x, y, 0, (7 * x + 3 * y) % 256)
+    val adam7 = written(gray, interlace = true)
+    assert(adam7(28) === 1, "IHDR interlace method must be Adam7")
+    val Some((iw, ih, ich, im)) = Multimodal.decodeImageIO(adam7)
+    assert((iw, ih, ich) === ((9, 7, 1)))
+    assert(im.toSeq === Seq((for (y <- 0 until 7; x <- 0 until 9) yield 7 * x + 3 * y).sum / 63.0))
+    val deep = new java.awt.image.BufferedImage(3, 2, java.awt.image.BufferedImage.TYPE_USHORT_GRAY)
+    for (y <- 0 until 2; x <- 0 until 3) deep.getRaster.setSample(x, y, 0, 0x1234 + 0x100 * (3 * y + x))
+    val sixteen = written(deep, interlace = false)
+    assert(sixteen(24) === 16, "IHDR bit depth must be 16")
+    val Some((dw, dh, dch, dm)) = Multimodal.decodeImageIO(sixteen)
+    assert((dw, dh, dch) === ((3, 2, 1)))
+    assert(dm.toSeq === Seq((0 until 6).map(0x12 + _).sum / 6.0))
+    // rejection: unknown filter, bad magic, corrupt zlib header, a raster
+    // shorter than the declared size, palette type with no PLTE, junk
+    assert(Multimodal.decodeImageIO(png(2, 2, 0, Array[Byte](7, 10, 20, 0, 30, 40))).isEmpty)
     val badMagic = g.clone(); badMagic(0) = 0x00
-    assert(Multimodal.decodePng(badMagic).isEmpty)
+    assert(Multimodal.decodeImageIO(badMagic).isEmpty)
     val corrupt = g.clone(); corrupt(41) = 0xff.toByte // zlib CMF byte
-    assert(Multimodal.decodePng(corrupt).isEmpty)
-    assert(Multimodal.decodePng(png(3, 2, 0, Array[Byte](0, 10, 20, 0, 30, 40))).isEmpty)
-    assert(Multimodal.decodePng(png(2, 2, 3, Array[Byte](0, 10, 20, 0, 30, 40))).isEmpty)
-    assert(Multimodal.decodePng("junk".getBytes).isEmpty)
+    assert(Multimodal.decodeImageIO(corrupt).isEmpty)
+    assert(Multimodal.decodeImageIO(png(3, 2, 0, Array[Byte](0, 10, 20, 0, 30, 40))).isEmpty)
+    assert(Multimodal.decodeImageIO(png(2, 2, 3, Array[Byte](0, 10, 20, 0, 30, 40))).isEmpty)
+    assert(Multimodal.decodeImageIO("junk".getBytes).isEmpty)
   }
 
   test("decodeImageIO: JPEG flat-gray round-trip is EXACT for all 256 grays incl. edge blocks") {
@@ -576,15 +606,15 @@ class MultimodalSpec extends AnyFunSuite {
       out.toByteArray
     }
     assert(Multimodal.decodeImageIO(bomb).isEmpty)
-    // cross-check: the hand-rolled PNG encoder's output is a valid PNG for
-    // the JDK codec, and both decoders agree on the pixel means
-    import TestSpark.spark.implicits._
+    // the hand-written PNG fixture writer's output is a valid PNG for the
+    // JDK codec: fixture id=5 is 4x4 RGB with closed-form means
     val fixture = Multimodal.pngFixture(Seq(5L).toDF("doc_id"), "doc_id")
       .collect().head.getAs[Array[Byte]]("content")
-    val Some((w1, h1, c1, m1)) = Multimodal.decodePng(fixture)
-    val Some((w2, h2, c2, m2)) = Multimodal.decodeImageIO(fixture)
-    assert((w1, h1, c1) === ((w2, h2, c2)))
-    assert(m1.toSeq === m2.toSeq)
+    val Some((w, h, ch, means)) = Multimodal.decodeImageIO(fixture)
+    assert((w, h, ch) === ((4, 4, 3)))
+    def mean(c: Int): Double =
+      (0 until w * h).map(p => ((5L * 13 + 5 * (3 * p + c)) % 256).toDouble).sum / (w * h)
+    assert(means.toSeq === Seq(mean(0), mean(1), mean(2)))
   }
 
   test("decodeImageIO: GIF pattern round-trip is lossless (exact per-pixel)") {
@@ -947,22 +977,30 @@ class MultimodalSpec extends AnyFunSuite {
       if (topDown) { b.put(row0).put(row1) } else { b.put(row1).put(row0) }
       b.array()
     }
-    for (td <- Seq(false, true)) {
-      val Some((w, h, mb, mg, mr, b00, g00, r00)) = Multimodal.decodeBmp(bmp(td))
-      assert((w, h) === (2, 2), s"topDown=$td")
-      assert((mb, mg, mr) === ((1.0 + 4 + 7 + 10) / 4, (2.0 + 5 + 8 + 11) / 4, (3.0 + 6 + 9 + 12) / 4))
-      // corner = LOGICAL (0,0) in both storage orders — row order is real
-      assert((b00, g00, r00) === ((1, 2, 3)), s"topDown=$td")
-    }
-    // rejection: truncation, magic, bpp, compression, hostile offset
-    assert(Multimodal.decodeBmp(bmp(false).dropRight(1)).isEmpty)
-    assert(Multimodal.decodeBmp("XM".getBytes ++ bmp(false).drop(2)).isEmpty)
-    val bpp32 = bmp(false); bpp32(28) = 32; assert(Multimodal.decodeBmp(bpp32).isEmpty)
-    val rle = bmp(false); rle(30) = 1; assert(Multimodal.decodeBmp(rle).isEmpty)
+    val bpp32 = bmp(false); bpp32(28) = 32
+    val rle = bmp(false); rle(30) = 1
     val hostileOff = bmp(false)
     hostileOff(10) = -1; hostileOff(11) = -1; hostileOff(12) = -1; hostileOff(13) = 0x7f
-    assert(Multimodal.decodeBmp(hostileOff).isEmpty) // u32 offset near 2^31
-    assert(Multimodal.decodeBmp(Array[Byte]()).isEmpty)
+    val payloads = Seq(
+      bmp(false), bmp(true),
+      bmp(false).dropRight(1), // only the last stored row's padding is missing
+      bpp32, rle,
+      bmp(false).dropRight(3), // pixel bytes are missing
+      "XM".getBytes ++ bmp(false).drop(2),
+      hostileOff, // u32 offset near 2^31
+      Array[Byte]())
+    val got = Multimodal.decodeBmpFeatures(payloads.zipWithIndex.map { case (b, i) =>
+      (i.toLong, b) }.toDF("doc_id", "content"))
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val means = Seq((1.0 + 4 + 7 + 10) / 4, (2.0 + 5 + 8 + 11) / 4, (3.0 + 6 + 9 + 12) / 4)
+    // corner = LOGICAL (0,0) in both storage orders — row order is real.
+    // The reader needs no trailing padding, and it reads a 24-bit header's
+    // compression field 1 as uncompressed rows.
+    for (i <- Seq(0L, 1L, 2L, 4L)) assert(got(i) === Seq(2, 2) ++ means ++ Seq(1, 2, 3), s"payload $i")
+    // the same 16 bytes as 32-bit BGRX pixels: B 7,11,1,5  G 8,12,2,6  R 9,0,3,0
+    assert(got(3L) === Seq(2, 2, 6.0, 7.0, 3.0, 1, 2, 3))
+    // rejection: truncated pixels, magic, hostile offset, empty
+    for (i <- 5L to 8L) assert(got(i).forall(_ == null), s"payload $i: ${got(i)}")
   }
 
   test("bmpFixture payloads round-trip through the real BMP decoder") {
@@ -973,9 +1011,11 @@ class MultimodalSpec extends AnyFunSuite {
       val w = (4 + id % 5).toInt; val h = (3 + id % 4).toInt
       assert(got(id).getInt(1) === w && got(id).getInt(2) === h)
       val n = w * h
-      val expMean = (0 until n).map(p => ((id * 11 + 5 * p) % 256).toDouble).sum / n
-      assert(got(id).getDouble(3) === expMean, s"mean_b id=$id")
-      assert(got(id).getInt(6) === ((id * 11) % 256).toInt, s"b00 id=$id")
+      for (c <- 0 until 3) {
+        val expMean = (0 until n).map(p => ((id * 11 + 5 * p + c) % 256).toDouble).sum / n
+        assert(got(id).getDouble(3 + c) === expMean, s"mean $c id=$id")
+        assert(got(id).getInt(6 + c) === ((id * 11 + c) % 256).toInt, s"corner $c id=$id")
+      }
     }
   }
 
@@ -1029,7 +1069,7 @@ class MultimodalSpec extends AnyFunSuite {
     val y4m = feed(Multimodal.y4mFixture)
     val oneToOne = Seq(
       "pnm" -> Multimodal.decodeImageFeatures(pnm, Multimodal.decodePnm),
-      "png" -> Multimodal.decodeImageFeatures(feed(Multimodal.pngFixture), Multimodal.decodePng),
+      "png" -> Multimodal.decodeImageFeatures(feed(Multimodal.pngFixture), Multimodal.decodeImageIO),
       "jpeg" ->
         Multimodal.decodeImageFeatures(feed(Multimodal.jpegFixture), Multimodal.decodeImageIO),
       "bmp" -> Multimodal.decodeBmpFeatures(feed(Multimodal.bmpFixture)),
@@ -1061,5 +1101,29 @@ class MultimodalSpec extends AnyFunSuite {
       val docs = df.collect().map(_.getLong(0))
       assert(docs.nonEmpty && docs.forall(_ == 3L), s"$name: ${docs.toSeq}")
     }
+  }
+
+  test("src/main reads images through one ImageIO helper and inflates no zlib by hand") {
+    // a second image decode path (a hand-written inflate, or another ImageIO
+    // reader lookup) would be a second decoder for the same bytes
+    val root = Paths.get("src/main/scala")
+    val helperFile = "graft/operators/Multimodal.scala"
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    // the helper's lines: its def up to the next member at class indent
+    val helperSrc = Files.readAllLines(root.resolve(helperFile)).asScala
+    val start = helperSrc.indexWhere(_.contains("private def readImage("))
+    assert(start >= 0, s"no readImage helper in $helperFile")
+    val end = helperSrc.indexWhere(_.matches("  \\S.*"), start + 1)
+    val found = for {
+      f <- files
+      rel = root.relativize(f).toString
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      call <- Seq("Inflater", "ImageIO.getImageReader", "ImageIO.read(")
+      if line.contains(call)
+      if call == "Inflater" || rel != helperFile || n <= start || n >= end
+    } yield s"  $rel:${n + 1} $call"
+    assert(found.isEmpty, "decode images through Multimodal.readImage:\n" + found.mkString("\n"))
   }
 }

@@ -26,7 +26,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("latestRows keeps the latest row per key") {
-    val got = Dedup.latestRows(events, Seq("user_id"), Seq(col("ts").desc, col("event_id").desc))
+    val got = Dedup.firstRows(events, Seq("user_id"), Seq(col("ts").desc, col("event_id").desc))
       .select("user_id", "event_id").as[(String, Long)].collect().toMap
     assert(got === Map("u1" -> 2L, "u2" -> 4L))
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,21 +31,5 @@ class TablePersistSpec extends AnyFunSuite {
       .head.metrics.get("numFiles")
     scan.count() // materialize metrics
     assert(scanned.forall(_.value <= 4), s"expected <=4 files scanned, got ${scanned.map(_.value)}")
-  }
-
-  test("a malformed or non-positive spark.graft.filesPerDate is rejected by name") {
-    val spark = TestSpark.spark
-    val key = "spark.graft.filesPerDate"
-    val rows = Seq(("k1", Timestamp.valueOf("2024-01-01 12:00:00"))).toDF("k", "load_timestamp")
-    for (bad <- Seq("0", "-3", "four", "2.5")) {
-      val path = TestSpark.tempDir("graft_part").toString + "/t"
-      spark.conf.set(key, bad)
-      try {
-        val e = intercept[IllegalArgumentException](
-          TablePersist.appendPartitioned(rows, path, "load_timestamp"))
-        assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
-        assert(!Files.exists(java.nio.file.Paths.get(path)), s"$bad: nothing may be written")
-      } finally spark.conf.unset(key)
-    }
   }
 }
